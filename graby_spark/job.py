@@ -7,7 +7,8 @@ Spark-first layout of the reference's per-document pipeline
     → mime pre-route filter (JVM exprs)         -- S6/M1: cheap predicate
       BEFORE the expensive parse UDF (manual pushdown; Catalyst cannot
       reorder through an opaque UDF so stage order encodes it)
-    → salted repartition by (domain-hash, url-salt)  -- host-skew handling
+    → range repartition by (manifest bucket, url hash)  -- skew handling,
+      each task owns a contiguous run of the manifest's write buckets
     → mapInPandas(extract_batch)                -- C*/P*/R*/D*/O* inside one
       Arrow-batched Python stage; broadcast ruleset probed per row
     → multipage resolve (iterative self-join)   -- G1-G3
@@ -39,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from .extract import ExtractOptions, extract_one
+from .manifest import bucket_of
 from .siteconfig import RuleSet
 from .markdown import to_markdown
 
@@ -47,8 +49,6 @@ __all__ = [
     "run_extraction",
     "resolve_multipage",
     "resolve_single_page",
-    "attach_salt",
-    "auto_salt",
     "write_bucketed",
 ]
 
@@ -83,46 +83,6 @@ EXTRACT_SCHEMA = StructType(
         StructField("extract_ms", IntegerType()),
     ]
 )
-
-DEFAULT_SALT = 16
-
-
-def auto_salt(pages: DataFrame, n_partitions: int) -> int:
-    """Measured salt fan-out for the domain repartition: the
-    ``key_skew_stats.suggested_salt`` diagnostic applied to the actual
-    domain histogram of ``pages`` — ``ceil(max_domain_rows / (n_rows /
-    n_partitions))``, i.e. the fan-out that levels the hottest domain
-    down to one average partition payload.  Uniform domains → 1 (no
-    pointless key-space inflation), one mega-host → exactly the spread
-    it needs.
-
-    Scale shape: counts-only aggregation with map-side combine — the
-    shuffle carries at most (distinct domains per input partition ×
-    partitions) count records, never page payloads, so measuring the
-    histogram on the full input is cheap even at 100 TB; the result is a
-    single collected row."""
-    from .storage import key_skew_stats
-
-    domain = F.lower(F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1))
-    (row,) = key_skew_stats(
-        pages.select(domain.alias("_domain")), "_domain", n_partitions=n_partitions
-    ).collect()
-    return int(row["suggested_salt"])
-
-
-def attach_salt(df: DataFrame, salt: int = DEFAULT_SALT, partitions: int | None = None) -> DataFrame:
-    """Salted repartition by domain hash: one hot domain spreads over
-    ``salt`` partitions instead of creating a straggler (SURVEY.md §4
-    host-skew).  Ruleset locality is preserved *statistically* (ruleset is
-    broadcast, so this is purely a balance concern, not correctness)."""
-    domain = F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1)
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt)).cast("int")
-    ).withColumn("_dhash", F.xxhash64(F.lower(domain)))
-    if partitions:
-        return salted.repartition(partitions, F.col("_dhash"), F.col("_salt"))
-    return salted.repartition(F.col("_dhash"), F.col("_salt"))
-
 
 def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str] | None = None):
     """Build the mapInPandas function.  The iterator form amortizes
@@ -242,7 +202,6 @@ def run_extraction(
     pages: DataFrame,
     ruleset: RuleSet,
     options: ExtractOptions | None = None,
-    salt: int | str = DEFAULT_SALT,
     partitions: int | None = None,
     repartition: bool = True,
     columns: list[str] | None = None,
@@ -315,18 +274,15 @@ def run_extraction(
         # stage's cost is per-row parse CPU, not bytes
         if partitions is None:
             partitions = spark.sparkContext.defaultParallelism * 2
-        # salt="auto": measure the domain histogram (counts-only, map-side
-        # combined) and use key_skew_stats' suggested fan-out instead of
-        # the DEFAULT_SALT constant — uniform crawls skip the key-space
-        # inflation entirely, mega-host crawls get exactly the spread the
-        # hottest domain needs (VERDICT r04 #5)
-        if salt == "auto":
-            salt = auto_salt(pages, partitions)
-        # the salt/hash key columns exist only to drive the repartition —
-        # don't ship them over the Arrow socket
-        pages = attach_salt(pages, salt=salt, partitions=partitions).drop(
-            "_salt", "_dhash"
-        )
+        # the consumer's key, not the host's: range-partition on the
+        # manifest bucket, then the url hash.  A url hash spreads a
+        # mega-host evenly by construction (no salt), the secondary key
+        # splits a bucket across tasks when partitions > buckets, and each
+        # task owns a contiguous run of buckets — write_with_manifest then
+        # writes at most partitions + buckets - 1 files, not one per
+        # (task, bucket).  Still exactly one payload exchange.
+        url = F.col("url")
+        pages = pages.repartitionByRange(partitions, bucket_of(url), F.xxhash64(url))
 
     extracted = pages.mapInPandas(
         _make_extract_batch(ruleset_bc, options, out_names), out_schema

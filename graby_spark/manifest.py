@@ -248,6 +248,10 @@ def write_with_manifest(
     manifest append leaves the bucket un-recorded → it is re-extracted on
     resume and overwritten idempotently (dynamic partition overwrite),
     which preserves exactly-once output semantics.
+
+    Over ``run_extraction``'s default repartition each task holds a
+    contiguous run of the ``DEFAULT_BUCKETS`` buckets, so the write makes
+    at most partitions + n_buckets − 1 files.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     # strictly increasing commit sequence even for back-to-back runs in
@@ -276,8 +280,14 @@ def write_with_manifest(
             "wall_ms": 0,
         }
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    with_bucket.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
+    # dynamic overwrite per write, not per session: later writes in the
+    # session keep their own overwrite mode
+    (
+        with_bucket.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(output_path)
+    )
 
     wall_ms = int((time.time() - started) * 1000)
     # lineage rows for THIS run's buckets only (never re-read the whole

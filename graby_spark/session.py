@@ -6,7 +6,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "tune_for_extraction"]
+__all__ = ["get_spark"]
 
 
 def get_spark(
@@ -55,18 +55,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     # shuffle spill on tmpfs when available: the extraction job shuffles the
-    # full html payload once (salted repartition); a ~240 MB/s disk would
-    # serialize an otherwise CPU-parallel pipeline on a many-core box
+    # full html payload once (the bucket range repartition); a ~240 MB/s
+    # disk would serialize an otherwise CPU-parallel pipeline on a many-core
+    # box
     if os.path.isdir("/dev/shm") and "SPARK_LOCAL_DIRS" not in os.environ:
         shm_dir = "/dev/shm/spark-graby"
         os.makedirs(shm_dir, exist_ok=True)
         builder = builder.config("spark.local.dir", shm_dir)
     return builder.getOrCreate()
-
-
-def tune_for_extraction(spark: SparkSession) -> None:
-    """Settings that only matter for the heavy extraction stage."""
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
 
 
 def ship_package(spark: SparkSession) -> None:

@@ -125,8 +125,7 @@ def key_skew_stats(
     key down to the average partition payload —
     ``ceil(max_key_rows / (n_rows / n_partitions))``, clamped to ≥1 —
     i.e. the ``N`` you'd pass to a ``key || '#' || pmod(hash(...), N)``
-    salting scheme (the extraction job's domain-salting uses exactly
-    this shape).
+    salting scheme.
 
     Scale shape: one partial-aggregated shuffle on the key (counts only,
     no payload), then a single-row global aggregate.  Percentile is

@@ -3425,35 +3425,22 @@ def test_key_skew_stats(spark):
     assert u["skew_ratio"] == 1.0 and u["suggested_salt"] == 1
 
 
-def test_auto_salt_wires_skew_diagnosis_into_extraction(spark):
-    """run_extraction(salt="auto") applies key_skew_stats' suggested
-    fan-out to the domain repartition (VERDICT r04 #5): a Zipf-skewed
-    crawl (one mega-host) measures a fan-out > 1, a uniform crawl
-    measures exactly 1, and the auto-salted extraction still produces
-    the same rows as the constant-salt run."""
-    from graby_spark.job import auto_salt, run_extraction
+def test_bucket_range_repartition_keeps_extraction_rows(spark):
+    """run_extraction's (bucket, url hash) range repartition only moves
+    rows between tasks: the repartitioned extraction produces the same
+    rows as the unshuffled run."""
+    from graby_spark.job import run_extraction
     from graby_spark.pages import build_pages_df, pages_ruleset
     from graby_spark.extract import ExtractOptions
-
-    # one mega-host owning half the crawl vs 50 long-tail hosts
-    skewed = spark.range(400).selectExpr(
-        "CASE WHEN id % 2 = 0 THEN concat('http://megahost.example/p', id) "
-        "ELSE concat('http://tail', id % 50, '.example/p', id) END AS url"
-    )
-    assert auto_salt(skewed, n_partitions=16) > 1
-    uniform = spark.range(400).selectExpr(
-        "concat('http://host', id % 100, '.example/p', id) AS url"
-    )
-    assert auto_salt(uniform, n_partitions=16) == 1
 
     pages = build_pages_df(spark, "/root/testdata/sf0.001").limit(40)
     opts = ExtractOptions(xss_filter=False)
     cols = ["url", "is_success"]
     got = run_extraction(
-        spark, pages, pages_ruleset(), options=opts, salt="auto", columns=cols
+        spark, pages, pages_ruleset(), options=opts, repartition=True, columns=cols
     ).collect()
     want = run_extraction(
-        spark, pages, pages_ruleset(), options=opts, columns=cols
+        spark, pages, pages_ruleset(), options=opts, repartition=False, columns=cols
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 

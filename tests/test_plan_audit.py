@@ -78,3 +78,7 @@ def test_python_stage_counted_once(spark):
     df = spark.range(10).mapInPandas(ident, "id long")
     res = plan_audit.audit_one("one_py_stage", df)
     assert res["python_stages"] == 1, res
+
+
+def test_node_count_matches_metacharacter_names_literally():
+    assert plan_audit.node_count("(1) Scan+x\n(2) Scannx\n", "Scan+x") == 1

@@ -7,7 +7,9 @@ round-5 HOF-collapse fix repaired) fails CI instead of surviving as a
 silently-4x-slower query:
 
 - extraction ships the page payload across the cluster EXACTLY ONCE
-  (the salted domain repartition) — ratio ~1, never ~2;
+  (the range repartition on manifest bucket + url hash, which levels a
+  mega-host without a salt and hands each task whole write buckets) —
+  ratio ~1, never ~2;
 - simhash dedup is map-side sketching + a keys-only band shuffle —
   document bytes never cross;
 - exact dedup shuffles hashes, not documents;
@@ -71,7 +73,7 @@ def audit_rows():
 def test_extraction_payload_moves_exactly_once(audit_rows):
     r = audit_rows["extract_text"]
     # engine shuffle (input-synthesis calibrated out) vs uncompressed
-    # page bytes: the salted repartition ships html+url+metadata once;
+    # page bytes: the bucket range repartition ships html+url+metadata once;
     # UnsafeRow framing adds a little.  2x would mean a second payload
     # exchange crept into the plan.
     assert 0.4 <= r["ratio"] <= 1.6, r

@@ -114,8 +114,11 @@ def test_manifest_write_and_resume(spark, extracted, tmp_path_factory):
     out_path = os.path.join(base, "out")
     manifest_path = os.path.join(base, "manifest")
 
+    overwrite_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     summary = write_with_manifest(spark, extracted, out_path, manifest_path, n_buckets=8)
     assert summary["urls"] == 500 and summary["fail"] == 0
+    # dynamic overwrite is a per-write option; the session conf is untouched
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == overwrite_mode
 
     manifest = spark.read.parquet(manifest_path)
     assert manifest.count() == 8  # one row per bucket
@@ -366,24 +369,32 @@ def test_windowed_crawl_metrics(spark):
     assert all(m["pages"] > 0 and m["bytes_in"] > 0 for m in metrics)
 
 
-def test_skewed_domains_balanced_by_salt(spark):
-    """Zipf-style host skew: 60% of pages on one domain still spread across
-    partitions via the salted repartition (SURVEY.md §4)."""
-    from pyspark.sql import functions as F
-
+def _mega_host_pages(spark):
+    """sf0.001 pages with 60% of the rows on one domain (Zipf-style host
+    skew) and every 25th payload empty (a planted failure row)."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    skewed = docs.selectExpr(
+    return docs.selectExpr(
         "CASE WHEN doc_id % 10 < 6 THEN concat('http://megasite.example.com/a/', doc_id) "
         "ELSE concat('http://tail-', doc_id % 37, '.example.net/a/', doc_id) END as url",
         "timestamp'2024-01-01' as warc_ts",
-        "encode(concat('<html><body><div itemprop=\"articleBody\"><p>', text, '</p></div></body></html>'), 'UTF-8') as html",
+        "CASE WHEN doc_id % 25 = 0 THEN encode('', 'UTF-8') ELSE "
+        "encode(concat('<html><body><div itemprop=\"articleBody\"><p>', text, '</p></div></body></html>'), 'UTF-8') END as html",
         "text",
         "lang",
     )
-    from graby_spark.job import attach_salt
+
+
+def test_skewed_domains_balanced_by_bucket_range(spark):
+    """Zipf-style host skew: 60% of pages on one domain still spread across
+    partitions via run_extraction's (bucket, url hash) range repartition
+    (SURVEY.md §4) — the url hash levels a mega-host without a salt."""
+    from pyspark.sql import functions as F
 
     parts = (
-        attach_salt(skewed, salt=16, partitions=8)
+        run_extraction(
+            spark, _mega_host_pages(spark), pages_ruleset(), options=OPTS,
+            partitions=8, columns=["url"],
+        )
         .withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .count()
@@ -392,6 +403,38 @@ def test_skewed_domains_balanced_by_salt(spark):
     counts = [r["count"] for r in parts]
     assert len(counts) >= 8, "hot domain must spread over many partitions"
     assert max(counts) < 2 * (sum(counts) / len(counts)), f"unbalanced: {counts}"
+
+
+def test_each_task_writes_whole_buckets(spark, tmp_path_factory):
+    """The extraction shuffle is keyed on the manifest bucket, so each of
+    the 8 tasks writes a contiguous run of the 64 buckets: at most
+    8 + 64 - 1 = 71 parquet files, not one per (task, bucket).  The
+    manifest still counts every row outcome and resume finds no work."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path_factory.mktemp("bucket_files"))
+    out_path = os.path.join(base, "out")
+    manifest_path = os.path.join(base, "manifest")
+    pages = _mega_host_pages(spark)
+    extracted = run_extraction(spark, pages, pages_ruleset(), options=OPTS, partitions=8)
+    summary = write_with_manifest(spark, extracted, out_path, manifest_path, n_buckets=64)
+
+    files = [
+        name
+        for _dir, _dirs, names in os.walk(out_path)
+        for name in names
+        if name.endswith(".parquet")
+    ]
+    assert len(files) <= 71, len(files)
+    outcomes = {
+        r["is_success"]: r["count"]
+        for r in spark.read.parquet(out_path).groupBy("is_success").count().collect()
+    }
+    assert summary["urls"] == 500 and outcomes[False] > 0
+    manifest = spark.read.parquet(manifest_path)
+    totals = manifest.agg(F.sum("ok_count"), F.sum("fail_count")).first()
+    assert tuple(totals) == (outcomes[True], outcomes[False])
+    assert filter_resumable(spark, pages, manifest_path, n_buckets=64).count() == 0
 
 
 def test_oversized_row_short_circuits(spark):

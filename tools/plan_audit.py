@@ -73,7 +73,7 @@ def node_count(plan: str, name: str) -> int:
     broadcast-only plans (VERDICT r05 #7).  Counting only the details
     headers is id-exact and non-negative by construction; the anchored
     prefix also keeps ``Exchange`` from matching ``BroadcastExchange``."""
-    return len(re.findall(rf"(?m)^\(\d+\) {name}\b", plan))
+    return len(re.findall(rf"(?m)^\(\d+\) {re.escape(name)}\b", plan))
 
 
 def audit_one(name: str, df) -> dict:

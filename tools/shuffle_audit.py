@@ -330,7 +330,7 @@ def _write_md(rows: list[dict], sf_dir: str) -> None:
         "`scales with` names:",
         "",
         "- **doc bytes** (extraction, stitching, filter pipelines): network =",
-        "  ratio x corpus bytes.  Extraction's salted repartition is the",
+        "  ratio x corpus bytes.  Extraction's bucket range repartition is the",
         "  floor for any operator that must co-locate full documents; at",
         "  ratio ~1 a 100 TB corpus crosses the wire once — ~90 s of pure",
         "  network on a 1000-node 10 Gb/s-bisection cluster, amortized over",

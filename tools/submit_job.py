@@ -7,9 +7,10 @@ Usage (north_rule deployment shape):
         --py-files dist/graby_spark.zip \\
         tools/submit_job.py <sf_dir> <output_dir> <manifest_dir> [site_config_dir ...]
 
-Reads/synthesizes the pages table, runs the salted extraction, writes the
-bucket-partitioned output plus the per-partition manifest (resumable: rerun
-the same command after a crash and completed buckets are skipped).
+Reads/synthesizes the pages table, runs the bucket-ranged extraction,
+writes the bucket-partitioned output plus the per-partition manifest
+(resumable: rerun the same command after a crash and completed buckets are
+skipped).
 """
 
 from __future__ import annotations
