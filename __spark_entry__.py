@@ -1506,18 +1506,25 @@ def q_crawl_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph.crawl_churn_by_domain(graph.crawl_diff(old, new))
 
 
+def _link_graph(docs: DataFrame) -> DataFrame:
+    """PageRank's deterministic modular link graph over ``docs.doc_id``:
+    one modular out-edge per doc, a second on even ids, and a hub edge
+    onto nodes 0-6 from every tenth id, self-loops dropped."""
+    ids = docs.select("doc_id")
+    n = ids.count()
+    e1 = ids.selectExpr("doc_id as src", f"(doc_id*31+7) % {n} as dst")
+    e2 = ids.where("doc_id % 2 = 0").selectExpr(
+        "doc_id as src", f"(doc_id*17+3) % {n} as dst"
+    )
+    e3 = ids.where("doc_id % 10 = 0").selectExpr("doc_id as src", "doc_id % 7 as dst")
+    return e1.union(e2).union(e3).where("src != dst")
+
+
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Damped PageRank (10 checkpointed power iterations) over a
     deterministic modular link graph with hub edges onto nodes 0-6."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    n = docs.count()
-    e1 = docs.selectExpr("doc_id as src", f"(doc_id*31+7) % {n} as dst")
-    e2 = docs.where("doc_id % 2 = 0").selectExpr(
-        "doc_id as src", f"(doc_id*17+3) % {n} as dst"
-    )
-    e3 = docs.where("doc_id % 10 = 0").selectExpr("doc_id as src", "doc_id % 7 as dst")
-    edges = e1.union(e2).union(e3).where("src != dst")
-    pr = graph.pagerank(edges, n_iter=10)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    pr = graph.pagerank(_link_graph(docs), n_iter=10)
     return pr.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -1853,20 +1860,11 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("media_id", F.size("features").cast("long").alias("dim"))
 
 
-def q_media_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG decode on the correctness gate (VERDICT r03 #3): formula
-    PNGs (sample j of image id = (id*31 + j) % 256; width/height/channel
-    count varying per id; scanline filters cycling 0..4 so every unfilter
-    path — None/Sub/Up/Average/Paeth — runs) are encoded in an
-    Arrow-batched UDF, decoded by multimodal.png_pixel_stats with the
-    stdlib-zlib decoder, and the per-image pixel mean is replayed
-    closed-form by the DuckDB oracle.  mean_pixel is deliberately
-    unrounded: integer sample sums are exact in float64 and one IEEE
-    division is bit-identical across engines."""
-    _ship(spark)
+def _formula_png_media(docs: DataFrame) -> DataFrame:
+    """(media_id, payload) formula PNGs, one per doc: sample j of image id
+    = (id*31 + j) % 256, with width/height/channel count varying per id
+    and scanline filters cycling 0..4 inside encode_png."""
     import numpy as np
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id % 7 = 0")
 
     @F.pandas_udf("binary")
     def gen_png(ids: pd.Series) -> pd.Series:
@@ -1884,9 +1882,72 @@ def q_media_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.append(encode_png(arr))
         return pd.Series(out)
 
-    media = docs.select(F.col("doc_id").alias("media_id")).withColumn(
+    return docs.select(F.col("doc_id").alias("media_id")).withColumn(
         "payload", gen_png("media_id")
     )
+
+
+def _ahash_png_media(docs: DataFrame) -> DataFrame:
+    """(media_id, payload) planted grayscale PNGs keyed by (id % 5,
+    (id//5) % 2): same key = identical pixels, the other variant of the
+    same base = a few perturbed pixels (aHash hamming 1-3), different
+    bases ≥ 24 apart."""
+    import numpy as np
+
+    @F.pandas_udf("binary")
+    def gen_png(ids: pd.Series) -> pd.Series:
+        from graby_spark.operators.multimodal import encode_png
+
+        out = []
+        for mid in ids:
+            mid = int(mid)
+            base, var = mid % 5, (mid // 5) % 2
+            w, h = 16 + base * 4, 16 + base * 2
+            j = np.arange(w * h)
+            vals = (base * 37 + j * 13 + var * np.where(j % 41 == 0, 90, 0)) % 256
+            out.append(encode_png(vals.astype(np.uint8).reshape(h, w)))
+        return pd.Series(out)
+
+    return docs.select(F.col("doc_id").alias("media_id")).withColumn(
+        "payload", gen_png("media_id")
+    )
+
+
+def _sampled_frame_means(media: DataFrame) -> DataFrame:
+    """Sample ``media`` on a 500 ms schedule (at most 3 frames) and
+    re-decode each sampled canvas from its lossless PNG bytes into a
+    per-frame pixel mean."""
+    sampled = multimodal.sample_frames(media, every_ms=500, max_frames=3).withColumn(
+        "fk", F.col("media_id") * 10 + F.col("frame_no")
+    )
+    stats = multimodal.png_pixel_stats(
+        sampled.select(F.col("fk").alias("media_id"), F.col("frame").alias("payload")),
+    ).select(F.col("media_id").alias("fk"), "mean_pixel")
+    return (
+        sampled.select("fk", "media_id", "frame_no", "ts_ms")
+        .join(stats, "fk")
+        .select(
+            "media_id",
+            F.col("frame_no").cast("long").alias("frame_no"),
+            F.col("ts_ms").cast("long").alias("ts_ms"),
+            "mean_pixel",
+        )
+    )
+
+
+def q_media_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL PNG decode on the correctness gate (VERDICT r03 #3): formula
+    PNGs (sample j of image id = (id*31 + j) % 256; width/height/channel
+    count varying per id; scanline filters cycling 0..4 so every unfilter
+    path — None/Sub/Up/Average/Paeth — runs) are encoded in an
+    Arrow-batched UDF, decoded by multimodal.png_pixel_stats with the
+    stdlib-zlib decoder, and the per-image pixel mean is replayed
+    closed-form by the DuckDB oracle.  mean_pixel is deliberately
+    unrounded: integer sample sums are exact in float64 and one IEEE
+    division is bit-identical across engines."""
+    _ship(spark)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id % 7 = 0")
+    media = _formula_png_media(docs)
     out = multimodal.png_pixel_stats(media)
     return out.select(
         "media_id",
@@ -1992,29 +2053,8 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — the oracle replays the exact sample selection and mean
     closed-form)."""
     _ship(spark)
-    import numpy as np
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id % 7 = 0")
-
-    @F.pandas_udf("binary")
-    def gen_png(ids: pd.Series) -> pd.Series:
-        from graby_spark.operators.multimodal import encode_png
-
-        out = []
-        for mid in ids:
-            mid = int(mid)
-            w, h, c = 3 + mid % 6, 2 + mid % 5, [1, 3, 4][mid % 3]
-            arr = (
-                ((mid * 31 + np.arange(w * h * c)) % 256)
-                .astype(np.uint8)
-                .reshape(h, w, c)
-            )
-            out.append(encode_png(arr))
-        return pd.Series(out)
-
-    media = docs.select(F.col("doc_id").alias("media_id")).withColumn(
-        "payload", gen_png("media_id")
-    )
+    media = _formula_png_media(docs)
     out = multimodal.resize_images(media, out_width=4, out_height=3, method="nearest")
     return out.select(
         "media_id",
@@ -2094,22 +2134,7 @@ def q_media_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = docs.select(F.col("doc_id").alias("media_id")).withColumn(
         "payload", gen_anim("media_id")
     )
-    sampled = multimodal.sample_frames(media, every_ms=500, max_frames=3).withColumn(
-        "fk", F.col("media_id") * 10 + F.col("frame_no")
-    )
-    stats = multimodal.png_pixel_stats(
-        sampled.select(F.col("fk").alias("media_id"), F.col("frame").alias("payload")),
-    ).select(F.col("media_id").alias("fk"), "mean_pixel")
-    return (
-        sampled.select("fk", "media_id", "frame_no", "ts_ms")
-        .join(stats, "fk")
-        .select(
-            "media_id",
-            F.col("frame_no").cast("long").alias("frame_no"),
-            F.col("ts_ms").cast("long").alias("ts_ms"),
-            "mean_pixel",
-        )
-    )
+    return _sampled_frame_means(media)
 
 
 def q_media_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2149,22 +2174,7 @@ def q_media_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = docs.select(F.col("doc_id").alias("media_id")).withColumn(
         "payload", gen_avi("media_id")
     )
-    sampled = multimodal.sample_frames(media, every_ms=500, max_frames=3).withColumn(
-        "fk", F.col("media_id") * 10 + F.col("frame_no")
-    )
-    stats = multimodal.png_pixel_stats(
-        sampled.select(F.col("fk").alias("media_id"), F.col("frame").alias("payload")),
-    ).select(F.col("media_id").alias("fk"), "mean_pixel")
-    return (
-        sampled.select("fk", "media_id", "frame_no", "ts_ms")
-        .join(stats, "fk")
-        .select(
-            "media_id",
-            F.col("frame_no").cast("long").alias("frame_no"),
-            F.col("ts_ms").cast("long").alias("ts_ms"),
-            "mean_pixel",
-        )
-    )
+    return _sampled_frame_means(media)
 
 
 def q_media_mp4_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2214,27 +2224,8 @@ def q_media_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ENTIRE hash computation and band join in SQL (integer-exact
     nearest resize + two's-complement bit packing make that possible)."""
     _ship(spark)
-    import numpy as np
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id % 7 = 0")
-
-    @F.pandas_udf("binary")
-    def gen_png(ids: pd.Series) -> pd.Series:
-        from graby_spark.operators.multimodal import encode_png
-
-        out = []
-        for mid in ids:
-            mid = int(mid)
-            base, var = mid % 5, (mid // 5) % 2
-            w, h = 16 + base * 4, 16 + base * 2
-            j = np.arange(w * h)
-            vals = (base * 37 + j * 13 + var * np.where(j % 41 == 0, 90, 0)) % 256
-            out.append(encode_png(vals.astype(np.uint8).reshape(h, w)))
-        return pd.Series(out)
-
-    media = docs.select(F.col("doc_id").alias("media_id")).withColumn(
-        "payload", gen_png("media_id")
-    )
+    media = _ahash_png_media(docs)
     hashes = multimodal.perceptual_hash(media, method="ahash")
     pairs = multimodal.phash_pairs(hashes, max_hamming=4)
     return pairs.select(
@@ -2249,32 +2240,7 @@ def q_media_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical per image — what an image dedup pipeline actually writes.
     The oracle replays the ENTIRE composition: hash + band join in SQL
     feeding a recursive-CTE transitive closure."""
-    _ship(spark)
-    import numpy as np
-
-    from graby_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id % 7 = 0")
-
-    @F.pandas_udf("binary")
-    def gen_png(ids: pd.Series) -> pd.Series:
-        from graby_spark.operators.multimodal import encode_png
-
-        out = []
-        for mid in ids:
-            mid = int(mid)
-            base, var = mid % 5, (mid // 5) % 2
-            w, h = 16 + base * 4, 16 + base * 2
-            j = np.arange(w * h)
-            vals = (base * 37 + j * 13 + var * np.where(j % 41 == 0, 90, 0)) % 256
-            out.append(encode_png(vals.astype(np.uint8).reshape(h, w)))
-        return pd.Series(out)
-
-    media = docs.select(F.col("doc_id").alias("media_id")).withColumn(
-        "payload", gen_png("media_id")
-    )
-    hashes = multimodal.perceptual_hash(media, method="ahash")
-    pairs = multimodal.phash_pairs(hashes, max_hamming=4)
+    pairs = q_media_phash_dedup(spark, sf_dir)
     clusters = dedup.duplicate_clusters(pairs, a_col="doc_a", b_col="doc_b")
     return clusters.select(
         F.col("doc").cast("long").alias("doc"),
@@ -3325,20 +3291,10 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
 """
 
 
-def q_media_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXIF metadata survey on the correctness gate (queued in PLANS.md
-    r04: 'planted EXIF values are closed-form replayable'): per doc a
-    structurally-valid APP1 TIFF block is spliced into a JPEG by
-    exif.build_exif_jpeg — byte order alternating II/MM so BOTH endian
-    walks sit on the oracle hot path — with orientation/make/model/
-    datetime planted closed-form and a GPS IFD (integer degrees, so the
-    rational-triple round-trip is exact) on every third row.  has_gps is
-    the image-side PII flag, the analog of text_pii."""
-    _ship(spark)
-    from graby_spark.operators import exif
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id % 9 = 0")
-
+def _exif_jpeg_media(docs: DataFrame) -> DataFrame:
+    """(media_id, payload) JPEGs with a planted APP1 TIFF block: byte
+    order alternating II/MM, orientation/make/model/datetime closed-form
+    in the id, and a GPS IFD (integer degrees) on every third id."""
     @F.pandas_udf("binary")
     def gen_jpeg(ids: pd.Series) -> pd.Series:
         from graby_spark.operators.exif import build_exif_jpeg
@@ -3364,9 +3320,25 @@ def q_media_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return pd.Series(out)
 
-    media = docs.select(F.col("doc_id").alias("media_id")).withColumn(
+    return docs.select(F.col("doc_id").alias("media_id")).withColumn(
         "payload", gen_jpeg("media_id")
     )
+
+
+def q_media_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXIF metadata survey on the correctness gate (queued in PLANS.md
+    r04: 'planted EXIF values are closed-form replayable'): per doc a
+    structurally-valid APP1 TIFF block is spliced into a JPEG by
+    exif.build_exif_jpeg — byte order alternating II/MM so BOTH endian
+    walks sit on the oracle hot path — with orientation/make/model/
+    datetime planted closed-form and a GPS IFD (integer degrees, so the
+    rational-triple round-trip is exact) on every third row.  has_gps is
+    the image-side PII flag, the analog of text_pii."""
+    _ship(spark)
+    from graby_spark.operators import exif
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id % 9 = 0")
+    media = _exif_jpeg_media(docs)
     return exif.image_exif(media)
 
 
@@ -3402,35 +3374,7 @@ def q_media_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graby_spark.operators import exif
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id % 9 = 0")
-
-    @F.pandas_udf("binary")
-    def gen_jpeg(ids: pd.Series) -> pd.Series:
-        from graby_spark.operators.exif import build_exif_jpeg
-
-        out = []
-        for mid in ids:
-            mid = int(mid)
-            gps = None
-            if mid % 3 == 0:
-                lat = float(1 + mid % 89) * (1.0 if mid % 2 == 0 else -1.0)
-                lon = float(mid % 179 - 89)
-                gps = (lat, lon)
-            out.append(
-                build_exif_jpeg(
-                    b"\xff\xd8\xff\xd9",
-                    orientation=1 + mid % 8,
-                    make="graby",
-                    model=f"m{mid % 4}",
-                    datetime=f"2024:01:{1 + mid % 28:02d} 00:00:00",
-                    gps=gps,
-                    byte_order="II" if mid % 2 == 0 else "MM",
-                )
-            )
-        return pd.Series(out)
-
-    media = docs.select(F.col("doc_id").alias("media_id")).withColumn(
-        "payload", gen_jpeg("media_id")
-    )
+    media = _exif_jpeg_media(docs)
     return exif.image_exif(exif.exif_scrub(media))
 
 

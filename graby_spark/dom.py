@@ -888,6 +888,3 @@ def parse_fragment(html: str) -> list[Node]:
     body.children = []
     return nodes
 
-
-def unescape_entities(text: str) -> str:
-    return unescape(text)

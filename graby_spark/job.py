@@ -49,7 +49,6 @@ __all__ = [
     "run_extraction",
     "resolve_multipage",
     "resolve_single_page",
-    "write_bucketed",
 ]
 
 EXTRACT_SCHEMA = StructType(
@@ -108,9 +107,10 @@ def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str
     def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import sys
 
-        # deep pathological DOM trees (e.g. thousands of unclosed <div>s)
-        # exceed the default recursion limit in clone/serialize; raise it —
-        # per-row try/except below still isolates anything worse
+        # deeply nested inline markup (e.g. thousands of unclosed <b>s)
+        # exceeds the default limit of 1000 in the two walks that still
+        # recurse, extract._collapse_blank_runs and markdown._inline; raise
+        # it — per-row try/except below still isolates anything worse
         if sys.getrecursionlimit() < 20000:
             sys.setrecursionlimit(20000)
         ruleset: RuleSet = ruleset_bc.value
@@ -288,34 +288,6 @@ def run_extraction(
         _make_extract_batch(ruleset_bc, options, out_names), out_schema
     )
     return extracted
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    buckets: int = 64,
-    key: str = "url",
-) -> None:
-    """Persist a table bucketed (and sorted) by ``key`` so downstream
-    equi-joins on that key are CO-LOCATED — no exchange on either side.
-
-    This is the 100 TB shape for the engine's recurring url-keyed joins
-    (multipage/single-page resolution against the pages table, incremental
-    dedup probes against a stored index, crawl-increment diffs): bucket
-    both sides by url once at write time and every later join is a local
-    sort-merge per bucket.  Spark only honors bucket metadata through the
-    catalog, hence ``saveAsTable`` with an explicit ``path`` (external
-    table) rather than a bare parquet write.
-    """
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .saveAsTable(table)
-    )
 
 
 def resolve_single_page(

@@ -610,7 +610,7 @@ def crawl_diff(
     the md5-60-bit cross-engine hash, computed map-side — so the full
     outer join shuffles 16-byte rows, never page payloads; at 100 TB the
     join cost is the url-keyed exchange both tables would pay for any
-    reconciliation, and bucketed storage on url (job.write_bucketed)
+    reconciliation, and bucketed storage on url (storage.write_bucketed)
     makes it exchange-free."""
 
     def hashed(df: DataFrame, alias: str) -> DataFrame:

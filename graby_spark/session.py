@@ -16,7 +16,7 @@ def get_spark(
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+    shuffle = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -28,17 +28,11 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle))
         # HTML rows are large (50-500 KB at production scale); keep Arrow
         # batches small enough to bound Python-worker memory (SURVEY.md §4)
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "1024"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # extraction is CPU-heavy per byte: smaller input splits give the
         # scan/shuffle-write side enough tasks to keep every core busy
         # (default 128 MB splits starve a 32-core box on a sub-GB table)
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "33554432"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         # scan-parallelism floor, derived from the core count rather than a
         # constant (guide §6): byte-based splitting packs a small many-file
         # table into a handful of splits (each file charged openCostInBytes),
@@ -46,10 +40,7 @@ def get_spark(
         # At production scale the split count dwarfs this floor and the
         # setting is inert; locally it keeps scan-rooted pipelines at
         # 2 tasks/core without adding any shuffle.
-        .config(
-            "spark.sql.files.minPartitionNum",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_NUM", str(2 * int(cpus))),
-        )
+        .config("spark.sql.files.minPartitionNum", str(2 * int(cpus)))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

@@ -60,7 +60,6 @@ _EMPTY_NODE_RE = re.compile(
     r"(?:<br />|&nbsp;|&thinsp;|&ensp;|&emsp;|&#8201;|&#8194;|&#8195;|\s)*</\1>",
     re.M,
 )
-_IE_COND_RE = re.compile(r"<!--\[if[^>]*>.*?(<!\[endif\]-->|<!-- <!\[endif\] -->)", re.S | re.I)
 
 # strict ISO-8601 with an explicit offset — the overwhelmingly common shape
 # of article:published_time / JSON-LD datePublished on real pages; fast-pathed
@@ -204,19 +203,6 @@ def pre_clean(html: str) -> str:
     except Exception:
         return cleaned
     return stripped
-
-
-def strip_ie_conditionals(html: str) -> str:
-    """Remove IE conditional comments when more than one present
-    (HttpClient.php:206-214)."""
-    # every match starts with the literal '<!--[' — a C-speed containment
-    # check skips the regex scan on the overwhelming majority of pages
-    if "<!--[" not in html:
-        return html
-    matches = _IE_COND_RE.findall(html)
-    if len(matches) > 1:
-        return _IE_COND_RE.sub("", html)
-    return html
 
 
 def validate_date(date: str | None, tz_name: str = DEFAULT_TZ) -> str | None:

@@ -147,17 +147,16 @@ def test_manifest_write_and_resume(spark, extracted, tmp_path_factory):
     assert len(urls) == 500 and len(set(urls)) == 500  # no dup, no missing
 
 
-def test_bucketed_join_is_exchange_free(spark, extracted, tmp_path_factory):
-    """write_bucketed: two tables bucketed+sorted on url join WITHOUT any
-    exchange on either side (the co-located join shape for the engine's
-    recurring url-keyed joins at corpus scale)."""
-    from graby_spark.job import write_bucketed
+def test_bucketed_join_is_exchange_free(spark, extracted):
+    """storage.write_bucketed: two tables bucketed+sorted on url join
+    WITHOUT any exchange on either side (the co-located join shape for the
+    engine's recurring url-keyed joins at corpus scale)."""
+    from graby_spark.storage import write_bucketed
 
-    base = str(tmp_path_factory.mktemp("bucketed"))
     pages = build_pages_df(spark, SF_DIR).select("url", "warc_ts", "lang")
     meta = extracted.select("url", "title", "is_success")
-    write_bucketed(pages, "t_pages_b", os.path.join(base, "pages"), buckets=8)
-    write_bucketed(meta, "t_meta_b", os.path.join(base, "meta"), buckets=8)
+    write_bucketed(pages, "t_pages_b", "url", 8)
+    write_bucketed(meta, "t_meta_b", "url", 8)
     try:
         old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -941,8 +940,9 @@ def test_extraction_job_survives_hostile_rows(spark):
     """Crawl-scale robustness: a pages table salted with hostile rows —
     truncated tags, raw binary masquerading as HTML, NULL payloads,
     undeclared charsets, oversized documents, a deflate bomb of nested
-    divs — runs through the FULL job without failing a task, every url
-    comes back exactly once, and the clean rows still extract."""
+    divs, 3000 nested inline tags — runs through the FULL job without
+    failing a task, every url comes back exactly once, and the clean rows
+    still extract."""
     import pyspark.sql.functions as F
 
     from graby_spark.extract import ExtractOptions
@@ -958,6 +958,7 @@ def test_extraction_job_survives_hostile_rows(spark):
         ("http://evil.example.com/latin", "caf\xe9 na\xefve".encode("latin-1")),
         ("http://evil.example.com/bom", b"\xff\xfe" + "<p>utf16</p>".encode("utf-16-le")),
         ("http://evil.example.com/nested", b"<div>" * 3000 + b"deep" + b"</div>" * 3000),
+        ("http://evil.example.com/inline", b"<p>" + b"<b>" * 3000 + b"deep" + b"</b>" * 3000 + b"</p>"),
         ("http://evil.example.com/huge", b"<p>" + b"x" * 2_000_000 + b"</p>"),
         ("http://evil.example.com/ctrl", b"<p>a\x00b\x01c\x1fd</p>"),
         ("http://evil.example.com/warcish", b"<pre>WARC/1.0\r\nContent-Length: -1</pre>"),
@@ -979,14 +980,17 @@ def test_extraction_job_survives_hostile_rows(spark):
     ).cache()
     try:
         total = out.count()
-        assert total == 30
-        assert out.select("url").distinct().count() == 30
+        assert total == 31
+        assert out.select("url").distinct().count() == 31
         # clean rows still extract successfully
         ok = out.where(~F.col("url").startswith("http://evil.")).where("is_success")
         assert ok.count() == 20
         # hostile rows are flagged, not dropped, and carry no exception text
         evil = {r["url"]: r for r in out.where(F.col("url").startswith("http://evil.")).collect()}
-        assert len(evil) == 10
+        assert len(evil) == 11
         assert "Traceback" not in (evil["http://evil.example.com/binary"]["html"] or "")
+        # nested inline markup recurses in the blank-run collapse and the
+        # markdown walk; the raised recursion limit lets it extract
+        assert evil["http://evil.example.com/inline"]["is_success"]
     finally:
         out.unpersist()

@@ -13,10 +13,10 @@ Two modes:
       inflation (a memory-bandwidth-bound generator artifact that scales
       at ~0.5 on this VM) never pollutes the timed region.
 
-  bench_extract_worker.py <cores> <sf_dir> <amplify> <text_repeat> [path]
-      Timed run at N cores.  With ``path``: scan the materialized parquet
-      and extract.  Without: legacy in-flight synthesis (kept for ad-hoc
-      use).
+  bench_extract_worker.py <cores> <sf_dir> <amplify> <text_repeat> <path>
+      Timed run at N cores: scan the materialized parquet and extract
+      (``amplify`` and ``text_repeat`` are accepted for the caller's
+      argument layout and unused).
 """
 
 import sys
@@ -44,13 +44,7 @@ def main() -> None:
     if sys.argv[1] == "materialize":
         materialize(sys.argv[2], int(sys.argv[3]), int(sys.argv[4]), sys.argv[5])
         return
-    cores, sf_dir, amplify, text_repeat = (
-        int(sys.argv[1]),
-        sys.argv[2],
-        int(sys.argv[3]),
-        int(sys.argv[4]),
-    )
-    pages_path = sys.argv[5] if len(sys.argv) > 5 else None
+    cores, sf_dir, pages_path = int(sys.argv[1]), sys.argv[2], sys.argv[5]
     spark = get_spark(app_name=f"bench-extract-{cores}", master=f"local[{cores}]", shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")
     opts = ExtractOptions(xss_filter=False)
@@ -59,13 +53,9 @@ def main() -> None:
     warm = build_pages_df(spark, sf_dir, repeat=1)
     run_extraction(spark, warm, pages_ruleset(), options=opts).count()
 
-    if pages_path:
-        # production shape: scan the pages table (32 MB splits parallelize
-        # the read at any core count; /dev/shm keeps I/O off the timing)
-        pages = spark.read.parquet(pages_path)
-    else:
-        # legacy: in-flight synthesis (hash-distributed by doc_id)
-        pages = build_pages_df(spark, sf_dir, repeat=amplify, text_repeat=text_repeat)
+    # production shape: scan the pages table (32 MB splits parallelize
+    # the read at any core count; /dev/shm keeps I/O off the timing)
+    pages = spark.read.parquet(pages_path)
     start = time.perf_counter()
     # the scaling consumer counts successes — project the output so the
     # extracted html/text bodies (dominant bytes, never read here) don't

@@ -148,8 +148,11 @@ def _classify(scales: str, ratio: float, kb_per_row: float) -> str:
     return "ids+doubles per iteration"
 
 
-def _payload_bytes(spark: SparkSession, sf_dir: str) -> dict[str, tuple[int, int]]:
-    """(uncompressed payload bytes, row count) per source table."""
+def _payload_bytes(
+    spark: SparkSession, sf_dir: str, entry
+) -> dict[str, tuple[int, int]]:
+    """(uncompressed payload bytes, row count) per source table;
+    ``entry`` is the loaded ``__spark_entry__`` registry module."""
     from pyspark.sql import functions as F
 
     import importlib
@@ -175,27 +178,13 @@ def _payload_bytes(spark: SparkSession, sf_dir: str) -> dict[str, tuple[int, int
     erow = emb.select(
         (F.sum(F.size(vec)) * 8).alias("b"), F.count("*").alias("n")
     ).collect()[0]
-    # pagerank's input is the synthetic modular link graph over doc ids,
-    # 16 B of ids per edge.  Count it by RUNNING q_graph_pagerank's edge
-    # construction (incl. its src != dst filter) instead of re-deriving a
-    # closed-form count that silently drifts if the topology changes.
-    n_docs = int(drow["n"])
-    ids = docs.select("doc_id")
-    n_edges = (
-        ids.selectExpr("doc_id as src", f"(doc_id*31+7) % {n_docs} as dst")
-        .union(
-            ids.where("doc_id % 2 = 0").selectExpr(
-                "doc_id as src", f"(doc_id*17+3) % {n_docs} as dst"
-            )
-        )
-        .union(ids.where("doc_id % 10 = 0").selectExpr("doc_id as src", "doc_id % 7 as dst"))
-        .where("src != dst")
-        .count()
-    )
+    # pagerank's input is the query's own link graph over doc ids, 16 B of
+    # ids per edge
+    n_edges = entry._link_graph(docs).count()
     return {
         "pages": pages_b,
         "mp_pages": mp_b,
-        "documents": (int(drow["b"]), n_docs),
+        "documents": (int(drow["b"]), int(drow["n"])),
         "embeddings": (int(erow["b"]), int(erow["n"])),
         "edges": (n_edges * 16, n_edges),
     }
@@ -239,19 +228,15 @@ def main() -> None:
             only = a.split("=", 1)[1].split(",")
         elif a.startswith("--json-out="):
             json_out = a.split("=", 1)[1]
-    import importlib.util
+    import importlib
 
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry", os.path.join(REPO, "__spark_entry__.py")
-    )
-    entry = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(entry)
+    entry = importlib.import_module("__spark_entry__")
     registry = entry.queries()
 
     spark = _ui_session()
     app_id = spark.sparkContext.applicationId
     rest_base = _rest_base(spark)
-    payload = _payload_bytes(spark, sf_dir)
+    payload = _payload_bytes(spark, sf_dir, entry)
     selected = [q for q in QUERIES if only is None or q[0] in only]
     synth: dict[str, int] = {}
     if any(t in ("pages", "mp_pages") for _, t, _ in selected):
