@@ -43,6 +43,7 @@ from .extract import ExtractOptions, extract_one
 from .manifest import bucket_of
 from .siteconfig import RuleSet
 from .markdown import to_markdown
+from .session import settle_python_worker, ship_package
 
 __all__ = [
     "EXTRACT_SCHEMA",
@@ -80,13 +81,16 @@ EXTRACT_SCHEMA = StructType(
         StructField("mime", StringType()),
         StructField("bytes_in", LongType()),
         StructField("extract_ms", IntegerType()),
+        StructField("extract_us", LongType()),
     ]
 )
 
 def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str] | None = None):
     """Build the mapInPandas function.  The iterator form amortizes
     per-partition setup (ruleset handle, compiled XPath cache) across all
-    Arrow batches of the partition.
+    Arrow batches of the partition; once they are consumed,
+    ``settle_python_worker`` trims the reused worker's fixed cost for the
+    next task.
 
     ``out_names`` prunes the OUTPUT side of the Arrow socket: only the named
     EXTRACT_SCHEMA fields are serialized back to the JVM.  The extraction
@@ -104,95 +108,106 @@ def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str
     # the dead fields and the row->column transpose pandas would redo.
     wanted = set(out_names)
 
+    def extract_frame(batch: pd.DataFrame, ruleset: RuleSet) -> pd.DataFrame:
+        cols: dict[str, list[Any]] = {name: [] for name in out_names}
+        for row in batch.itertuples(index=False):
+            url = row.url
+            html = row.html if isinstance(row.html, (bytes, bytearray)) else b""
+            content_type = getattr(row, "content_type", None) or "text/html; charset=utf-8"
+            lang_hint = getattr(row, "lang", None)
+            started = time.perf_counter_ns()
+            try:
+                res = extract_one(
+                    bytes(html),
+                    url,
+                    ruleset,
+                    content_type=content_type,
+                    http_status=int(getattr(row, "http_status", 200) or 200),
+                    lang_hint=lang_hint,
+                    options=options,
+                )
+                record = {
+                    "url": res.url,
+                    "effective_url": res.effective_url,
+                    "title": res.title,
+                    "language": res.language,
+                    "date": res.date,
+                    "authors": res.authors,
+                    "image": res.image,
+                    "is_native_ad": res.is_native_ad,
+                    "is_success": res.is_success,
+                    "next_page_url": res.next_page_url,
+                    "single_page_url": res.single_page_url,
+                    "redirect_target": res.redirect_target,
+                    "mime": res.mime,
+                }
+                if "spans" in wanted:
+                    record["spans"] = [
+                        {"start": s, "end": e} for s, e in res.spans
+                    ]
+                if "html" in wanted:
+                    record["html"] = res.html
+                if "text" in wanted:
+                    record["text"] = res.text
+                if "summary" in wanted:
+                    record["summary"] = res.summary
+                if "trace" in wanted:
+                    record["trace"] = res.trace
+                if "markdown" in wanted:
+                    record["markdown"] = (
+                        to_markdown(res.html) if options.markdown else None
+                    )
+            except Exception:
+                # per-row failure isolation: emit an error row, never
+                # fail the task (reference analog: O12 error result)
+                record = {
+                    "url": url,
+                    "effective_url": url,
+                    "title": options.error_message_title,
+                    "language": None,
+                    "date": None,
+                    "authors": [],
+                    "image": None,
+                    "is_native_ad": False,
+                    "is_success": False,
+                    "next_page_url": None,
+                    "single_page_url": None,
+                    "redirect_target": None,
+                    "spans": [],
+                    "html": options.error_message,
+                    "text": "",
+                    "summary": "",
+                    "mime": "",
+                    "trace": [],
+                    "markdown": "" if options.markdown else None,
+                }
+            record["warc_ts"] = getattr(row, "warc_ts", None)
+            record["bytes_in"] = len(html)
+            elapsed_ns = time.perf_counter_ns() - started
+            record["extract_ms"] = elapsed_ns // 1_000_000
+            record["extract_us"] = elapsed_ns // 1_000
+            for name in out_names:
+                cols[name].append(record.get(name))
+        return pd.DataFrame(cols, columns=out_names)
+
     def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import sys
 
         # deeply nested inline markup (e.g. thousands of unclosed <b>s)
         # exceeds the default limit of 1000 in the two walks that still
         # recurse, extract._collapse_blank_runs and markdown._inline; raise
-        # it — per-row try/except below still isolates anything worse
+        # it — per-row try/except in extract_frame still isolates anything
+        # worse
         if sys.getrecursionlimit() < 20000:
             sys.setrecursionlimit(20000)
         ruleset: RuleSet = ruleset_bc.value
-        for batch in batches:
-            cols: dict[str, list[Any]] = {name: [] for name in out_names}
-            for row in batch.itertuples(index=False):
-                url = row.url
-                html = row.html if isinstance(row.html, (bytes, bytearray)) else b""
-                content_type = getattr(row, "content_type", None) or "text/html; charset=utf-8"
-                lang_hint = getattr(row, "lang", None)
-                started = time.perf_counter()
-                try:
-                    res = extract_one(
-                        bytes(html),
-                        url,
-                        ruleset,
-                        content_type=content_type,
-                        http_status=int(getattr(row, "http_status", 200) or 200),
-                        lang_hint=lang_hint,
-                        options=options,
-                    )
-                    record = {
-                        "url": res.url,
-                        "effective_url": res.effective_url,
-                        "title": res.title,
-                        "language": res.language,
-                        "date": res.date,
-                        "authors": res.authors,
-                        "image": res.image,
-                        "is_native_ad": res.is_native_ad,
-                        "is_success": res.is_success,
-                        "next_page_url": res.next_page_url,
-                        "single_page_url": res.single_page_url,
-                        "redirect_target": res.redirect_target,
-                        "mime": res.mime,
-                    }
-                    if "spans" in wanted:
-                        record["spans"] = [
-                            {"start": s, "end": e} for s, e in res.spans
-                        ]
-                    if "html" in wanted:
-                        record["html"] = res.html
-                    if "text" in wanted:
-                        record["text"] = res.text
-                    if "summary" in wanted:
-                        record["summary"] = res.summary
-                    if "trace" in wanted:
-                        record["trace"] = res.trace
-                    if "markdown" in wanted:
-                        record["markdown"] = (
-                            to_markdown(res.html) if options.markdown else None
-                        )
-                except Exception:
-                    # per-row failure isolation: emit an error row, never
-                    # fail the task (reference analog: O12 error result)
-                    record = {
-                        "url": url,
-                        "effective_url": url,
-                        "title": options.error_message_title,
-                        "language": None,
-                        "date": None,
-                        "authors": [],
-                        "image": None,
-                        "is_native_ad": False,
-                        "is_success": False,
-                        "next_page_url": None,
-                        "single_page_url": None,
-                        "redirect_target": None,
-                        "spans": [],
-                        "html": options.error_message,
-                        "text": "",
-                        "summary": "",
-                        "mime": "",
-                        "trace": [],
-                        "markdown": "" if options.markdown else None,
-                    }
-                record["warc_ts"] = getattr(row, "warc_ts", None)
-                record["bytes_in"] = len(html)
-                record["extract_ms"] = int((time.perf_counter() - started) * 1000)
-                for name in out_names:
-                    cols[name].append(record.get(name))
-            yield pd.DataFrame(cols, columns=out_names)
+        try:
+            # the generator expression's frame is gone once it is
+            # exhausted, so the settle below runs with no batch or row of
+            # this task still referenced from here
+            yield from (extract_frame(batch, ruleset) for batch in batches)
+        finally:
+            settle_python_worker()
 
     return extract_batch
 
@@ -216,8 +231,6 @@ def run_extraction(
     — the dominant bytes of the output and, profiled, the residual N→4N
     scaling loss.  Pass e.g. ``columns=["url", "is_success"]`` for
     metadata-only consumers."""
-    from .session import ship_package
-
     ship_package(spark)  # executors import graby_spark from any launch cwd
     options = options or ExtractOptions()
     ruleset_bc = spark.sparkContext.broadcast(ruleset)

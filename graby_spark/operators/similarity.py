@@ -121,13 +121,38 @@ def _folded_dots(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     return acc
 
 
+#: most query vectors a probe set may hold: every ANN path collects its
+#: query side on the driver and broadcasts it (100k x 64-dim float64 is
+#: ~51 MB); a larger set belongs in a corpus-side join, not a collect
+MAX_PROBE_QUERIES = 100_000
+
+
+def _collect_probe_rows(queries: DataFrame, id_col: str, vec_col: str) -> list:
+    """Collect an ANN search's probe set as ``(qid, qvec)`` rows.  The
+    collect stops at ``MAX_PROBE_QUERIES + 1`` rows, so an oversized probe
+    set fails here with a clear error, not as a driver out-of-memory."""
+    rows = (
+        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
+        .limit(MAX_PROBE_QUERIES + 1)
+        .collect()
+    )
+    if not rows:
+        raise ValueError("ANN search needs at least one query vector; the probe set is empty")
+    if len(rows) > MAX_PROBE_QUERIES:
+        raise ValueError(
+            f"ANN probe set exceeds MAX_PROBE_QUERIES={MAX_PROBE_QUERIES} query "
+            "vectors; it is collected and broadcast, so split the queries into "
+            "smaller probe sets"
+        )
+    return rows
+
+
 def _collect_query_units(
     queries: DataFrame, id_col: str, vec_col: str
 ) -> tuple[list, np.ndarray]:
-    """Collect the (bounded, by construction) probe set and unit-normalize
-    it with JVM-parity math — the pq_topk/ivfpq_topk precedent for the
-    query side of every ANN search."""
-    rows = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")).collect()
+    """Collect the bounded probe set and unit-normalize it with JVM-parity
+    math — the query side of brute force and of the shared exact rerank."""
+    rows = _collect_probe_rows(queries, id_col, vec_col)
     ids = [r["qid"] for r in rows]
     mat = np.stack([np.asarray(r["qvec"], dtype=np.float64) for r in rows])
     return ids, _unit_rows(mat)
@@ -630,10 +655,7 @@ def pq_topk(
     codebooks = _pq_codebooks(corpus, id_col, vec_col, m, ks)
     codes = pq_encode(corpus, codebooks, id_col, vec_col)
 
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-        .collect()
-    )
+    q_rows = _collect_probe_rows(queries, id_col, vec_col)
     q_ids = [r["qid"] for r in q_rows]
     q_mat = np.stack([np.asarray(r["qvec"], dtype=np.float64) for r in q_rows])
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
@@ -838,10 +860,7 @@ def ivf_sq8_topk(
     # approx is computed bit-identically: int64 code dot, then the same
     # (q_scale * n_scale) * dot IEEE sequence), so the union of batch tops
     # provably contains the global candidate cut.
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-        .collect()
-    )
+    q_rows = _collect_probe_rows(queries, id_col, vec_col)
     q_ids = [r["qid"] for r in q_rows]
     q_u9 = _u9_batch([r["qvec"] for r in q_rows])
     q_probe = np.argsort(-(q_u9 @ cents.T), axis=1, kind="stable")[:, :nprobe]
@@ -1031,10 +1050,7 @@ def ivfpq_topk(
     cents, codebooks = _ivfpq_model(corpus, id_col, vec_col, n_cells, m, ks)
     codes = ivfpq_encode(corpus, cents, codebooks, id_col, vec_col)
 
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-        .collect()
-    )
+    q_rows = _collect_probe_rows(queries, id_col, vec_col)
     q_ids = [r["qid"] for r in q_rows]
     q_mat = np.stack([np.asarray(r["qvec"], dtype=np.float64) for r in q_rows])
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)

@@ -233,6 +233,22 @@ def test_lsh_topk_finds_planted_pair(embeddings):
     assert rows and rows[0]["neighbor_id"] == 5
 
 
+def test_probe_set_collect_is_bounded(embeddings, monkeypatch):
+    """Every ANN path collects its query side on the driver: an empty probe
+    set and one over the cap fail with a clear error, for the direct
+    collect (brute force) and the shared exact rerank (LSH)."""
+    with pytest.raises(ValueError, match="probe set is empty"):
+        similarity.brute_force_topk(embeddings, embeddings.where("vec_id < 0"), k=3)
+    monkeypatch.setattr(similarity, "MAX_PROBE_QUERIES", 4)
+    with pytest.raises(ValueError, match="MAX_PROBE_QUERIES=4"):
+        similarity.brute_force_topk(embeddings, embeddings.where("vec_id < 5"), k=3)
+    with pytest.raises(ValueError, match="MAX_PROBE_QUERIES=4"):
+        similarity.lsh_topk(embeddings, embeddings.where("vec_id < 5"), k=3, dim=16)
+    # a probe set at the cap still runs
+    topk = similarity.brute_force_topk(embeddings, embeddings.where("vec_id < 4"), k=3)
+    assert topk.select("query_id").distinct().count() == 4
+
+
 def test_token_stats(docs):
     rows = {r["doc_id"]: r for r in textstats.token_stats(docs).collect()}
     assert rows[1]["ws_token_count"] == 9

@@ -76,6 +76,17 @@ def test_extraction_column_projection(spark, extracted):
         run_extraction(spark, pages, pages_ruleset(), options=OPTS, columns=["nope"])
 
 
+def test_row_timer_reads_microseconds(extracted):
+    """Each row's extraction time is kept in microseconds; the
+    millisecond column is the same measurement floored further."""
+    rows = extracted.select("is_success", "extract_ms", "extract_us").collect()
+    assert rows
+    for row in rows:
+        assert row["extract_ms"] == row["extract_us"] // 1000
+        if row["is_success"]:
+            assert row["extract_us"] > 0
+
+
 def test_multipage_stitch(spark):
     pages = build_multipage_pages_df(spark, SF_DIR)
     merged = resolve_multipage(run_extraction(spark, pages, pages_ruleset(), options=OPTS))
@@ -988,6 +999,8 @@ def test_extraction_job_survives_hostile_rows(spark):
         # hostile rows are flagged, not dropped, and carry no exception text
         evil = {r["url"]: r for r in out.where(F.col("url").startswith("http://evil.")).collect()}
         assert len(evil) == 11
+        # error rows are timed too
+        assert all(r["extract_us"] is not None for r in evil.values())
         assert "Traceback" not in (evil["http://evil.example.com/binary"]["html"] or "")
         # nested inline markup recurses in the blank-run collapse and the
         # markdown walk; the raised recursion limit lets it extract

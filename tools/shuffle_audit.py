@@ -39,6 +39,8 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from graby_spark.session import _session_builder  # noqa: E402
+
 #: registry keys audited, chosen to cover every shuffle archetype the
 #: engine uses: payload-moves-once extraction, keys-only dedup banding,
 #: iterative ranks-only pagerank, broadcast-probe ANN scans, the global
@@ -78,18 +80,8 @@ UI_PORT = int(os.environ.get("SHUFFLE_AUDIT_UI_PORT", "4049"))
 
 def _ui_session() -> SparkSession:
     """The engine's normal session with the UI turned ON (metrics REST)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return (
-        SparkSession.builder.appName("graby-shuffle-audit")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        .config("spark.sql.files.maxPartitionBytes", "33554432")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        _session_builder("graby-shuffle-audit")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", str(UI_PORT))
         # the audit measures VOLUME, not speed: shuffle files are normally
