@@ -313,10 +313,9 @@ class Element(Node):
                     extend(c[::-1])
         return out
 
-    def iter_with_self(self, tag: str | None = None):
-        if tag is None or self.tag == tag:
-            yield self
-        yield from self.iter(tag)
+    def iter_with_self(self):
+        yield self
+        yield from self.iter()
 
     @property
     def text_content(self) -> str:

@@ -4,9 +4,7 @@ Spark-first layout of the reference's per-document pipeline
 (SURVEY.md §3, §4):
 
   scan(pages)                                   -- S3 as a table scan
-    → mime pre-route filter (JVM exprs)         -- S6/M1: cheap predicate
-      BEFORE the expensive parse UDF (manual pushdown; Catalyst cannot
-      reorder through an opaque UDF so stage order encodes it)
+    → column pruning + content_type/http_status defaults (JVM exprs)
     → range repartition by (manifest bucket, url hash)  -- skew handling,
       each task owns a contiguous run of the manifest's write buckets
     → mapInPandas(extract_batch)                -- C*/P*/R*/D*/O* inside one
@@ -39,7 +37,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .extract import ExtractOptions, extract_one
+from .extract import ExtractedContent, ExtractOptions, extract_one
 from .manifest import bucket_of
 from .siteconfig import RuleSet
 from .markdown import to_markdown
@@ -102,10 +100,11 @@ def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str
     if out_names is None:
         out_names = [f.name for f in EXTRACT_SCHEMA.fields]
 
-    # r06: emit COLUMNS, not row dicts — the pre-r06 loop built a 21-key
-    # dict per row (then pd.DataFrame dropped everything outside
-    # ``out_names``); building only the projected columns as lists skips
-    # the dead fields and the row->column transpose pandas would redo.
+    # r06: emit COLUMNS, not row records — only the projected columns are
+    # built, as lists, so dead fields and the row->column transpose pandas
+    # would redo are skipped.  Result fields come straight off the
+    # ExtractedContent (an error row is one too); only the job-level
+    # fields below are computed per row.
     wanted = set(out_names)
 
     def extract_frame(batch: pd.DataFrame, ruleset: RuleSet) -> pd.DataFrame:
@@ -126,68 +125,34 @@ def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str
                     lang_hint=lang_hint,
                     options=options,
                 )
-                record = {
-                    "url": res.url,
-                    "effective_url": res.effective_url,
-                    "title": res.title,
-                    "language": res.language,
-                    "date": res.date,
-                    "authors": res.authors,
-                    "image": res.image,
-                    "is_native_ad": res.is_native_ad,
-                    "is_success": res.is_success,
-                    "next_page_url": res.next_page_url,
-                    "single_page_url": res.single_page_url,
-                    "redirect_target": res.redirect_target,
-                    "mime": res.mime,
-                }
-                if "spans" in wanted:
-                    record["spans"] = [
-                        {"start": s, "end": e} for s, e in res.spans
-                    ]
-                if "html" in wanted:
-                    record["html"] = res.html
-                if "text" in wanted:
-                    record["text"] = res.text
-                if "summary" in wanted:
-                    record["summary"] = res.summary
-                if "trace" in wanted:
-                    record["trace"] = res.trace
-                if "markdown" in wanted:
-                    record["markdown"] = (
-                        to_markdown(res.html) if options.markdown else None
-                    )
+                markdown = to_markdown(res.html) if "markdown" in wanted else None
             except Exception:
                 # per-row failure isolation: emit an error row, never
                 # fail the task (reference analog: O12 error result)
-                record = {
-                    "url": url,
-                    "effective_url": url,
-                    "title": options.error_message_title,
-                    "language": None,
-                    "date": None,
-                    "authors": [],
-                    "image": None,
-                    "is_native_ad": False,
-                    "is_success": False,
-                    "next_page_url": None,
-                    "single_page_url": None,
-                    "redirect_target": None,
-                    "spans": [],
-                    "html": options.error_message,
-                    "text": "",
-                    "summary": "",
-                    "mime": "",
-                    "trace": [],
-                    "markdown": "" if options.markdown else None,
-                }
-            record["warc_ts"] = getattr(row, "warc_ts", None)
-            record["bytes_in"] = len(html)
+                res = ExtractedContent(
+                    url=url,
+                    effective_url=url,
+                    title=options.error_message_title,
+                    html=options.error_message,
+                )
+                markdown = ""
             elapsed_ns = time.perf_counter_ns() - started
-            record["extract_ms"] = elapsed_ns // 1_000_000
-            record["extract_us"] = elapsed_ns // 1_000
+            job_fields = {
+                "warc_ts": getattr(row, "warc_ts", None),
+                "bytes_in": len(html),
+                "extract_ms": elapsed_ns // 1_000_000,
+                "extract_us": elapsed_ns // 1_000,
+                "spans": (
+                    [{"start": s, "end": e} for s, e in res.spans]
+                    if "spans" in wanted
+                    else None
+                ),
+                "markdown": markdown,
+            }
             for name in out_names:
-                cols[name].append(record.get(name))
+                cols[name].append(
+                    job_fields[name] if name in job_fields else getattr(res, name)
+                )
         return pd.DataFrame(cols, columns=out_names)
 
     def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -263,11 +228,8 @@ def run_extraction(
         out_schema = StructType([f for f in base_schema.fields if f.name in wanted])
         out_names = [f.name for f in out_schema.fields]
 
-    # cheap JVM-side pre-route: rows whose content_type maps to a non-HTML
-    # action skip nothing here (the UDF handles them quickly), but clearly
-    # binary types with no action (e.g. video/mp4 w/o config) never enter
-    # the Python stage at production scale.  We keep all rows that have a
-    # content_type the pipeline understands.
+    # a pages table without fetch metadata reads as a plain 200 HTML
+    # response; every row enters the Python stage, which routes by mime
     if "content_type" not in pages.columns:
         pages = pages.withColumn("content_type", F.lit("text/html; charset=utf-8"))
     if "http_status" not in pages.columns:
@@ -647,9 +609,7 @@ def resolve_multipage(extracted: DataFrame, max_hops: int = 8) -> DataFrame:
     return merged
 
 
-def trace_stats(
-    out: DataFrame, url_col: str = "url", trace_col: str = "trace"
-) -> DataFrame:
+def trace_stats(out: DataFrame) -> DataFrame:
     """Operational rollup of the per-document extraction trace: which
     pipeline step fired with which detail, counted per domain —
     (domain, step, detail, n).
@@ -666,8 +626,8 @@ def trace_stats(
     the corpus.  Requires extraction run with
     ``ExtractOptions(trace=True)``.
     """
-    domain = F.regexp_extract(F.col(url_col), r"://([^/]+)", 1)
-    step_entry = F.explode(F.col(trace_col)).alias("entry")
+    domain = F.regexp_extract(F.col("url"), r"://([^/]+)", 1)
+    step_entry = F.explode(F.col("trace")).alias("entry")
     exploded = out.select(domain.alias("domain"), step_entry)
     step = F.substring_index(F.col("entry"), ":", 1)
     detail = F.trim(F.expr("substring(entry, length(substring_index(entry, ':', 1)) + 2)"))

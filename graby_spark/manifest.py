@@ -8,8 +8,10 @@ snapshot semantics (append-only manifests, resume = anti-join):
   manifest(run_id, snapshot_id, bucket, url_count, ok_count, fail_count,
            bytes_in, wall_ms, completed_at)
 
-* ``bucket`` is a deterministic url-hash bucket (NOT the physical Spark
-  partition id — bucket assignment must survive re-planning).
+* ``bucket`` is a deterministic url-hash bucket, ``bucket_of(url)`` over
+  the module's one ``BUCKETS`` constant (NOT the physical Spark
+  partition id — bucket assignment must survive re-planning, and every
+  write and resume of a manifest must agree on it).
 * A bucket appears in the manifest only after all of its rows were
   written — the write is bucket-partitioned so the commit unit and the
   resume unit coincide.
@@ -32,6 +34,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,11 +49,18 @@ __all__ = [
     "write_with_manifest",
 ]
 
-DEFAULT_BUCKETS = 64
+BUCKETS = 64
+
+# nullability as well as types match the files earlier writes left
+_MANIFEST_SCHEMA = (
+    "run_id string NOT NULL, snapshot_id bigint NOT NULL, bucket int, "
+    "url_count bigint NOT NULL, ok_count bigint, fail_count bigint, "
+    "bytes_in bigint, wall_ms int NOT NULL, completed_at timestamp NOT NULL"
+)
 
 
-def bucket_of(url_col, n_buckets: int = DEFAULT_BUCKETS):
-    return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
+def bucket_of(url_col):
+    return F.pmod(F.xxhash64(url_col), F.lit(BUCKETS)).cast("int")
 
 
 def manifest_snapshots(spark: SparkSession, manifest_path: str) -> DataFrame:
@@ -105,28 +115,26 @@ def completed_buckets(
 ) -> DataFrame:
     """Buckets recorded complete by any run at/before the pinned snapshot
     (default: all runs)."""
-    if not os.path.exists(manifest_path):
-        return spark.createDataFrame([], "bucket int")
-    rows = spark.read.parquet(manifest_path)
-    if as_of_snapshot is not None:
-        rows = rows.where(F.col("snapshot_id") <= as_of_snapshot)
-    return rows.select("bucket").distinct()
+    return (
+        read_manifest(spark, manifest_path, as_of_snapshot, history=True)
+        .select("bucket")
+        .distinct()
+    )
 
 
 def filter_resumable(
     spark: SparkSession,
     pages: DataFrame,
     manifest_path: str,
-    n_buckets: int = DEFAULT_BUCKETS,
     as_of_snapshot: int | None = None,
 ) -> DataFrame:
     """Drop rows whose bucket already completed (anti-join on the tiny
-    bucket list — broadcastable by construction).  ``as_of_snapshot`` pins
-    the resume decision to a manifest snapshot: the same remaining set is
-    computed even while a newer run is appending manifest rows."""
-    done = completed_buckets(spark, manifest_path, as_of_snapshot)
-    with_bucket = pages.withColumn("bucket", bucket_of(F.col("url"), n_buckets))
-    return with_bucket.join(F.broadcast(done), "bucket", "left_anti")
+    bucket list — broadcastable by construction); the result has exactly
+    ``pages``' columns.  ``as_of_snapshot`` pins the resume decision to a
+    manifest snapshot: the same remaining set is computed even while a
+    newer run is appending manifest rows."""
+    done = F.broadcast(completed_buckets(spark, manifest_path, as_of_snapshot))
+    return pages.join(done, bucket_of(pages["url"]) == done["bucket"], "left_anti")
 
 
 def expire_snapshots(
@@ -238,8 +246,6 @@ def write_with_manifest(
     extracted: DataFrame,
     output_path: str,
     manifest_path: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-    run_id: str | None = None,
 ) -> dict:
     """Write the extraction output bucket-partitioned, then append one
     manifest row per bucket (lineage: counts, bytes, wall time, snapshot).
@@ -250,10 +256,10 @@ def write_with_manifest(
     which preserves exactly-once output semantics.
 
     Over ``run_extraction``'s default repartition each task holds a
-    contiguous run of the ``DEFAULT_BUCKETS`` buckets, so the write makes
-    at most partitions + n_buckets − 1 files.
+    contiguous run of the ``BUCKETS`` buckets, so the write makes at most
+    partitions + ``BUCKETS`` − 1 files.
     """
-    run_id = run_id or uuid.uuid4().hex[:12]
+    run_id = uuid.uuid4().hex[:12]
     # strictly increasing commit sequence even for back-to-back runs in
     # the same millisecond (time travel needs a total snapshot order)
     snapshot_id = int(time.time() * 1000)
@@ -267,18 +273,32 @@ def write_with_manifest(
             snapshot_id = prev + 1
     started = time.time()
 
-    with_bucket = extracted.withColumn("bucket", bucket_of(F.col("url"), n_buckets)).cache()
-    if with_bucket.isEmpty():
+    with_bucket = extracted.withColumn("bucket", bucket_of(F.col("url"))).cache()
+    # lineage stats for THIS run's buckets only (≤ BUCKETS rows; never
+    # re-read the whole output dir — prior runs' buckets are already
+    # recorded).  The one pass also fills the cache the write reads.
+    stats = (
+        with_bucket.groupBy("bucket")
+        .agg(
+            F.count("*").alias("url_count"),
+            F.sum(F.col("is_success").cast("int")).alias("ok_count"),
+            F.sum((~F.col("is_success")).cast("int")).alias("fail_count"),
+            F.sum("bytes_in").alias("bytes_in"),
+        )
+        .collect()
+    )
+    summary = {
+        "run_id": run_id,
+        "snapshot_id": snapshot_id,
+        "urls": sum(r["url_count"] for r in stats),
+        "ok": sum(r["ok_count"] for r in stats),
+        "fail": sum(r["fail_count"] for r in stats),
+        "wall_ms": 0,
+    }
+    if not stats:
         # fully resumed: nothing to write, nothing to record
         with_bucket.unpersist()
-        return {
-            "run_id": run_id,
-            "snapshot_id": snapshot_id,
-            "urls": 0,
-            "ok": 0,
-            "fail": 0,
-            "wall_ms": 0,
-        }
+        return summary
 
     # dynamic overwrite per write, not per session: later writes in the
     # session keep their own overwrite mode
@@ -288,47 +308,13 @@ def write_with_manifest(
         .partitionBy("bucket")
         .parquet(output_path)
     )
-
-    wall_ms = int((time.time() - started) * 1000)
-    # lineage rows for THIS run's buckets only (never re-read the whole
-    # output dir — prior runs' buckets are already recorded)
-    stats = (
-        with_bucket.groupBy("bucket")
-        .agg(
-            F.count("*").alias("url_count"),
-            F.sum(F.col("is_success").cast("int")).alias("ok_count"),
-            F.sum((~F.col("is_success")).cast("int")).alias("fail_count"),
-            F.sum("bytes_in").alias("bytes_in"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("snapshot_id", F.lit(snapshot_id))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn("completed_at", F.current_timestamp())
-        .select(
-            "run_id",
-            "snapshot_id",
-            "bucket",
-            "url_count",
-            "ok_count",
-            "fail_count",
-            "bytes_in",
-            "wall_ms",
-            "completed_at",
-        )
-    )
-    stats = stats.cache()
-    stats.write.mode("append").parquet(manifest_path)
-    agg = stats.agg(
-        F.sum("url_count").alias("urls"),
-        F.sum("ok_count").alias("ok"),
-        F.sum("fail_count").alias("fail"),
-    ).collect()[0]
+    summary["wall_ms"] = int((time.time() - started) * 1000)
     with_bucket.unpersist()
-    return {
-        "run_id": run_id,
-        "snapshot_id": snapshot_id,
-        "urls": agg["urls"],
-        "ok": agg["ok"],
-        "fail": agg["fail"],
-        "wall_ms": wall_ms,
-    }
+
+    # data first, then the manifest: a bucket is recorded only once its
+    # rows are on disk
+    completed_at = datetime.now(timezone.utc)
+    # each stats row is (bucket, url_count, ok_count, fail_count, bytes_in)
+    rows = [(run_id, snapshot_id, *r, summary["wall_ms"], completed_at) for r in stats]
+    spark.createDataFrame(rows, _MANIFEST_SCHEMA).write.mode("append").parquet(manifest_path)
+    return summary

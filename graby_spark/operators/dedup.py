@@ -639,20 +639,6 @@ def duplicate_clusters(
     )
 
 
-def apply_dedup(
-    df: DataFrame,
-    clusters: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Keep one document per duplicate cluster: drop every clustered doc
-    that is not its cluster's canonical.  Anti-join keyed by id — the
-    corpus never shuffles its payload columns."""
-    losers = clusters.where(F.col("doc") != F.col("canonical")).select(
-        F.col("doc").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
-
-
 def keep_best(
     clusters: DataFrame,
     scores: DataFrame,

@@ -1887,50 +1887,6 @@ def encode_bmp(arr: np.ndarray) -> bytes:
     return bytes(hdr) + bytes(body)
 
 
-def encode_bmp_core(arr: np.ndarray, palette: np.ndarray | None = None) -> bytes:
-    """OS/2 BITMAPCOREHEADER fixture writer: 24-bpp from (h, w, 3), or
-    8-bpp palette indices from a 2-D array with an RGB ``palette``
-    (stored as the core header's 3-byte BGR RGBTRIPLEs) — exercises the
-    WORD-geometry header and triple-palette branches of decode_bmp."""
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 2:
-        if palette is None:
-            palette = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-        pal = np.asarray(palette, dtype=np.uint8)
-        pal_bytes = pal[:, [2, 1, 0]].tobytes()  # RGB -> BGR triples
-        h, w = a.shape
-        row_bytes = (w + 3) & ~3
-        body = b"".join(
-            a[y].tobytes().ljust(row_bytes, b"\x00") for y in range(h - 1, -1, -1)
-        )
-        off = 14 + 12 + len(pal_bytes)
-        bpp = 8
-    else:
-        h, w, _ = a.shape
-        row_bytes = (w * 3 + 3) & ~3
-        body = b"".join(
-            a[y][:, [2, 1, 0]].tobytes().ljust(row_bytes, b"\x00")
-            for y in range(h - 1, -1, -1)
-        )
-        pal_bytes = b""
-        off = 14 + 12
-        bpp = 24
-    hdr = (
-        b"BM"
-        + (off + len(body)).to_bytes(4, "little")
-        + bytes(4)
-        + off.to_bytes(4, "little")
-    )
-    core = (
-        (12).to_bytes(4, "little")
-        + w.to_bytes(2, "little")
-        + h.to_bytes(2, "little")
-        + (1).to_bytes(2, "little")
-        + bpp.to_bytes(2, "little")
-    )
-    return hdr + core + pal_bytes + body
-
-
 def decode_ico(data: bytes) -> np.ndarray:
     """ICO (favicon) decode: picks the largest directory entry and
     decodes its payload — PNG-compressed entries go through

@@ -513,19 +513,10 @@ class Readability:
                 else:
                     prev_was_br = False
 
-    # generic 'video' keeps self-hosted embeds (/embed/video/...), pinned by
-    # the lemonde golden fixture keeping its lemonde.fr video iframe
-    _VIDEO_RE = re.compile(r"youtube|vimeo|dailymotion|video", re.I)
-
-    def _clean(self, el: Element, tag: str, allow_known_video: bool = False) -> None:
+    def _clean(self, el: Element, tag: str) -> None:
         for target in el.iter_list(tag):
-            if target.parent is None:
-                continue
-            if allow_known_video:
-                src = target.get("src") or ""
-                if self._VIDEO_RE.search(src):
-                    continue
-            target.detach()
+            if target.parent is not None:
+                target.detach()
 
     def _clean_headers(self, el: Element) -> None:
         for tag in ("h1", "h2"):
@@ -534,6 +525,10 @@ class Readability:
                     continue
                 if self._class_weight(header) < 0 or self._link_density(header) > 0.33:
                     header.detach()
+
+    # generic 'video' keeps self-hosted embeds (/embed/video/...), pinned by
+    # the lemonde golden fixture keeping its lemonde.fr video iframe
+    _VIDEO_RE = re.compile(r"youtube|vimeo|dailymotion|video", re.I)
 
     def _has_video_embed(self, el: Element) -> bool:
         for tag in ("iframe", "embed", "object", "video"):

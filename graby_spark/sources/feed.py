@@ -19,8 +19,8 @@ Design:
   once to the (small) feed table, not per entry.
 - Per-entry field alignment: xpath returns one array per field in document
   order; an entry missing a field would shift later entries' values.  Rows
-  carry ``aligned`` (all field arrays same length) so consumers can route
-  misaligned feeds to a lenient re-parse instead of silently mis-zipping.
+  carry ``aligned`` (all field arrays same length) so consumers can drop
+  or re-parse misaligned feeds instead of silently mis-zipping.
 - Dates are normalized to ISO-8601 *strings* with pure string transforms
   (RFC-822 month-name map) — no timestamp parsing, so the result is
   independent of session timezone and JVM locale.
@@ -280,120 +280,3 @@ def build_feed_blobs(
         )
     )
     return per_feed.select("feed_id", xml.alias("xml"))
-
-
-_FEED_ENTRY_SCHEMA = (
-    "feed_title string, kind string, pos long, title string, link string, "
-    "published string, summary string, aligned boolean"
-)
-
-
-def _rfc822_to_iso_py(value: str | None) -> str | None:
-    """Python twin of :func:`_rfc822_to_iso` for the lenient parser."""
-    if value is None:
-        return None
-    v = value.strip()
-    import re as _re
-
-    if not _re.match(r"^[A-Za-z]{3},\s+\d{1,2}\s+[A-Za-z]{3}\s+\d{4}", v):
-        return v
-    parts = v.replace(",", "").split()
-    try:
-        mon = f"{_MONTHS.index(parts[2]) + 1:02d}"
-    except ValueError:
-        return v
-    return f"{parts[3]}-{mon}-{parts[1].zfill(2)}T{parts[4]}Z"
-
-
-def feed_entries_lenient(df: DataFrame, xml_col: str = "xml") -> DataFrame:
-    """Robust per-entry feed parser: the fallback for rows the fast path
-    cannot trust — malformed XML (job-fatal for JVM xpath) and feeds
-    whose entries miss fields (``aligned=false`` from
-    :func:`feed_entries`, where document-order zipping would shift
-    values between entries).
-
-    Real XML parsing (``xml.etree``) per entry inside ``mapInPandas``, so
-    a missing pubDate yields NULL for THAT entry instead of misaligning
-    its neighbours; malformed documents yield zero rows instead of
-    failing the job.  Namespace-agnostic via tag local names; Atom link
-    preference rel=alternate > no-rel > first.  Same output schema as
-    the fast path (``aligned`` always true here — per-entry extraction
-    cannot misalign), and identical rows on well-formed input (pinned).
-
-    This is the slow path by design: route only gated/flagged rows here
-    (a fraction of a corpus), keep the JVM path for the rest.
-    """
-
-    def parse(batches):
-        import xml.etree.ElementTree as ET
-
-        def local(tag):
-            return tag.rsplit("}", 1)[-1]
-
-        for pdf in batches:
-            rows = []
-            for xml in pdf[xml_col]:
-                if xml is None:
-                    continue
-                try:
-                    root = ET.fromstring(xml)
-                except ET.ParseError:
-                    continue
-                is_rss = local(root.tag) == "rss"
-                if is_rss:
-                    chan = next(
-                        (c for c in root if local(c.tag) == "channel"), None
-                    )
-                    if chan is None:
-                        continue
-                    feed_title = next(
-                        (c.text for c in chan if local(c.tag) == "title"), None
-                    )
-                    items = [c for c in chan if local(c.tag) == "item"]
-                else:
-                    feed_title = next(
-                        (c.text for c in root if local(c.tag) == "title"), None
-                    )
-                    items = [c for c in root if local(c.tag) == "entry"]
-                for pos, it in enumerate(items):
-                    fields = {}
-                    links = []
-                    for c in it:
-                        t = local(c.tag)
-                        if t == "link":
-                            links.append(c)
-                        else:
-                            fields.setdefault(t, c.text)
-                    if is_rss:
-                        link = links[0].text if links else None
-                        date = fields.get("pubDate")
-                        summary = fields.get("description")
-                    else:
-                        best = next(
-                            (l for l in links if l.get("rel") == "alternate"),
-                            next((l for l in links if l.get("rel") is None), None),
-                        ) or (links[0] if links else None)
-                        link = best.get("href") if best is not None else None
-                        date = fields.get("updated")
-                        summary = fields.get("summary")
-                    rows.append(
-                        (
-                            feed_title,
-                            "rss" if is_rss else "atom",
-                            pos,
-                            fields.get("title"),
-                            link,
-                            _rfc822_to_iso_py(date),
-                            summary,
-                            True,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "feed_title", "kind", "pos", "title",
-                    "link", "published", "summary", "aligned",
-                ],
-            )
-
-    return df.select(xml_col).mapInPandas(parse, _FEED_ENTRY_SCHEMA)

@@ -11,9 +11,8 @@ This module wraps Spark's native bucketing (Hive-hash ``bucketBy`` +
 
 - :func:`write_bucketed` — write a DataFrame as a bucketed, sorted
   managed table; bucket counts must match across tables you intend to
-  co-join.
-- :func:`read_bucketed` — read it back (plain ``spark.table``; the
-  catalog carries the bucket spec).
+  co-join.  Read it back with plain ``spark.table`` — the catalog
+  carries the bucket spec.
 - :func:`plan_has_exchange` — plan introspection used by the pinned tests
   (and available to callers as a cheap regression guard): True iff the
   physical plan contains a shuffle Exchange.
@@ -32,7 +31,7 @@ handles the output side).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -41,9 +40,9 @@ def write_bucketed(
     table: str,
     key: str | list[str],
     buckets: int,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as a managed parquet table bucketed+sorted on ``key``.
+    """Write ``df`` as a managed parquet table bucketed+sorted on ``key``,
+    replacing any table of that name.
 
     Sorting within buckets makes the downstream sort-merge join skip its
     sort as well as its shuffle, and gives parquet run-length-friendly
@@ -51,16 +50,12 @@ def write_bucketed(
     """
     keys = [key] if isinstance(key, str) else list(key)
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .format("parquet")
         .bucketBy(buckets, *keys)
         .sortBy(*keys)
         .saveAsTable(table)
     )
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def plan_has_exchange(df: DataFrame) -> bool:

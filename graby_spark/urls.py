@@ -129,22 +129,6 @@ def rewrite_url(url: str, rewrite_map: dict[str, dict[str, str]] | None = None) 
     return url
 
 
-def rewrite_url_expr(url_col: str | Column = "url") -> Column:
-    """JVM twin of rewrite_url for table-level canonicalization."""
-    col = F.col(url_col) if isinstance(url_col, str) else url_col
-    for host_match, pairs in DEFAULT_REWRITE_URL.items():
-        for find, replace in pairs.items():
-            col = F.when(
-                col.contains(host_match), F.regexp_replace(col, re.escape(find), replace.replace("$", "\\$"))
-            ).otherwise(col)
-    # '#!' AJAX canonicalization
-    has_bang = col.contains("#!")
-    base = F.substring_index(col, "#!", 1)
-    fragment = F.substring_index(col, "#!", -1)
-    sep = F.when(base.contains("?"), F.lit("&")).otherwise(F.lit("?"))
-    return F.when(has_bang, F.concat(base, sep, F.lit("_escaped_fragment_="), fragment)).otherwise(col)
-
-
 def normalize_host_expr(url_col: str | Column = "url") -> Column:
     """Normalized host key column (lowercase, www. stripped — R1)."""
     col = F.col(url_col) if isinstance(url_col, str) else url_col

@@ -333,40 +333,6 @@ def test_warc_sink_round_trip_and_determinism(spark):
     assert a == b and len(a) == 5
 
 
-def test_feed_lenient_matches_fast_path_on_wellformed(spark):
-    from graby_spark.sources.feed import (
-        build_feed_blobs,
-        feed_entries,
-        feed_entries_lenient,
-    )
-
-    blobs = build_feed_blobs(spark, "/root/testdata/sf0.001").limit(30)
-    fast = sorted(tuple(r) for r in feed_entries(blobs).collect())
-    lenient = sorted(tuple(r) for r in feed_entries_lenient(blobs).collect())
-    assert fast == lenient and len(fast) > 0
-
-
-def test_feed_lenient_handles_misaligned_and_malformed(spark):
-    from graby_spark.sources.feed import feed_entries_lenient
-
-    missing_date = (
-        '<rss version="2.0"><channel><title>R</title>'
-        "<item><title>a</title><link>http://r/1</link>"
-        "<pubDate>Mon, 01 Jan 2024 00:00:00 GMT</pubDate><description>d</description></item>"
-        "<item><title>b</title><link>http://r/2</link><description>e</description></item>"
-        "</channel></rss>"
-    )
-    df = spark.createDataFrame(
-        [(missing_date,), ("<rss><broken",), (None,)], ["xml"]
-    )
-    rows = {r["link"]: r.asDict() for r in feed_entries_lenient(df).collect()}
-    assert len(rows) == 2  # malformed/NULL docs yield nothing, job survives
-    assert rows["http://r/1"]["published"] == "2024-01-01T00:00:00Z"
-    # the entry missing its date gets NULL there — neighbours unshifted
-    assert rows["http://r/2"]["published"] is None
-    assert rows["http://r/2"]["summary"] == "e" and rows["http://r/2"]["title"] == "b"
-
-
 def test_cdx_select_latest_as_of_time_travel(spark):
     from graby_spark.sources.cdx import cdx_records, cdx_select_latest
 

@@ -10,7 +10,7 @@ import pytest
 
 from graby_spark.extract import ExtractOptions
 from graby_spark.job import resolve_multipage, run_extraction
-from graby_spark.manifest import filter_resumable, write_with_manifest
+from graby_spark.manifest import bucket_of, filter_resumable, write_with_manifest
 from graby_spark.pages import (
     build_multipage_pages_df,
     build_pages_df,
@@ -126,19 +126,33 @@ def test_manifest_write_and_resume(spark, extracted, tmp_path_factory):
     manifest_path = os.path.join(base, "manifest")
 
     overwrite_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    summary = write_with_manifest(spark, extracted, out_path, manifest_path, n_buckets=8)
+    summary = write_with_manifest(spark, extracted, out_path, manifest_path)
     assert summary["urls"] == 500 and summary["fail"] == 0
     # dynamic overwrite is a per-write option; the session conf is untouched
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == overwrite_mode
 
     manifest = spark.read.parquet(manifest_path)
-    assert manifest.count() == 8  # one row per bucket
-    cols = set(manifest.columns)
-    assert {"run_id", "snapshot_id", "bucket", "url_count", "ok_count", "wall_ms"} <= cols
+    # one row per bucket the data fills
+    assert manifest.count() == extracted.select(bucket_of("url")).distinct().count()
+    # the on-disk lineage schema every earlier manifest was written with:
+    # appends must keep mixing with them
+    assert [(f.name, f.dataType.simpleString()) for f in manifest.schema] == [
+        ("run_id", "string"),
+        ("snapshot_id", "bigint"),
+        ("bucket", "int"),
+        ("url_count", "bigint"),
+        ("ok_count", "bigint"),
+        ("fail_count", "bigint"),
+        ("bytes_in", "bigint"),
+        ("wall_ms", "int"),
+        ("completed_at", "timestamp"),
+    ]
 
-    # resume: everything completed → nothing left to do
+    # resume: everything completed → nothing left to do, and the remainder
+    # is the pages table itself (no bucket column leaks to the caller)
     pages = build_pages_df(spark, SF_DIR)
-    remaining = filter_resumable(spark, pages, manifest_path, n_buckets=8)
+    remaining = filter_resumable(spark, pages, manifest_path)
+    assert remaining.columns == pages.columns
     assert remaining.count() == 0
 
     # partial failure: drop the manifest rows for 3 buckets → only those
@@ -147,12 +161,12 @@ def test_manifest_write_and_resume(spark, extracted, tmp_path_factory):
     schema = spark.read.parquet(manifest_path).schema
     shutil.rmtree(manifest_path)
     spark.createDataFrame(partial_rows, schema).write.parquet(manifest_path)
-    remaining = filter_resumable(spark, pages, manifest_path, n_buckets=8)
+    remaining = filter_resumable(spark, pages, manifest_path)
     rem_count = remaining.count()
     assert 0 < rem_count < 500
     # re-extract the remaining and overwrite their buckets
-    redone = run_extraction(spark, remaining.drop("bucket"), pages_ruleset(), options=OPTS)
-    write_with_manifest(spark, redone, out_path, manifest_path, n_buckets=8)
+    redone = run_extraction(spark, remaining, pages_ruleset(), options=OPTS)
+    write_with_manifest(spark, redone, out_path, manifest_path)
     final = spark.read.parquet(out_path)
     urls = [r["url"] for r in final.select("url").collect()]
     assert len(urls) == 500 and len(set(urls)) == 500  # no dup, no missing
@@ -189,24 +203,20 @@ def test_manifest_snapshot_time_travel(spark, extracted, tmp_path_factory):
     is reproducible while snapshot N+1 lands."""
     from pyspark.sql import functions as F
 
-    from graby_spark.manifest import bucket_of, manifest_snapshots, read_manifest
+    from graby_spark.manifest import manifest_snapshots, read_manifest
 
     base = str(tmp_path_factory.mktemp("manifest_tt"))
     out_path = os.path.join(base, "out")
     manifest_path = os.path.join(base, "manifest")
 
-    s1 = write_with_manifest(spark, extracted, out_path, manifest_path, n_buckets=8)
+    s1 = write_with_manifest(spark, extracted, out_path, manifest_path)
     round1_rows = sorted(
         tuple(r) for r in spark.read.parquet(manifest_path).collect()
     )
 
     # snapshot 2: partial rewrite of 3 buckets
-    subset = (
-        extracted.withColumn("_b", bucket_of(F.col("url"), 8))
-        .where("_b < 3")
-        .drop("_b")
-    )
-    s2 = write_with_manifest(spark, subset, out_path, manifest_path, n_buckets=8)
+    subset = extracted.where(bucket_of(F.col("url")) < 3)
+    s2 = write_with_manifest(spark, subset, out_path, manifest_path)
     assert s2["snapshot_id"] > s1["snapshot_id"]  # total commit order
 
     # time travel: the manifest AS OF snapshot 1 is byte-for-byte the
@@ -218,7 +228,7 @@ def test_manifest_snapshot_time_travel(spark, extracted, tmp_path_factory):
 
     # current state: rewritten buckets resolve to snapshot 2, others to 1
     current = {r["bucket"]: r["snapshot_id"] for r in read_manifest(spark, manifest_path).collect()}
-    assert len(current) == 8
+    assert len(current) == extracted.select(bucket_of("url")).distinct().count()
     assert all(
         sid == (s2["snapshot_id"] if b < 3 else s1["snapshot_id"])
         for b, sid in current.items()
@@ -231,7 +241,7 @@ def test_manifest_snapshot_time_travel(spark, extracted, tmp_path_factory):
     # a resume decision pinned at snapshot 1 is unchanged by snapshot 2
     pages = build_pages_df(spark, SF_DIR)
     remaining = filter_resumable(
-        spark, pages, manifest_path, n_buckets=8, as_of_snapshot=s1["snapshot_id"]
+        spark, pages, manifest_path, as_of_snapshot=s1["snapshot_id"]
     )
     assert remaining.count() == 0
 
@@ -244,7 +254,6 @@ def test_manifest_expire_snapshots(spark, extracted, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from graby_spark.manifest import (
-        bucket_of,
         expire_snapshots,
         manifest_snapshots,
         read_manifest,
@@ -254,12 +263,11 @@ def test_manifest_expire_snapshots(spark, extracted, tmp_path_factory):
     out_path = os.path.join(base, "out")
     manifest_path = os.path.join(base, "manifest")
 
-    # s1: all 8 buckets; s2/s3: rewrites of buckets <3 and <5
-    s1 = write_with_manifest(spark, extracted, out_path, manifest_path, n_buckets=8)
-    sub2 = extracted.withColumn("_b", bucket_of(F.col("url"), 8)).where("_b < 3").drop("_b")
-    s2 = write_with_manifest(spark, sub2, out_path, manifest_path, n_buckets=8)
-    sub3 = extracted.withColumn("_b", bucket_of(F.col("url"), 8)).where("_b < 5").drop("_b")
-    s3 = write_with_manifest(spark, sub3, out_path, manifest_path, n_buckets=8)
+    # s1: every bucket; s2/s3: rewrites of buckets <3 and <5
+    bucket = bucket_of(F.col("url"))
+    s1 = write_with_manifest(spark, extracted, out_path, manifest_path)
+    s2 = write_with_manifest(spark, extracted.where(bucket < 3), out_path, manifest_path)
+    s3 = write_with_manifest(spark, extracted.where(bucket < 5), out_path, manifest_path)
 
     current_before = sorted(
         tuple(r) for r in read_manifest(spark, manifest_path).collect()
@@ -297,8 +305,8 @@ def test_manifest_expire_snapshots(spark, extracted, tmp_path_factory):
     )
     # expired history is gone for buckets covered at the oldest retained
     # snapshot (s2 rewrote buckets < 3); buckets 3-4 (first retained at s3)
-    # and 5-7 (never retained) carry their single latest s1 row forward so
-    # reads at s2 still resolve them
+    # and every bucket >= 5 (never retained) carry their single latest s1
+    # row forward so reads at s2 still resolve them
     hist = spark.read.parquet(manifest_path)
     assert (
         hist.where(
@@ -310,11 +318,11 @@ def test_manifest_expire_snapshots(spark, extracted, tmp_path_factory):
         hist.where(
             (F.col("snapshot_id") == s1["snapshot_id"]) & (F.col("bucket") >= 3)
         ).count()
-        == 5
+        == extracted.where(bucket >= 3).select(bucket).distinct().count()
     )
     # resume over the compacted manifest still sees every bucket complete
     pages = build_pages_df(spark, SF_DIR)
-    assert filter_resumable(spark, pages, manifest_path, n_buckets=8).count() == 0
+    assert filter_resumable(spark, pages, manifest_path).count() == 0
     # idempotent: nothing left to expire at keep_last=2
     res2 = expire_snapshots(spark, manifest_path, keep_last=2)
     assert res2["snapshots_expired"] == 0 and res2["rows_after"] == res["rows_after"]
@@ -427,7 +435,7 @@ def test_each_task_writes_whole_buckets(spark, tmp_path_factory):
     manifest_path = os.path.join(base, "manifest")
     pages = _mega_host_pages(spark)
     extracted = run_extraction(spark, pages, pages_ruleset(), options=OPTS, partitions=8)
-    summary = write_with_manifest(spark, extracted, out_path, manifest_path, n_buckets=64)
+    summary = write_with_manifest(spark, extracted, out_path, manifest_path)
 
     files = [
         name
@@ -444,7 +452,7 @@ def test_each_task_writes_whole_buckets(spark, tmp_path_factory):
     manifest = spark.read.parquet(manifest_path)
     totals = manifest.agg(F.sum("ok_count"), F.sum("fail_count")).first()
     assert tuple(totals) == (outcomes[True], outcomes[False])
-    assert filter_resumable(spark, pages, manifest_path, n_buckets=64).count() == 0
+    assert filter_resumable(spark, pages, manifest_path).count() == 0
 
 
 def test_oversized_row_short_circuits(spark):

@@ -149,24 +149,6 @@ def test_rewrite_url():
     assert rewrite_url("http://plain.com/x") == "http://plain.com/x"
 
 
-def test_rewrite_url_expr_matches_python():
-    from graby_spark.session import get_spark
-    from graby_spark.urls import rewrite_url, rewrite_url_expr
-
-    spark = get_spark(master="local[2]")
-    spark.sparkContext.setLogLevel("ERROR")
-    urls = [
-        "https://docs.google.com/Doc?id=x",
-        "https://en.m.wikipedia.org/wiki/X",
-        "http://a.com/page#!section/2",
-        "http://a.com/p?x=1#!f",
-        "http://plain.com/x",
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = [r[0] for r in df.select(rewrite_url_expr("url")).collect()]
-    assert got == [rewrite_url(u) for u in urls]
-
-
 def test_canonical_url_expr():
     from graby_spark.session import get_spark
     from graby_spark.urls import canonical_url_expr

@@ -44,9 +44,7 @@ def main() -> None:
 
     pages = build_pages_df(spark, sf_dir)
     remaining = filter_resumable(spark, pages, manifest_dir)
-    extracted = run_extraction(
-        spark, remaining.drop("bucket"), ruleset, options=ExtractOptions(xss_filter=False)
-    )
+    extracted = run_extraction(spark, remaining, ruleset, options=ExtractOptions(xss_filter=False))
     summary = write_with_manifest(spark, extracted, output_dir, manifest_dir)
     print(json.dumps(summary))
     spark.stop()
