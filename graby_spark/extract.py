@@ -985,26 +985,31 @@ def _body_fixups(
 # Graby::cleanupHtml equivalent (O1-O11)
 # ---------------------------------------------------------------------------
 
-def _collapse_blank_runs(el: Element) -> None:
+def _collapse_blank_runs(root: Element) -> None:
     """Merge runs of adjacent newline-bearing whitespace-only text nodes
-    into a single '\\n' (recursive).  Pure-space separator nodes (moved-out
-    inline edge spaces) are left alone."""
-    prev_blank = None
-    for child in list(el.children):
-        if (
-            isinstance(child, TextNode)
-            and child.data.strip() == ""
-            and "\n" in child.data
-        ):
-            if prev_blank is not None:
-                el.remove_child(child)
+    into a single '\\n', in every element of the subtree (an explicit
+    stack, so nesting depth is not bounded by the recursion limit).
+    Pure-space separator nodes (moved-out inline edge spaces) are left
+    alone."""
+    stack = [root]
+    while stack:
+        el = stack.pop()
+        prev_blank = None
+        for child in list(el.children):
+            if (
+                isinstance(child, TextNode)
+                and child.data.strip() == ""
+                and "\n" in child.data
+            ):
+                if prev_blank is not None:
+                    el.remove_child(child)
+                else:
+                    child.data = "\n"
+                    prev_blank = child
             else:
-                child.data = "\n"
-                prev_blank = child
-        else:
-            prev_blank = None
-            if isinstance(child, Element):
-                _collapse_blank_runs(child)
+                prev_blank = None
+                if isinstance(child, Element):
+                    stack.append(child)
 
 
 def cleanup_html(
@@ -1136,10 +1141,16 @@ def extract_one(
     http_status: int = 200,
     lang_hint: str | None = None,
     options: ExtractOptions | None = None,
+    *,
+    render: bool = True,
 ) -> ExtractedContent:
     """One document through the full pipeline (Graby.php:288-472,
     prefetched mode: no network, single/multi-page handled by the job's
-    self-join using the emitted ``next_page_url``/single-page columns)."""
+    self-join using the emitted ``next_page_url``/single-page columns).
+
+    ``render=False`` skips :func:`render_content`, for callers that read
+    none of ``html``/``text``/``summary``/``spans``: they stay at their
+    dataclass defaults and every other field is unchanged."""
     options = options or ExtractOptions()
     effective_url = textutils.strip_trackers(url)
 
@@ -1226,20 +1237,31 @@ def extract_one(
     if not extracted.language and lang_hint:
         extracted.language = lang_hint
 
+    extracted.title = extracted.title or options.error_message_title
+    if render:
+        render_content(extracted, options)
+    return extracted
+
+
+def render_content(extracted: ExtractedContent, options: ExtractOptions) -> None:
+    """The output tail of :func:`extract_one`: clean up and serialize the
+    content node into ``spans``/``html``/``summary``/``text`` (an
+    unsuccessful extraction gets the error html).  It sets only those four
+    fields; the content node it cleans up in place is read by nothing
+    else."""
     if not extracted.is_success or extracted.content is None:
         extracted.html = options.error_message
-        extracted.title = extracted.title or options.error_message_title
         extracted.summary = textutils.excerpt(extracted.html)
         extracted.text = ""
-        return extracted
+        return
 
     extracted.spans = content_spans(extracted.content)
-    html_out = cleanup_html(extracted.content, extracted.readability, effective_url, options)
+    html_out = cleanup_html(
+        extracted.content, extracted.readability, extracted.effective_url, options
+    )
     extracted.html = html_out
-    extracted.title = extracted.title or options.error_message_title
     extracted.summary = textutils.excerpt(html_out)
     extracted.text = _plain_text(html_out)
-    return extracted
 
 
 # Meta-refresh patterns, both attribute orders (HttpClient.php:459, :461);

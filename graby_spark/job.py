@@ -45,6 +45,7 @@ from .session import settle_python_worker, ship_package
 
 __all__ = [
     "EXTRACT_SCHEMA",
+    "RENDERED_COLUMNS",
     "run_extraction",
     "resolve_multipage",
     "resolve_single_page",
@@ -83,6 +84,11 @@ EXTRACT_SCHEMA = StructType(
     ]
 )
 
+#: output columns read off ``extract.render_content``'s work (``markdown``
+#: is rendered from ``html``); a projection with none of them skips it
+RENDERED_COLUMNS = frozenset({"html", "summary", "text", "spans", "markdown"})
+
+
 def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str] | None = None):
     """Build the mapInPandas function.  The iterator form amortizes
     per-partition setup (ruleset handle, compiled XPath cache) across all
@@ -96,7 +102,8 @@ def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str
     the Arrow round-trip of the dominant-byte ``html``/``text`` columns for
     consumers that never read them (e.g. a success-rate count, a
     metadata-only sink) — measured as the residual scaling loss at 4N cores
-    (BENCH/BASELINE.md)."""
+    (BENCH/BASELINE.md).  A projection with none of ``RENDERED_COLUMNS``
+    also skips the render tail (``extract_one(render=False)``)."""
     if out_names is None:
         out_names = [f.name for f in EXTRACT_SCHEMA.fields]
 
@@ -106,6 +113,7 @@ def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str
     # ExtractedContent (an error row is one too); only the job-level
     # fields below are computed per row.
     wanted = set(out_names)
+    render = bool(wanted & RENDERED_COLUMNS)
 
     def extract_frame(batch: pd.DataFrame, ruleset: RuleSet) -> pd.DataFrame:
         cols: dict[str, list[Any]] = {name: [] for name in out_names}
@@ -124,6 +132,7 @@ def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str
                     http_status=int(getattr(row, "http_status", 200) or 200),
                     lang_hint=lang_hint,
                     options=options,
+                    render=render,
                 )
                 markdown = to_markdown(res.html) if "markdown" in wanted else None
             except Exception:
@@ -158,11 +167,11 @@ def _make_extract_batch(ruleset_bc, options: ExtractOptions, out_names: list[str
     def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import sys
 
-        # deeply nested inline markup (e.g. thousands of unclosed <b>s)
-        # exceeds the default limit of 1000 in the two walks that still
-        # recurse, extract._collapse_blank_runs and markdown._inline; raise
-        # it — per-row try/except in extract_frame still isolates anything
-        # worse
+        # deeply nested markup (e.g. thousands of unclosed <b>s) exceeds
+        # the default limit of 1000 only in the markdown column's walks,
+        # which still recurse (markdown._inline, and markdown._blocks on
+        # nested blocks); raise it — per-row try/except in extract_frame
+        # still isolates anything worse
         if sys.getrecursionlimit() < 20000:
             sys.setrecursionlimit(20000)
         ruleset: RuleSet = ruleset_bc.value
@@ -195,7 +204,11 @@ def run_extraction(
     still pays the Arrow transfer of every extracted ``html``/``text`` body
     — the dominant bytes of the output and, profiled, the residual N→4N
     scaling loss.  Pass e.g. ``columns=["url", "is_success"]`` for
-    metadata-only consumers."""
+    metadata-only consumers.  The projection also reaches into the UDF
+    body: when it names none of ``RENDERED_COLUMNS`` (``html``,
+    ``summary``, ``text``, ``spans``, ``markdown``), each document skips
+    the render work (content cleanup, serialization, excerpt, plain
+    text) as well; the projected values are the same either way."""
     ship_package(spark)  # executors import graby_spark from any launch cwd
     options = options or ExtractOptions()
     ruleset_bc = spark.sparkContext.broadcast(ruleset)

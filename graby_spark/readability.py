@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import re
 
-from .dom import Document, Element, Node, TextNode, parse_html
+from .dom import CommentNode, Document, Element, Node, TextNode, parse_html
 from .dom import _HTML4_TAGS
 
 __all__ = ["Readability"]
@@ -132,8 +132,6 @@ class Readability:
         a single newline, xml:lang mirrored from lang (output-xhtml), and
         inline-element edge whitespace moved out — each pinned by the
         golden fixtures."""
-        from .dom import CommentNode
-
         # text reflow FIRST, while comments still mark "not at block end":
         # tidy(wrap=0) joins source lines inside text runs (newline run ->
         # one space), collapses space runs, and trims the trailing blanks
@@ -224,7 +222,7 @@ class Readability:
                 and kids[-1].tag not in _PHRASING_TAGS
             ):
                 el.append(TextNode("\n"))
-            lang = el.get("lang") if hasattr(el, "get") else None
+            lang = el.get("lang")
             if lang and not el.has_attr("xml:lang"):
                 el.set_attr("xml:lang", lang)
             # tidy reflows indentation around text content: a first/last

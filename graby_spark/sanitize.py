@@ -57,16 +57,20 @@ def _clean_element(el: Element) -> None:
         el.set_attr("alt", "image")
 
 
-def _walk(node: Element) -> None:
-    for child in list(node.children):
-        if isinstance(child, CommentNode):
-            node.remove_child(child)
-        elif isinstance(child, Element):
-            if child.tag in _DENY_TAGS:
+def _walk(root: Element) -> None:
+    # explicit stack — immune to pathological nesting depth
+    stack = [root]
+    while stack:
+        node = stack.pop()
+        for child in list(node.children):
+            if isinstance(child, CommentNode):
                 node.remove_child(child)
-            else:
-                _clean_element(child)
-                _walk(child)
+            elif isinstance(child, Element):
+                if child.tag in _DENY_TAGS:
+                    node.remove_child(child)
+                else:
+                    _clean_element(child)
+                    stack.append(child)
 
 
 def _escape_text(text: str) -> str:
@@ -81,26 +85,28 @@ def _serialize_lawed(node: Node, out: list[str]) -> None:
     """htmLawed-style serialization: void elements self-close with
     ``<img ... />`` (space before the slash, as pinned by
     tests/GrabyTest.php:1117-1123), non-void empties stay as tag pairs."""
-    if isinstance(node, RawTextNode):
-        out.append(node.data)
-        return
-    if isinstance(node, TextNode):
-        out.append(_escape_text(node.data))
-        return
-    if isinstance(node, CommentNode):
-        return  # comments stripped (htmLawed comment=1)
-    assert isinstance(node, Element)
-    out.append("<")
-    out.append(node.tag)
-    for k, v in node.attrs:
-        out.append(f' {k}="{_escape_attr(v)}"')
-    if node.tag in VOID_ELEMENTS:
-        out.append(" />")
-        return
-    out.append(">")
-    for child in node.children:
-        _serialize_lawed(child, out)
-    out.append(f"</{node.tag}>")
+    # explicit stack of (node | closing-string) — no recursion
+    stack: list[object] = [node]
+    while stack:
+        item = stack.pop()
+        if isinstance(item, str):
+            out.append(item)
+        elif isinstance(item, RawTextNode):
+            out.append(item.data)
+        elif isinstance(item, TextNode):
+            out.append(_escape_text(item.data))
+        elif isinstance(item, Element):
+            out.append("<")
+            out.append(item.tag)
+            for k, v in item.attrs:
+                out.append(f' {k}="{_escape_attr(v)}"')
+            if item.tag in VOID_ELEMENTS:
+                out.append(" />")
+                continue
+            out.append(">")
+            stack.append(f"</{item.tag}>")
+            stack.extend(reversed(item.children))
+        # comments are stripped (htmLawed comment=1)
 
 
 def sanitize_html(html: str) -> str:

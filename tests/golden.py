@@ -10,6 +10,24 @@ from dataclasses import dataclass
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "..", "fixtures")
 
+#: crawl-scale hostile pages ``(url, body)``, served as ``text/html``:
+#: truncated tags, raw binary masquerading as HTML, NULL payloads,
+#: undeclared charsets, a deflate bomb of nested divs, 3000 nested inline
+#: tags, an oversized document
+HOSTILE_PAGES = [
+    ("http://evil.example.com/truncated", b"<html><body><p>cut mid attr <a href="),
+    ("http://evil.example.com/binary", bytes(range(256)) * 64),
+    ("http://evil.example.com/empty", b""),
+    ("http://evil.example.com/null", None),
+    ("http://evil.example.com/latin", "caf\xe9 na\xefve".encode("latin-1")),
+    ("http://evil.example.com/bom", b"\xff\xfe" + "<p>utf16</p>".encode("utf-16-le")),
+    ("http://evil.example.com/nested", b"<div>" * 3000 + b"deep" + b"</div>" * 3000),
+    ("http://evil.example.com/inline", b"<p>" + b"<b>" * 3000 + b"deep" + b"</b>" * 3000 + b"</p>"),
+    ("http://evil.example.com/huge", b"<p>" + b"x" * 2_000_000 + b"</p>"),
+    ("http://evil.example.com/ctrl", b"<p>a\x00b\x01c\x1fd</p>"),
+    ("http://evil.example.com/warcish", b"<pre>WARC/1.0\r\nContent-Length: -1</pre>"),
+]
+
 _PATTERN = re.compile(
     rb"-----URL-----\s*(?P<url>.*?)\s*"
     rb"-----URL_EFFECTIVE-----\s*(?P<url_effective>.*?)\s*"

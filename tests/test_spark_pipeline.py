@@ -19,6 +19,8 @@ from graby_spark.pages import (
 )
 from graby_spark.session import get_spark
 
+from .golden import HOSTILE_PAGES
+
 SF_DIR = "/root/testdata/sf0.001"
 OPTS = ExtractOptions(xss_filter=False)
 
@@ -969,22 +971,7 @@ def test_extraction_job_survives_hostile_rows(spark):
     from graby_spark.pages import build_pages_df, pages_ruleset
 
     clean = build_pages_df(spark, "/root/testdata/sf0.001").limit(20)
-    hostile_rows = [
-        ("http://evil.example.com/truncated", b"<html><body><p>cut mid attr <a href="),
-        ("http://evil.example.com/binary", bytes(range(256)) * 64),
-        ("http://evil.example.com/empty", b""),
-        ("http://evil.example.com/null", None),
-        ("http://evil.example.com/latin", "caf\xe9 na\xefve".encode("latin-1")),
-        ("http://evil.example.com/bom", b"\xff\xfe" + "<p>utf16</p>".encode("utf-16-le")),
-        ("http://evil.example.com/nested", b"<div>" * 3000 + b"deep" + b"</div>" * 3000),
-        ("http://evil.example.com/inline", b"<p>" + b"<b>" * 3000 + b"deep" + b"</b>" * 3000 + b"</p>"),
-        ("http://evil.example.com/huge", b"<p>" + b"x" * 2_000_000 + b"</p>"),
-        ("http://evil.example.com/ctrl", b"<p>a\x00b\x01c\x1fd</p>"),
-        ("http://evil.example.com/warcish", b"<pre>WARC/1.0\r\nContent-Length: -1</pre>"),
-    ]
-    hostile = spark.createDataFrame(
-        [(u, b) for u, b in hostile_rows], "url string, html binary"
-    ).select(
+    hostile = spark.createDataFrame(HOSTILE_PAGES, "url string, html binary").select(
         "url",
         F.lit(None).cast("timestamp").alias("warc_ts"),
         "html",
@@ -1010,8 +997,51 @@ def test_extraction_job_survives_hostile_rows(spark):
         # error rows are timed too
         assert all(r["extract_us"] is not None for r in evil.values())
         assert "Traceback" not in (evil["http://evil.example.com/binary"]["html"] or "")
-        # nested inline markup recurses in the blank-run collapse and the
-        # markdown walk; the raised recursion limit lets it extract
+        # 3000 nested inline tags extract
         assert evil["http://evil.example.com/inline"]["is_success"]
     finally:
         out.unpersist()
+
+
+def test_projection_without_rendered_columns_keeps_values(spark):
+    """A projection that names none of RENDERED_COLUMNS skips the render
+    tail inside the UDF; every projected value still equals the one the
+    full-width job emits, per url, over clean synthetic pages, the hostile
+    rows and the recorded fixture pages.  The projection covers bench.py's
+    headline columns and every other non-rendered field; the timing
+    columns are left out because they differ run to run."""
+    import pyspark.sql.functions as F
+
+    from graby_spark.job import EXTRACT_SCHEMA, RENDERED_COLUMNS
+    from graby_spark.siteconfig import RuleSet, load_ruleset
+    from perfbench.inputs import SITE_CONFIG_DIR, recorded_pages
+
+    columns = [
+        c
+        for c in EXTRACT_SCHEMA.fieldNames()
+        if c not in RENDERED_COLUMNS and c not in ("extract_ms", "extract_us")
+    ]
+    assert {"url", "title", "language", "is_success", "bytes_in"} <= set(columns)
+
+    schema = "url string, html binary, content_type string"
+    rows = [(u, b, "text/html") for u, b in HOSTILE_PAGES] + [
+        (p["url"], p["html"], p["content_type"]) for p in recorded_pages()
+    ]
+    extra = spark.createDataFrame(rows, schema).select(
+        "url",
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        "html",
+        F.lit(None).cast("string").alias("lang"),
+        "content_type",
+        F.lit(200).alias("http_status"),
+    )
+    clean = build_pages_df(spark, SF_DIR).limit(20)
+    pages = clean.select(*extra.columns).unionByName(extra)
+    ruleset = RuleSet({**load_ruleset(SITE_CONFIG_DIR).configs, **pages_ruleset().configs})
+
+    projected = run_extraction(spark, pages, ruleset, options=OPTS, columns=columns)
+    full = run_extraction(spark, pages, ruleset, options=OPTS).select(*columns)
+    got = {r["url"]: r for r in projected.collect()}
+    want = {r["url"]: r for r in full.collect()}
+    assert len(got) == len(want) == 20 + len(rows)
+    assert got == want
