@@ -580,7 +580,7 @@ def q_search_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: per-domain template chrome: a navigation line in EVERY doc of the
-#: domain (dropped at min_frac=0.5) and a copyright line in ~a third
+#: domain (dropped at the half-of-the-domain threshold) and a copyright line in ~a third
 #: (kept — frequent globally but below the domain threshold)
 _BOILER_SYNTH = (
     "concat('NAVIGATION MENU FOR ', source, chr(10), text, chr(10), "
@@ -3883,17 +3883,6 @@ SELECT a.cluster_key AS cluster_key,
 FROM agreed a JOIN agreed b ON a.id = b.id AND a.lang < b.lang
 WHERE least(a.text_len, b.text_len) * 1.0 / greatest(a.text_len, b.text_len, 1) >= 0.5
 """
-
-
-def staged_queries() -> dict[str, tuple]:
-    """Queries staged for a future registry rotation: (callable, oracle
-    SQL or None for rows-only) per future key.  Empty since the r05
-    rotation promoted the eight r04-staged queries into ``queries()``
-    AT THE FRONT — the driver's 50-query sweep (dict order) verifies
-    them (plus the new pipeline_translate) this round, completing
-    driver coverage of the full 122-key registry across
-    CORRECTNESS_r01..r05."""
-    return {}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

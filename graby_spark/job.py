@@ -428,7 +428,11 @@ def _continuation_lookup(base: DataFrame) -> DataFrame:
     )
 
 
-def resolve_multipage(extracted: DataFrame, max_hops: int = 8) -> DataFrame:
+#: longest multipage chain :func:`resolve_multipage` follows
+MAX_HOPS = 8
+
+
+def resolve_multipage(extracted: DataFrame) -> DataFrame:
     """Multipage stitch (G1-G3, Graby.php:375-447) as iterative self-joins.
 
     Chain model: each extracted row may carry an (already absolute)
@@ -509,7 +513,7 @@ def resolve_multipage(extracted: DataFrame, max_hops: int = 8) -> DataFrame:
 
     collected: list[DataFrame] = []
     hop = 0
-    while hop < max_hops:
+    while hop < MAX_HOPS:
         hop += 1
         # lazy checkpoint + the termination count share ONE job per hop
         # (r06; VERDICT r05 #1 asked for fewer per-hop blocking actions):
@@ -537,7 +541,7 @@ def resolve_multipage(extracted: DataFrame, max_hops: int = 8) -> DataFrame:
         if frontier.count() == 0:
             break
     else:
-        # chains longer than max_hops: treat as not-fully-extracted (abort)
+        # chains longer than MAX_HOPS: treat as not-fully-extracted (abort)
         abort_roots.append(frontier.select("root_url"))
 
     aborted = abort_roots[0]

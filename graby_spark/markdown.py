@@ -31,7 +31,7 @@ from __future__ import annotations
 # top-level so pandas_udf string annotations resolve against module globals
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -182,13 +182,11 @@ def to_markdown(html: str) -> str:
     return "\n\n".join(_blocks(doc))
 
 
-def markdown_column(
-    df: DataFrame, html_col: str = "content_html", out_col: str = "markdown"
-) -> DataFrame:
+def markdown_column(df: DataFrame, html_col: str = "content_html") -> DataFrame:
     """Append a markdown rendering of ``html_col`` (Arrow-vectorized)."""
 
     @pandas_udf("string")
     def _md(html: pd.Series) -> pd.Series:
         return html.map(lambda v: to_markdown(v) if v is not None else None)
 
-    return df.withColumn(out_col, _md(F.col(html_col)))
+    return df.withColumn("markdown", _md(F.col(html_col)))

@@ -54,7 +54,6 @@ def encode_avi_mjpeg(
     frames: list[np.ndarray],
     rate: int = 25,
     scale: int = 1,
-    quality: int = 85,
     quant_luma: np.ndarray | None = None,
 ) -> bytes:
     """MJPEG AVI from a list of (h, w[, 3]) uint8 frames.
@@ -76,9 +75,7 @@ def encode_avi_mjpeg(
             raise ValueError("all MJPEG frames must share one geometry")
     if rate <= 0 or scale <= 0:
         raise ValueError("rate and scale must be positive")
-    payloads = [
-        encode_jpeg(f, quality=quality, quant_luma=quant_luma) for f in frames
-    ]
+    payloads = [encode_jpeg(f, quant_luma=quant_luma) for f in frames]
     n = len(payloads)
     us_per_frame = scale * 1_000_000 // rate
     max_bytes = max(len(p) for p in payloads)

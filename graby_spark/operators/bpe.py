@@ -119,9 +119,7 @@ def pair_counts(vocab: DataFrame) -> DataFrame:
 
 
 def train_bpe(
-    df: DataFrame,
-    n_merges: int = 8,
-    text_col: str = "text",
+    df: DataFrame, n_merges: int = 8
 ) -> tuple[list[tuple[int, str, str]], DataFrame]:
     """Learn ``n_merges`` BPE merges from the corpus.
 
@@ -130,7 +128,7 @@ def train_bpe(
     segmented word table (word, cnt, toks).  Stops early if the corpus
     runs out of pairs (every word fully merged).
     """
-    vocab = word_vocab(df, text_col).localCheckpoint()
+    vocab = word_vocab(df, "text").localCheckpoint()
     merges: list[tuple[int, str, str]] = []
     for rank in range(1, n_merges + 1):
         best = (
@@ -157,12 +155,7 @@ def merges_df(spark: SparkSession, merges: list[tuple[int, str, str]]) -> DataFr
     return spark.createDataFrame(rows, "rank INT, a STRING, b STRING, merged STRING")
 
 
-def bpe_token_counts(
-    df: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_token_counts(df: DataFrame, vocab: DataFrame) -> DataFrame:
     """Per-document BPE token counts under a trained vocab, dictionary
     style: (id, n_words, bpe_tokens).  Documents whose text yields no
     alphabet words keep a zero row.  The join side carries only
@@ -170,10 +163,10 @@ def bpe_token_counts(
     unigram table, orders of magnitude smaller than the corpus."""
     words = (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.explode(
                 F.split(
-                    F.trim(F.lower(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"
+                    F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))), r"\s+"
                 )
             ).alias("word"),
         )
@@ -192,7 +185,7 @@ def bpe_token_counts(
             F.sum(F.col("n") * F.col("nt")).alias("bpe_tokens"),
         )
     )
-    ids = df.select(F.col(id_col).alias("id"))
+    ids = df.select(F.col("doc_id").alias("id"))
     return ids.join(per_doc, "id", "left").select(
         "id",
         F.coalesce("n_words", F.lit(0)).cast("long").alias("n_words"),
@@ -249,34 +242,32 @@ def _oracle_vocab_ctes(n_merges: int, src: str = "documents") -> str:
     return "WITH " + ",\n".join(parts)
 
 
-def oracle_merges_sql(n_merges: int = 8, src: str = "documents") -> str:
+def oracle_merges_sql(n_merges: int = 8) -> str:
     selects = [
         f"SELECT {i + 1} AS rank, a, b, a||b AS merged FROM b{i}"
         for i in range(n_merges)
     ]
     return (
-        _oracle_vocab_ctes(n_merges, src)
+        _oracle_vocab_ctes(n_merges, "documents")
         + "\n"
         + " UNION ALL ".join(selects)
     )
 
 
-def oracle_token_counts_sql(
-    n_merges: int = 8, src: str = "documents", id_col: str = "doc_id"
-) -> str:
+def oracle_token_counts_sql(n_merges: int = 8) -> str:
     n = n_merges
     return (
-        _oracle_vocab_ctes(n, src)
+        _oracle_vocab_ctes(n, "documents")
         + f""",
 vf AS (SELECT word, len(list_filter(string_split(s, {_SEP2}), x -> x <> '')) AS nt FROM v{n}),
-dw AS (SELECT d.{id_col} AS id, x.word AS word FROM {src} d,
+dw AS (SELECT d.doc_id AS id, x.word AS word FROM documents d,
        unnest(string_split_regex(trim(lower(coalesce(d.text,''))), '\\s+')) AS x(word)
        WHERE regexp_matches(x.word, '^[a-z0-9]+$')),
 wc AS (SELECT id, word, count(*)::BIGINT AS n FROM dw GROUP BY id, word),
 per AS (SELECT wc.id AS id, sum(wc.n) AS n_words, sum(wc.n * vf.nt) AS bpe_tokens
         FROM wc JOIN vf USING (word) GROUP BY wc.id)
-SELECT d.{id_col} AS {id_col},
+SELECT d.doc_id AS doc_id,
        coalesce(per.n_words, 0)::BIGINT AS n_words,
        coalesce(per.bpe_tokens, 0)::BIGINT AS bpe_tokens
-FROM {src} d LEFT JOIN per ON d.{id_col} = per.id"""
+FROM documents d LEFT JOIN per ON d.doc_id = per.id"""
     )

@@ -190,13 +190,7 @@ def kmeans_train(
     return cents
 
 
-def kmeans_embeddings(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    n_iter: int = 2,
-) -> DataFrame:
+def kmeans_embeddings(df: DataFrame, k: int = 8, n_iter: int = 2) -> DataFrame:
     """Train + final assignment.  Returns (vec_id, cell, cosine) — one
     row per input vector, ``cosine`` = integer dot / 1e18 (a single
     IEEE division of an exact integer, identical in any engine).
@@ -214,7 +208,7 @@ def kmeans_embeddings(
         StructType,
     )
 
-    cents = kmeans_train(df, id_col, vec_col, k=k, n_iter=n_iter)
+    cents = kmeans_train(df, "vec_id", "embedding", k=k, n_iter=n_iter)
     cents_bc = df.sparkSession.sparkContext.broadcast(cents)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -235,9 +229,9 @@ def kmeans_embeddings(
 
     schema = StructType(
         [
-            StructField("vec_id", df.schema[id_col].dataType),
+            StructField("vec_id", df.schema["vec_id"].dataType),
             StructField("cell", IntegerType()),
             StructField("cosine", DoubleType()),
         ]
     )
-    return _src_df(df, id_col, vec_col).mapInPandas(fn, schema)
+    return _src_df(df, "vec_id", "embedding").mapInPandas(fn, schema)

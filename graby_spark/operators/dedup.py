@@ -22,7 +22,6 @@ Determinism: all hashing uses fixed seeds; no RNG at runtime.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 import numpy as np
@@ -47,6 +46,11 @@ __all__ = [
 
 _MERSENNE = (1 << 61) - 1
 
+#: MinHash geometry shared by the batch operators and the streaming
+#: near-dup buckets (``streaming.stream_neardup``)
+NUM_PERM = 128
+SHINGLE_K = 5
+
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
     """Small parquet inputs scan as a handful of tasks; CPU-heavy per-row
@@ -59,12 +63,7 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def exact_duplicates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sample_cap: int = 10,
-) -> DataFrame:
+def exact_duplicates(df: DataFrame, sample_cap: int = 10) -> DataFrame:
     """Groups of byte-identical (whitespace-normalized) texts.
 
     Returns (group_hash, dup_count, canonical_id, sample_ids) for groups
@@ -78,8 +77,8 @@ def exact_duplicates(
     """
     from pyspark.sql import Window
 
-    norm = F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
-    hashed = df.select(F.col(id_col).alias("_id"), F.xxhash64(norm).alias("group_hash"))
+    norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
+    hashed = df.select(F.col("doc_id").alias("_id"), F.xxhash64(norm).alias("group_hash"))
     # all three window specs share the group_hash partitioning, and the
     # final groupBy re-uses it too -> exactly ONE shuffle in the plan
     # (asserted by test_exact_duplicates_single_shuffle)
@@ -112,11 +111,7 @@ def _tokens_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    max_df: float | None = 0.5,
+    df: DataFrame, threshold: float = 0.8, max_df: float | None = 0.5
 ) -> DataFrame:
     """Jaccard-similar pairs via the inverted-index join.
 
@@ -141,7 +136,7 @@ def ngram_jaccard_pairs(
     opt into the exact full-token-space Jaccard (e.g. for oracle
     comparisons on bounded corpora).
     """
-    tokens = _tokens_df(df, id_col, text_col)
+    tokens = _tokens_df(df, "doc_id", "text")
     if max_df is not None:
         n_docs = df.count()
         hot = (
@@ -176,8 +171,8 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_perm: int = 128,
-    shingle_k: int = 5,
+    num_perm: int = NUM_PERM,
+    shingle_k: int = SHINGLE_K,
 ) -> DataFrame:
     """(doc, signature:array<long>) minhash signatures (stable vectorized
     shingle hashes — deterministic across Python workers)."""
@@ -255,20 +250,13 @@ def _bands_for_threshold(threshold: float, num_perm: int) -> int:
     return best
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 128,
-    bands: int | None = None,
-    shingle_k: int = 5,
-    threshold: float = 0.5,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """MinHash+LSH near-duplicate pairs.
 
-    signature → ``bands`` buckets (rows = num_perm/bands hashes hashed
-    together) → groupBy (band, bucket) join for candidates → EXACT
-    ``shingle_k``-char-shingle Jaccard of the candidate pairs as the
+    signature → band buckets (``NUM_PERM`` hashes split into the bands
+    :func:`_bands_for_threshold` picks for ``threshold``) → groupBy
+    (band, bucket) join for candidates → EXACT
+    ``SHINGLE_K``-char-shingle Jaccard of the candidate pairs as the
     verify step (the standard candidate-generation + verification dedup
     shape; the verify uses the SAME similarity space the signatures
     estimate).  The candidate join shuffles only (band_id, bucket_hash,
@@ -280,11 +268,10 @@ def minhash_lsh_pairs(
     margin at dedup-grade thresholds ≥0.8) — that containment is what the
     DuckDB oracle checks.
     """
-    if bands is None:
-        bands = _bands_for_threshold(threshold, num_perm)
-    rows = num_perm // bands
+    bands = _bands_for_threshold(threshold, NUM_PERM)
+    rows = NUM_PERM // bands
     df = _ensure_parallelism(df)
-    sigs = minhash_signatures(df, id_col, text_col, num_perm, shingle_k)
+    sigs = minhash_signatures(df, "doc_id", "text", NUM_PERM, SHINGLE_K)
     banded = _banded(sigs, bands, rows)
     cand = (
         banded.alias("x")
@@ -296,7 +283,7 @@ def minhash_lsh_pairs(
     # shingle sets as 60-bit md5 hashes: the intersect joins compare longs,
     # not 5-char strings (~5x cheaper per pair), and the values match any
     # SQL engine's md5 bit-for-bit; computed once per DOC, not per pair
-    shingles = _shingle_sets(df, id_col, text_col, shingle_k)
+    shingles = _shingle_sets(df, "doc_id", "text", SHINGLE_K)
     return _jaccard_verify(cand, shingles, shingles, "doc_a", "doc_b", threshold)
 
 
@@ -365,11 +352,8 @@ def simhash(
 
 def embedding_near_dups(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     max_exact_rows: int = 50_000,
-    approx_rows: int | None = None,
 ) -> DataFrame:
     """Cosine-over-threshold pairs.  JVM-side dot products via
     ``aggregate(zip_with(...))``.
@@ -379,16 +363,11 @@ def embedding_near_dups(
     auto-dispatches to :func:`embedding_near_dups_lsh` (hyperplane-bucket
     candidates + exact rerank, O(n·tables) shuffle), because the exact
     join is a scale-killer on a full corpus.  Pass ``max_exact_rows=None``
-    to force the exact join regardless of size.
-
-    ``approx_rows`` skips the dispatch ``count()`` action: on a catalog
-    table (Iceberg/Delta) the row count is free metadata — pass it here
-    and the dispatch decision costs nothing (r02 VERDICT hazard #3)."""
+    to force the exact join regardless of size."""
     if max_exact_rows is not None:
-        n = approx_rows if approx_rows is not None else df.count()
-        if n > max_exact_rows:
-            return embedding_near_dups_lsh(df, id_col, vec_col, threshold)
-    norm = _with_norm(df, id_col, vec_col)
+        if df.count() > max_exact_rows:
+            return embedding_near_dups_lsh(df, "vec_id", "embedding", threshold)
+    norm = _with_norm(df, "vec_id", "embedding")
     a = norm.select(F.col("id").alias("id_a"), F.col("unit").alias("unit_a"))
     b = norm.select(F.col("id").alias("id_b"), F.col("unit").alias("unit_b"))
     return (
@@ -447,18 +426,13 @@ def embedding_near_dups_lsh(
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-duplicate pairs: candidates share at least one 15-bit
     band (pigeonhole: any pair within hamming distance 3 of a 60-bit hash
     must agree on one of 4 bands), verified by exact hamming distance.
     The band join shuffles only (band, bucket, doc, simhash) — never text —
     and candidate volume is O(n · bands) at corpus scale."""
-    hashes = simhash(df, id_col, text_col).cache()
+    hashes = simhash(df, "doc_id", "text").cache()
     bands = hashes.selectExpr(
         "doc", "simhash", "stack(4, 0, band0, 1, band1, 2, band2, 3, band3) as (band, bucket)"
     )
@@ -530,7 +504,6 @@ def duplicate_clusters(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iter: int = 20,
     star_after: int = 4,
     star_max_iter: int = 30,
     stats: dict | None = None,
@@ -552,10 +525,8 @@ def duplicate_clusters(
     ``localCheckpoint``-ed so plan depth stays constant and the
     convergence check reads materialized data.
 
-    ``max_iter`` bounds the min-label phase; ``star_max_iter`` bounds the
-    star phase separately (ADVICE r03: the star phase used to run
-    ``max(max_iter, 30)`` rounds, silently ignoring small caller bounds —
-    each phase now honors its own documented parameter).
+    The min-label phase runs at most ``min(star_after, 20)`` rounds;
+    ``star_max_iter`` bounds the star phase separately.
 
     ``stats`` (optional dict) receives {"minlabel_rounds", "star_rounds"}
     for observability/tests.
@@ -574,7 +545,7 @@ def duplicate_clusters(
         stats["minlabel_rounds"] = 0
         stats["star_rounds"] = 0
     converged = False
-    for _ in range(min(star_after, max_iter)):
+    for _ in range(min(star_after, 20)):
         if stats is not None:
             stats["minlabel_rounds"] += 1
         neighbor = (
@@ -639,12 +610,7 @@ def duplicate_clusters(
     )
 
 
-def keep_best(
-    clusters: DataFrame,
-    scores: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "score",
-) -> DataFrame:
+def keep_best(clusters: DataFrame, scores: DataFrame) -> DataFrame:
     """Quality-aware canonical selection: instead of keeping the
     arbitrary min-id canonical, keep each duplicate cluster's
     highest-scoring member (ties broken by the smaller doc id).
@@ -668,7 +634,7 @@ def keep_best(
     from pyspark.sql import Window
 
     s = scores.select(
-        F.col(id_col).alias("doc"), F.col(score_col).alias("_score")
+        F.col("doc_id").alias("doc"), F.col("score").alias("_score")
     )
     scored = clusters.join(s, "doc")
     w = Window.partitionBy("canonical").orderBy(F.desc("_score"), F.asc("doc"))
@@ -695,12 +661,7 @@ def _with_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def paragraph_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n\n",
-) -> DataFrame:
+def paragraph_dedup(df: DataFrame) -> DataFrame:
     """CCNet-style cross-corpus paragraph deduplication (Wenzek et al.
     2020): hash every paragraph of every document; a paragraph survives
     only at its first occurrence in corpus order (lowest ``(doc, idx)``),
@@ -718,9 +679,9 @@ def paragraph_dedup(
     Returns (doc, n_paras, n_kept, text_dedup).
     """
     arrays = df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.filter(
-            F.transform(F.split(F.coalesce(F.col(text_col), F.lit("")), re.escape(sep)), lambda p: F.trim(p)),
+            F.transform(F.split(F.coalesce(F.col("text"), F.lit("")), "\n\n"), lambda p: F.trim(p)),
             lambda p: p != "",
         ).alias("_paras"),
     )
@@ -745,7 +706,7 @@ def paragraph_dedup(
     rebuilt = kept.groupBy("doc").agg(
         F.count("*").alias("n_kept"),
         F.concat_ws(
-            sep,
+            "\n\n",
             F.transform(
                 F.array_sort(F.collect_list(F.struct("idx", "para"))), lambda s: s["para"]
             ),
@@ -765,23 +726,15 @@ def paragraph_dedup(
     )
 
 
-def domain_boilerplate_lines(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    domain_col: str = "domain",
-    min_docs: int = 2,
-    min_frac: float = 0.5,
-    sep: str = "\n",
-) -> DataFrame:
+def domain_boilerplate_lines(df: DataFrame, domain_col: str = "domain") -> DataFrame:
     """RefinedWeb-style line-wise correction (Penedo et al. 2023 §3.1.3):
     drop lines that repeat across a domain's documents — navigation,
     copyright footers, cookie banners — keeping lines that are frequent
     only globally (a line must be boilerplate OF ITS DOMAIN, unlike
     CCNet's global :func:`paragraph_dedup` which keeps first occurrences).
 
-    A line is boilerplate when it appears in at least ``min_docs``
-    documents of the domain AND in at least ``min_frac`` of them.  Every
+    A line is boilerplate when it appears in at least 2 documents of the
+    domain AND in at least half of them.  Every
     occurrence is dropped (no canonical survivor — the line is template
     chrome, not content).
 
@@ -799,11 +752,11 @@ def domain_boilerplate_lines(
     oracle-checkable end-to-end.
     """
     arrays = df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.col(domain_col).alias("domain"),
         F.filter(
             F.transform(
-                F.split(F.coalesce(F.col(text_col), F.lit("")), re.escape(sep)),
+                F.split(F.coalesce(F.col("text"), F.lit("")), "\n"),
                 lambda p: F.trim(p),
             ),
             lambda p: p != "",
@@ -832,10 +785,10 @@ def domain_boilerplate_lines(
     boiler = (
         freq.join(domain_sizes, "domain")
         .where(
-            (F.col("n_docs_with") >= F.lit(min_docs))
+            (F.col("n_docs_with") >= F.lit(2))
             & (
                 F.col("n_docs_with").cast("double")
-                >= F.lit(float(min_frac)) * F.col("domain_docs").cast("double")
+                >= F.lit(0.5) * F.col("domain_docs").cast("double")
             )
         )
         .select("domain", "line_hash")
@@ -844,7 +797,7 @@ def domain_boilerplate_lines(
     rebuilt = kept.groupBy("doc").agg(
         F.count("*").alias("n_kept"),
         F.concat_ws(
-            sep,
+            "\n",
             F.transform(
                 F.array_sort(F.collect_list(F.struct("idx", "line"))), lambda s: s["line"]
             ),
@@ -859,12 +812,7 @@ def domain_boilerplate_lines(
     )
 
 
-def substring_dup_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 50,
-) -> DataFrame:
+def substring_dup_spans(df: DataFrame, k: int = 50) -> DataFrame:
     """Exact-substring duplicate spans (Lee et al. 2021, "Deduplicating
     Training Data Makes Language Models Better"): find every maximal run
     of tokens that repeats anywhere else in the corpus as a full
@@ -889,8 +837,8 @@ def substring_dup_spans(
     from pyspark.sql import Window
 
     toks = df.select(
-        F.col(id_col).alias("doc"),
-        F.filter(F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"), lambda t: t != "").alias(
+        F.col("doc_id").alias("doc"),
+        F.filter(F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+"), lambda t: t != "").alias(
             "_toks"
         ),
     )
@@ -930,15 +878,7 @@ def substring_dup_spans(
     )
 
 
-def contamination_spans(
-    df: DataFrame,
-    eval_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eval_id_col: str = "doc_id",
-    eval_text_col: str = "text",
-    k: int = 13,
-) -> DataFrame:
+def contamination_spans(df: DataFrame, eval_df: DataFrame, k: int = 13) -> DataFrame:
     """Benchmark-decontamination spans: maximal runs of corpus tokens whose
     every ``k``-token window also appears in the evaluation set (the
     GPT-3/PaLM-style 13-gram decontamination check).
@@ -970,9 +910,9 @@ def contamination_spans(
             ).alias("pos", "gram_hash"),
         )
 
-    eval_hashes = grams(eval_df, eval_id_col, eval_text_col).select("gram_hash").distinct()
+    eval_hashes = grams(eval_df, "doc_id", "text").select("gram_hash").distinct()
     hits = (
-        grams(df, id_col, text_col)
+        grams(df, "doc_id", "text")
         .join(eval_hashes, "gram_hash", "left_semi")
         .select("doc", "pos")
         .distinct()
@@ -1054,11 +994,7 @@ def _jaccard_verify(
 
 
 def build_minhash_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 128,
-    shingle_k: int = 5,
+    df: DataFrame, num_perm: int = NUM_PERM, shingle_k: int = SHINGLE_K
 ) -> DataFrame:
     """Persistent dedup index for a corpus: (doc, signature, sh).
 
@@ -1069,11 +1005,11 @@ def build_minhash_index(
     exact-verify shingle hashes alongside the signature so the verify
     step needs no corpus text either.
     """
-    sigs = minhash_signatures(df, id_col, text_col, num_perm, shingle_k)
+    sigs = minhash_signatures(df, "doc_id", "text", num_perm, shingle_k)
     # shingle_k rides along as a column: a probe with a different k would
     # silently share zero buckets with the index (same-length signatures
     # over different shingles), so the probe validates it
-    return sigs.join(_shingle_sets(df, id_col, text_col, shingle_k), "doc").withColumn(
+    return sigs.join(_shingle_sets(df, "doc_id", "text", shingle_k), "doc").withColumn(
         "shingle_k", F.lit(shingle_k)
     )
 
@@ -1081,11 +1017,8 @@ def build_minhash_index(
 def incremental_minhash_pairs(
     new_df: DataFrame,
     index: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 128,
-    bands: int | None = None,
-    shingle_k: int = 5,
+    num_perm: int = NUM_PERM,
+    shingle_k: int = SHINGLE_K,
     threshold: float = 0.5,
 ) -> DataFrame:
     """New-batch-vs-corpus near-duplicate pairs against a stored
@@ -1098,8 +1031,7 @@ def incremental_minhash_pairs(
     be pre-bucketed by (band, bucket) to make even that one-sided), and
     the verify joins ship shingle arrays for candidates only.
     """
-    if bands is None:
-        bands = _bands_for_threshold(threshold, num_perm)
+    bands = _bands_for_threshold(threshold, num_perm)
     rows = num_perm // bands
     # fail fast on parameter mismatches with the stored index: a shorter
     # stored signature would silently empty half the bands, and a
@@ -1122,7 +1054,7 @@ def incremental_minhash_pairs(
             f"probe requested shingle_k={shingle_k}"
         )
     new_df = _ensure_parallelism(new_df)
-    new_sigs = minhash_signatures(new_df, id_col, text_col, num_perm, shingle_k)
+    new_sigs = minhash_signatures(new_df, "doc_id", "text", num_perm, shingle_k)
     new_b = _banded(new_sigs, bands, rows).select(
         F.col("doc").alias("new_doc"), "band", "bucket"
     )
@@ -1134,15 +1066,13 @@ def incremental_minhash_pairs(
         .select("new_doc", "corpus_doc")
         .distinct()
     )
-    new_sh = _shingle_sets(new_df, id_col, text_col, shingle_k)
+    new_sh = _shingle_sets(new_df, "doc_id", "text", shingle_k)
     return _jaccard_verify(
         cand, new_sh, index.select("doc", "sh"), "new_doc", "corpus_doc", threshold
     )
 
 
-def sentence_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def sentence_dedup(df: DataFrame) -> DataFrame:
     """Cross-corpus sentence-level deduplication: the sentence-granularity
     sibling of :func:`paragraph_dedup` (CCNet dedups paragraphs; several
     curation pipelines — e.g. C4's three-sentence span rule's descendants —
@@ -1162,9 +1092,9 @@ def sentence_dedup(
     """
     from graby_spark.operators.textstats import SENTENCE_PATTERN
 
-    raw = F.coalesce(F.col(text_col), F.lit(""))
+    raw = F.coalesce(F.col("text"), F.lit(""))
     arrays = df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.filter(
             F.transform(
                 F.regexp_extract_all(raw, F.lit(SENTENCE_PATTERN), F.lit(0)),
@@ -1208,8 +1138,6 @@ def sentence_dedup(
 
 def semantic_dedup(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_clusters: int = 8,
     threshold: float = 0.9,
     n_iter: int = 0,
@@ -1268,11 +1196,11 @@ def semantic_dedup(
     if n_iter > 0:
         from graby_spark.operators.cluster import kmeans_train
 
-        cents = kmeans_train(df, id_col, vec_col, k=n_clusters, n_iter=n_iter)
+        cents = kmeans_train(df, "vec_id", "embedding", k=n_clusters, n_iter=n_iter)
         grid = True
     else:
         cent_rows = (
-            df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+            df.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
             .orderBy(F.conv(F.substring(F.md5(F.col("cid").cast("string")), 1, 15), 16, 10))
             .limit(n_clusters)
             .collect()
@@ -1323,13 +1251,13 @@ def semantic_dedup(
 
     assign_schema = StructType(
         [
-            StructField("id", df.schema[id_col].dataType),
+            StructField("id", df.schema["vec_id"].dataType),
             StructField("cell", IntegerType()),
             StructField("unit", ArrayType(DoubleType())),
         ]
     )
     assigned = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
     ).mapInPandas(assign_unit, assign_schema)
     if max_cell is not None:
         # quadratic-blowup guard (the semantic twin of ngram_jaccard's
@@ -1396,7 +1324,7 @@ def semantic_dedup(
         )
 
     id_sql = {"bigint": "long"}.get(
-        df.schema[id_col].dataType.simpleString(), df.schema[id_col].dataType.simpleString()
+        df.schema["vec_id"].dataType.simpleString(), df.schema["vec_id"].dataType.simpleString()
     )
     pairs = (
         assigned.groupBy("cell")

@@ -32,7 +32,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -331,18 +330,16 @@ def scrub_exif(data: bytes) -> bytes:
     return stripped
 
 
-def exif_scrub(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
+def exif_scrub(df: DataFrame) -> DataFrame:
     """Spark stage over :func:`scrub_exif`: (media_id, payload) with
     GPS-free payloads.  Same scale shape as :func:`image_exif` — one
     Arrow-batched map pass, no shuffle; pre-route on mime so only JPEG
     rows pay the payload transfer."""
-    src = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
+    src = df.select("media_id", "payload")
     schema = StructType(
         [
             StructField("media_id", LongType()),
-            StructField("payload", df.schema[payload_col].dataType),
+            StructField("payload", df.schema["payload"].dataType),
         ]
     )
 
@@ -358,12 +355,10 @@ def exif_scrub(
     return src.mapInPandas(fn, schema)
 
 
-def image_exif(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
+def image_exif(df: DataFrame) -> DataFrame:
     """EXIF survey stage: (media_id, orientation, make, model, datetime,
     gps_lat, gps_lon, has_gps) per image row."""
-    src = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
+    src = df.select("media_id", "payload")
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:

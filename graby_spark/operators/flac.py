@@ -408,13 +408,17 @@ def _encode_residual(
             bw.write(v & ((1 << param) - 1), param)
 
 
+#: fixture geometry of :func:`encode_flac`: 16-bit samples, 1024-sample
+#: blocks, Rice parameter 6 for every residual partition
+_BPS = 16
+_BLOCK_SIZE = 1024
+_RICE_PARAM = 6
+
+
 def encode_flac(
     samples: np.ndarray,
     sample_rate: int = 16000,
-    bits_per_sample: int = 16,
-    block_size: int = 1024,
     subframe: str = "fixed2",
-    rice_param: int = 6,
     partition_order: int = 0,
     stereo_mode: str = "independent",
     escape_bits: int | None = None,
@@ -431,11 +435,11 @@ def encode_flac(
     if a.ndim == 1:
         a = a[:, None]
     n, channels = a.shape
-    bps = bits_per_sample
+    bps = _BPS
 
     info = _MsbWriter()
-    info.write(block_size, 16)
-    info.write(block_size, 16)
+    info.write(_BLOCK_SIZE, 16)
+    info.write(_BLOCK_SIZE, 16)
     info.write(0, 24)
     info.write(0, 24)
     info.write(sample_rate, 20)
@@ -474,7 +478,7 @@ def encode_flac(
                 pred = sum(c * chan[i - 1 - j] for j, c in enumerate(coeffs)) >> shift
                 res.append(int(chan[i]) - pred)
             _encode_residual(
-                bw, res, len(chan), order, rice_param, partition_order, escape_bits
+                bw, res, len(chan), order, _RICE_PARAM, partition_order, escape_bits
             )
             return
         order = int(subframe[-1])
@@ -487,13 +491,13 @@ def encode_flac(
             pred = sum(c * chan[i - 1 - j] for j, c in enumerate(coeffs))
             res.append(int(chan[i]) - pred)
         _encode_residual(
-            bw, res, len(chan), order, rice_param, partition_order, escape_bits
+            bw, res, len(chan), order, _RICE_PARAM, partition_order, escape_bits
         )
 
     frames = bytearray()
     frame_no = 0
-    for start in range(0, n, block_size):
-        chunk = a[start : start + block_size]
+    for start in range(0, n, _BLOCK_SIZE):
+        chunk = a[start : start + _BLOCK_SIZE]
         bs = len(chunk)
         bw = _MsbWriter()
         bw.write(0x3FFE, 14)
@@ -506,7 +510,7 @@ def encode_flac(
         else:
             ch_code = channels - 1
         bw.write(ch_code, 4)
-        bw.write({8: 1, 12: 2, 16: 4, 20: 5, 24: 6, 32: 7}[bps], 3)
+        bw.write(4, 3)  # sample size: 16 bits
         bw.write(0, 1)
         for b in _utf8_number(frame_no):
             bw.write(b, 8)

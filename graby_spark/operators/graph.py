@@ -15,8 +15,8 @@ weight quality priors.  Two operators:
 Scale notes (100 TB): the edge table is hash-partitioned on ``src`` once
 and cached; every iteration's join then reuses that partitioning for the
 rank probe (ranks are shuffled to the edge partitioning, edges never
-move).  Lineage is truncated with ``localCheckpoint`` every
-``checkpoint_every`` iterations — without it the plan tree doubles per
+move).  Lineage is truncated with ``localCheckpoint`` every third
+iteration — without it the plan tree doubles per
 iteration and the 10th iteration replans 2^10 joins (the round-1
 ``resolve_multipage`` lesson, VERDICT r01 item 8).  Dangling mass is
 dropped (leaky PageRank), the standard choice when ranks are used
@@ -137,17 +137,15 @@ def _resolve_links(exploded: DataFrame, *extra_cols: str) -> DataFrame:
     return step.select("src", dst.alias("dst"), *extra_cols)
 
 
-def outlinks(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def outlinks(pages: DataFrame) -> DataFrame:
     """(url, html) -> (src, dst) edge list of resolved outbound links.
 
     href values may be double-quoted, single-quoted or unquoted; see
     :func:`_resolve_links` for the resolution semantics.
     """
-    src, scheme, origin, directory = _page_context(pages, url_col)
+    src, scheme, origin, directory = _page_context(pages, "url")
     raw = F.explode(
-        F.regexp_extract_all(F.coalesce(F.col(html_col), F.lit("")), F.lit(HREF_PATTERN), F.lit(HREF_GROUP))
+        F.regexp_extract_all(F.coalesce(F.col("html"), F.lit("")), F.lit(HREF_PATTERN), F.lit(HREF_GROUP))
     ).alias("_raw")
     exploded = pages.select(src.alias("src"), scheme.alias("_scheme"),
                             origin.alias("_origin"), directory.alias("_dir"), raw)
@@ -164,9 +162,7 @@ def outlinks(
 _ANCHOR_PATTERN = r"""(?is)<a\s[^>]*>.*?</a>"""
 
 
-def anchor_texts(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def anchor_texts(pages: DataFrame) -> DataFrame:
     """(url, html) -> (src, dst, anchor) — resolved outbound links WITH
     their anchor text.
 
@@ -186,10 +182,10 @@ def anchor_texts(
     analog); :func:`outlinks` (href-attribute-only, no element pairing) is
     the robust choice when anchor labels aren't needed.
     """
-    src, scheme, origin, directory = _page_context(pages, url_col)
+    src, scheme, origin, directory = _page_context(pages, "url")
     raw = F.explode(
         F.regexp_extract_all(
-            F.coalesce(F.col(html_col), F.lit("")), F.lit(_ANCHOR_PATTERN), F.lit(0)
+            F.coalesce(F.col("html"), F.lit("")), F.lit(_ANCHOR_PATTERN), F.lit(0)
         )
     ).alias("_a")
     exploded = pages.select(src.alias("src"), scheme.alias("_scheme"),
@@ -205,9 +201,7 @@ def anchor_texts(
     return _resolve_links(exploded, "anchor").where(F.col("dst") != F.col("src"))
 
 
-def sitemap_urls(
-    sitemaps: DataFrame, domain_col: str = "domain", xml_col: str = "sitemap_xml"
-) -> DataFrame:
+def sitemap_urls(sitemaps: DataFrame) -> DataFrame:
     """sitemap.xml → (domain, loc, lastmod, priority, is_index) rows.
 
     Parses both urlset entries (``<url>``) and sitemap-index entries
@@ -218,12 +212,12 @@ def sitemap_urls(
     """
     blocks = F.explode(
         F.regexp_extract_all(
-            F.coalesce(F.col(xml_col), F.lit("")),
+            F.coalesce(F.col("sitemap_xml"), F.lit("")),
             F.lit(r"(?is)<(?:url|sitemap)>.*?</(?:url|sitemap)>"),
             F.lit(0),
         )
     ).alias("_b")
-    exploded = sitemaps.select(F.col(domain_col).alias("domain"), blocks)
+    exploded = sitemaps.select("domain", blocks)
     loc = F.trim(F.regexp_extract(F.col("_b"), r"(?is)<loc>\s*(.*?)\s*</loc>", 1))
     lastmod = F.regexp_extract(F.col("_b"), r"(?is)<lastmod>\s*(.*?)\s*</lastmod>", 1)
     priority = F.regexp_extract(F.col("_b"), r"(?is)<priority>\s*(.*?)\s*</priority>", 1)
@@ -240,15 +234,11 @@ def sitemap_urls(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    n_iter: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 3,
-    num_partitions: int | None = None,
-) -> DataFrame:
+#: PageRank damping factor d
+DAMPING = 0.85
+
+
+def pagerank(edges: DataFrame, n_iter: int = 10) -> DataFrame:
     """Damped power-iteration PageRank over an (src, dst) edge table.
 
     Returns (node, rank) for every node appearing as a source or
@@ -265,10 +255,8 @@ def pagerank(
     # operations keyed the same way can share one exchange").  The count
     # is the session's shuffle parallelism, not a constant — it scales
     # with the cluster.
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).dropDuplicates(["src", "dst"])
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = edges.select("src", "dst").dropDuplicates(["src", "dst"])
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -287,11 +275,11 @@ def pagerank(
     # the per-iteration rank join runs on the cached layout, exchange-free
     out_edges = edges.join(deg, "src").repartition(n_part, "src").cache()
 
-    base = (1.0 - damping) / n
+    base = (1.0 - DAMPING) / n
     # F.round is HALF_UP like the oracle engine's round(); Python's round
     # is banker's and could disagree at an exact .5 twelfth decimal
     rank_expr = lambda in_col: F.round(  # noqa: E731 — shared by loop + tail
-        F.lit(base) + F.lit(damping) * F.coalesce(in_col, F.lit(0.0)), 12
+        F.lit(base) + F.lit(DAMPING) * F.coalesce(in_col, F.lit(0.0)), 12
     )
     if n_iter <= 0:
         ranks = nodes.select("node", F.round(F.lit(1.0 / n), 12).alias("rank"))
@@ -323,7 +311,7 @@ def pagerank(
                 (rank_expr(F.col("in_rank")) / F.col("deg")).alias("c"),
             )
             incoming = contrib.groupBy("node").agg(F.sum("c").alias("in_rank"))
-            if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
+            if (i + 1) % 3 == 0 and i + 1 < n_iter:
                 incoming = incoming.localCheckpoint(eager=False)
         ranks = nodes.join(incoming, "node", "left").select(
             "node", rank_expr(F.col("in_rank")).alias("rank")
@@ -336,12 +324,7 @@ def pagerank(
     return ranks
 
 
-def frontier_schedule(
-    candidates: DataFrame,
-    url_col: str = "url",
-    domain_col: str = "domain",
-    score_col: str = "score",
-) -> DataFrame:
+def frontier_schedule(candidates: DataFrame) -> DataFrame:
     """Politeness-aware crawl-frontier ordering: rank candidates within
     each domain by score (ties broken by url for determinism); the rank IS
     the crawl wave — wave k fetches at most one url per domain, so a
@@ -353,20 +336,13 @@ def frontier_schedule(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(domain_col).orderBy(
-        F.col(score_col).desc(), F.col(url_col)
-    )
+    w = Window.partitionBy("domain").orderBy(F.col("score").desc(), F.col("url"))
     return candidates.select(
-        F.col(url_col).alias("url"),
-        F.col(domain_col).alias("domain"),
-        F.col(score_col).alias("score"),
-        F.row_number().over(w).cast("long").alias("wave"),
+        "url", "domain", "score", F.row_number().over(w).cast("long").alias("wave")
     )
 
 
-def parse_robots(
-    robots: DataFrame, domain_col: str = "domain", text_col: str = "robots_txt"
-) -> DataFrame:
+def parse_robots(robots: DataFrame) -> DataFrame:
     """robots.txt → (domain, rule, path_prefix, prefix_len) for the
     ``User-agent: *`` groups.
 
@@ -384,9 +360,9 @@ def parse_robots(
     both routine in robots.txt served by real hosts.
     """
     lines = robots.select(
-        F.col(domain_col).alias("domain"),
+        "domain",
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), r"\r?\n")
+            F.split(F.coalesce(F.col("robots_txt"), F.lit("")), r"\r?\n")
         ).alias("idx", "line"),
     ).select(
         "domain",
@@ -439,9 +415,7 @@ def parse_robots(
     )
 
 
-def robots_directives(
-    robots: DataFrame, domain_col: str = "domain", text_col: str = "robots_txt"
-) -> DataFrame:
+def robots_directives(robots: DataFrame) -> DataFrame:
     """robots.txt → (domain, crawl_delay, sitemaps, n_sitemaps) — the
     scheduler-facing directives the allow/disallow parser ignores.
 
@@ -458,9 +432,9 @@ def robots_directives(
     from pyspark.sql import Window
 
     lines = robots.select(
-        F.col(domain_col).alias("domain"),
+        "domain",
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), r"\r?\n")
+            F.split(F.coalesce(F.col("robots_txt"), F.lit("")), r"\r?\n")
         ).alias("idx", "line"),
     ).select(
         "domain",
@@ -508,7 +482,7 @@ def robots_directives(
         )
     )
     return (
-        robots.select(F.col(domain_col).alias("domain"))
+        robots.select("domain")
         .distinct()
         .join(delays, "domain", "left")
         .join(sitemaps, "domain", "left")
@@ -521,12 +495,7 @@ def robots_directives(
     )
 
 
-def robots_filter(
-    urls: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-    domain_col: str = "domain",
-) -> DataFrame:
+def robots_filter(urls: DataFrame, rules: DataFrame) -> DataFrame:
     """Longest-match robots verdict per url (Google / RFC 9309 semantics:
     the longest matching rule wins; on a length tie ``allow`` beats
     ``disallow``; no matching rule means allowed).
@@ -548,7 +517,7 @@ def robots_filter(
     from pyspark.sql import Window
 
     path = F.regexp_replace(
-        F.col(url_col), r"^[a-z][a-z0-9+.\-]*://[^/]*", ""
+        F.col("url"), r"^[a-z][a-z0-9+.\-]*://[^/]*", ""
     )
     # wildcard translation: escape every RE2 metachar except '*', then
     # '*' -> '.*', then re-anchor the (escaped) trailing '$'; mid-pattern
@@ -567,11 +536,7 @@ def robots_filter(
     # planner-chosen join strategy: rules are usually tiny (auto
     # broadcast) but tens of millions of domains' rules must be allowed
     # to fall back to a shuffle join instead of a forced-broadcast OOM
-    cand = urls.select(
-        F.col(url_col).alias("url"),
-        F.col(domain_col).alias("domain"),
-        path.alias("_path"),
-    ).join(rules, "domain", "left")
+    cand = urls.select("url", "domain", path.alias("_path")).join(rules, "domain", "left")
     # non-matching rules are SCORED below matches, never filtered out — a
     # url whose domain has rules but none that match must still emit its
     # default-allow row
@@ -595,12 +560,7 @@ def robots_filter(
     )
 
 
-def crawl_diff(
-    old: DataFrame,
-    new: DataFrame,
-    url_col: str = "url",
-    content_col: str = "text",
-) -> DataFrame:
+def crawl_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Snapshot diff between two crawls → (url, status, old_hash,
     new_hash) with status ∈ added | removed | changed | unchanged — the
     operator an incremental refresh pipeline runs to decide what to
@@ -617,9 +577,9 @@ def crawl_diff(
         # null content hashes as '' — md5(NULL) would null the hash and
         # make a present-in-old row with null text look "added"
         return df.select(
-            F.col(url_col).alias("url"),
+            "url",
             F.conv(
-                F.substring(F.md5(F.coalesce(F.col(content_col), F.lit(""))), 1, 15),
+                F.substring(F.md5(F.coalesce(F.col("text"), F.lit(""))), 1, 15),
                 16,
                 10,
             )
@@ -639,14 +599,12 @@ def crawl_diff(
     return joined.select("url", status.alias("status"), "old_hash", "new_hash")
 
 
-def crawl_churn_by_domain(
-    diff: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def crawl_churn_by_domain(diff: DataFrame) -> DataFrame:
     """Per-domain churn rollup of :func:`crawl_diff` output:
     (domain, added, removed, changed, unchanged, churn_ratio) — the
     refresh-scheduling signal (high-churn domains earn crawl budget).
     One hash aggregation keyed by domain."""
-    domain = F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.\-]*://([^/]+)", 1)
+    domain = F.regexp_extract(F.col("url"), r"^[a-z][a-z0-9+.\-]*://([^/]+)", 1)
     agg = diff.groupBy(domain.alias("domain")).agg(
         F.sum((F.col("status") == "added").cast("long")).alias("added"),
         F.sum((F.col("status") == "removed").cast("long")).alias("removed"),
@@ -664,12 +622,7 @@ def crawl_churn_by_domain(
     )
 
 
-def host_graph(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    include_internal: bool = False,
-) -> DataFrame:
+def host_graph(edges: DataFrame, include_internal: bool = False) -> DataFrame:
     """Collapse a page-level (src, dst) edge list to the weighted host
     graph: (src_host, dst_host, weight, n_src_pages).
 
@@ -693,9 +646,9 @@ def host_graph(
     """
     host_re = r"^[a-z][a-z0-9+.\-]*://([^/:?#]+)"
     out = edges.select(
-        F.col(src_col).alias("_src"),
-        F.lower(F.regexp_extract(F.col(src_col), host_re, 1)).alias("src_host"),
-        F.lower(F.regexp_extract(F.col(dst_col), host_re, 1)).alias("dst_host"),
+        F.col("src").alias("_src"),
+        F.lower(F.regexp_extract(F.col("src"), host_re, 1)).alias("src_host"),
+        F.lower(F.regexp_extract(F.col("dst"), host_re, 1)).alias("dst_host"),
     ).where((F.col("src_host") != "") & (F.col("dst_host") != ""))
     if not include_internal:
         out = out.where(F.col("src_host") != F.col("dst_host"))
@@ -722,9 +675,7 @@ def _attr_expr(tag: F.Column, name: str) -> F.Column:
     )
 
 
-def link_relations(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def link_relations(pages: DataFrame) -> DataFrame:
     """(url, html) → one row per ``<link>`` relation token:
     ``(src, link_idx, rel, dst, hreflang, type)``.
 
@@ -745,10 +696,10 @@ def link_relations(
     per-attribute extraction → rel-token explode → resolution; at crawl
     scale a map-only projection, no exchange.
     """
-    src, scheme, origin, directory = _page_context(pages, url_col)
+    src, scheme, origin, directory = _page_context(pages, "url")
     tags = F.posexplode(
         F.regexp_extract_all(
-            F.coalesce(F.col(html_col), F.lit("")), F.lit(_LINK_TAG_PATTERN), F.lit(0)
+            F.coalesce(F.col("html"), F.lit("")), F.lit(_LINK_TAG_PATTERN), F.lit(0)
         )
     )
     exploded = pages.select(
@@ -773,9 +724,7 @@ def link_relations(
     )
 
 
-def canonical_dedup(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def canonical_dedup(pages: DataFrame) -> DataFrame:
     """Canonical-aware duplicate grouping: one row per page with its
     declared cluster — ``(url, canonical_url, cluster_size, is_kept)``.
 
@@ -806,13 +755,13 @@ def canonical_dedup(
     from pyspark.sql import Window
 
     canon = (
-        link_relations(pages, url_col=url_col, html_col=html_col)
+        link_relations(pages)
         .where(F.col("rel") == "canonical")
         .groupBy("src")
         .agg(F.min_by("dst", "link_idx").alias("_canon"))
     )
     with_canon = (
-        pages.select(F.col(url_col).alias("url"))
+        pages.select("url")
         .join(canon.withColumnRenamed("src", "url"), "url", "left")
         .select("url", F.coalesce("_canon", F.col("url")).alias("canonical_url"))
     )
@@ -830,9 +779,7 @@ def canonical_dedup(
     )
 
 
-def hreflang_clusters(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def hreflang_clusters(pages: DataFrame) -> DataFrame:
     """Translation-variant mining from ``rel=alternate hreflang=…``
     links: one row per declared language variant —
     ``(url, cluster_key, hreflang, variant_url, n_variants)``.
@@ -852,7 +799,7 @@ def hreflang_clusters(
     from pyspark.sql import Window
 
     rels = (
-        link_relations(pages, url_col=url_col, html_col=html_col)
+        link_relations(pages)
         .where((F.col("rel") == "alternate") & (F.col("hreflang") != ""))
         .select(F.col("src").alias("url"), "hreflang", F.col("dst").alias("variant_url"))
     )
@@ -866,13 +813,7 @@ def hreflang_clusters(
     )
 
 
-def translation_pairs(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    text_col: str = "text",
-    min_len_ratio: float = 0.5,
-) -> DataFrame:
+def translation_pairs(pages: DataFrame) -> DataFrame:
     """Bitext candidate mining — the composition an MT-corpus builder
     actually runs (VERDICT r04 #7): publisher-declared translation sets
     (:func:`hreflang_clusters`) ∧ content-language agreement
@@ -884,9 +825,9 @@ def translation_pairs(
     One row per surviving unordered language pair within a cluster:
     ``(cluster_key, lang_a, url_a, len_a, lang_b, url_b, len_b,
     len_ratio)`` with ``lang_a < lang_b``; ``len_ratio`` is
-    min(len)/max(len) rounded to 4, filtered UNROUNDED against
-    ``min_len_ratio``.  A member whose detected language contradicts
-    its declared hreflang drops out (taking its pairs with it) — the
+    min(len)/max(len) rounded to 4, filtered UNROUNDED at >= 0.5.  A
+    member whose detected language contradicts its declared hreflang
+    drops out (taking its pairs with it) — the
     safe failure for mislabeled variants; inconsistent declarations for
     one URL keep whichever row content agrees with.
 
@@ -898,7 +839,7 @@ def translation_pairs(
     ride a shuffle."""
     from .textstats import language_id
 
-    clusters = hreflang_clusters(pages, url_col=url_col, html_col=html_col)
+    clusters = hreflang_clusters(pages)
     members = (
         clusters.where(F.col("hreflang") != "x-default")
         .select(
@@ -909,14 +850,11 @@ def translation_pairs(
         .distinct()
     )
     sides = language_id(
-        pages.select(F.col(url_col).alias("url"), F.col(text_col).alias("text")),
+        pages.select("url", "text"),
         id_col="url",
         text_col="text",
     ).select("url", "lang_guess")
-    lens = pages.select(
-        F.col(url_col).alias("url"),
-        F.length(F.trim(F.col(text_col))).alias("text_len"),
-    )
+    lens = pages.select("url", F.length(F.trim(F.col("text"))).alias("text_len"))
     agreed = (
         members.join(sides, "url")
         .join(lens, "url")
@@ -934,7 +872,7 @@ def translation_pairs(
             (F.col("a.cluster_key") == F.col("b.cluster_key"))
             & (F.col("a.declared_lang") < F.col("b.declared_lang")),
         )
-        .where(ratio >= min_len_ratio)
+        .where(ratio >= 0.5)
         .select(
             F.col("a.cluster_key").alias("cluster_key"),
             F.col("a.declared_lang").alias("lang_a"),

@@ -171,9 +171,7 @@ def doc_image_pairs(html: str, page_url: str) -> list[dict]:
     return out
 
 
-def image_text_pairs(
-    df: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
+def image_text_pairs(df: DataFrame) -> DataFrame:
     """(url, html) pages → one row per image: ``(url, img_idx, src, alt,
     title_attr, caption, width, height, srcset_best)``.
 
@@ -182,7 +180,7 @@ def image_text_pairs(
     matters)."""
     import pandas as pd
 
-    src = df.select(F.col(url_col).alias("url"), F.col(html_col).alias("html"))
+    src = df.select("url", "html")
 
     def run(batches):
         for pdf in batches:

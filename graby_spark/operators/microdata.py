@@ -125,9 +125,7 @@ def doc_microdata(html: str, page_url: str) -> list[dict]:
     return out
 
 
-def extract_microdata(
-    df: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
+def extract_microdata(df: DataFrame) -> DataFrame:
     """(url, html) pages → one row per microdata property:
     ``(url, item_idx, item_type, prop, value, child_item)``.
 
@@ -137,7 +135,7 @@ def extract_microdata(
     is recoverable from ``child_item`` references or irrelevant)."""
     import pandas as pd
 
-    src = df.select(F.col(url_col).alias("url"), F.col(html_col).alias("html"))
+    src = df.select("url", "html")
 
     def run(batches):
         for pdf in batches:

@@ -147,13 +147,13 @@ def jpeg_dims(data: bytes) -> tuple[int, int] | None:
     return None
 
 
-def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def attach_media_metadata(df: DataFrame) -> DataFrame:
     """Sniff mime from magic bytes and parse real image dimensions from
     the headers — PNG (IHDR) and GIF (logical screen descriptor) are pure
     JVM substring/conv expressions; JPEG needs a sequential marker walk,
     done in an Arrow-batched pandas UDF applied ONLY to jpeg rows.
     No codec is involved: these are header fields."""
-    payload = F.col(payload_col)
+    payload = F.col("payload")
     mime = F.lit("application/octet-stream")
     for magic, m in reversed(_MAGIC):
         hexv = magic.hex()
@@ -191,9 +191,9 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
     # by the weak leading-size-byte magic; AVI likewise (the RIFF magic
     # alone means audio/wav in _MAGIC — the form type at offset 8
     # discriminates)
-    is_bmff = F.expr(f"substring({payload_col}, 5, 4)") == F.lit(b"ftyp")
+    is_bmff = F.expr("substring(payload, 5, 4)") == F.lit(b"ftyp")
     mime = F.when(is_bmff, F.lit("video/mp4")).otherwise(mime)
-    is_avi = F.expr(f"substring({payload_col}, 9, 4)") == F.lit(b"AVI ")
+    is_avi = F.expr("substring(payload, 9, 4)") == F.lit(b"AVI ")
     mime = F.when(is_avi, F.lit("video/x-msvideo")).otherwise(mime)
     # EBML magic → Matroska family; the DocType string in the first few
     # header bytes discriminates webm (binary-safe search over hex).
@@ -201,7 +201,7 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
     # — without the alignment check, bytes like A7 76 56 26 D0 hex to
     # 'A77656 26D0' and a nibble-straddling '7765626D' mislabels a
     # non-WebM Matroska file as video/webm
-    is_ebml = F.expr(f"substring({payload_col}, 1, 4)") == F.lit(_EBML_MAGIC)
+    is_ebml = F.expr("substring(payload, 1, 4)") == F.lit(_EBML_MAGIC)
     webm_pos = F.instr(F.hex(F.substring(payload, 1, 64)), b"webm".hex().upper())
     webm_in_head = (webm_pos > 0) & (webm_pos % 2 == 1)
     mime = (
@@ -209,12 +209,12 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
         .when(is_ebml, F.lit("video/x-matroska"))
         .otherwise(mime)
     )
-    is_webp = F.expr(f"substring({payload_col}, 9, 4)") == F.lit(b"WEBP")
+    is_webp = F.expr("substring(payload, 9, 4)") == F.lit(b"WEBP")
     mime = F.when(is_webp, F.lit("image/webp")).otherwise(mime)
     # BMP: the 2-byte magic is weak, so require a known DIB header size
     # too before classifying (structural, like ftyp / RIFF form types)
     is_bmp = (
-        (F.expr(f"substring({payload_col}, 1, 2)") == F.lit(b"BM"))
+        (F.expr("substring(payload, 1, 2)") == F.lit(b"BM"))
         & (F.length(payload) >= 54)
         & F.conv(F.hex(F.reverse(F.substring(payload, 15, 4))), 16, 10)
         .cast("long")
@@ -225,7 +225,7 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
     # sample rate (20 bits at byte 18) and total samples (36 bits ending
     # byte 25) are fixed-offset JVM reads -> duration without Python
     is_flac = (
-        (F.expr(f"substring({payload_col}, 1, 4)") == F.lit(b"fLaC"))
+        (F.expr("substring(payload, 1, 4)") == F.lit(b"fLaC"))
         & (F.length(payload) >= 26)
     )
     mime = F.when(is_flac, F.lit("audio/flac")).otherwise(mime)
@@ -252,7 +252,7 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
     vp8l_ok = (
         is_webp
         & (F.length(payload) >= 25)
-        & (F.expr(f"substring({payload_col}, 13, 4)") == F.lit(b"VP8L"))
+        & (F.expr("substring(payload, 13, 4)") == F.lit(b"VP8L"))
         & (be(21, 1) == 0x2F)
     )
     webp_w = be(22, 1) + (be(23, 1) % 64) * 256 + 1
@@ -261,7 +261,7 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
     vp8x_ok = (
         is_webp
         & (F.length(payload) >= 30)
-        & (F.expr(f"substring({payload_col}, 13, 4)") == F.lit(b"VP8X"))
+        & (F.expr("substring(payload, 13, 4)") == F.lit(b"VP8X"))
     )
     vp8x_w = be(25, 1) + be(26, 1) * 256 + be(27, 1) * 65536 + 1
     vp8x_h = be(28, 1) + be(29, 1) * 256 + be(30, 1) * 65536 + 1
@@ -272,9 +272,9 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
     avih_ok = (
         is_avi
         & (F.length(payload) >= 88)
-        & (F.expr(f"substring({payload_col}, 13, 4)") == F.lit(b"LIST"))
-        & (F.expr(f"substring({payload_col}, 21, 4)") == F.lit(b"hdrl"))
-        & (F.expr(f"substring({payload_col}, 25, 4)") == F.lit(b"avih"))
+        & (F.expr("substring(payload, 13, 4)") == F.lit(b"LIST"))
+        & (F.expr("substring(payload, 21, 4)") == F.lit(b"hdrl"))
+        & (F.expr("substring(payload, 25, 4)") == F.lit(b"avih"))
     )
     avi_us_per_frame = le32(33)
     avi_total_frames = le32(49)
@@ -380,7 +380,7 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
     ).otherwise(F.lit(0))
     out = out.withColumn("_mp3_tag", tag_end)
     hdr = F.conv(
-        F.hex(F.expr(f"substring({payload_col}, _mp3_tag + 1, 4)")), 16, 10
+        F.hex(F.expr("substring(payload, _mp3_tag + 1, 4)")), 16, 10
     ).cast("long")
     sync_ok = (F.floor(hdr / 2097152) % 2048) == 2047  # 11 sync bits
     mpeg1_l3 = ((F.floor(hdr / 524288) % 4) == 3) & ((F.floor(hdr / 131072) % 4) == 1)
@@ -752,14 +752,12 @@ def encode_png(
     )
 
 
-def gif_pixel_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
+def gif_pixel_stats(df: DataFrame) -> DataFrame:
     """Real GIF decode → per-image stats:
     (media_id, width, height, mean_pixel) — the RGB mean over every sample
     of the palette-expanded first frame, unrounded for the same
     cross-engine-exactness reason as :func:`png_pixel_stats`."""
-    src = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
+    src = df.select("media_id", "payload")
     schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -817,12 +815,7 @@ def _resize_bilinear(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 
 
 def resize_images(
-    df: DataFrame,
-    out_width: int,
-    out_height: int,
-    method: str = "bilinear",
-    payload_col: str = "payload",
-    id_col: str = "media_id",
+    df: DataFrame, out_width: int, out_height: int, method: str = "bilinear"
 ) -> DataFrame:
     """Decode (PNG/GIF/JPEG, real) → resize → re-encode as PNG: the
     standard vision-pipeline normalization stage (every encoder wants a
@@ -838,7 +831,7 @@ def resize_images(
     computed)."""
     if method not in ("nearest", "bilinear"):
         raise ValueError(f"unknown resize method {method!r}")
-    src = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
+    src = df.select("media_id", "payload")
     schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -886,9 +879,7 @@ def resize_images(
     return src.mapInPandas(fn, schema)
 
 
-def wav_sample_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
+def wav_sample_stats(df: DataFrame) -> DataFrame:
     """Real WAV PCM decode → per-clip sample statistics:
     (media_id, sample_rate, n_frames, channels, mean_sample, rms).
 
@@ -897,7 +888,7 @@ def wav_sample_stats(
     division/sqrt are IEEE-identical across engines, so a closed-form
     oracle can replay them bit-for-bit (same rationale as
     :func:`png_pixel_stats`).  Arrow-batched ``mapInPandas``."""
-    src = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
+    src = df.select("media_id", "payload")
     schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -948,12 +939,7 @@ def wav_sample_stats(
     return src.mapInPandas(fn, schema)
 
 
-def perceptual_hash(
-    df: DataFrame,
-    method: str = "ahash",
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-) -> DataFrame:
+def perceptual_hash(df: DataFrame, method: str = "ahash") -> DataFrame:
     """64-bit perceptual hash over REALLY-decoded images → (media_id,
     phash) — the visual-dedup signature a multimodal training pipeline
     runs after decode.
@@ -970,7 +956,7 @@ def perceptual_hash(
     ``mapInPandas``; payload crosses once, 8 bytes come back."""
     if method not in ("ahash", "dhash"):
         raise ValueError(f"unknown perceptual hash {method!r}")
-    src = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
+    src = df.select("media_id", "payload")
     schema = StructType(
         [StructField("media_id", LongType()), StructField("phash", LongType())]
     )
@@ -1103,9 +1089,7 @@ def mp4_metadata(data: bytes) -> dict:
     return out
 
 
-def encode_mp4_skeleton(
-    width: int, height: int, duration_ms: int, timescale: int = 1000
-) -> bytes:
+def encode_mp4_skeleton(width: int, height: int, duration_ms: int) -> bytes:
     """Minimal valid ISO BMFF metadata skeleton (ftyp + moov{mvhd,
     trak{tkhd}} + empty mdat) — what a metadata pipeline fixture needs;
     carries no coded media."""
@@ -1113,12 +1097,11 @@ def encode_mp4_skeleton(
     def box(typ: bytes, payload: bytes) -> bytes:
         return (8 + len(payload)).to_bytes(4, "big") + typ + payload
 
-    dur = duration_ms * timescale // 1000
     mvhd = (
         bytes(4)  # version 0 + flags
         + bytes(8)  # creation/modification
-        + timescale.to_bytes(4, "big")
-        + dur.to_bytes(4, "big")
+        + (1000).to_bytes(4, "big")  # timescale: milliseconds
+        + duration_ms.to_bytes(4, "big")
         + b"\x00\x01\x00\x00"  # rate 1.0
         + b"\x01\x00"  # volume 1.0
         + bytes(10)
@@ -1131,7 +1114,7 @@ def encode_mp4_skeleton(
         + bytes(8)
         + (1).to_bytes(4, "big")  # track id
         + bytes(4)
-        + dur.to_bytes(4, "big")
+        + duration_ms.to_bytes(4, "big")
         + bytes(8)
         + bytes(8)  # layer/alt-group/volume/reserved
         + bytes(36)
@@ -1143,12 +1126,7 @@ def encode_mp4_skeleton(
     return ftyp + moov + box(b"mdat", b"")
 
 
-def audio_features(
-    df: DataFrame,
-    window: int = 400,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-) -> DataFrame:
+def audio_features(df: DataFrame, window: int = 400) -> DataFrame:
     """Real decoded-audio features per fixed-size window — the audio twin
     of video frame sampling: one output row per window of ``window``
     frames of CHANNEL 0, with (media_id, window, n, rms, zcr).
@@ -1161,7 +1139,7 @@ def audio_features(
     float64 and IEEE sqrt is engine-identical.  Row explosion happens
     Python-side inside one Arrow-batched ``mapInPandas`` — payload crosses
     once, only fixed-width feature rows return."""
-    src = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
+    src = df.select("media_id", "payload")
     schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -1603,14 +1581,7 @@ def _ima_step(predictor: int, index: int, nibble: int) -> tuple[int, int]:
     return predictor, index
 
 
-def video_phash(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    every_ms: int = 1000,
-    max_frames: int = 4,
-    method: str = "ahash",
-) -> DataFrame:
+def video_phash(df: DataFrame, every_ms: int = 1000, max_frames: int = 4) -> DataFrame:
     """Frame-sampled perceptual signature for video payloads → one row
     per sampled frame: (media_id, frame_no, ts_ms, phash).
 
@@ -1626,16 +1597,9 @@ def video_phash(
     """
     if max_frames > 1000:
         raise ValueError("max_frames above 1000 breaks the frame-key packing")
-    frames = sample_frames(
-        df,
-        payload_col=payload_col,
-        id_col=id_col,
-        every_ms=every_ms,
-        max_frames=max_frames,
-    ).withColumn("fk", F.col("media_id") * 1000 + F.col("frame_no"))
+    frames = sample_frames(df, every_ms=every_ms, max_frames=max_frames).withColumn("fk", F.col("media_id") * 1000 + F.col("frame_no"))
     hashed = perceptual_hash(
-        frames.select(F.col("fk").alias("media_id"), F.col("frame").alias("payload")),
-        method=method,
+        frames.select(F.col("fk").alias("media_id"), F.col("frame").alias("payload"))
     ).select(F.col("media_id").alias("fk"), "phash")
     return (
         frames.select("fk", "media_id", "frame_no", "ts_ms")
@@ -2429,13 +2393,11 @@ def decode_image(payload: bytes, strict: bool = False) -> np.ndarray:
     return np.frombuffer(digest * 2, dtype=np.uint8).reshape(8, 8).astype(np.float32)
 
 
-def image_pixel_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
+def image_pixel_stats(df: DataFrame) -> DataFrame:
     """Real image decode (PNG / GIF / JPEG incl. progressive, dispatched by magic)
     → (media_id, format, width, height, channels, mean_pixel); unrounded
     mean for cross-engine exactness like :func:`png_pixel_stats`."""
-    src = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
+    src = df.select("media_id", "payload")
     schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -2499,7 +2461,7 @@ def _grid16(img: np.ndarray) -> np.ndarray:
     return (img[np.ix_(ys, xs)].flatten() / 255.0).astype(np.float32)
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload", id_col: str = "media_id") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """payload → 16-dim feature vector via mapInPandas.
 
     PNG payloads are REALLY decoded (:func:`decode_png`) and featurized
@@ -2507,7 +2469,7 @@ def extract_features(df: DataFrame, payload_col: str = "payload", id_col: str = 
     deterministic stub (byte histogram moments of the fake decode).  The
     Arrow batch shape and schema match what a real vision encoder stage
     would use."""
-    src = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
+    src = df.select("media_id", "payload")
     schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -2543,9 +2505,7 @@ def extract_features(df: DataFrame, payload_col: str = "payload", id_col: str = 
     return src.mapInPandas(fn, schema)
 
 
-def png_pixel_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
+def png_pixel_stats(df: DataFrame) -> DataFrame:
     """Real PNG decode → per-image pixel statistics:
     (media_id, width, height, channels, mean_pixel).
 
@@ -2558,7 +2518,7 @@ def png_pixel_stats(
     a value-exact correctness gate, not just unit tests.  Arrow-batched
     ``mapInPandas``; payload moves to Python once and only the tiny stats
     row comes back."""
-    src = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
+    src = df.select("media_id", "payload")
     schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -2592,11 +2552,7 @@ def png_pixel_stats(
 
 
 def sample_frames(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    every_ms: int = 1000,
-    max_frames: int = 4,
+    df: DataFrame, every_ms: int = 1000, max_frames: int = 4
 ) -> DataFrame:
     """Frame sampling: one output row per sampled frame.
 
@@ -2614,7 +2570,7 @@ def sample_frames(
     at fixed ``every_ms`` spacing — no codec for inter-frame-predicted
     video formats exists here; row explosion, indices and timestamps
     remain the real contract."""
-    src = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
+    src = df.select("media_id", "payload")
     schema = StructType(
         [
             StructField("media_id", LongType()),

@@ -28,13 +28,7 @@ def _md5_long(col: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def pack_sequences(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    budget: int = 2048,
-    n_buckets: int = 64,
-) -> DataFrame:
+def pack_sequences(df: DataFrame, budget: int = 2048, n_buckets: int = 64) -> DataFrame:
     """Assign documents to fixed-token-budget training bins.
 
     Greedy-by-order packing within ``n_buckets`` hash buckets: documents
@@ -52,17 +46,17 @@ def pack_sequences(
     scale.
     """
     tokens = F.size(
-        F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
+        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
     ).cast("long")
-    bucket = F.pmod(_md5_long(F.col(id_col).cast("string")), F.lit(n_buckets)).cast(
+    bucket = F.pmod(_md5_long(F.col("doc_id").cast("string")), F.lit(n_buckets)).cast(
         "int"
     )
-    w = Window.partitionBy("bucket").orderBy(id_col)
+    w = Window.partitionBy("bucket").orderBy("doc_id")
     return (
-        df.select(F.col(id_col), tokens.alias("n_tokens"), bucket.alias("bucket"))
+        df.select("doc_id", tokens.alias("n_tokens"), bucket.alias("bucket"))
         .withColumn("_cum", F.sum("n_tokens").over(w))
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             "bucket",
             F.floor((F.col("_cum") - 1) / budget).cast("long").alias("bin_id"),
@@ -70,37 +64,28 @@ def pack_sequences(
     )
 
 
-def sample_hash(
-    df: DataFrame,
-    k: int,
-    id_col: str = "doc_id",
-    salt: str = "",
-) -> DataFrame:
+def sample_hash(df: DataFrame, k: int, salt: str = "") -> DataFrame:
     """Deterministic 1-in-k subsample: keep rows whose md5(id||salt)
     bucket is 0.  Stateless per-row predicate — no shuffle, survives
     predicate pushdown, and different ``salt`` values give independent
     samples (held-out splits)."""
-    h = _md5_long(F.concat(F.col(id_col).cast("string"), F.lit(salt)))
+    h = _md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(salt)))
     return df.where(F.pmod(h, F.lit(k)) == 0)
 
 
 def sample_by_source(
-    df: DataFrame,
-    weights: dict[str, float],
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    default_weight: float = 0.0,
+    df: DataFrame, weights: dict[str, float], default_weight: float = 0.0
 ) -> DataFrame:
     """Source mixing at target rates: keep a deterministic ``weights[s]``
     fraction of each source's rows (pretraining data mixing).  The keep
     decision is md5(id||source) scaled to [0,1) compared to the source's
     weight — per-row, shuffle-free, reproducible."""
     frac = (_md5_long(
-        F.concat(F.col(id_col).cast("string"), F.lit("|"), F.col(source_col))
+        F.concat(F.col("doc_id").cast("string"), F.lit("|"), F.col("source"))
     ) % 1_000_000) / 1_000_000.0
     rate = F.lit(default_weight)
     for src, w in sorted(weights.items()):
-        rate = F.when(F.col(source_col) == src, F.lit(float(w))).otherwise(rate)
+        rate = F.when(F.col("source") == src, F.lit(float(w))).otherwise(rate)
     return df.where(frac < rate)
 
 

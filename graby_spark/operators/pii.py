@@ -54,15 +54,13 @@ def redact_expr(col: Column) -> Column:
     return out
 
 
-def pii_scrub(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Per-document PII counts + fully redacted text.
 
     Output: (doc, n_email, n_card, n_ssn, n_ipv4, n_phone, n_pii, redacted).
     Counts are staged (see module docstring) so categories never overlap.
     """
-    staged = F.coalesce(F.col(text_col), F.lit(""))
+    staged = F.coalesce(F.col("text"), F.lit(""))
     counts = []
     for name, pattern, placeholder in PII_PATTERNS:
         counts.append(
@@ -75,7 +73,7 @@ def pii_scrub(
     for c in counts:
         total = c if total is None else total + c
     return df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         *counts,
         total.alias("n_pii"),
         staged.alias("redacted"),

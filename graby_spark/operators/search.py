@@ -36,6 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: BM25 term-frequency saturation and length normalization (the Lucene
+#: defaults), shared by the Spark operator and its DuckDB oracle
+K1 = 1.2
+B = 0.75
+
 
 def postings(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Term-frequency postings (doc, token, tf) over whitespace tokens of
@@ -84,10 +89,6 @@ def bm25_topk_indexed(
     index: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
 ) -> DataFrame:
     """Top-k documents per query under BM25, probing a stored
     :func:`build_search_index` table.
@@ -104,8 +105,7 @@ def bm25_topk_indexed(
     so nothing collects driver-side at all.
     """
     qterms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(F.col(terms_col)).alias("token"),
+        "query_id", F.explode("terms").alias("token")
     ).distinct()
 
     n_d = F.col("n_docs").cast("double")
@@ -117,8 +117,8 @@ def bm25_topk_indexed(
     matches = F.broadcast(qterms).join(index, "token")
     tf_d = F.col("tf").cast("double")
     contrib = idf * (
-        tf_d * F.lit(k1 + 1.0)
-        / (tf_d + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / avgdl))
+        tf_d * F.lit(K1 + 1.0)
+        / (tf_d + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / avgdl))
     )
     scored = matches.select(
         "query_id",
@@ -147,26 +147,14 @@ def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
 ) -> DataFrame:
     """One-shot BM25 top-k: :func:`build_search_index` composed with
     :func:`bm25_topk_indexed` (see those for semantics and scale shape).
     Use the two-step form when the same corpus serves many query
     batches."""
-    return bm25_topk_indexed(
-        build_search_index(docs, id_col, text_col),
-        queries,
-        k=k,
-        k1=k1,
-        b=b,
-        query_id_col=query_id_col,
-        terms_col=terms_col,
-    )
+    return bm25_topk_indexed(build_search_index(docs, id_col, text_col), queries, k=k)
 
 
 def positional_postings(
@@ -185,14 +173,7 @@ def positional_postings(
     )
 
 
-def phrase_search(
-    docs: DataFrame,
-    queries: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
-) -> DataFrame:
+def phrase_search(docs: DataFrame, queries: DataFrame) -> DataFrame:
     """Exact-phrase retrieval: documents where the query's tokens occur
     consecutively, with occurrence counts.
 
@@ -213,11 +194,11 @@ def phrase_search(
     construction and contamination audits — the phrase analog of the
     13-gram decontamination semi-join (dedup.contamination_ngrams).
     """
-    post = positional_postings(docs, id_col, text_col)
+    post = positional_postings(docs, "doc_id", "text")
     qterms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.size(F.col(terms_col)).alias("qlen"),
-        F.posexplode(F.col(terms_col)).alias("i", "token"),
+        "query_id",
+        F.size("terms").alias("qlen"),
+        F.posexplode("terms").alias("i", "token"),
     )
     hits = F.broadcast(qterms).join(post, "token").select(
         "query_id",
@@ -238,17 +219,13 @@ def phrase_search(
     )
 
 
-def oracle_phrase_sql(
-    query_values: str,
-    src: str = "documents",
-    id_col: str = "doc_id",
-) -> str:
+def oracle_phrase_sql(query_values: str, src: str = "documents") -> str:
     """DuckDB twin of :func:`phrase_search`.  ``query_values`` is a
     VALUES list of (query_id, i, token, qlen) rows — one row per phrase
     term with its 0-based index and the phrase length."""
     return f"""
 WITH base AS (
-  SELECT {id_col} AS doc,
+  SELECT doc_id AS doc,
          list_filter(string_split_regex(lower(trim(coalesce(text, ''))), '\\s+'), t -> t <> '') AS toks
   FROM {src}
 ),
@@ -272,8 +249,6 @@ FROM occ WHERE n_idx = qlen GROUP BY query_id, doc
 def oracle_bm25_sql(
     query_values: str,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     src: str = "documents",
     id_col: str = "doc_id",
 ) -> str:
@@ -297,7 +272,7 @@ q(query_id, token) AS (VALUES {query_values}),
 m AS (
   SELECT q.query_id, p.doc,
          CAST(round(round(ln((s.n - d.df + 0.5) / (d.df + 0.5) + 1.0), 9)
-              * (p.tf::DOUBLE * {k1 + 1.0} / (p.tf::DOUBLE + {k1} * ({1.0 - b} + {b} * l.dl / s.avgdl)))
+              * (p.tf::DOUBLE * {K1 + 1.0} / (p.tf::DOUBLE + {K1} * ({1.0 - B} + {B} * l.dl / s.avgdl)))
               * 1000000000, 0) AS BIGINT) AS nano
   FROM q JOIN post p USING (token) JOIN dft d USING (token) JOIN dl l ON l.doc = p.doc, stats s
 ),

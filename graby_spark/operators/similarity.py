@@ -158,13 +158,7 @@ def _collect_query_units(
     return ids, _unit_rows(mat)
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     Returns (query_id, neighbor_id, cosine, rank); self-matches excluded.
@@ -185,7 +179,7 @@ def brute_force_topk(
     unchanged in the JVM."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    q_ids, q_units = _collect_query_units(queries, id_col, vec_col)
+    q_ids, q_units = _collect_query_units(queries, "vec_id", "embedding")
     sc = corpus.sparkSession.sparkContext
     bc = sc.broadcast((q_ids, q_units))
 
@@ -218,7 +212,7 @@ def brute_force_topk(
                 out_s.extend(col)
             yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "dot": out_s})
 
-    id_type = corpus.schema[id_col].dataType
+    id_type = corpus.schema["vec_id"].dataType
     schema = StructType(
         [
             StructField("query_id", id_type),
@@ -227,7 +221,7 @@ def brute_force_topk(
         ]
     )
     scored = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+        corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
         .mapInPandas(scan, schema)
         .select("query_id", "neighbor_id", F.round(F.col("dot"), 8).alias("cosine"))
     )
@@ -243,9 +237,9 @@ _N_PLANES = 8
 _N_TABLES = 4
 
 
-def _hyperplanes(dim: int, n_planes: int = _N_PLANES, n_tables: int = _N_TABLES) -> np.ndarray:
+def _hyperplanes(dim: int) -> np.ndarray:
     rng = np.random.RandomState(7)
-    return rng.standard_normal((n_tables, n_planes, dim))
+    return rng.standard_normal((_N_TABLES, _N_PLANES, dim))
 
 
 def lsh_signatures(
@@ -292,18 +286,13 @@ def lsh_signatures(
 
 
 def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
+    corpus: DataFrame, queries: DataFrame, k: int = 10, dim: int | None = None
 ) -> DataFrame:
     """ANN top-k: bucket join on hyperplane signature, exact rerank of
     candidates.  Recall < 1 by construction; rank semantics match
     brute_force_topk on the candidate set."""
-    c_sig = lsh_signatures(corpus, id_col, vec_col, dim)
-    q_sig = lsh_signatures(queries, id_col, vec_col, dim)
+    c_sig = lsh_signatures(corpus, "vec_id", "embedding", dim)
+    q_sig = lsh_signatures(queries, "vec_id", "embedding", dim)
     cand = (
         q_sig.select(F.col("id").alias("query_id"), "table", "bucket")
         .join(c_sig.select(F.col("id").alias("neighbor_id"), "table", "bucket"), ["table", "bucket"])
@@ -313,7 +302,7 @@ def lsh_topk(
     )
     # shared vectorized rerank tail (identical semantics to the former
     # inline block: round-8 fold dots, (cosine DESC, id ASC) window)
-    return _exact_rerank(cand, corpus, queries, id_col, vec_col, k)
+    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)
 
 
 def ivf_topk(
@@ -322,8 +311,6 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-flat ANN: partition the corpus into ``n_cells`` centroid cells,
     probe the ``nprobe`` nearest cells per query, exact-rerank inside them.
@@ -341,7 +328,7 @@ def ivf_topk(
 
     # deterministic centroid sample, broadcast to the assignment UDF
     cent_rows = (
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+        corpus.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
         .orderBy(F.conv(F.substring(F.md5(F.col("cid").cast("string")), 1, 15), 16, 10))
         .limit(n_cells)
         .collect()
@@ -374,12 +361,12 @@ def ivf_topk(
 
     schema = StructType(
         [
-            StructField("id", corpus.schema[id_col].dataType),
+            StructField("id", corpus.schema["vec_id"].dataType),
             StructField("cell", IntegerType()),
         ]
     )
-    c_src = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    q_src = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    c_src = corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
+    q_src = queries.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     c_cells = c_src.mapInPandas(assign(1), schema)
     q_cells = q_src.mapInPandas(assign(nprobe), schema)
 
@@ -390,7 +377,7 @@ def ivf_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_rerank(cand, corpus, queries, id_col, vec_col, k)
+    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)
 
 
 def _exact_rerank(
@@ -469,8 +456,6 @@ def ivf_kmeans_topk(
     n_cells: int = 8,
     nprobe: int = 2,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-flat ANN with TRAINED cells: the inverted-file partition comes
     from ``cluster.kmeans_train``'s exact integer-grid Lloyd iterations
@@ -491,7 +476,7 @@ def ivf_kmeans_topk(
 
     from graby_spark.operators.cluster import _src_df, _u9_batch, kmeans_train
 
-    cents = kmeans_train(corpus, id_col, vec_col, k=n_cells, n_iter=n_iter)
+    cents = kmeans_train(corpus, "vec_id", "embedding", k=n_cells, n_iter=n_iter)
     cents_bc = corpus.sparkSession.sparkContext.broadcast(cents)
 
     def assign(n_best: int):
@@ -515,12 +500,12 @@ def ivf_kmeans_topk(
 
     schema = StructType(
         [
-            StructField("id", corpus.schema[id_col].dataType),
+            StructField("id", corpus.schema["vec_id"].dataType),
             StructField("cell", IntegerType()),
         ]
     )
-    c_cells = _src_df(corpus, id_col, vec_col).mapInPandas(assign(1), schema)
-    q_cells = _src_df(queries, id_col, vec_col).mapInPandas(assign(nprobe), schema)
+    c_cells = _src_df(corpus, "vec_id", "embedding").mapInPandas(assign(1), schema)
+    q_cells = _src_df(queries, "vec_id", "embedding").mapInPandas(assign(nprobe), schema)
     cand = (
         q_cells.select(F.col("id").alias("query_id"), "cell")
         .join(c_cells.select(F.col("id").alias("neighbor_id"), "cell"), "cell")
@@ -528,7 +513,13 @@ def ivf_kmeans_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_rerank(cand, corpus, queries, id_col, vec_col, k)
+    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)
+
+
+#: PQ geometry of :func:`pq_topk` and :func:`ivfpq_topk`: ``PQ_M``
+#: subspaces of ``PQ_KS`` code words each (one byte per subspace code)
+PQ_M = 4
+PQ_KS = 16
 
 
 def _pq_codebooks(
@@ -611,14 +602,7 @@ def pq_encode(
 
 
 def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    m: int = 4,
-    ks: int = 16,
-    refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, queries: DataFrame, k: int = 10, refine: int = 4
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation and
     exact rerank — the compressed-domain third scale architecture next to
@@ -652,10 +636,10 @@ def pq_topk(
     ~125-point clusters).  IVF-PQ with residual quantization is the
     standard finer-grained variant and would bolt on here.
     """
-    codebooks = _pq_codebooks(corpus, id_col, vec_col, m, ks)
-    codes = pq_encode(corpus, codebooks, id_col, vec_col)
+    codebooks = _pq_codebooks(corpus, "vec_id", "embedding", PQ_M, PQ_KS)
+    codes = pq_encode(corpus, codebooks, "vec_id", "embedding")
 
-    q_rows = _collect_probe_rows(queries, id_col, vec_col)
+    q_rows = _collect_probe_rows(queries, "vec_id", "embedding")
     q_ids = [r["qid"] for r in q_rows]
     q_mat = np.stack([np.asarray(r["qvec"], dtype=np.float64) for r in q_rows])
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
@@ -708,7 +692,7 @@ def pq_topk(
 
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    id_type = corpus.schema[id_col].dataType
+    id_type = corpus.schema["vec_id"].dataType
     scan_schema = StructType(
         [
             StructField("query_id", id_type),
@@ -729,12 +713,10 @@ def pq_topk(
     )
     # shared vectorized rerank tail (identical semantics to the former
     # inline block: round-8 fold dots, (cosine DESC, id ASC) window)
-    return _exact_rerank(cand, corpus, queries, id_col, vec_col, k)
+    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)
 
 
-def sq8_encode(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def sq8_encode(df: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 scalar quantization of the UNIT vector
     — FAISS's SQ8 storage baseline (4x smaller than float32, the first
     compression step before PQ): ``scale = max|u_i| / 127``,
@@ -746,12 +728,12 @@ def sq8_encode(
     expressions — the payload never crosses into Python — so encode is
     whole-stage-codegen over the corpus scan.  A zero vector encodes as
     scale 0 / all-zero codes."""
-    vec_d = F.transform(F.col(vec_col), lambda v: v.cast("double"))
+    vec_d = F.transform(F.col("embedding"), lambda v: v.cast("double"))
     norm = F.sqrt(F.aggregate(vec_d, F.lit(0.0).cast("double"), lambda a, v: a + v * v))
     u = F.transform(vec_d, lambda v: v / norm)
     scale = F.array_max(F.transform(u, lambda v: F.abs(v))) / F.lit(127.0)
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         scale.alias("scale"),
         F.when(
             scale > 0,
@@ -770,8 +752,6 @@ def ivf_sq8_topk(
     nprobe: int = 2,
     n_iter: int = 2,
     refine: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-SQ8 ANN — the FAISS ``IVF,SQ8`` index shape, completing the
     family next to IVF-flat (:func:`ivf_kmeans_topk`) and IVF-PQ
@@ -811,7 +791,7 @@ def ivf_sq8_topk(
 
     from graby_spark.operators.cluster import _src_df, _u9_batch, kmeans_train
 
-    cents = kmeans_train(corpus, id_col, vec_col, k=n_cells, n_iter=n_iter)
+    cents = kmeans_train(corpus, "vec_id", "embedding", k=n_cells, n_iter=n_iter)
     cents_bc = corpus.sparkSession.sparkContext.broadcast(cents)
 
     def assign(n_best: int):
@@ -841,13 +821,13 @@ def ivf_sq8_topk(
 
     schema = StructType(
         [
-            StructField("id", corpus.schema[id_col].dataType),
+            StructField("id", corpus.schema["vec_id"].dataType),
             StructField("cell", IntegerType()),
             StructField("scale", DoubleType()),
             StructField("codes", ArrayType(IntegerType())),
         ]
     )
-    c_codes = _src_df(corpus, id_col, vec_col).mapInPandas(assign(1), schema)
+    c_codes = _src_df(corpus, "vec_id", "embedding").mapInPandas(assign(1), schema)
 
     # r06 scan shape (mirrors ivfpq_topk, guide §2.3 "shuffle keys and
     # metadata instead of payloads"): the probe set is bounded, so its
@@ -860,7 +840,7 @@ def ivf_sq8_topk(
     # approx is computed bit-identically: int64 code dot, then the same
     # (q_scale * n_scale) * dot IEEE sequence), so the union of batch tops
     # provably contains the global candidate cut.
-    q_rows = _collect_probe_rows(queries, id_col, vec_col)
+    q_rows = _collect_probe_rows(queries, "vec_id", "embedding")
     q_ids = [r["qid"] for r in q_rows]
     q_u9 = _u9_batch([r["qvec"] for r in q_rows])
     q_probe = np.argsort(-(q_u9 @ cents.T), axis=1, kind="stable")[:, :nprobe]
@@ -899,7 +879,7 @@ def ivf_sq8_topk(
                 {"query_id": out_q, "neighbor_id": out_n, "approx": out_s}
             )
 
-    id_type = corpus.schema[id_col].dataType
+    id_type = corpus.schema["vec_id"].dataType
     scan_schema = StructType(
         [
             StructField("query_id", id_type),
@@ -914,7 +894,7 @@ def ivf_sq8_topk(
         .where(F.col("_r") <= n_cand)
         .select("query_id", "neighbor_id")
     )
-    return _exact_rerank(cand, corpus, queries, id_col, vec_col, k)
+    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)
 
 
 def _md5_ordered_sample(
@@ -1020,11 +1000,7 @@ def ivfpq_topk(
     k: int = 10,
     n_cells: int = 8,
     nprobe: int = 3,
-    m: int = 4,
-    ks: int = 16,
     refine: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ with residual quantization — the finer-grained fourth ANN
     scale architecture (VERDICT r04 noted it "would bolt on" to pq_topk;
@@ -1047,10 +1023,10 @@ def ivfpq_topk(
     window, then a slim id-keyed rerank join.  At a trillion rows the
     cell list turns into a partition-pruning key on a codes table
     bucketed by cell."""
-    cents, codebooks = _ivfpq_model(corpus, id_col, vec_col, n_cells, m, ks)
-    codes = ivfpq_encode(corpus, cents, codebooks, id_col, vec_col)
+    cents, codebooks = _ivfpq_model(corpus, "vec_id", "embedding", n_cells, PQ_M, PQ_KS)
+    codes = ivfpq_encode(corpus, cents, codebooks, "vec_id", "embedding")
 
-    q_rows = _collect_probe_rows(queries, id_col, vec_col)
+    q_rows = _collect_probe_rows(queries, "vec_id", "embedding")
     q_ids = [r["qid"] for r in q_rows]
     q_mat = np.stack([np.asarray(r["qvec"], dtype=np.float64) for r in q_rows])
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
@@ -1100,7 +1076,7 @@ def ivfpq_topk(
 
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    id_type = corpus.schema[id_col].dataType
+    id_type = corpus.schema["vec_id"].dataType
     scan_schema = StructType(
         [
             StructField("query_id", id_type),
@@ -1119,4 +1095,4 @@ def ivfpq_topk(
     )
     # shared vectorized rerank tail (identical semantics to the former
     # inline block: round-8 fold dots, (cosine DESC, id ASC) window)
-    return _exact_rerank(cand, corpus, queries, id_col, vec_col, k)
+    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)

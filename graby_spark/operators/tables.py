@@ -138,9 +138,7 @@ def doc_tables(html: str) -> list[list[tuple[bool, list[str]]]]:
     return out
 
 
-def extract_tables(
-    df: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
+def extract_tables(df: DataFrame) -> DataFrame:
     """(url, html) pages → one row per normalized table row:
     ``(url, table_idx, row_idx, is_header, n_cols, cells)``.
 
@@ -151,7 +149,7 @@ def extract_tables(
     pipeline's output when exactness matters)."""
     import pandas as pd
 
-    src = df.select(F.col(url_col).alias("url"), F.col(html_col).alias("html"))
+    src = df.select("url", "html")
 
     def run(batches):
         for pdf in batches:

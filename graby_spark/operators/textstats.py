@@ -9,9 +9,6 @@ in __spark_entry__.py.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -54,15 +51,24 @@ STOPWORDS = {
     "de": ["der", "die", "das", "und", "ein", "eine", "ist", "zu", "den", "von"],
 }
 
+#: add-k smoothing of the stored unigram/bigram LMs
+ADD_K = 0.5
+#: stupid-backoff penalty of the bigram and trigram scorers
+BACKOFF_ALPHA = 0.4
+#: hash buckets of :func:`linear_quality_score`'s default model
+_LINEAR_BUCKETS = 1 << 20
+#: winnowing gram length and window of :func:`fingerprints`
+_WINNOW = 16
 
-def token_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+
+def token_stats(df: DataFrame) -> DataFrame:
     """Whitespace + BPE-ish token counts and basic char stats."""
-    text = F.trim(F.col(text_col))
+    text = F.trim(F.col("text"))
     ws_tokens = F.split(text, r"\s+")
     # BPE-ish: word pieces + digits + punctuation as separate tokens
     bpe_tokens = F.split(text, r"(?<=[^\w])|(?=[^\w\s])|\s+")
     return df.select(
-        F.col(id_col),
+        "doc_id",
         F.length(text).alias("char_count"),
         F.size(ws_tokens).alias("ws_token_count"),
         F.size(F.filter(bpe_tokens, lambda t: t != "")).alias("bpe_token_count"),
@@ -71,12 +77,7 @@ def token_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def quality_score(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
+def quality_score(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """Heuristic quality score in [0, 1]: length band, punctuation ratio,
     stopword ratio, mean word length band.  Mirrors common web-text
     filtering recipes; every term is a SQL expression (oracle-checkable).
@@ -84,7 +85,7 @@ def quality_score(
     ``keep`` names extra input columns to pass through — cheaper than
     joining the scores back by id (which costs a full shuffle join of two
     scans of the same table; see q_domain_prior's plan audit)."""
-    text = F.trim(F.col(text_col))
+    text = F.trim(F.col("text"))
     tokens = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
     n_tokens = F.size(tokens)
     n_chars = F.length(text)
@@ -105,7 +106,7 @@ def quality_score(
         + word_len_ok.cast("double") * 0.25
     )
     return df.select(
-        F.col(id_col),
+        "doc_id",
         *[F.col(c) for c in keep],
         n_tokens.alias("n_tokens"),
         F.round(stop_ratio, 6).alias("stop_ratio"),
@@ -114,13 +115,7 @@ def quality_score(
     )
 
 
-def linear_quality_score(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_buckets: int = 1 << 20,
-    threshold: float = 0.5,
-) -> DataFrame:
+def linear_quality_score(df: DataFrame) -> DataFrame:
     """fastText/CCNet-style hashed linear text classifier, pure JVM.
 
     The standard pretraining quality gate (CCNet, GPT-3's Wikipedia-vs-
@@ -141,16 +136,16 @@ def linear_quality_score(
     cross-engine determinism; empty docs get NULL prob / keep = false.
     """
     toks = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != ""
+        F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != ""
     )
     # bucket = md5-based 60-bit hash (cross-engine: DuckDB computes the
     # identical value); weight = uniform in [-1, 1] from the bucket id
     weight = lambda t: (  # noqa: E731
         (
             F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint")
-            % F.lit(num_buckets)
+            % F.lit(_LINEAR_BUCKETS)
         ).cast("double")
-        / F.lit(float(num_buckets - 1))
+        / F.lit(float(_LINEAR_BUCKETS - 1))
     ) * 2.0 - 1.0
     n = F.size(toks)
     total = F.aggregate(
@@ -159,23 +154,15 @@ def linear_quality_score(
     logit = F.when(n > 0, total / n)
     prob = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
     return df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         n.cast("long").alias("n_tokens"),
         F.round(logit, 6).alias("logit"),
         prob.alias("prob"),
-        F.coalesce(prob >= threshold, F.lit(False)).alias("keep"),
+        F.coalesce(prob >= 0.5, F.lit(False)).alias("keep"),
     )
 
 
-def linear_quality_score_weighted(
-    df: DataFrame,
-    weights: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bias: float = 0.0,
-    threshold: float = 0.5,
-    default_weight: float = 0.0,
-) -> DataFrame:
+def linear_quality_score_weighted(df: DataFrame, weights: DataFrame) -> DataFrame:
     """Trained-weights variant of :func:`linear_quality_score`.
 
     ``weights`` is a (token, weight) DataFrame — a fastText/logistic
@@ -184,15 +171,15 @@ def linear_quality_score_weighted(
     trained vocab is 1e5-1e6 rows — broadcast-sized by construction),
     then one aggregation keyed by doc id computes the mean; the corpus
     text never shuffles, only (doc, weight) pairs do.  Unknown tokens
-    take ``default_weight``.  Output contract matches
+    weigh 0.  Output contract matches
     linear_quality_score: (doc, n_tokens, logit, prob, keep); docs with
     no tokens get NULL logit/prob and keep = false.
     """
     toks = df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.explode_outer(
             F.filter(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != ""
+                F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != ""
             )
         ).alias("token"),
     )
@@ -203,19 +190,19 @@ def linear_quality_score_weighted(
         F.sum(
             F.when(
                 F.col("token").isNotNull(),
-                F.coalesce(F.col("weight"), F.lit(float(default_weight))),
+                F.coalesce(F.col("weight"), F.lit(0.0)),
             )
         ).alias("total"),
     )
     n = F.col("n_tokens")
-    logit = F.when(n > 0, F.lit(float(bias)) + F.col("total") / n)
+    logit = F.when(n > 0, F.col("total") / n)
     prob = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
     return agg.select(
         "doc",
         n.cast("long").alias("n_tokens"),
         F.round(logit, 6).alias("logit"),
         prob.alias("prob"),
-        F.coalesce(prob >= threshold, F.lit(False)).alias("keep"),
+        F.coalesce(prob >= 0.5, F.lit(False)).alias("keep"),
     )
 
 
@@ -253,10 +240,8 @@ def language_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def fingerprints(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", window: int = 16
-) -> DataFrame:
-    """Winnowing-style document fingerprint: hash every ``window``-char
+def fingerprints(df: DataFrame) -> DataFrame:
+    """Winnowing-style document fingerprint: hash every 16-char
     gram of the whitespace-normalized text, keep the minimum hash per
     non-overlapping window of grams — a compact signature for
     shift-tolerant duplicate detection.
@@ -266,16 +251,16 @@ def fingerprints(
     identical value), grams/minima are array ``transform``s, and the
     final fingerprint is md5 over the comma-joined minima.
     """
-    src = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("text"))
+    src = df.select(F.col("doc_id").alias("doc"), "text")
     norm = F.regexp_replace(
         F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+", " "
     )
     # rpad TRUNCATES longer strings (Spark and DuckDB both) — pad only
     # when the normalized text is shorter than one gram
-    padded = F.when(F.length(norm) < window, F.rpad(norm, window, " ")).otherwise(norm)
+    w = _WINNOW
+    padded = F.when(F.length(norm) < w, F.rpad(norm, w, " ")).otherwise(norm)
     # position-dependent substring inside a lambda needs SQL-expression
     # form (python F.substring takes plain-int pos only)
-    w = window
     out = src.select(
         "doc",
         padded.alias("_padded"),
@@ -311,9 +296,7 @@ def fingerprints(
     return out.select("doc", "fingerprint", "minima")
 
 
-def unigram_logprob(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def unigram_logprob(df: DataFrame) -> DataFrame:
     """Corpus-statistical quality signal: mean unigram log10-probability
     per document under the corpus's own unigram distribution (the classic
     cheap 'LM perplexity' stand-in for web-text filtering — gibberish and
@@ -327,9 +310,9 @@ def unigram_logprob(
     Returns (id, n_tokens, mean_logprob rounded to 6 digits).
     """
     toks = df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.explode(
-            F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != "")
+            F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != "")
         ).alias("token"),
     )
     total = toks.count()
@@ -347,12 +330,7 @@ def unigram_logprob(
     return scored
 
 
-def build_unigram_lm(
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: float = 0.5,
-) -> DataFrame:
+def build_unigram_lm(corpus: DataFrame) -> DataFrame:
     """Add-k-smoothed unigram LM from a reference corpus →
     (token, logp10) table, with the out-of-vocabulary mass stored under
     the ``<unk>`` token.
@@ -362,17 +340,18 @@ def build_unigram_lm(
     and every crawl batch scores against it — the corpus is never
     re-aggregated per batch (the same store-once/probe-many pattern as
     ``dedup.build_minhash_index``).  logp10(t) = log10((tf + k) /
-    (total + k·(V+1))); the V+1 reserves one smoothed slot for unseen
+    (total + k·(V+1))) with k = ``ADD_K``; the V+1 reserves one smoothed slot for unseen
     tokens.  Values rounded to 9 dp for cross-engine determinism.
     """
     toks = corpus.select(
         F.explode(
-            F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != "")
+            F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != "")
         ).alias("token")
     )
     vocab = toks.groupBy("token").agg(F.count("*").alias("tf"))
     total = toks.count()
     v = vocab.count()
+    k = ADD_K
     denom = float(total) + k * (v + 1)
     lm = vocab.select(
         "token", F.round(F.log10((F.col("tf") + F.lit(k)) / F.lit(denom)), 9).alias("logp10")
@@ -384,12 +363,7 @@ def build_unigram_lm(
     return lm.unionByName(unk)
 
 
-def build_bigram_lm(
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: float = 0.5,
-) -> DataFrame:
+def build_bigram_lm(corpus: DataFrame) -> DataFrame:
     """Stupid-backoff bigram LM (Brants et al. 2007, "Large Language
     Models in Machine Translation") stored as ONE (context, token, logp10)
     table — the same store-once/probe-many shape as
@@ -404,12 +378,13 @@ def build_bigram_lm(
     log-prob of :func:`build_unigram_lm`, including the ``<unk>`` slot.
     Values rounded to 9 dp for cross-engine determinism.
     """
-    arr = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != "")
+    arr = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != "")
     docs = corpus.select(arr.alias("ts"))
     toks = docs.select(F.explode("ts").alias("token"))
     vocab = toks.groupBy("token").agg(F.count("*").alias("tf"))
     total = toks.count()
     v = vocab.count()
+    k = ADD_K
     denom = float(total) + k * (v + 1)
     uni = vocab.select(
         F.lit(None).cast("string").alias("context"),
@@ -441,12 +416,7 @@ def build_bigram_lm(
     return bi.unionByName(uni).unionByName(unk)
 
 
-def ccnet_buckets(
-    scored: DataFrame,
-    doc_col: str = "doc",
-    lang_col: str = "lang",
-    ppl_col: str = "perplexity",
-) -> DataFrame:
+def ccnet_buckets(scored: DataFrame) -> DataFrame:
     """CCNet's final corpus split (Wenzek et al. 2020 §4.4): per language,
     rank documents by LM perplexity and cut into head / middle / tail
     terciles — the head is the "close to Wikipedia" slice most
@@ -463,8 +433,8 @@ def ccnet_buckets(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(lang_col).orderBy(
-        F.col(ppl_col).asc_nulls_last(), F.col(doc_col)
+    w = Window.partitionBy("lang").orderBy(
+        F.col("perplexity").asc_nulls_last(), F.col("doc")
     )
     tile = F.ntile(3).over(w)
     bucket = (
@@ -472,20 +442,10 @@ def ccnet_buckets(
         .when(tile == 2, F.lit("middle"))
         .otherwise(F.lit("tail"))
     )
-    return scored.select(
-        F.col(doc_col).alias("doc"),
-        F.col(lang_col).alias("lang"),
-        F.col(ppl_col).alias("perplexity"),
-        bucket.alias("bucket"),
-    )
+    return scored.select("doc", "lang", "perplexity", bucket.alias("bucket"))
 
 
-def build_trigram_lm(
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: float = 0.5,
-) -> DataFrame:
+def build_trigram_lm(corpus: DataFrame) -> DataFrame:
     """Order-3 stupid-backoff LM stored as ONE (ord, context, token,
     logp10) table: ord=3 rows carry the space-joined two-token context
     with ``log10(c(w₋₂ w₋₁ w) / c_ctx(w₋₂ w₋₁))``, ord=2 rows the
@@ -495,9 +455,9 @@ def build_trigram_lm(
     filter is a KenLM n-gram (Wenzek et al.) — order 3 with stupid
     backoff is the practical open-vocabulary equivalent of that ranking
     at corpus-filter granularity."""
-    arr = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != "")
+    arr = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != "")
     docs = corpus.select(arr.alias("ts"))
-    bi = build_bigram_lm(corpus, id_col, text_col, k)
+    bi = build_bigram_lm(corpus)
     base = bi.select(
         F.when(F.col("context").isNull(), F.lit(1)).otherwise(F.lit(2)).alias("ord"),
         "context",
@@ -528,17 +488,12 @@ def build_trigram_lm(
     return tri.unionByName(base)
 
 
-def perplexity_score_backoff3(
-    df: DataFrame,
-    lm: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    alpha: float = 0.4,
-) -> DataFrame:
+def perplexity_score_backoff3(df: DataFrame, lm: DataFrame) -> DataFrame:
     """Score against a stored :func:`build_trigram_lm` with stupid
-    backoff: trigram if seen, else α·bigram, else α²·unigram (``<unk>``
-    for OOV); a document's first token scores as plain unigram and its
-    second at the bigram level — the standard left-edge convention.
+    backoff (α = ``BACKOFF_ALPHA``): trigram if seen, else α·bigram, else
+    α²·unigram (``<unk>`` for OOV); a document's first token scores as
+    plain unigram and its second at the bigram level — the standard
+    left-edge convention.
     Returns (doc, n_tokens, mean_logs10, perplexity).
 
     Plan shape: the token stream explodes once WITH both contexts (JVM
@@ -557,7 +512,7 @@ def perplexity_score_backoff3(
     # exact integer nano-units: order-independent sums (see
     # perplexity_score's determinism note)
     unk_nano = int(round(float(unk_rows[0]["logp10"]) * 1e9))
-    la_nano = int(round(math.log10(alpha) * 1e9))
+    la_nano = int(round(math.log10(BACKOFF_ALPHA) * 1e9))
     uni = lm.where((F.col("ord") == 1) & (F.col("token") != "<unk>")).select(
         "token", F.col("logp10").alias("_uni")
     )
@@ -567,9 +522,9 @@ def perplexity_score_backoff3(
     tri = lm.where(F.col("ord") == 3).select(
         F.col("context").alias("context2"), "token", F.col("logp10").alias("_tri")
     )
-    arr = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != "")
+    arr = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != "")
     toks = (
-        df.select(F.col(id_col).alias("doc"), arr.alias("ts"))
+        df.select(F.col("doc_id").alias("doc"), arr.alias("ts"))
         .select(
             "doc",
             F.explode_outer(
@@ -625,18 +580,12 @@ def perplexity_score_backoff3(
     )
 
 
-def perplexity_score_backoff(
-    df: DataFrame,
-    lm: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    alpha: float = 0.4,
-) -> DataFrame:
+def perplexity_score_backoff(df: DataFrame, lm: DataFrame) -> DataFrame:
     """Score documents against a stored :func:`build_bigram_lm` table with
     stupid backoff: (doc, n_tokens, mean_logs10, perplexity).
 
     Per token: the bigram score ``log10(S(w_i | w_{i-1}))`` when the pair
-    is in the model; otherwise ``log10(alpha) + unigram`` (backoff); a
+    is in the model; otherwise ``log10(BACKOFF_ALPHA) + unigram`` (backoff); a
     document's FIRST token has no context and takes its plain unigram
     score (no alpha penalty).  OOV tokens take ``<unk>``.  Stupid-backoff
     scores are not normalized probabilities, so the column is
@@ -661,16 +610,16 @@ def perplexity_score_backoff(
     # exact integer nano-units: order-independent sums (see
     # perplexity_score's determinism note)
     unk_nano = int(round(float(unk_rows[0]["logp10"]) * 1e9))
-    la_nano = int(round(math.log10(alpha) * 1e9))
+    la_nano = int(round(math.log10(BACKOFF_ALPHA) * 1e9))
     uni = lm.where(F.col("context").isNull() & (F.col("token") != "<unk>")).select(
         "token", F.col("logp10").alias("_uni")
     )
     bi = lm.where(F.col("context").isNotNull()).select(
         "context", "token", F.col("logp10").alias("_bi")
     )
-    arr = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != "")
+    arr = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != "")
     toks = (
-        df.select(F.col(id_col).alias("doc"), arr.alias("ts"))
+        df.select(F.col("doc_id").alias("doc"), arr.alias("ts"))
         .select(
             "doc",
             F.explode_outer(
@@ -707,12 +656,7 @@ def perplexity_score_backoff(
     )
 
 
-def perplexity_score(
-    df: DataFrame,
-    lm: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def perplexity_score(df: DataFrame, lm: DataFrame) -> DataFrame:
     """Score documents against a stored :func:`build_unigram_lm` table:
     (doc, n_tokens, mean_logp10, perplexity).
 
@@ -735,9 +679,9 @@ def perplexity_score(
         raise ValueError("lm has no <unk> row — build it with build_unigram_lm")
     unk_nano = int(round(float(unk_rows[0]["logp10"]) * 1e9))
     toks = df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.explode_outer(
-            F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != "")
+            F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != "")
         ).alias("token"),
     )
     joined = toks.join(
@@ -760,9 +704,7 @@ def perplexity_score(
     )
 
 
-def repetition_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021, appendix A1.1):
     duplicate line / paragraph fractions and duplicate word-n-gram
     fractions, plus the fraction of characters inside the single most
@@ -777,17 +719,17 @@ def repetition_stats(
     array-metric side is by id.
     """
     base = df.select(
-        F.col(id_col).alias("doc"),
-        F.trim(F.coalesce(F.col(text_col), F.lit(""))).alias("_t"),
+        F.col("doc_id").alias("doc"),
+        F.trim(F.coalesce(F.col("text"), F.lit(""))).alias("_t"),
         F.filter(
-            F.transform(F.split(F.coalesce(F.col(text_col), F.lit("")), "\n"), lambda l: F.trim(l)),
+            F.transform(F.split(F.coalesce(F.col("text"), F.lit("")), "\n"), lambda l: F.trim(l)),
             lambda l: l != "",
         ).alias("_lines"),
         F.filter(
-            F.transform(F.split(F.coalesce(F.col(text_col), F.lit("")), "\n\n"), lambda p: F.trim(p)),
+            F.transform(F.split(F.coalesce(F.col("text"), F.lit("")), "\n\n"), lambda p: F.trim(p)),
             lambda p: p != "",
         ).alias("_paras"),
-        F.filter(F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"), lambda t: t != "").alias(
+        F.filter(F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+"), lambda t: t != "").alias(
             "_toks"
         ),
     )
@@ -862,9 +804,7 @@ def repetition_stats(
     )
 
 
-def gopher_quality_filter(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def gopher_quality_filter(df: DataFrame) -> DataFrame:
     """Gopher document-quality rules (Rae et al. 2021, appendix A1.1) as one
     whole-stage-codegen projection — the classic pre-training corpus gate:
 
@@ -878,7 +818,7 @@ def gopher_quality_filter(
     Emits the component measurements plus the final boolean so downstream
     jobs can re-threshold without recomputing.  Zero shuffle, zero Python.
     """
-    text = F.trim(F.coalesce(F.col(text_col), F.lit("")))
+    text = F.trim(F.coalesce(F.col("text"), F.lit("")))
     words = F.filter(F.split(text, r"\s+"), lambda t: t != "")
     n_words = F.size(words)
     mean_word_len = F.when(
@@ -889,7 +829,7 @@ def gopher_quality_filter(
     ellipses = F.size(F.split(text, r"\.\.\.")) - 1
     symbol_ratio = F.when(n_words > 0, (hashes + ellipses) / n_words).otherwise(F.lit(0.0))
     lines = F.filter(
-        F.transform(F.split(F.coalesce(F.col(text_col), F.lit("")), "\n"), lambda l: F.trim(l)), lambda l: l != ""
+        F.transform(F.split(F.coalesce(F.col("text"), F.lit("")), "\n"), lambda l: F.trim(l)), lambda l: l != ""
     )
     n_lines = F.size(lines)
     bullet_lines = F.size(
@@ -919,7 +859,7 @@ def gopher_quality_filter(
         & (stop_hits >= 2)
     )
     return df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         n_words.cast("long").alias("n_words"),
         F.round(mean_word_len, 6).alias("mean_word_len"),
         F.round(symbol_ratio, 6).alias("symbol_ratio"),
@@ -932,11 +872,7 @@ def gopher_quality_filter(
 
 
 def importance_weights(
-    source_df: DataFrame,
-    target_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 10000,
+    source_df: DataFrame, target_df: DataFrame, n_buckets: int = 10000
 ) -> DataFrame:
     """DSIR-style data-selection scores (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): per-document log
@@ -954,9 +890,9 @@ def importance_weights(
     """
     def buckets(df: DataFrame) -> DataFrame:
         toks = df.select(
-            F.col(id_col).alias("doc"),
+            F.col("doc_id").alias("doc"),
             F.filter(
-                F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"), lambda t: t != ""
+                F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+"), lambda t: t != ""
             ).alias("_toks"),
         )
         grams = toks.select(
@@ -1013,10 +949,7 @@ def importance_weights(
 
 
 def c4_quality_filter(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_text: bool = False,
+    df: DataFrame, id_col: str = "doc_id", keep_text: bool = False
 ) -> DataFrame:
     """C4-style page cleaning (Raffel et al. 2020 §2.2): keep only lines
     that end in terminal punctuation, have >= 5 words, and don't mention
@@ -1028,7 +961,7 @@ def c4_quality_filter(
     boolean.  Pure JVM array/regex expressions — zero Python, zero shuffle;
     at 100 TB this is a map-only pass whose cost is the regex scan.
     """
-    raw = F.coalesce(F.col(text_col), F.lit(""))
+    raw = F.coalesce(F.col("text"), F.lit(""))
     # one-arg lambda, NOT bare F.trim: pyspark builds a two-arg
     # (element, index) lambda for callables that accept two args, and
     # F.trim(col, trim) would take the index as the trim character set
@@ -1059,13 +992,7 @@ def c4_quality_filter(
     )
 
 
-def split_assign(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    train_frac: float = 0.98,
-    val_frac: float = 0.01,
-    salt: str = "v1",
-) -> DataFrame:
+def split_assign(df: DataFrame) -> DataFrame:
     """Deterministic train/validation/test split by salted id hash.
 
     Hash-based (not row_number) so membership is stable under corpus
@@ -1074,9 +1001,9 @@ def split_assign(
     is cross-engine (DuckDB oracle recomputes identical buckets).  Pure
     projection: no shuffle, no Python.
     """
-    bucket, split = split_exprs(id_col, train_frac, val_frac, salt)
+    bucket, split = split_exprs("doc_id", 0.98, 0.01, "v1")
     return df.select(
-        F.col(id_col).alias("doc"), bucket.alias("bucket"), split.alias("split")
+        F.col("doc_id").alias("doc"), bucket.alias("bucket"), split.alias("split")
     )
 
 
@@ -1122,9 +1049,7 @@ CONTROL_CLASS = "[\x00-\x08\x0b-\x1f\x7f-\x9f]"
 SENTENCE_PATTERN = r"[^.!?]+[.!?]*"
 
 
-def normalize_text(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def normalize_text(df: DataFrame) -> DataFrame:
     """OSCAR/CCNet-style Unicode cleanup: zero-width characters and BOMs
     removed, exotic spaces (NBSP, thin/figure spaces) folded to ASCII
     space, curly quotes/dashes/ellipsis folded to ASCII, C0 controls
@@ -1136,7 +1061,7 @@ def normalize_text(
     chain (patterns in the Java-regex/RE2 common subset for the DuckDB
     oracle); map-only at any scale.
     """
-    raw = F.coalesce(F.col(text_col), F.lit(""))
+    raw = F.coalesce(F.col("text"), F.lit(""))
     s = F.regexp_replace(raw, ZERO_WIDTH_CLASS, "")
     s = F.regexp_replace(s, UNICODE_SPACE_CLASS, " ")
     s = F.translate(s, QUOTE_SRC, QUOTE_DST)
@@ -1144,16 +1069,14 @@ def normalize_text(
     s = F.regexp_replace(s, CONTROL_CLASS, "")
     s = F.trim(F.regexp_replace(s, "[ \t]+", " "))
     return df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.length(raw).cast("long").alias("n_chars_raw"),
         F.length(s).cast("long").alias("n_chars_clean"),
         s.alias("normalized"),
     )
 
 
-def sentences(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def sentences(df: DataFrame) -> DataFrame:
     """Sentence segmentation to (doc, sent_idx, sentence): maximal runs of
     non-terminal characters plus their trailing [.!?]+ punctuation, trimmed,
     empties dropped.  Regex-only (no lookbehind — the common Java/RE2
@@ -1161,7 +1084,7 @@ def sentences(
     Enables sentence-level dedup and per-sentence quality scoring;
     scan → generate, no shuffle.
     """
-    raw = F.coalesce(F.col(text_col), F.lit(""))
+    raw = F.coalesce(F.col("text"), F.lit(""))
     # one-arg lambda, NOT bare F.trim: pyspark feeds two-arg callables
     # (element, index) and F.trim(col, trim) would take the index as the
     # trim character set
@@ -1172,23 +1095,17 @@ def sentences(
         ),
         lambda x: x != "",
     )
-    return df.select(F.col(id_col).alias("doc"), F.posexplode(sents)).select(
+    return df.select(F.col("doc_id").alias("doc"), F.posexplode(sents)).select(
         "doc",
         F.col("pos").cast("long").alias("sent_idx"),
         F.col("col").alias("sentence"),
     )
 
 
-def domain_prior(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    domain_col: str = "source",
-    quality_col: str = "quality",
-    smoothing: int = 20,
-) -> DataFrame:
+def domain_prior(df: DataFrame) -> DataFrame:
     """Per-domain quality reputation joined back as a document-level prior.
 
-    prior(d) = (sum(quality in d) + k * global_mean) / (n_d + k) — Bayesian
+    prior(d) = (sum(quality in d) + k * global_mean) / (n_d + k), k = 20 — Bayesian
     shrinkage toward the corpus mean, so a domain with 3 documents cannot
     dominate a filter the way a domain with 30k can.  Standard trick for
     host-level filtering (a la Common Crawl host reputation lists).
@@ -1199,10 +1116,10 @@ def domain_prior(
     Exactly cross-engine: quality values are quantized to exact binary
     fractions, so sums are order-independent.
     """
-    doc = F.col(id_col).alias("doc")
-    per_domain = df.groupBy(domain_col).agg(
+    doc = F.col("doc_id").alias("doc")
+    per_domain = df.groupBy("source").agg(
         F.count("*").alias("n_domain_docs"),
-        F.sum(quality_col).alias("_q_sum"),
+        F.sum("quality").alias("_q_sum"),
     ).cache()
     # the global mean folds exactly from the (tiny, cached) per-domain
     # aggregate — deriving it from df directly would be a whole extra
@@ -1213,30 +1130,28 @@ def domain_prior(
     ).collect()[0]
     g = tot["s"] / tot["n"]
     priors = per_domain.select(
-        domain_col,
+        "source",
         "n_domain_docs",
         F.round(
-            (F.col("_q_sum") + F.lit(float(smoothing)) * F.lit(g))
-            / (F.col("n_domain_docs") + F.lit(smoothing)),
+            (F.col("_q_sum") + F.lit(20.0) * F.lit(g))
+            / (F.col("n_domain_docs") + F.lit(20)),
             6,
         ).alias("domain_prior"),
     ).localCheckpoint(eager=True)
     # priors are materialized above, so the input-side cache can go now —
     # callers get a self-contained result, not a lease on executor storage
     per_domain.unpersist()
-    return df.select(doc, F.col(domain_col), F.col(quality_col)).join(
-        F.broadcast(priors), domain_col
+    return df.select(doc, "source", "quality").join(
+        F.broadcast(priors), "source"
     ).select(
         "doc",
-        F.col(domain_col).alias("domain"),
+        F.col("source").alias("domain"),
         F.col("n_domain_docs").cast("long").alias("n_domain_docs"),
         "domain_prior",
     )
 
 
-def extract_lite(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def extract_lite(pages: DataFrame) -> DataFrame:
     """Regex fast-path metadata extraction: title, og:title, canonical
     link, meta description, html lang — no DOM, no Python.
 
@@ -1247,9 +1162,9 @@ def extract_lite(
     design (disclosed limitation of the fast path); the byte-exact
     extraction path remains graby_spark.extract.
     """
-    html = F.coalesce(F.col(html_col), F.lit(""))
+    html = F.coalesce(F.col("html"), F.lit(""))
     return pages.select(
-        F.col(url_col).alias("url"),
+        "url",
         F.regexp_extract(html, r"(?i)<title[^>]*>([^<]*)</title>", 1).alias("title"),
         F.regexp_extract(
             html, r'(?i)<meta[^>]*property="og:title"[^>]*content="([^"]*)"', 1
@@ -1264,12 +1179,7 @@ def extract_lite(
     )
 
 
-def tfidf_topk(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
+def tfidf_topk(df: DataFrame, k: int = 5) -> DataFrame:
     """Top-k keywords per document by tf·idf over the corpus itself.
 
     idf = log10(N / df) with document frequency from a corpus-wide
@@ -1285,12 +1195,12 @@ def tfidf_topk(
     # NULL-id rows are excluded up front so the corpus size (count of
     # non-null distinct ids) and the document frequencies count the same
     # population — otherwise df could exceed N and flip idf negative
-    df = df.where(F.col(id_col).isNotNull())
+    df = df.where(F.col("doc_id").isNotNull())
     toks = df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.explode(
             F.filter(
-                F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"),
+                F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+"),
                 lambda t: t != "",
             )
         ).alias("token"),
@@ -1304,8 +1214,8 @@ def tfidf_topk(
     # NOT force-broadcast — the vocabulary of a web corpus (typos, urls,
     # ids) outgrows the broadcast limit, so the planner must be free to
     # fall back to a shuffle join
-    nd = df.select(id_col).agg(
-        F.count_distinct(F.col(id_col)).cast("double").alias("_n")
+    nd = df.select("doc_id").agg(
+        F.count_distinct(F.col("doc_id")).cast("double").alias("_n")
     )
     scored = tf.join(dfreq, "token").crossJoin(nd).select(
         "doc",
@@ -1324,15 +1234,13 @@ def tfidf_topk(
     )
 
 
-def readability(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def readability(df: DataFrame) -> DataFrame:
     """Flesch reading-ease + Flesch-Kincaid grade from counting
     expressions only: words = whitespace tokens, sentences = terminal
     punctuation runs, syllables = vowel groups (the standard cheap
     heuristic).  All-integer counts divided in a fixed order and rounded
     to 4 dp keep the two engines bit-identical.  Map-only; no Python."""
-    text = F.lower(F.trim(F.coalesce(F.col(text_col), F.lit(""))))
+    text = F.lower(F.trim(F.coalesce(F.col("text"), F.lit(""))))
     words = F.size(F.filter(F.split(text, r"\s+"), lambda t: t != ""))
     sentences = F.greatest(
         F.size(F.split(text, r"[.!?]+")) - 1, F.lit(1)
@@ -1352,7 +1260,7 @@ def readability(
         return F.floor(c * 10000 + F.lit(0.5)) / 10000
 
     return df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         words.cast("long").alias("n_words"),
         (sentences).cast("long").alias("n_sentences"),
         syllables.cast("long").alias("n_syllables"),
@@ -1361,12 +1269,7 @@ def readability(
     )
 
 
-def corpus_grep(
-    df: DataFrame,
-    patterns: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def corpus_grep(df: DataFrame, patterns: list[str]) -> DataFrame:
     """Per-document regex hit counts for a fixed pattern list — the
     debugging workhorse behind every filter threshold ("how often does
     this actually occur?") and quick contamination spot-checks.
@@ -1375,7 +1278,7 @@ def corpus_grep(
     a literal array column (no join); a scan per pattern fused into one
     projection — map-only at any corpus size.  Patterns must be in the
     Java-regex/RE2 common subset for the oracle."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     pairs = F.array(
         *[
             F.struct(
@@ -1388,7 +1291,7 @@ def corpus_grep(
         ]
     )
     return (
-        df.select(F.col(id_col).alias("doc"), F.explode(pairs).alias("hit"))
+        df.select(F.col("doc_id").alias("doc"), F.explode(pairs).alias("hit"))
         .select("doc", "hit.pattern", "hit.n_matches")
         .where(F.col("n_matches") > 0)
     )
@@ -1406,9 +1309,7 @@ SCRIPT_RANGES = [
 ]
 
 
-def script_profile(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def script_profile(df: DataFrame) -> DataFrame:
     """Unicode-script composition of each document — the langid
     complement that catches what n-gram language ID cannot: mixed-script
     spam, mojibake (wrong-charset decodes land in unexpected scripts),
@@ -1423,13 +1324,13 @@ def script_profile(
     Pure JVM counting (strip-and-measure regexes), no shuffle, codegen —
     frontier-scale safe.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     counts = {
         name: F.length(F.regexp_replace(text, f"[^{body}]", "")).cast("long")
         for name, body in SCRIPT_RANGES
     }
     out = df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.length(text).cast("long").alias("n_chars"),
         *[c.alias(f"n_{name}") for name, c in counts.items()],
     )
@@ -1452,12 +1353,7 @@ def script_profile(
     )
 
 
-def corpus_stats(
-    df: DataFrame,
-    lang_col: str = "lang",
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def corpus_stats(df: DataFrame) -> DataFrame:
     """Corpus composition rollup per (lang, source): document, token and
     character totals plus each cell's share of corpus tokens — the input
     a source-mixing step weighs against its target distribution (and the
@@ -1472,16 +1368,14 @@ def corpus_stats(
     """
     tokens = F.size(
         F.filter(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
+            F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"),
             lambda t: t != "",
         )
     ).cast("long")
-    agg = df.groupBy(
-        F.col(lang_col).alias("lang"), F.col(source_col).alias("source")
-    ).agg(
+    agg = df.groupBy("lang", "source").agg(
         F.count("*").alias("n_docs"),
         F.sum(tokens).alias("n_tokens"),
-        F.sum(F.length(F.coalesce(F.col(text_col), F.lit(""))).cast("long")).alias(
+        F.sum(F.length(F.coalesce(F.col("text"), F.lit(""))).cast("long")).alias(
             "n_chars"
         ),
     )

@@ -922,9 +922,7 @@ def encode_webp_vp8l(
     return b"RIFF" + len(riff).to_bytes(4, "little") + riff
 
 
-def decode_webp_frames(
-    data: bytes, max_frames: int | None = None
-) -> list[tuple[int, np.ndarray]]:
+def decode_webp_frames(data: bytes) -> list[tuple[int, np.ndarray]]:
     """Animated WebP (VP8X + ANIM/ANMF with VP8L frame payloads) →
     [(duration_ms, composed RGBA canvas)], mirroring
     ``multimodal.decode_gif_frames``'s contract.
@@ -1020,8 +1018,6 @@ def decode_webp_frames(
             out.append((dur, canvas.copy()))
             if dispose:
                 canvas[fy : fy + fh, fx : fx + fw] = bg
-            if max_frames is not None and len(out) >= max_frames:
-                return out
     if not out:
         raise ValueError("animated WebP without ANMF frames")
     return out

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import re
 
-from .dom import CommentNode, Document, Element, Node, TextNode, parse_html
+from .dom import CommentNode, Document, Element, TextNode, parse_html
 from .dom import _HTML4_TAGS
 
 __all__ = ["Readability"]
@@ -492,10 +492,6 @@ class Readability:
         # the string-level O9 regex only removes serialized <p></p> pairs.
 
     @staticmethod
-    def _count(el: Element, tag: str) -> int:
-        return sum(1 for _ in el.iter(tag))
-
-    @staticmethod
     def _kill_breaks(el: Element) -> None:
         # collapse <br/><br/> runs: DOM-level approximation
         for parent in [el] + [e for e in el.iter()]:
@@ -539,8 +535,8 @@ class Readability:
 
     @staticmethod
     def _subtree_tag_counts(el: Element) -> dict:
-        """Tag histogram of a subtree in ONE walk (the per-rule _count
-        calls dominated prepArticle cost otherwise)."""
+        """Tag histogram of a subtree in ONE walk (a per-rule count walk
+        dominated prepArticle cost otherwise)."""
         counts: dict[str, int] = {}
         stack = [el]
         while stack:
@@ -597,8 +593,13 @@ class Readability:
                     if tc.get("embed")
                     else 0
                 )
-                density = self._link_density(target)
                 length = len(text)
+                # _link_density, reusing the text walked above
+                density = (
+                    sum(len(_inner_text(a)) for a in target.iter("a")) / length
+                    if length and tc.get("a")
+                    else 0.0
+                )
                 remove = (
                     # image-heavy containers die only when REALLY image-heavy
                     # (php-readability light clean img>4; the lifehacker

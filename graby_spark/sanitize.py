@@ -21,6 +21,8 @@ from .dom import (
     Node,
     RawTextNode,
     TextNode,
+    _escape_attr,
+    _escape_text,
     parse_fragment,
 )
 
@@ -71,14 +73,6 @@ def _walk(root: Element) -> None:
                 else:
                     _clean_element(child)
                     stack.append(child)
-
-
-def _escape_text(text: str) -> str:
-    return text.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-
-
-def _escape_attr(value: str) -> str:
-    return _escape_text(value).replace('"', "&quot;")
 
 
 def _serialize_lawed(node: Node, out: list[str]) -> None:

@@ -76,7 +76,7 @@ def surt_key(url: Column | str) -> Column:
     )
 
 
-def cdx_records(df: DataFrame, line_col: str = "line") -> DataFrame:
+def cdx_records(df: DataFrame) -> DataFrame:
     """Parse CDXJ lines → one typed row per capture.
 
     Line shape: ``{urlkey} {ts14} {json}`` — urlkey up to the first space,
@@ -84,7 +84,7 @@ def cdx_records(df: DataFrame, line_col: str = "line") -> DataFrame:
     Malformed lines (no JSON object / non-numeric status) yield NULLs in
     the affected columns rather than failing the scan.
     """
-    line = F.col(line_col)
+    line = F.col("line")
     urlkey = F.substring_index(line, " ", 1)
     rest = F.substring(line, F.length(urlkey) + 2, F.lit(2**30))
     ts14 = F.substring(rest, 1, 14)
@@ -105,11 +105,10 @@ def cdx_records(df: DataFrame, line_col: str = "line") -> DataFrame:
 
 def cdx_select_latest(
     records: DataFrame,
-    statuses: tuple[int, ...] = (200,),
     mimes: tuple[str, ...] | None = None,
     as_of: str | None = None,
 ) -> DataFrame:
-    """Latest eligible capture per urlkey → the WARC fetch plan.
+    """Latest eligible (HTTP 200) capture per urlkey → the WARC fetch plan.
 
     Filter first (status/mime predicates push into the scan), then a
     single shuffle on ``urlkey`` with a window rank ordered by capture
@@ -122,7 +121,7 @@ def cdx_select_latest(
     for the fixed-width timestamp format, so the predicate stays a
     pushdown-friendly JVM filter.
     """
-    out = records.where(F.col("status").isin(*statuses))
+    out = records.where(F.col("status") == 200)
     if as_of is not None:
         out = out.where(F.col("ts") <= F.lit(as_of))
     if mimes is not None:
@@ -196,12 +195,7 @@ def build_cdx_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     return caps.select(line.alias("line"))
 
 
-def cdx_incremental(
-    plan: DataFrame,
-    seen: DataFrame,
-    key_col: str = "urlkey",
-    digest_col: str = "digest",
-) -> DataFrame:
+def cdx_incremental(plan: DataFrame, seen: DataFrame) -> DataFrame:
     """Incremental recrawl planning: which of the index's latest captures
     actually need fetching, given what a previous run already extracted.
 
@@ -216,13 +210,10 @@ def cdx_incremental(
     is exactly the bucketed-manifest shape, so with both sides bucketed
     on urlkey (graby_spark.storage) the join runs exchange-free.
     """
-    s = seen.select(
-        F.col(key_col).alias(key_col),
-        F.col(digest_col).alias("_seen_digest"),
-    )
-    joined = plan.join(s, key_col, "left")
+    s = seen.select("urlkey", F.col("digest").alias("_seen_digest"))
+    joined = plan.join(s, "urlkey", "left")
     reason = F.when(F.col("_seen_digest").isNull(), F.lit("new")).when(
-        F.col("_seen_digest") != F.col(digest_col), F.lit("changed")
+        F.col("_seen_digest") != F.col("digest"), F.lit("changed")
     )
     return (
         joined.withColumn("fetch_reason", reason)

@@ -95,7 +95,7 @@ def _rfc822_to_iso(date: Column) -> Column:
     return F.when(looks_rfc822, iso).otherwise(F.trim(date))
 
 
-def feed_entries(df: DataFrame, xml_col: str = "xml") -> DataFrame:
+def feed_entries(df: DataFrame) -> DataFrame:
     """One row per feed entry: (feed_title, kind, pos, title, link,
     published, summary, aligned).
 
@@ -104,9 +104,9 @@ def feed_entries(df: DataFrame, xml_col: str = "xml") -> DataFrame:
     those rows' zipped values are positionally suspect by construction.
     """
     def xp(path: str) -> Column:
-        return F.expr(f'xpath({xml_col}, "{path}")')
+        return F.expr(f'xpath(xml, "{path}")')
 
-    is_rss = F.expr(f"xpath_boolean({xml_col}, 'boolean(/rss)')")
+    is_rss = F.expr("xpath_boolean(xml, 'boolean(/rss)')")
 
     ent = "*[local-name()='entry']"
     atom_link = (
@@ -163,7 +163,7 @@ def feed_entries(df: DataFrame, xml_col: str = "xml") -> DataFrame:
     )
 
 
-def feed_autodiscovery(df: DataFrame, html_col: str = "html") -> DataFrame:
+def feed_autodiscovery(df: DataFrame) -> DataFrame:
     """Feed autodiscovery over HTML pages: ``<link rel="alternate"
     type="application/rss+xml|atom+xml" href=…>`` → (feed_url, feed_mime).
 
@@ -172,7 +172,7 @@ def feed_autodiscovery(df: DataFrame, html_col: str = "html") -> DataFrame:
     rel/type predicates, so ``type=`` before ``rel=`` (common in the
     wild) matches too.  Narrow, no shuffle."""
     tag = F.regexp_extract_all(
-        F.col(html_col), F.lit(r"(?i)(<link\b[^>]*>)"), 1
+        F.col("html"), F.lit(r"(?i)(<link\b[^>]*>)"), 1
     )
     out = df.withColumn("_tag", F.explode(tag)).where(
         F.col("_tag").rlike(r"""(?i)rel=["']alternate["']""")
@@ -181,7 +181,7 @@ def feed_autodiscovery(df: DataFrame, html_col: str = "html") -> DataFrame:
         )
     )
     return out.select(
-        *[c for c in df.columns if c != html_col],
+        *[c for c in df.columns if c != "html"],
         F.regexp_extract(F.col("_tag"), r"""(?i)href=["']([^"']+)["']""", 1).alias(
             "feed_url"
         ),
@@ -199,13 +199,11 @@ def _xml_escape(col: Column) -> Column:
     )
 
 
-def build_feed_blobs(
-    spark: SparkSession, sf_dir: str, entries_per_feed: int = ENTRIES_PER_FEED
-) -> DataFrame:
+def build_feed_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic synthetic feeds from ``documents.parquet``.
 
-    Document ``doc_id`` becomes entry ``doc_id % entries_per_feed`` of feed
-    ``doc_id // entries_per_feed``; even feeds are RSS 2.0 (RFC-822
+    Document ``doc_id`` becomes entry ``doc_id % ENTRIES_PER_FEED`` of feed
+    ``doc_id // ENTRIES_PER_FEED``; even feeds are RSS 2.0 (RFC-822
     pubDate), odd feeds are Atom (default namespace, ISO updated, href on
     a rel=alternate link).  Summaries carry the XML-escaped first 80 chars
     of the document text so the parse must round-trip entity escaping.
@@ -213,7 +211,7 @@ def build_feed_blobs(
     ``sort_array(collect_list(struct(...)))`` concat.
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    d = docs.withColumn("feed_id", (F.col("doc_id") / entries_per_feed).cast("long"))
+    d = docs.withColumn("feed_id", (F.col("doc_id") / ENTRIES_PER_FEED).cast("long"))
     # offsets stay inside Jan 1-3 (no DST transition in range): Spark
     # renders timestamps in the session zone, DuckDB's oracle arithmetic
     # is naive — they only agree while no zone transition is crossed

@@ -69,6 +69,12 @@ WARC_RECORD_SCHEMA = StructType(
 _GZIP_MAGIC = b"\x1f\x8b"
 
 
+def _gzip_member(record: bytes) -> bytes:
+    """One record as its own gzip member (the Common Crawl layout)."""
+    co = zlib.compressobj(6, zlib.DEFLATED, 31)
+    return co.compress(record) + co.flush()
+
+
 def _iter_members(blob: bytes) -> Iterator[bytes]:
     """Yield decompressed gzip members (or the raw blob if uncompressed)."""
     if not blob.startswith(_GZIP_MAGIC):
@@ -158,13 +164,13 @@ def _parse_records(data: bytes) -> Iterator[tuple]:
         )
 
 
-def warc_records(df: DataFrame, blob_col: str = "blob") -> DataFrame:
+def warc_records(df: DataFrame) -> DataFrame:
     """DataFrame of WARC blobs → one row per response record."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for blob in pdf[blob_col]:
+            for blob in pdf["blob"]:
                 for member in _iter_members(bytes(blob or b"")):
                     # drain the record generator one record at a time so
                     # an UNcompressed multi-GB archive (one giant member)
@@ -180,7 +186,7 @@ def warc_records(df: DataFrame, blob_col: str = "blob") -> DataFrame:
             if rows:
                 yield pd.DataFrame(rows, columns=WARC_RECORD_SCHEMA.fieldNames())
 
-    return df.select(blob_col).mapInPandas(parse, WARC_RECORD_SCHEMA)
+    return df.select("blob").mapInPandas(parse, WARC_RECORD_SCHEMA)
 
 
 def build_warc_blobs(
@@ -226,19 +232,14 @@ def build_warc_blobs(
             ).encode("latin-1")
             record = head + http + b"\r\n\r\n"
             if gzip_records:
-                co = zlib.compressobj(6, zlib.DEFLATED, 31)
-                record = co.compress(record) + co.flush()
+                record = _gzip_member(record)
             out += record
         return pd.DataFrame({"file_id": [key[0]], "blob": [bytes(out)]})
 
     return docs.groupBy("file_id").applyInPandas(build, schema)
 
 
-def write_warc_blobs(
-    df: DataFrame,
-    n_files: int = 1000,
-    gzip_records: bool = True,
-) -> DataFrame:
+def write_warc_blobs(df: DataFrame, n_files: int = 1000) -> DataFrame:
     """WARC sink: page rows → Common-Crawl-layout archive blobs.
 
     Input rows carry ``(url, warc_date, http_status, content_type,
@@ -284,11 +285,7 @@ def write_warc_blobs(
                 f"WARC-Date: {row['warc_date']}\r\n"
                 f"Content-Length: {len(http)}\r\n\r\n"
             ).encode("latin-1")
-            record = head + http + b"\r\n\r\n"
-            if gzip_records:
-                co = zlib.compressobj(6, zlib.DEFLATED, 31)
-                record = co.compress(record) + co.flush()
-            out += record
+            out += _gzip_member(head + http + b"\r\n\r\n")
         return pd.DataFrame({"file_id": [key[0]], "blob": [bytes(out)]})
 
     return keyed.groupBy("_file_id").applyInPandas(build, schema)
@@ -326,7 +323,7 @@ def _parse_wet(data: bytes) -> Iterator[tuple]:
         )
 
 
-def wet_records(df: DataFrame, blob_col: str = "blob") -> DataFrame:
+def wet_records(df: DataFrame) -> DataFrame:
     """DataFrame of WET blobs → one row per conversion (text) record.
 
     Same scale shape as :func:`warc_records`: one Arrow-batched
@@ -338,7 +335,7 @@ def wet_records(df: DataFrame, blob_col: str = "blob") -> DataFrame:
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for blob in pdf[blob_col]:
+            for blob in pdf["blob"]:
                 for member in _iter_members(bytes(blob or b"")):
                     for rec in _parse_wet(member):
                         rows.append(rec)
@@ -350,14 +347,11 @@ def wet_records(df: DataFrame, blob_col: str = "blob") -> DataFrame:
             if rows:
                 yield pd.DataFrame(rows, columns=WET_RECORD_SCHEMA.fieldNames())
 
-    return df.select(blob_col).mapInPandas(parse, WET_RECORD_SCHEMA)
+    return df.select("blob").mapInPandas(parse, WET_RECORD_SCHEMA)
 
 
 def build_wet_blobs(
-    spark: SparkSession,
-    sf_dir: str,
-    records_per_file: int = 50,
-    gzip_records: bool = True,
+    spark: SparkSession, sf_dir: str, records_per_file: int = 50
 ) -> DataFrame:
     """Deterministic synthetic WET files from ``documents.parquet``.
 
@@ -393,11 +387,7 @@ def build_wet_blobs(
                 "Content-Type: text/plain\r\n"
                 f"Content-Length: {len(text)}\r\n\r\n"
             ).encode("latin-1")
-            record = head + text + b"\r\n\r\n"
-            if gzip_records:
-                co = zlib.compressobj(6, zlib.DEFLATED, 31)
-                record = co.compress(record) + co.flush()
-            out += record
+            out += _gzip_member(head + text + b"\r\n\r\n")
         return pd.DataFrame({"file_id": [key[0]], "blob": [bytes(out)]})
 
     return docs.groupBy("file_id").applyInPandas(build, schema)
@@ -443,13 +433,13 @@ def _parse_wat(data: bytes) -> Iterator[tuple]:
         )
 
 
-def wat_records(df: DataFrame, blob_col: str = "blob") -> DataFrame:
+def wat_records(df: DataFrame) -> DataFrame:
     """DataFrame of WAT blobs → one row per metadata record (raw JSON)."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for blob in pdf[blob_col]:
+            for blob in pdf["blob"]:
                 for member in _iter_members(bytes(blob or b"")):
                     for rec in _parse_wat(member):
                         rows.append(rec)
@@ -461,10 +451,10 @@ def wat_records(df: DataFrame, blob_col: str = "blob") -> DataFrame:
             if rows:
                 yield pd.DataFrame(rows, columns=WAT_RECORD_SCHEMA.fieldNames())
 
-    return df.select(blob_col).mapInPandas(parse, WAT_RECORD_SCHEMA)
+    return df.select("blob").mapInPandas(parse, WAT_RECORD_SCHEMA)
 
 
-def wat_links(df: DataFrame, json_col: str = "json") -> DataFrame:
+def wat_links(df: DataFrame) -> DataFrame:
     """WAT JSON rows → (url, warc_date, title, link_no, link_path,
     link_url, link_text), one row per outlink.
 
@@ -475,7 +465,7 @@ def wat_links(df: DataFrame, json_col: str = "json") -> DataFrame:
     equivalent of extracting outlinks from raw HTML
     (``operators/graph.py``) when only the metadata sidecar was fetched.
     """
-    env = F.from_json(F.col(json_col), WAT_ENVELOPE_DDL).getField("Envelope")
+    env = F.from_json(F.col("json"), WAT_ENVELOPE_DDL).getField("Envelope")
     html_meta = (
         env.getField("Payload-Metadata")
         .getField("HTTP-Response-Metadata")
@@ -504,10 +494,7 @@ def wat_links(df: DataFrame, json_col: str = "json") -> DataFrame:
 
 
 def build_wat_blobs(
-    spark: SparkSession,
-    sf_dir: str,
-    records_per_file: int = 50,
-    gzip_records: bool = True,
+    spark: SparkSession, sf_dir: str, records_per_file: int = 50
 ) -> DataFrame:
     """Deterministic synthetic WAT files from ``documents.parquet``.
 
@@ -571,11 +558,7 @@ def build_wat_blobs(
                 "Content-Type: application/json\r\n"
                 f"Content-Length: {len(payload)}\r\n\r\n"
             ).encode("latin-1")
-            record = head + payload + b"\r\n\r\n"
-            if gzip_records:
-                co = zlib.compressobj(6, zlib.DEFLATED, 31)
-                record = co.compress(record) + co.flush()
-            out += record
+            out += _gzip_member(head + payload + b"\r\n\r\n")
         return pd.DataFrame({"file_id": [key[0]], "blob": [bytes(out)]})
 
     return docs.groupBy("file_id").applyInPandas(build, schema)
@@ -664,9 +647,7 @@ def _iter_addressable_records(
             yield start, end - start, headers, payload
 
 
-def cdx_from_warc(
-    df: DataFrame, filename_col: str = "filename", blob_col: str = "blob"
-) -> DataFrame:
+def cdx_from_warc(df: DataFrame) -> DataFrame:
     """WARC blobs → CDX index rows: the cdx-indexer step that makes a
     100 TB archive range-request addressable.
 
@@ -756,10 +737,7 @@ def cdx_from_warc(
         "url string, ts14 string, mime string, status int, digest string, "
         "length long, offset long, filename string"
     )
-    src = df.select(
-        F.col(filename_col).cast("string").alias("filename"),
-        F.col(blob_col).alias("blob"),
-    )
+    src = df.select(F.col("filename").cast("string").alias("filename"), "blob")
     rows = src.mapInPandas(parse, schema)
     return rows.select(
         surt_key(F.col("url")).alias("urlkey"),

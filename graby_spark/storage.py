@@ -70,10 +70,7 @@ def plan_has_exchange(df: DataFrame) -> bool:
 
 
 def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: str | list[str],
-    mode: str = "overwrite",
+    df: DataFrame, path: str, partition_cols: str | list[str]
 ) -> None:
     """Hive-layout partitioned parquet write (``path/col=value/…``).
 
@@ -88,7 +85,7 @@ def write_partitioned(
     a listing-bound driver.  Keep partition cardinality ≤ ~10^4.
     """
     cols = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
-    df.write.mode(mode).partitionBy(*cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*cols).parquet(path)
 
 
 def partition_filters(df: DataFrame) -> str:

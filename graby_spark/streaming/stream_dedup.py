@@ -23,19 +23,15 @@ from pyspark.sql import functions as F
 __all__ = ["dedup_stream", "dedup_batch"]
 
 
-def _with_hash(df: DataFrame, text_col: str) -> DataFrame:
-    norm = F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
+def _with_hash(df: DataFrame) -> DataFrame:
+    norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
     return df.withColumn("content_hash", F.xxhash64(norm))
 
 
-def dedup_stream(
-    pages: DataFrame,
-    ts_col: str = "warc_ts",
-    text_col: str = "text",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def dedup_stream(pages: DataFrame) -> DataFrame:
     """Streaming DataFrame → streaming DataFrame keeping the first
-    occurrence of each content hash seen within the watermark horizon.
+    occurrence of each content hash seen within the one-hour watermark
+    horizon on ``warc_ts``.
 
     ``dropDuplicatesWithinWatermark`` guarantees state EVICTION: each
     hash's entry is dropped once the watermark advances past its event
@@ -44,24 +40,19 @@ def dedup_stream(
     the horizon is emitted again (first-seen-within-horizon semantics,
     which is what crawl freshness pipelines want)."""
     return (
-        _with_hash(pages, text_col)
-        .withWatermark(ts_col, watermark)
+        _with_hash(pages)
+        .withWatermark("warc_ts", "1 hour")
         .dropDuplicatesWithinWatermark(["content_hash"])
     )
 
 
-def dedup_batch(
-    pages: DataFrame,
-    ts_col: str = "warc_ts",
-    text_col: str = "text",
-    id_col: str = "url",
-) -> DataFrame:
+def dedup_batch(pages: DataFrame) -> DataFrame:
     """Batch twin: the first row (by event time, id tiebreak) per content
     hash — what a replayed stream's survivor set must equal when the
     replay spans less than the watermark horizon."""
-    w = Window.partitionBy("content_hash").orderBy(ts_col, id_col)
+    w = Window.partitionBy("content_hash").orderBy("warc_ts", "url")
     return (
-        _with_hash(pages, text_col)
+        _with_hash(pages)
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")

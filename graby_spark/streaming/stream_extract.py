@@ -46,7 +46,6 @@ def stream_extract(
     checkpoint_dir: str,
     ruleset: RuleSet,
     options: ExtractOptions | None = None,
-    trigger_once: bool = True,
 ):
     """File-source stream of pages parquet → extraction → parquet sink.
 
@@ -66,22 +65,21 @@ def stream_extract(
         )
         extracted.write.mode("append").parquet(output_dir)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(handle_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def windowed_crawl_metrics(pages: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
+def windowed_crawl_metrics(pages: DataFrame) -> DataFrame:
     """Watermarked tumbling-window crawl metrics by domain (late WARC
     timestamps beyond the watermark are dropped, state is bounded)."""
     domain = F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1)
     return (
-        pages.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), domain.alias("domain"))
+        pages.withWatermark("warc_ts", "2 hours")
+        .groupBy(F.window("warc_ts", "1 hour").alias("w"), domain.alias("domain"))
         .agg(
             F.count("*").alias("pages"),
             F.sum(F.length("html")).alias("bytes_in"),

@@ -51,7 +51,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from graby_spark.operators.dedup import _minhash_batch_stable
+from graby_spark.operators.dedup import SHINGLE_K, _minhash_batch_stable
 
 __all__ = ["band_buckets_udf", "neardup_stream", "neardup_batch"]
 
@@ -68,8 +68,15 @@ _STATE_SCHEMA = StructType(
     [StructField("first_url", StringType()), StructField("first_ts", TimestampType())]
 )
 
+#: banding: 16 bands of 4 rows over 64 permutations (band index fits the
+#: 6-bit tag of each bucket key)
+NUM_PERM = 64
+BANDS = 16
+#: a bucket's first-seen latch expires after an hour of processing time
+STATE_TTL_MS = 3_600_000
 
-def band_buckets_udf(num_perm: int = 64, bands: int = 16, shingle_k: int = 5):
+
+def band_buckets_udf():
     """Scalar pandas UDF text -> array<long> of band bucket keys.
 
     Reuses the batch path's stable signature generator, so the underlying
@@ -79,13 +86,8 @@ def band_buckets_udf(num_perm: int = 64, bands: int = 16, shingle_k: int = 5):
     against the index by doc id, not by bucket).  Each bucket key packs
     the band index into the top 6 bits so different bands never alias.
     """
-    if num_perm % bands or bands > 64:
-        raise ValueError(
-            f"bands={bands} must divide num_perm={num_perm} and fit the "
-            "6-bit band tag (<= 64)"
-        )
-    rows = num_perm // bands
-    sig_fn = _minhash_batch_stable(num_perm, shingle_k)
+    rows = NUM_PERM // BANDS
+    sig_fn = _minhash_batch_stable(NUM_PERM, SHINGLE_K)
 
     @F.pandas_udf(ArrayType(LongType()))
     def bucketize(texts: pd.Series) -> pd.Series:
@@ -93,14 +95,14 @@ def band_buckets_udf(num_perm: int = 64, bands: int = 16, shingle_k: int = 5):
         sigs = pd.concat(list(sig_fn(iter([frame]))), ignore_index=True)
         out = []
         for sig in sigs["signature"]:
-            s = np.asarray(sig, dtype=np.uint64).reshape(bands, rows)
+            s = np.asarray(sig, dtype=np.uint64).reshape(BANDS, rows)
             # FNV-style fold per band, band index in the top 6 bits
-            h = np.full(bands, 0xCBF29CE484222325, dtype=np.uint64)
+            h = np.full(BANDS, 0xCBF29CE484222325, dtype=np.uint64)
             for c in range(rows):
                 h ^= s[:, c]
                 h *= np.uint64(0x100000001B3)
             keyed = (h >> np.uint64(6)) | (
-                np.arange(bands, dtype=np.uint64) << np.uint64(58)
+                np.arange(BANDS, dtype=np.uint64) << np.uint64(58)
             )
             out.append(keyed.astype(np.int64).tolist())
         return pd.Series(out)
@@ -108,24 +110,16 @@ def band_buckets_udf(num_perm: int = 64, bands: int = 16, shingle_k: int = 5):
     return bucketize
 
 
-def _exploded(pages: DataFrame, url_col, ts_col, text_col, udf) -> DataFrame:
+def _exploded(pages: DataFrame) -> DataFrame:
+    udf = band_buckets_udf()
     return pages.select(
-        F.col(url_col).alias("url"),
-        F.col(ts_col).alias("ts"),
-        F.explode(udf(F.coalesce(F.col(text_col), F.lit("")))).alias("bucket"),
+        F.col("url"),
+        F.col("warc_ts").alias("ts"),
+        F.explode(udf(F.coalesce(F.col("text"), F.lit("")))).alias("bucket"),
     )
 
 
-def neardup_stream(
-    pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 5,
-    state_ttl_ms: int = 3_600_000,
-) -> DataFrame:
+def neardup_stream(pages: DataFrame) -> DataFrame:
     """Streaming pages → (bucket, url, ts, first_url, is_collision) rows.
 
     Aggregate downstream per url (``sum(is_collision) >= min_bands``) to
@@ -167,7 +161,7 @@ def neardup_stream(
                 first_url, first_ts = umin, tmin
         if first_url is not None:
             state.update((first_url, first_ts))
-            state.setTimeoutDuration(state_ttl_ms)
+            state.setTimeoutDuration(STATE_TTL_MS)
         for pdf in chunks:
             out = pd.DataFrame(
                 {
@@ -185,9 +179,7 @@ def neardup_stream(
             for i in range(0, len(out), 2048):
                 yield out.iloc[i : i + 2048]
 
-    exploded = _exploded(
-        pages, url_col, ts_col, text_col, band_buckets_udf(num_perm, bands, shingle_k)
-    )
+    exploded = _exploded(pages)
     return exploded.groupBy("bucket").applyInPandasWithState(
         update,
         outputStructType=_COLLISION_SCHEMA,
@@ -197,20 +189,10 @@ def neardup_stream(
     )
 
 
-def neardup_batch(
-    pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 5,
-) -> DataFrame:
+def neardup_batch(pages: DataFrame) -> DataFrame:
     """Batch twin: first row per bucket by (ts, url); later rows from
     OTHER urls are collisions.  Same output schema as the stream."""
-    exploded = _exploded(
-        pages, url_col, ts_col, text_col, band_buckets_udf(num_perm, bands, shingle_k)
-    )
+    exploded = _exploded(pages)
     w = Window.partitionBy("bucket").orderBy("ts", "url")
     return (
         exploded.withColumn("first_url", F.first("url").over(w))

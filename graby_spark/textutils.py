@@ -71,10 +71,17 @@ _ISO_DATE_RE = re.compile(
 )
 
 
-def excerpt(text: str, length: int = 250, separator: str = " &hellip;") -> str:
+#: Graby::getExcerpt's cut: the first space at or after 250 chars,
+#: then " &hellip;"
+EXCERPT_LENGTH = 250
+EXCERPT_SEPARATOR = " &hellip;"
+
+
+def excerpt(text: str) -> str:
     """250-char word-boundary excerpt of an HTML string."""
+    length = EXCERPT_LENGTH
     if len(text) > 8192:
-        early = _excerpt_from_prefix(text, length, separator)
+        early = _excerpt_from_prefix(text)
         if early is not None:
             return early
     text = _TAG_RE.sub(" ", text)
@@ -84,11 +91,11 @@ def excerpt(text: str, length: int = 250, separator: str = " &hellip;") -> str:
         breakpoint_ = text.find(" ", length)
         if breakpoint_ < 0:
             return text
-        return text[:breakpoint_].rstrip() + separator
+        return text[:breakpoint_].rstrip() + EXCERPT_SEPARATOR
     return text
 
 
-def _excerpt_from_prefix(text: str, length: int, separator: str) -> str | None:
+def _excerpt_from_prefix(text: str) -> str | None:
     """Early-exit twin of ``excerpt`` for long documents.
 
     The full pipeline detags and whitespace-collapses the WHOLE document to
@@ -112,6 +119,7 @@ def _excerpt_from_prefix(text: str, length: int, separator: str) -> str | None:
     whitespace-dominated to pin a breakpoint (rare), return None rather
     than iterating — the exact full pass costs one extra scan.
     """
+    length = EXCERPT_LENGTH
     target = 8 * (length + 2) + 64
     parts: list[str] = []
     raw_len = 0
@@ -142,7 +150,7 @@ def _excerpt_from_prefix(text: str, length: int, separator: str) -> str | None:
     if len(collapsed) > length + 1:
         breakpoint_ = collapsed.find(" ", length)
         if 0 <= breakpoint_ <= len(collapsed) - 2:
-            return collapsed[:breakpoint_].rstrip() + separator
+            return collapsed[:breakpoint_].rstrip() + EXCERPT_SEPARATOR
     return None
 
 

@@ -114,11 +114,11 @@ DEFAULT_REWRITE_URL: dict[str, dict[str, str]] = {
 }
 
 
-def rewrite_url(url: str, rewrite_map: dict[str, dict[str, str]] | None = None) -> str:
+def rewrite_url(url: str) -> str:
     """Per-host substring rewrites (HttpClient.php:250-281, S4) plus the
     AJAX ``#!`` → ``_escaped_fragment_`` canonicalization
     (HttpClient.php:262-279, S5)."""
-    for host_match, pairs in (rewrite_map or DEFAULT_REWRITE_URL).items():
+    for host_match, pairs in DEFAULT_REWRITE_URL.items():
         if host_match in url:
             for find, replace in pairs.items():
                 url = url.replace(find, replace)
@@ -260,7 +260,7 @@ def registrable_domain_expr(url_col: str | Column = "url") -> Column:
     )
 
 
-def url_features(df: DataFrame, url_col: str = "url") -> DataFrame:
+def url_features(df: DataFrame) -> DataFrame:
     """Crawl-prioritization / quality features from URL shape alone —
     the zero-content signals a frontier ranks on before fetching
     (UbiCrawler/IRLbot-style heuristics; also standard features in
@@ -281,7 +281,7 @@ def url_features(df: DataFrame, url_col: str = "url") -> DataFrame:
     worker.  The same arithmetic is DuckDB-replayable (oracle
     ``url_features``).
     """
-    u = F.coalesce(F.col(url_col), F.lit(""))
+    u = F.coalesce(F.col("url"), F.lit(""))
     after_host = F.regexp_replace(u, r"^[a-z][a-z0-9+.\-]*://[^/?#]*", "")
     path = F.regexp_replace(after_host, r"[?#].*$", "")
     query = F.regexp_extract(u, r"\?([^#]*)", 1)

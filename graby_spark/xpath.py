@@ -113,12 +113,11 @@ class _Union(_Ast):
 
 
 class _Path(_Ast):
-    __slots__ = ("absolute", "steps", "start")
+    __slots__ = ("absolute", "steps")
 
-    def __init__(self, absolute: bool, steps, start: "_Ast | None" = None):
+    def __init__(self, absolute: bool, steps):
         self.absolute = absolute
         self.steps = steps  # list of _Step
-        self.start = start  # filter expr path continuation, e.g. func()/step
 
 
 class _Step(_Ast):
@@ -403,6 +402,28 @@ def _node_key(node: Node):
     return id(node)
 
 
+def _in_document_order(nodes: list[Node], root: Node) -> list[Node]:
+    """``nodes`` sorted into document order, as DOMXPath returns node-sets.
+    An attribute sorts right after its owner element (attributes of one
+    owner keep their relative order); a node outside ``root``'s tree sorts
+    last."""
+    rank: dict[int, int] = {}
+    stack = [root]
+    while stack:
+        node = stack.pop()
+        rank[id(node)] = len(rank)
+        if isinstance(node, Element):
+            stack.extend(reversed(node.children))
+    last = len(rank)
+
+    def key(node: Node) -> tuple[int, int]:
+        if isinstance(node, AttrNode):
+            return (rank.get(id(node.owner), last), 1)
+        return (rank.get(id(node), last), 0)
+
+    return sorted(nodes, key=key)
+
+
 def _eval(ast: _Ast, ctx: _Context):
     if isinstance(ast, _Literal):
         return ast.value
@@ -423,16 +444,18 @@ def _eval(ast: _Ast, ctx: _Context):
     if isinstance(ast, _Union):
         seen = set()
         out: list[Node] = []
+        operands = 0
         for part in ast.parts:
             result = _eval(part, ctx)
             if not isinstance(result, list):
                 raise XPathError("union operand is not a node-set")
+            operands += bool(result)
             for node in result:
                 key = _node_key(node)
                 if key not in seen:
                     seen.add(key)
                     out.append(node)
-        return out
+        return _in_document_order(out, ctx.root) if operands > 1 else out
     if isinstance(ast, _Func):
         return _call_function(ast, ctx)
     if isinstance(ast, _Path):
@@ -604,7 +627,8 @@ def _eval_step(step: _Step, nodes: list[Node], root: Node) -> list[Node]:
     # candidate list of EACH context node, not over the merged step result
     # (//div/p[1] selects the first <p> of every div).  Candidates are
     # therefore kept grouped per context node until all predicates ran;
-    # the merged result dedupes by node identity in context order.
+    # the merged result dedupes by node identity and, when more than one
+    # context node contributed, is sorted back into document order.
     groups: list[list[Node]] = []
     if step.axis == "attribute":
         for node in nodes:
@@ -647,6 +671,8 @@ def _eval_step(step: _Step, nodes: list[Node], root: Node) -> list[Node]:
             if key not in seen:
                 seen.add(key)
                 out.append(node)
+    if sum(1 for group in groups if group) > 1:
+        return _in_document_order(out, root)
     return out
 
 

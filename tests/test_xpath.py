@@ -124,3 +124,46 @@ def test_bad_syntax_raises():
 def test_union_document_order_dedupe(doc):
     nodes = query("//h1 | //h1 | //h2", doc)
     assert [n.tag for n in nodes] == ["h1", "h2"]
+
+
+NESTED = "<div class=x><p class=x><span class=x></span></p><p class=x></p></div>"
+
+
+def _tags(expr: str, html: str = NESTED) -> list[str]:
+    return [n.tag for n in query(expr, parse_html(html))]
+
+
+def test_interpreter_returns_document_order():
+    # descendant-or-self then child: the step runs over every element, and
+    # the per-context groups (div: p, p; first p: span) must not leak into
+    # the result order — DOMXPath returns node-sets in document order
+    assert _tags("//*[contains(@class,'x')]") == ["div", "p", "span", "p"]
+    assert _tags("//div//*") == ["p", "span", "p"]
+    assert _tags("//*[@class]/*") == ["p", "span", "p"]
+
+
+def test_fast_path_and_interpreter_agree_on_order():
+    from graby_spark.xpath import _fast_or_ast
+
+    fast, interp = "//*[@class='x']", "//*[@class='x' and true()]"
+    assert _fast_or_ast(fast)[0] == "fast"
+    assert _fast_or_ast(interp)[0] != "fast"
+    assert _tags(fast) == _tags(interp) == ["div", "p", "span", "p"]
+
+
+def test_union_of_nested_matches_in_document_order():
+    assert _tags("//p | //span") == ["p", "span", "p"]
+    assert _tags("//span | //p") == ["p", "span", "p"]
+    html = "<div><a href=1><b href=2></b></a><a href=3></a></div>"
+    attrs = query("//b/@href | //a/@href", parse_html(html))
+    assert [a.value for a in attrs] == ["1", "2", "3"]
+
+
+def test_first_match_is_earliest_in_document():
+    # callers take the first node of a result (title/author/next-page
+    # lookups), so a result in context order picks the wrong node: here
+    # the first <span>'s parent is the inner <p>, but the <div> comes first
+    html = "<div><p><span>a</span></p><span>b</span></div>"
+    assert _tags("//span/..", html) == ["div", "p"]
+    assert _tags("//p | //div", html) == ["div", "p"]
+    assert evaluate("name(//span/..)", parse_html(html)) == "div"

@@ -63,16 +63,8 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = dict(entry.queries())
-    oracles = dict(entry.oracle_sql())
-    staged_names: set[str] = set()
-    for name, (fn, oracle) in getattr(entry, "staged_queries", dict)().items():
-        if name in qs:
-            raise SystemExit(f"staged query {name!r} already in queries()")
-        qs[name] = fn
-        staged_names.add(name)
-        if oracle is not None:
-            oracles[name] = oracle
+    qs = entry.queries()
+    oracles = entry.oracle_sql()
     failed = []
     results: dict[str, dict] = {}
 
@@ -85,8 +77,6 @@ def main() -> int:
             "oracle_rows": oracle_rows,
             "err": err,
         }
-        if name in staged_names:
-            results[name]["staged"] = True
 
     for name, fn in qs.items():
         if only and name not in only:
@@ -101,12 +91,6 @@ def main() -> int:
                    spark_rows=None, oracle_rows=None, err=f"spark error: {exc}")
             continue
         elapsed = time.time() - t0
-        if name not in oracles:
-            status = "ROWS " if len(got_df) >= 0 else "FAIL"
-            print(f"{status} {name:28s} rows={len(got_df):6d}  ({elapsed:.1f}s)  [no oracle]")
-            record(name, rows_match=len(got_df) >= 0, schema_match=None, hash_match=None,
-                   spark_rows=len(got_df), oracle_rows=None, err="no oracle (rows-only check)")
-            continue
         try:
             exp_df = con.execute(oracles[name]).df()
         except Exception as exc:  # noqa: BLE001

@@ -105,15 +105,12 @@ def main() -> int:
     spark = get_spark(app_name="plan-audit", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    all_queries = dict(entry.queries())
-    # staged r05 queries are audited with the registry (same lint bar)
-    for sname, (sfn, _oracle) in getattr(entry, "staged_queries", dict)().items():
-        all_queries[f"{sname} (staged)"] = sfn
+    all_queries = entry.queries()
 
     rows = []
     failed = []
     for name, fn in all_queries.items():
-        if only and name not in only.union({f"{o} (staged)" for o in only}):
+        if only and name not in only:
             continue
         t0 = time.time()
         try:
