@@ -951,11 +951,11 @@ def q_pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where("_rn = 1")
         .drop("_rn")
     )
-    packed = packing.pack_sequences(survivors, budget=512, n_buckets=16)
+    packed = packing.pack_sequences(survivors, n_buckets=16)
     # split is a pure hash of doc_id — project it onto the packed rows
     # instead of a join (a join re-evaluates the whole pipeline a second
     # time AND adds an exchange; same lesson as q_domain_prior's keep=)
-    _, split_col = textstats.split_exprs("doc_id")
+    _, split_col = textstats.split_exprs()
     return packed.select(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -1558,7 +1558,7 @@ def q_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = (
         kept.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
     )
-    return packing.pack_sequences(survivors, budget=512, n_buckets=16).select(
+    return packing.pack_sequences(survivors, n_buckets=16).select(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),
         F.col("bucket").cast("long").alias("bucket"),
@@ -1596,7 +1596,7 @@ def q_dedup_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
         ")) as url",
     )
     return (
-        variants.select(canonical_url_expr("url").alias("canonical_url"), "url")
+        variants.select(canonical_url_expr().alias("canonical_url"), "url")
         .groupBy("canonical_url")
         .agg(F.count("*").alias("n_urls"), F.min("url").alias("first_url"))
     )
@@ -1814,7 +1814,7 @@ _MP3_HDR = "49443303000000000000FFFB9000"
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-budget sequence packing (training-context assembly)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return packing.pack_sequences(docs, budget=512, n_buckets=16).select(
+    return packing.pack_sequences(docs, n_buckets=16).select(
         "doc_id", "n_tokens", F.col("bucket").cast("long").alias("bucket"), "bin_id"
     )
 
@@ -2472,7 +2472,7 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graby_spark.streaming.sessionize import sessionize_batch
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessionize_batch(ev, gap_seconds=3600).select(
+    return sessionize_batch(ev).select(
         "user_id",
         "session_start",
         "session_end",
@@ -3128,7 +3128,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the brute-force answer)."""
     _ship(spark)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    topk = similarity.ivf_kmeans_topk(emb, emb, k=3, n_cells=8, nprobe=2, n_iter=2)
+    topk = similarity.ivf_kmeans_topk(emb, emb, k=3, n_cells=8, nprobe=2)
     return topk.select(
         "query_id", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank")
     )
@@ -3430,7 +3430,7 @@ def q_media_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = docs.select(F.col("doc_id").alias("media_id")).withColumn(
         "payload", gen_gif("media_id")
     )
-    hashes = multimodal.video_phash(media, every_ms=500, max_frames=2)
+    hashes = multimodal.video_phash(media)
     return hashes.select(
         "media_id",
         F.col("frame_no").cast("long").alias("frame_no"),
@@ -3607,7 +3607,7 @@ def q_key_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.concat(F.lit("k"), F.col("doc_id") % 50))
         .alias("domain")
     )
-    return key_skew_stats(docs, "domain", n_partitions=32).select(
+    return key_skew_stats(docs, n_partitions=32).select(
         "n_rows",
         "n_keys",
         "max_key_rows",

@@ -399,12 +399,6 @@ class Document(Element):
                 return child
         return None
 
-    def create_element(self, tag: str) -> Element:
-        return Element(tag)
-
-    def create_text(self, data: str) -> TextNode:
-        return TextNode(data)
-
 
 class _TreeBuilder(HTMLParser):
     """Recovering HTML parser producing our Document tree.
@@ -625,9 +619,6 @@ class _TreeBuilder(HTMLParser):
         if not self.stack:
             return
         self._current().append(CommentNode(data))
-
-    def handle_decl(self, decl: str) -> None:  # <!doctype ...>
-        pass
 
     def unknown_decl(self, data: str) -> None:  # CDATA etc.
         if data.startswith("CDATA["):

@@ -24,7 +24,6 @@ from . import textutils
 from .charset import convert_to_utf8
 from .dom import (
     AttrNode,
-    CommentNode,
     Document,
     Element,
     Node,
@@ -1335,7 +1334,6 @@ def content_spans(content: Element) -> list[tuple[int, int]]:
 
 
 _TAG_STRIP_RE = re.compile(r"<[^>]+>")
-_WS_COLLAPSE_RE = re.compile(r"[ \t\r\n]+")
 
 
 def _plain_text(html: str) -> str:

@@ -137,16 +137,18 @@ def filter_resumable(
     return pages.join(done, bucket_of(pages["url"]) == done["bucket"], "left_anti")
 
 
-def expire_snapshots(
-    spark: SparkSession, manifest_path: str, keep_last: int = 5
-) -> dict:
+#: snapshots :func:`expire_snapshots` retains
+KEEP_SNAPSHOTS = 2
+
+
+def expire_snapshots(spark: SparkSession, manifest_path: str) -> dict:
     """Iceberg-style snapshot expiration (VERDICT r03 #9): the lineage
     table appends one parquet file per run forever; this compacts it while
     keeping every RETAINED snapshot's visible state bit-identical.
 
-    Semantics (mirroring Iceberg ``expireSnapshots(retainLast=N)``):
+    Semantics (mirroring Iceberg ``expireSnapshots(retainLast=KEEP_SNAPSHOTS)``):
 
-    * the newest ``keep_last`` snapshot ids are retained — every one of
+    * the newest ``KEEP_SNAPSHOTS`` snapshot ids are retained — every one of
       their rows survives, so ``read_manifest(as_of_snapshot=retained)``
       and ``filter_resumable`` pinned there are unchanged;
     * rows of EXPIRED snapshots are dropped, except each bucket's single
@@ -178,7 +180,7 @@ def expire_snapshots(
     snap_ids = sorted(
         r["snapshot_id"] for r in rows.select("snapshot_id").distinct().collect()
     )
-    if len(snap_ids) <= keep_last:
+    if len(snap_ids) <= KEEP_SNAPSHOTS:
         n = rows.count()
         return {
             "snapshots_before": len(snap_ids),
@@ -186,7 +188,7 @@ def expire_snapshots(
             "rows_before": n,
             "rows_after": n,
         }
-    retained_min = snap_ids[-keep_last]
+    retained_min = snap_ids[-KEEP_SNAPSHOTS]
     rows_before = rows.count()
     from pyspark.sql import Window
 
@@ -235,7 +237,7 @@ def expire_snapshots(
     shutil.rmtree(backup)
     return {
         "snapshots_before": len(snap_ids),
-        "snapshots_expired": len(snap_ids) - keep_last,
+        "snapshots_expired": len(snap_ids) - KEEP_SNAPSHOTS,
         "rows_before": rows_before,
         "rows_after": rows_after,
     }

@@ -54,24 +54,24 @@ from pyspark.sql import functions as F
 WORD_RE = "^[a-z0-9]+$"  # shared alphabet guard, Spark + DuckDB
 
 
-def corpus_words(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One row per word occurrence (column ``word``), lowercased and
+def corpus_words(df: DataFrame) -> DataFrame:
+    """One row per word occurrence of ``text`` (column ``word``), lowercased and
     restricted to the cross-engine-safe alphabet."""
     return (
         df.select(
             F.explode(
-                F.split(F.trim(F.lower(F.coalesce(F.col(text_col), F.lit("")))), r"\s+")
+                F.split(F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))), r"\s+")
             ).alias("word")
         )
         .where(F.col("word").rlike(WORD_RE))
     )
 
 
-def word_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
+def word_vocab(df: DataFrame) -> DataFrame:
     """Distinct-word frequency table: (word, cnt, toks) with toks the
     initial character segmentation."""
     return (
-        corpus_words(df, text_col)
+        corpus_words(df)
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
         .withColumn(
@@ -128,7 +128,7 @@ def train_bpe(
     segmented word table (word, cnt, toks).  Stops early if the corpus
     runs out of pairs (every word fully merged).
     """
-    vocab = word_vocab(df, "text").localCheckpoint()
+    vocab = word_vocab(df).localCheckpoint()
     merges: list[tuple[int, str, str]] = []
     for rank in range(1, n_merges + 1):
         best = (
@@ -201,17 +201,15 @@ _SEP = "chr(1)"
 _SEP2 = "(chr(1)||chr(1))"
 
 
-def _oracle_vocab_ctes(n_merges: int, src: str = "documents") -> str:
+def _oracle_vocab_ctes(n_merges: int) -> str:
     """CTE chain: w (word occurrences), v0..v{n} (segmentations as
     sentinel strings), p{i}/b{i} (pair counts / argmax per iteration).
     ``b{i}`` is LEFT-joined so an exhausted corpus keeps its vocab
     instead of vanishing (mirrors train_bpe's early break)."""
     parts = [
-        (
-            "w AS (SELECT x.word AS word FROM {src}, "
-            "unnest(string_split_regex(trim(lower(coalesce(text,''))), '\\s+')) AS x(word) "
-            "WHERE regexp_matches(x.word, '^[a-z0-9]+$'))"
-        ).format(src=src),
+        "w AS (SELECT x.word AS word FROM documents, "
+        "unnest(string_split_regex(trim(lower(coalesce(text,''))), '\\s+')) AS x(word) "
+        "WHERE regexp_matches(x.word, '^[a-z0-9]+$'))",
         (
             "v0 AS (SELECT word, count(*)::BIGINT AS cnt, "
             "{sep2} || regexp_replace(word, '(.)', '\\1'||{sep2}, 'g') AS s "
@@ -248,7 +246,7 @@ def oracle_merges_sql(n_merges: int = 8) -> str:
         for i in range(n_merges)
     ]
     return (
-        _oracle_vocab_ctes(n_merges, "documents")
+        _oracle_vocab_ctes(n_merges)
         + "\n"
         + " UNION ALL ".join(selects)
     )
@@ -257,7 +255,7 @@ def oracle_merges_sql(n_merges: int = 8) -> str:
 def oracle_token_counts_sql(n_merges: int = 8) -> str:
     n = n_merges
     return (
-        _oracle_vocab_ctes(n, "documents")
+        _oracle_vocab_ctes(n)
         + f""",
 vf AS (SELECT word, len(list_filter(string_split(s, {_SEP2}), x -> x <> '')) AS nt FROM v{n}),
 dw AS (SELECT d.doc_id AS id, x.word AS word FROM documents d,

@@ -95,14 +95,14 @@ def exact_duplicates(df: DataFrame, sample_cap: int = 10) -> DataFrame:
     )
 
 
-def _tokens_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Distinct lowercase word tokens per document."""
+def _tokens_df(df: DataFrame) -> DataFrame:
+    """Distinct lowercase word tokens of ``text`` per ``doc_id``."""
     return (
         df.select(
-            F.col(id_col).alias("doc"),
+            F.col("doc_id").alias("doc"),
             F.explode(
                 F.array_distinct(
-                    F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+                    F.split(F.lower(F.trim(F.col("text"))), r"\s+")
                 )
             ).alias("token"),
         )
@@ -136,7 +136,7 @@ def ngram_jaccard_pairs(
     opt into the exact full-token-space Jaccard (e.g. for oracle
     comparisons on bounded corpora).
     """
-    tokens = _tokens_df(df, "doc_id", "text")
+    tokens = _tokens_df(df)
     if max_df is not None:
         n_docs = df.count()
         hot = (
@@ -283,7 +283,7 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     # shingle sets as 60-bit md5 hashes: the intersect joins compare longs,
     # not 5-char strings (~5x cheaper per pair), and the values match any
     # SQL engine's md5 bit-for-bit; computed once per DOC, not per pair
-    shingles = _shingle_sets(df, "doc_id", "text", SHINGLE_K)
+    shingles = _shingle_sets(df, SHINGLE_K)
     return _jaccard_verify(cand, shingles, shingles, "doc_a", "doc_b", threshold)
 
 
@@ -929,8 +929,9 @@ def contamination_spans(df: DataFrame, eval_df: DataFrame, k: int = 13) -> DataF
         .drop("island")
     )
 
-def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle_k: int) -> DataFrame:
-    """(doc, sh:array<long>) — distinct 60-bit md5 shingle hashes, the
+def _shingle_sets(df: DataFrame, shingle_k: int) -> DataFrame:
+    """(doc, sh:array<long>) per ``doc_id`` — distinct 60-bit md5 shingle
+    hashes of ``text``, the
     exact-verify representation (cross-engine: DuckDB computes the same).
 
     ``lower(text)`` is hoisted into its own projection (r06): inlined in
@@ -940,7 +941,7 @@ def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle_k: int) -> 
     lambdas.  Hoisting measured 1.6x on the shingle stage; values are
     bit-identical (same expression semantics, evaluated once per row)."""
     return df.select(
-        F.col(id_col).alias("doc"), F.lower(F.col(text_col)).alias("_lt")
+        F.col("doc_id").alias("doc"), F.lower(F.col("text")).alias("_lt")
     ).select(
         "doc",
         F.array_distinct(
@@ -1009,7 +1010,7 @@ def build_minhash_index(
     # shingle_k rides along as a column: a probe with a different k would
     # silently share zero buckets with the index (same-length signatures
     # over different shingles), so the probe validates it
-    return sigs.join(_shingle_sets(df, "doc_id", "text", shingle_k), "doc").withColumn(
+    return sigs.join(_shingle_sets(df, shingle_k), "doc").withColumn(
         "shingle_k", F.lit(shingle_k)
     )
 
@@ -1066,7 +1067,7 @@ def incremental_minhash_pairs(
         .select("new_doc", "corpus_doc")
         .distinct()
     )
-    new_sh = _shingle_sets(new_df, "doc_id", "text", shingle_k)
+    new_sh = _shingle_sets(new_df, shingle_k)
     return _jaccard_verify(
         cand, new_sh, index.select("doc", "sh"), "new_doc", "corpus_doc", threshold
     )

@@ -67,10 +67,11 @@ EXIF_SCHEMA = StructType(
 _TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 9: 4, 10: 8}
 
 
-def _read_ifd(data: bytes, base: int, offset: int, endian: str) -> dict[int, tuple]:
-    """One IFD → {tag: (type, count, value_bytes)}; bounds-checked."""
+def _read_ifd(data: bytes, offset: int, endian: str) -> dict[int, tuple]:
+    """One IFD → {tag: (type, count, value_bytes)}; bounds-checked.
+    Offsets count from the start of ``data`` (the TIFF header)."""
     out: dict[int, tuple] = {}
-    pos = base + offset
+    pos = offset
     if pos + 2 > len(data):
         return out
     (count,) = struct.unpack_from(endian + "H", data, pos)
@@ -84,7 +85,7 @@ def _read_ifd(data: bytes, base: int, offset: int, endian: str) -> dict[int, tup
             val = data[pos + 8 : pos + 8 + size]
         else:
             (voff,) = struct.unpack_from(endian + "I", data, pos + 8)
-            val = data[base + voff : base + voff + size]
+            val = data[voff : voff + size]
         out[tag] = (typ, n, val)
         pos += 12
     return out
@@ -164,18 +165,18 @@ def parse_exif(data: bytes) -> dict:
     if struct.unpack_from(endian + "H", tiff, 2)[0] != 42:
         return out
     (ifd0_off,) = struct.unpack_from(endian + "I", tiff, 4)
-    ifd0 = _read_ifd(tiff, 0, ifd0_off, endian)
+    ifd0 = _read_ifd(tiff, ifd0_off, endian)
     out["orientation"] = _short(ifd0.get(0x0112), endian)
     out["make"] = _ascii(ifd0.get(0x010F))
     out["model"] = _ascii(ifd0.get(0x0110))
     out["datetime"] = _ascii(ifd0.get(0x0132))
     exif_off = _long_at(ifd0.get(0x8769), endian)
     if exif_off is not None:
-        exif_ifd = _read_ifd(tiff, 0, exif_off, endian)
+        exif_ifd = _read_ifd(tiff, exif_off, endian)
         out["datetime"] = _ascii(exif_ifd.get(0x9003)) or out["datetime"]
     gps_off = _long_at(ifd0.get(0x8825), endian)
     if gps_off is not None:
-        gps = _read_ifd(tiff, 0, gps_off, endian)
+        gps = _read_ifd(tiff, gps_off, endian)
         lat = _rational3(gps.get(0x0002), endian)
         lon = _rational3(gps.get(0x0004), endian)
         lat_ref = _ascii(gps.get(0x0001)) or "N"

@@ -94,9 +94,10 @@ def _collapse_dot_segments(path: F.Column) -> F.Column:
     return p
 
 
-def _page_context(pages: DataFrame, url_col: str) -> tuple:
-    """(src, scheme, origin, directory) expressions for link resolution."""
-    src = F.col(url_col)
+def _page_context() -> tuple:
+    """(src, scheme, origin, directory) expressions of the page ``url``
+    for link resolution."""
+    src = F.col("url")
     scheme = F.regexp_extract(src, r"^([a-z][a-z0-9+.\-]*):", 1)
     origin = F.regexp_extract(src, r"^([a-z][a-z0-9+.\-]*://[^/]+)", 1)
     directory = F.regexp_replace(src, r"[^/]*$", "")
@@ -134,7 +135,13 @@ def _resolve_links(exploded: DataFrame, *extra_cols: str) -> DataFrame:
         F.col("_dorigin"),
         _collapse_dot_segments(F.expr("substring(_nofrag, length(_dorigin) + 1)")),
     )
-    return step.select("src", dst.alias("dst"), *extra_cols)
+    # dst leaves through a one-element generator: the optimizer pushes a
+    # filter through projections by inlining the columns it reads, so a
+    # consumer's predicates on dst (``dst != src``, host_graph's host
+    # tests) would each copy this whole resolution chain into one
+    # generated method — past the JVM's 64 KB limit for host_graph.  A
+    # filter on a generator's output stays above it: dst is computed once.
+    return step.select("src", F.explode(F.array(dst)).alias("dst"), *extra_cols)
 
 
 def outlinks(pages: DataFrame) -> DataFrame:
@@ -143,7 +150,7 @@ def outlinks(pages: DataFrame) -> DataFrame:
     href values may be double-quoted, single-quoted or unquoted; see
     :func:`_resolve_links` for the resolution semantics.
     """
-    src, scheme, origin, directory = _page_context(pages, "url")
+    src, scheme, origin, directory = _page_context()
     raw = F.explode(
         F.regexp_extract_all(F.coalesce(F.col("html"), F.lit("")), F.lit(HREF_PATTERN), F.lit(HREF_GROUP))
     ).alias("_raw")
@@ -182,7 +189,7 @@ def anchor_texts(pages: DataFrame) -> DataFrame:
     analog); :func:`outlinks` (href-attribute-only, no element pairing) is
     the robust choice when anchor labels aren't needed.
     """
-    src, scheme, origin, directory = _page_context(pages, "url")
+    src, scheme, origin, directory = _page_context()
     raw = F.explode(
         F.regexp_extract_all(
             F.coalesce(F.col("html"), F.lit("")), F.lit(_ANCHOR_PATTERN), F.lit(0)
@@ -570,8 +577,7 @@ def crawl_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     the md5-60-bit cross-engine hash, computed map-side — so the full
     outer join shuffles 16-byte rows, never page payloads; at 100 TB the
     join cost is the url-keyed exchange both tables would pay for any
-    reconciliation, and bucketed storage on url (storage.write_bucketed)
-    makes it exchange-free."""
+    reconciliation."""
 
     def hashed(df: DataFrame, alias: str) -> DataFrame:
         # null content hashes as '' — md5(NULL) would null the hash and
@@ -696,7 +702,7 @@ def link_relations(pages: DataFrame) -> DataFrame:
     per-attribute extraction → rel-token explode → resolution; at crawl
     scale a map-only projection, no exchange.
     """
-    src, scheme, origin, directory = _page_context(pages, "url")
+    src, scheme, origin, directory = _page_context()
     tags = F.posexplode(
         F.regexp_extract_all(
             F.coalesce(F.col("html"), F.lit("")), F.lit(_LINK_TAG_PATTERN), F.lit(0)

@@ -729,16 +729,16 @@ def encode_jpeg(
         cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
         mode = "420" if subsample is True else (subsample or "444")
         if mode == "420":
-            # 2x2 mean pool, padding to even dims first
-            cb2 = _pad(cb, 2)
-            cr2 = _pad(cr, 2)
+            # 2x2 mean pool
+            cb2 = _pad(cb)
+            cr2 = _pad(cr)
             cb = cb2.reshape(cb2.shape[0] // 2, 2, cb2.shape[1] // 2, 2).mean(axis=(1, 3))
             cr = cr2.reshape(cr2.shape[0] // 2, 2, cr2.shape[1] // 2, 2).mean(axis=(1, 3))
             samplings = [(2, 2), (1, 1), (1, 1)]
         elif mode == "422":
             # horizontal-only 2x1 mean pool
-            cb2 = _pad(cb, 2)[: cb.shape[0]]
-            cr2 = _pad(cr, 2)[: cr.shape[0]]
+            cb2 = _pad(cb)[: cb.shape[0]]
+            cr2 = _pad(cr)[: cr.shape[0]]
             cb = cb2.reshape(cb2.shape[0], cb2.shape[1] // 2, 2).mean(axis=2)
             cr = cr2.reshape(cr2.shape[0], cr2.shape[1] // 2, 2).mean(axis=2)
             samplings = [(2, 1), (1, 1), (1, 1)]
@@ -923,8 +923,9 @@ def _enc_ac_first(writer, blocks, grid, ac_codes, ss, se, al, restart_interval=0
     flush_eob()
 
 
-def _enc_ac_refine(writer, blocks, grid, ac_codes, ss, se, al, restart_interval=0):
-    """AC refinement scan (T.81 G.1.2.3, encoder).  Runs count
+def _enc_ac_refine(writer, blocks, grid, ac_codes, ss, se, restart_interval=0):
+    """AC refinement scan (T.81 G.1.2.3, encoder) of the last bit
+    (Al = 0).  Runs count
     zero-history positions only; correction bits for crossed
     nonzero-history coefficients are buffered and flushed after each
     emitted code — ZRLs are emitted the moment the pending run exceeds
@@ -956,7 +957,7 @@ def _enc_ac_refine(writer, blocks, grid, ac_codes, ss, se, al, restart_interval=
                 writer.restart(nblk // restart_interval - 1)
             nblk += 1
             zz = blocks[by, bx]
-            absv = [abs(int(zz[k])) >> al for k in range(ss, se + 1)]
+            absv = [abs(int(zz[k])) for k in range(ss, se + 1)]
             kend = -1  # last newly-significant position
             for i, av in enumerate(absv):
                 if av == 1:
@@ -1123,7 +1124,7 @@ def _encode_progressive(
         for ss_, se_ in bands[ci]:
             w_ = _BitWriter()
             _enc_ac_refine(
-                w_, qz[ci], comp_grid[ci], ac_codes, ss_, se_, 0, restart_interval
+                w_, qz[ci], comp_grid[ci], ac_codes, ss_, se_, restart_interval
             )
             w_.flush()
             out += sos([(ci + 1, 0x00)], ss_, se_, 1, 0) + w_.out
@@ -1132,9 +1133,10 @@ def _encode_progressive(
     return bytes(out)
 
 
-def _pad(p: np.ndarray, m: int) -> np.ndarray:
-    ph = (p.shape[0] + m - 1) // m * m
-    pw = (p.shape[1] + m - 1) // m * m
+def _pad(p: np.ndarray) -> np.ndarray:
+    """``p`` padded to even dimensions by edge replication."""
+    ph = (p.shape[0] + 1) // 2 * 2
+    pw = (p.shape[1] + 1) // 2 * 2
     out = np.empty((ph, pw))
     out[: p.shape[0], : p.shape[1]] = p
     out[p.shape[0] :, : p.shape[1]] = p[-1:, :]

@@ -1581,7 +1581,15 @@ def _ima_step(predictor: int, index: int, nibble: int) -> tuple[int, int]:
     return predictor, index
 
 
-def video_phash(df: DataFrame, every_ms: int = 1000, max_frames: int = 4) -> DataFrame:
+#: :func:`video_phash` samples a frame every VIDEO_EVERY_MS, at most
+#: VIDEO_MAX_FRAMES per clip; :func:`video_phash_pairs` calls two clips
+#: duplicates when VIDEO_MIN_FRAMES sampled frames match bit-exactly
+VIDEO_EVERY_MS = 500
+VIDEO_MAX_FRAMES = 2
+VIDEO_MIN_FRAMES = 2
+
+
+def video_phash(df: DataFrame) -> DataFrame:
     """Frame-sampled perceptual signature for video payloads → one row
     per sampled frame: (media_id, frame_no, ts_ms, phash).
 
@@ -1595,9 +1603,7 @@ def video_phash(df: DataFrame, every_ms: int = 1000, max_frames: int = 4) -> Dat
     the hash stage moves only the small PNG canvases; everything after
     is JVM columns.
     """
-    if max_frames > 1000:
-        raise ValueError("max_frames above 1000 breaks the frame-key packing")
-    frames = sample_frames(df, every_ms=every_ms, max_frames=max_frames).withColumn("fk", F.col("media_id") * 1000 + F.col("frame_no"))
+    frames = sample_frames(df, every_ms=VIDEO_EVERY_MS, max_frames=VIDEO_MAX_FRAMES).withColumn("fk", F.col("media_id") * 1000 + F.col("frame_no"))
     hashed = perceptual_hash(
         frames.select(F.col("fk").alias("media_id"), F.col("frame").alias("payload"))
     ).select(F.col("media_id").alias("fk"), "phash")
@@ -1608,13 +1614,11 @@ def video_phash(df: DataFrame, every_ms: int = 1000, max_frames: int = 4) -> Dat
     )
 
 
-def video_phash_pairs(
-    frame_hashes: DataFrame, max_hamming: int = 4, min_frames: int = 2
-) -> DataFrame:
+def video_phash_pairs(frame_hashes: DataFrame) -> DataFrame:
     """Video near-duplicate pairs from :func:`video_phash` output:
-    (video_a, video_b, matched_frames) where at least ``min_frames``
-    sampled frames of A visually match frames of B within
-    ``max_hamming`` bits.
+    (video_a, video_b, matched_frames) where at least
+    ``VIDEO_MIN_FRAMES`` sampled frames of A match frames of B with
+    identical hashes.
 
     Frames match regardless of position — a re-encoded or trimmed clip
     keeps its content, not its timestamps.  The heavy lifting is the
@@ -1625,7 +1629,7 @@ def video_phash_pairs(
     fk = frame_hashes.select(
         (F.col("media_id") * 1000 + F.col("frame_no")).alias("media_id"), "phash"
     )
-    pairs = phash_pairs(fk, max_hamming=max_hamming)
+    pairs = phash_pairs(fk, max_hamming=0)
     return (
         pairs.select(
             F.floor(F.col("doc_a") / 1000).cast("long").alias("video_a"),
@@ -1635,7 +1639,7 @@ def video_phash_pairs(
         .where(F.col("video_a") != F.col("video_b"))
         .groupBy("video_a", "video_b")
         .agg(F.countDistinct("frame_a").alias("matched_frames"))
-        .where(F.col("matched_frames") >= min_frames)
+        .where(F.col("matched_frames") >= VIDEO_MIN_FRAMES)
     )
 
 
@@ -2126,7 +2130,7 @@ def decode_tiff(data: bytes) -> np.ndarray:
     if _struct.unpack_from(endian + "H", data, 2)[0] != 42:
         raise ValueError("bad TIFF magic")
     (ifd_off,) = _struct.unpack_from(endian + "I", data, 4)
-    ifd = _read_ifd(data, 0, ifd_off, endian)
+    ifd = _read_ifd(data, ifd_off, endian)
 
     def uint(tag, default=None):
         e = ifd.get(tag)
@@ -2282,22 +2286,19 @@ def encode_tiff(
     )
 
 
-def encode_wav_adpcm(
-    samples: np.ndarray, sample_rate: int = 8000, block_samples: int = 505
-) -> tuple[bytes, np.ndarray]:
-    """IMA ADPCM WAV (format 17, mono) from int16 samples, plus the
+def encode_wav_adpcm(samples: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """IMA ADPCM WAV (format 17, mono, 8 kHz) from int16 samples, plus the
     encoder's own reconstruction.
 
     ADPCM is lossy, so round-trip equality is against the RECONSTRUCTION
     (the decoder replays the identical state machine) — that is what the
     tests pin, alongside hand-computed state-machine vectors.  Block
     layout: 4-byte header (predictor=sample 0, step index), then two
-    low-nibble-first samples per byte; ``block_samples`` must be odd so
-    blocks pack whole bytes (1 header sample + even nibble count).
+    low-nibble-first samples per byte; a block holds 505 samples, an odd
+    count so it packs whole bytes (1 header sample + even nibble count).
     """
+    sample_rate, block_samples = 8000, 505
     a = np.asarray(samples, dtype=np.int64).reshape(-1)
-    if block_samples % 2 == 0:
-        raise ValueError("block_samples must be odd (header sample + nibble pairs)")
     block_align = 4 + (block_samples - 1) // 2
     payload = bytearray()
     recon = []

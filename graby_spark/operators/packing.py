@@ -28,19 +28,23 @@ def _md5_long(col: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def pack_sequences(df: DataFrame, budget: int = 2048, n_buckets: int = 64) -> DataFrame:
+#: tokens per training bin of :func:`pack_sequences`
+PACK_BUDGET = 512
+
+
+def pack_sequences(df: DataFrame, n_buckets: int = 64) -> DataFrame:
     """Assign documents to fixed-token-budget training bins.
 
     Greedy-by-order packing within ``n_buckets`` hash buckets: documents
     are ordered by id inside their bucket, and a document opens a new bin
-    whenever the running token total would exceed ``budget``.  Returns
+    whenever the running token total would exceed ``PACK_BUDGET``.  Returns
     (doc_id, n_tokens, bucket, bin_id).  The window partitions on the
     bucket — parallelism = n_buckets regardless of corpus size — and the
     assignment is a pure function of (id, token count), so re-runs and
     the DuckDB oracle reproduce it exactly.
 
     The bin boundary uses the cumulative-sum approximation
-    ``floor((cumsum - 1) / budget)`` (documents longer than the budget
+    ``floor((cumsum - 1) / PACK_BUDGET)`` (documents longer than the budget
     occupy their own bin(s)); exact first-fit-decreasing packing is a
     bin-packing heuristic, not worth a sequential dependency at corpus
     scale.
@@ -59,7 +63,7 @@ def pack_sequences(df: DataFrame, budget: int = 2048, n_buckets: int = 64) -> Da
             "doc_id",
             "n_tokens",
             "bucket",
-            F.floor((F.col("_cum") - 1) / budget).cast("long").alias("bin_id"),
+            F.floor((F.col("_cum") - 1) / PACK_BUDGET).cast("long").alias("bin_id"),
         )
     )
 

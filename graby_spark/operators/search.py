@@ -157,16 +157,14 @@ def bm25_topk(
     return bm25_topk_indexed(build_search_index(docs, id_col, text_col), queries, k=k)
 
 
-def positional_postings(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc, pos, token) rows — 0-based position over the non-empty
-    whitespace tokens of the lowercased text."""
+def positional_postings(df: DataFrame) -> DataFrame:
+    """(doc, pos, token) rows per ``doc_id`` — 0-based position over the
+    non-empty whitespace tokens of the lowercased ``text``."""
     return df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.posexplode(
             F.filter(
-                F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"),
+                F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+"),
                 lambda t: t != "",
             )
         ).alias("pos", "token"),
@@ -194,7 +192,7 @@ def phrase_search(docs: DataFrame, queries: DataFrame) -> DataFrame:
     construction and contamination audits — the phrase analog of the
     13-gram decontamination semi-join (dedup.contamination_ngrams).
     """
-    post = positional_postings(docs, "doc_id", "text")
+    post = positional_postings(docs)
     qterms = queries.select(
         "query_id",
         F.size("terms").alias("qlen"),

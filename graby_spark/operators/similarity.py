@@ -88,19 +88,10 @@ def make_clustered_embeddings(
     )
 
 
-def _unit(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
-    vec_d = F.transform(F.col(vec_col), lambda v: v.cast("double"))
-    norm = F.sqrt(F.aggregate(vec_d, F.lit(0.0).cast("double"), lambda a, v: a + v * v))
-    return df.select(
-        F.col(id_col).alias(f"{prefix}_id"),
-        F.transform(vec_d, lambda v: v / norm).alias(f"{prefix}_unit"),
-    )
-
-
 def _unit_rows(mat: np.ndarray) -> np.ndarray:
-    """Fold-left unit normalization — the exact IEEE op sequence of
-    :func:`_unit`'s JVM ``aggregate`` fold (norm accumulates column by
-    column left-to-right, then one per-element division), vectorized
+    """Fold-left unit normalization — the exact IEEE op sequence of a JVM
+    ``sqrt(aggregate(v, 0D, (a, x) -> a + x * x))`` fold (norm accumulates
+    column by column left-to-right, then one per-element division), vectorized
     across the batch.  This is the parity kernel that lets the Python
     paths below replace the interpreted JVM HOF math bit-for-bit."""
     acc = np.zeros(len(mat), dtype=np.float64)
@@ -127,12 +118,13 @@ def _folded_dots(A: np.ndarray, B: np.ndarray) -> np.ndarray:
 MAX_PROBE_QUERIES = 100_000
 
 
-def _collect_probe_rows(queries: DataFrame, id_col: str, vec_col: str) -> list:
-    """Collect an ANN search's probe set as ``(qid, qvec)`` rows.  The
+def _collect_probe_rows(queries: DataFrame) -> list:
+    """Collect an ANN search's probe set as ``(qid, qvec)`` rows from
+    ``vec_id`` and ``embedding``.  The
     collect stops at ``MAX_PROBE_QUERIES + 1`` rows, so an oversized probe
     set fails here with a clear error, not as a driver out-of-memory."""
     rows = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
+        queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
         .limit(MAX_PROBE_QUERIES + 1)
         .collect()
     )
@@ -147,12 +139,10 @@ def _collect_probe_rows(queries: DataFrame, id_col: str, vec_col: str) -> list:
     return rows
 
 
-def _collect_query_units(
-    queries: DataFrame, id_col: str, vec_col: str
-) -> tuple[list, np.ndarray]:
+def _collect_query_units(queries: DataFrame) -> tuple[list, np.ndarray]:
     """Collect the bounded probe set and unit-normalize it with JVM-parity
     math — the query side of brute force and of the shared exact rerank."""
-    rows = _collect_probe_rows(queries, id_col, vec_col)
+    rows = _collect_probe_rows(queries)
     ids = [r["qid"] for r in rows]
     mat = np.stack([np.asarray(r["qvec"], dtype=np.float64) for r in rows])
     return ids, _unit_rows(mat)
@@ -179,7 +169,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> Data
     unchanged in the JVM."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    q_ids, q_units = _collect_query_units(queries, "vec_id", "embedding")
+    q_ids, q_units = _collect_query_units(queries)
     sc = corpus.sparkSession.sparkContext
     bc = sc.broadcast((q_ids, q_units))
 
@@ -302,7 +292,7 @@ def lsh_topk(
     )
     # shared vectorized rerank tail (identical semantics to the former
     # inline block: round-8 fold dots, (cosine DESC, id ASC) window)
-    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)
+    return _exact_rerank(cand, corpus, queries, k)
 
 
 def ivf_topk(
@@ -377,15 +367,13 @@ def ivf_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)
+    return _exact_rerank(cand, corpus, queries, k)
 
 
 def _exact_rerank(
     cand: DataFrame,
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str,
-    vec_col: str,
     k: int,
 ) -> DataFrame:
     """Exact float-cosine rerank of a (query_id, neighbor_id) candidate
@@ -401,7 +389,7 @@ def _exact_rerank(
     once."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    q_ids, q_units = _collect_query_units(queries, id_col, vec_col)
+    q_ids, q_units = _collect_query_units(queries)
     qmap = dict(zip(q_ids, q_units))
     sc = corpus.sparkSession.sparkContext
     q_bc = sc.broadcast(qmap)
@@ -425,7 +413,7 @@ def _exact_rerank(
                 }
             )
 
-    id_type = corpus.schema[id_col].dataType
+    id_type = corpus.schema["vec_id"].dataType
     schema = StructType(
         [
             StructField("query_id", id_type),
@@ -435,7 +423,7 @@ def _exact_rerank(
     )
     scored = (
         cand.join(
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec")),
+            corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("vec")),
             "neighbor_id",
         )
         .mapInPandas(dots, schema)
@@ -455,7 +443,6 @@ def ivf_kmeans_topk(
     k: int = 10,
     n_cells: int = 8,
     nprobe: int = 2,
-    n_iter: int = 2,
 ) -> DataFrame:
     """IVF-flat ANN with TRAINED cells: the inverted-file partition comes
     from ``cluster.kmeans_train``'s exact integer-grid Lloyd iterations
@@ -469,14 +456,14 @@ def ivf_kmeans_topk(
     is what lets the WHOLE pipeline (train -> probe -> candidate join ->
     float rerank) replay value-exact in SQL.  Scale shape is ivf_topk's:
     probe cost O(|q| * corpus/n_cells * nprobe), corpus shuffled once by
-    cell id, centroids broadcast; training adds n_iter passes that
+    cell id, centroids broadcast; training adds two Lloyd passes that
     shuffle only k*dim longs per partition (see cluster.py).
     """
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     from graby_spark.operators.cluster import _src_df, _u9_batch, kmeans_train
 
-    cents = kmeans_train(corpus, "vec_id", "embedding", k=n_cells, n_iter=n_iter)
+    cents = kmeans_train(corpus, "vec_id", "embedding", k=n_cells, n_iter=2)
     cents_bc = corpus.sparkSession.sparkContext.broadcast(cents)
 
     def assign(n_best: int):
@@ -513,7 +500,7 @@ def ivf_kmeans_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)
+    return _exact_rerank(cand, corpus, queries, k)
 
 
 #: PQ geometry of :func:`pq_topk` and :func:`ivfpq_topk`: ``PQ_M``
@@ -522,16 +509,14 @@ PQ_M = 4
 PQ_KS = 16
 
 
-def _pq_codebooks(
-    corpus: DataFrame, id_col: str, vec_col: str, m: int, ks: int
-) -> np.ndarray:
+def _pq_codebooks(corpus: DataFrame, m: int, ks: int) -> np.ndarray:
     """(m, ks, d_sub) PQ codebooks from a deterministic md5-ordered
     corpus sample — the same sampled-init convention as :func:`ivf_topk`
     (no k-means iterations; refinement would bolt on here).  Vectors are
     unit-normalized BEFORE slicing so codes quantize the same space the
     cosine is computed in."""
     rows = (
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+        corpus.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
         .orderBy(
             F.conv(F.substring(F.md5(F.col("cid").cast("string")), 1, 15), 16, 10)
         )
@@ -636,10 +621,10 @@ def pq_topk(
     ~125-point clusters).  IVF-PQ with residual quantization is the
     standard finer-grained variant and would bolt on here.
     """
-    codebooks = _pq_codebooks(corpus, "vec_id", "embedding", PQ_M, PQ_KS)
+    codebooks = _pq_codebooks(corpus, PQ_M, PQ_KS)
     codes = pq_encode(corpus, codebooks, "vec_id", "embedding")
 
-    q_rows = _collect_probe_rows(queries, "vec_id", "embedding")
+    q_rows = _collect_probe_rows(queries)
     q_ids = [r["qid"] for r in q_rows]
     q_mat = np.stack([np.asarray(r["qvec"], dtype=np.float64) for r in q_rows])
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
@@ -713,7 +698,7 @@ def pq_topk(
     )
     # shared vectorized rerank tail (identical semantics to the former
     # inline block: round-8 fold dots, (cosine DESC, id ASC) window)
-    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)
+    return _exact_rerank(cand, corpus, queries, k)
 
 
 def sq8_encode(df: DataFrame) -> DataFrame:
@@ -840,7 +825,7 @@ def ivf_sq8_topk(
     # approx is computed bit-identically: int64 code dot, then the same
     # (q_scale * n_scale) * dot IEEE sequence), so the union of batch tops
     # provably contains the global candidate cut.
-    q_rows = _collect_probe_rows(queries, "vec_id", "embedding")
+    q_rows = _collect_probe_rows(queries)
     q_ids = [r["qid"] for r in q_rows]
     q_u9 = _u9_batch([r["qvec"] for r in q_rows])
     q_probe = np.argsort(-(q_u9 @ cents.T), axis=1, kind="stable")[:, :nprobe]
@@ -894,18 +879,16 @@ def ivf_sq8_topk(
         .where(F.col("_r") <= n_cand)
         .select("query_id", "neighbor_id")
     )
-    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)
+    return _exact_rerank(cand, corpus, queries, k)
 
 
-def _md5_ordered_sample(
-    corpus: DataFrame, id_col: str, vec_col: str, n: int
-) -> np.ndarray:
+def _md5_ordered_sample(corpus: DataFrame, n: int) -> np.ndarray:
     """Deterministic unit-normalized (n, dim) sample in md5 order — the
     shared init convention of ivf_topk and _pq_codebooks (F.conv yields
     a decimal STRING, so the order is lexicographic over its digits;
     the oracle replays exactly that)."""
     rows = (
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+        corpus.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
         .orderBy(
             F.conv(F.substring(F.md5(F.col("cid").cast("string")), 1, 15), 16, 10)
         )
@@ -916,16 +899,14 @@ def _md5_ordered_sample(
     return sample / np.linalg.norm(sample, axis=1, keepdims=True)
 
 
-def _ivfpq_model(
-    corpus: DataFrame, id_col: str, vec_col: str, n_cells: int, m: int, ks: int
-) -> tuple[np.ndarray, np.ndarray]:
+def _ivfpq_model(corpus: DataFrame, n_cells: int, m: int, ks: int) -> tuple[np.ndarray, np.ndarray]:
     """(centroids, residual codebooks) for IVF-PQ: coarse cells are an
     md5-ordered corpus sample (ivf_topk's convention); the m per-subspace
     codebooks quantize RESIDUALS — the md5 sample's own offsets from
     their assigned cells (Jégou et al. 2011's shared-codebook variant;
     k-means refinement of both stages would bolt on here)."""
-    cents = _md5_ordered_sample(corpus, id_col, vec_col, n_cells)
-    sample = _md5_ordered_sample(corpus, id_col, vec_col, ks)
+    cents = _md5_ordered_sample(corpus, n_cells)
+    sample = _md5_ordered_sample(corpus, ks)
     dim = sample.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
@@ -938,13 +919,7 @@ def _ivfpq_model(
     return cents, codebooks
 
 
-def ivfpq_encode(
-    corpus: DataFrame,
-    cents: np.ndarray,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivfpq_encode(corpus: DataFrame, cents: np.ndarray, codebooks: np.ndarray) -> DataFrame:
     """Corpus → (id, cell, codes): coarse cell assignment (argmax dot
     against unit centroids, first index on ties like np.argmax) plus PQ
     codes of the residual u - centroid[cell].  One Arrow map pass; the
@@ -985,12 +960,12 @@ def ivfpq_encode(
 
     schema = StructType(
         [
-            StructField("id", corpus.schema[id_col].dataType),
+            StructField("id", corpus.schema["vec_id"].dataType),
             StructField("cell", IntegerType()),
             StructField("codes", ArrayType(IntegerType())),
         ]
     )
-    src = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    src = corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     return src.mapInPandas(fn, schema)
 
 
@@ -1023,10 +998,10 @@ def ivfpq_topk(
     window, then a slim id-keyed rerank join.  At a trillion rows the
     cell list turns into a partition-pruning key on a codes table
     bucketed by cell."""
-    cents, codebooks = _ivfpq_model(corpus, "vec_id", "embedding", n_cells, PQ_M, PQ_KS)
-    codes = ivfpq_encode(corpus, cents, codebooks, "vec_id", "embedding")
+    cents, codebooks = _ivfpq_model(corpus, n_cells, PQ_M, PQ_KS)
+    codes = ivfpq_encode(corpus, cents, codebooks)
 
-    q_rows = _collect_probe_rows(queries, "vec_id", "embedding")
+    q_rows = _collect_probe_rows(queries)
     q_ids = [r["qid"] for r in q_rows]
     q_mat = np.stack([np.asarray(r["qvec"], dtype=np.float64) for r in q_rows])
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
@@ -1095,4 +1070,4 @@ def ivfpq_topk(
     )
     # shared vectorized rerank tail (identical semantics to the former
     # inline block: round-8 fold dots, (cosine DESC, id ASC) window)
-    return _exact_rerank(cand, corpus, queries, "vec_id", "embedding", k)
+    return _exact_rerank(cand, corpus, queries, k)

@@ -1001,27 +1001,23 @@ def split_assign(df: DataFrame) -> DataFrame:
     is cross-engine (DuckDB oracle recomputes identical buckets).  Pure
     projection: no shuffle, no Python.
     """
-    bucket, split = split_exprs("doc_id", 0.98, 0.01, "v1")
+    bucket, split = split_exprs()
     return df.select(
         F.col("doc_id").alias("doc"), bucket.alias("bucket"), split.alias("split")
     )
 
 
-def split_exprs(
-    id_col: str = "doc_id",
-    train_frac: float = 0.98,
-    val_frac: float = 0.01,
-    salt: str = "v1",
-):
+def split_exprs():
     """(bucket, split) column expressions of ``split_assign`` — usable as
     a pure projection inside a larger pipeline (no join needed to attach
-    a split label to rows that already carry the id)."""
-    n_train = int(round(train_frac * 10000))
-    n_val = int(round(val_frac * 10000))
+    a split label to rows that already carry ``doc_id``).  Of 10,000
+    buckets of the ``v1``-salted id hash, 9,800 go to train and 100 to
+    validation; the rest is test."""
+    n_train, n_val = 9800, 100
     bucket = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 15
+                F.md5(F.concat(F.lit("v1:"), F.col("doc_id").cast("string"))), 1, 15
             ),
             16,
             10,

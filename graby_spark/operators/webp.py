@@ -716,12 +716,11 @@ def _write_entropy_image(bw: _BitWriter, rgba: np.ndarray, allow_meta: bool) -> 
         put(codes["alpha"], int(al))
 
 
-def _write_entropy_image_meta(
-    bw: _BitWriter, rgba: np.ndarray, w: int, h: int, hbits: int
-) -> None:
-    """Main image with meta prefix codes: tiles alternate between two
+def _write_entropy_image_meta(bw: _BitWriter, rgba: np.ndarray, w: int, h: int) -> None:
+    """Main image with meta prefix codes: 4x4 tiles alternate between two
     Huffman groups by tile-column parity, each group coded from its own
     histograms — exercises the decoder's group-selection path."""
+    hbits = 2  # tile size bits; the format codes hbits - 2
     bw.write(0, 1)  # no color cache
     bw.write(1, 1)  # meta prefix codes present
     bw.write(hbits - 2, 3)
@@ -909,7 +908,7 @@ def encode_webp_vp8l(
     if meta_split:
         if subtract_green or predictor_mode is not None or color_elements is not None or palette:
             raise ValueError("meta_split fixture is standalone")
-        _write_entropy_image_meta(bw, rgba, w, h, hbits=2)
+        _write_entropy_image_meta(bw, rgba, w, h)
     else:
         _write_entropy_image(bw, rgba, allow_meta=True)
 

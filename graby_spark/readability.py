@@ -41,14 +41,6 @@ _NEGATIVE_RE = re.compile(
     r"promo|related|scroll|shoutbox|sidebar|sponsor|shopping|tags|tool|widget",
     re.I,
 )
-_DIV_TO_P_RE = re.compile(
-    r"<(a|blockquote|dl|div|img|ol|p|pre|table|ul)", re.I
-)
-
-_BLOCK_TAGS = frozenset(
-    "a blockquote dl div img ol p pre table ul script iframe".split()
-)
-
 # phrasing (inline) elements: tidy's block-end trailing-blank trim does not
 # apply inside these (the lemonde '<strong>, </strong>' edge space is moved
 # out, not trimmed)

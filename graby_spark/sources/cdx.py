@@ -31,12 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 # JSON payload of one CDXJ line (the Common Crawl cc-index field set we
 # care about for fetch planning).
@@ -206,9 +201,7 @@ def cdx_incremental(plan: DataFrame, seen: DataFrame) -> DataFrame:
     leave the index scan.  Output adds ``fetch_reason`` ∈ {new, changed}.
 
     Scale shape: one left join keyed on urlkey.  Both sides are
-    index-sized (urlkey + digest — never page bytes), and the seen side
-    is exactly the bucketed-manifest shape, so with both sides bucketed
-    on urlkey (graby_spark.storage) the join runs exchange-free.
+    index-sized (urlkey + digest — never page bytes).
     """
     s = seen.select("urlkey", F.col("digest").alias("_seen_digest"))
     joined = plan.join(s, "urlkey", "left")

@@ -7,16 +7,15 @@ for the extraction pipeline.
 
 Design:
 
-- :func:`feed_entries` — the fast path.  Pure JVM ``xpath``/``xpath_boolean``
-  expressions (whole-stage codegen, zero Python): RSS vs Atom dispatch on
-  ``boolean(/rss)``, namespace-agnostic ``local-name()`` paths for Atom,
-  document-order field arrays zipped + posexploded into one row per entry.
-  PRECONDITION: well-formed XML — Spark's xpath expression is job-fatal on
-  parse errors (verified), so untrusted input must go through
-  :func:`wellformed_xml` first.
-- :func:`wellformed_xml` — Arrow-vectorized boolean gate
-  (``xml.etree`` parse attempt per value).  The one Python stage, applied
-  once to the (small) feed table, not per entry.
+- :func:`feed_entries` — JVM ``xpath``/``xpath_boolean`` expressions
+  (whole-stage codegen): RSS vs Atom dispatch on ``boolean(/rss)``,
+  namespace-agnostic ``local-name()`` paths for Atom, document-order
+  field arrays zipped + posexploded into one row per entry.
+- Spark's xpath expression fails the whole job on a parse error, so
+  :func:`feed_entries` first drops NULL and malformed feeds through an
+  Arrow-vectorized gate (``xml.etree`` parse attempt per value).  That
+  gate is the one Python stage, applied once to the (small) feed table,
+  not per entry.
 - Per-entry field alignment: xpath returns one array per field in document
   order; an entry missing a field would shift later entries' values.  Rows
   carry ``aligned`` (all field arrays same length) so consumers can drop
@@ -50,12 +49,9 @@ _MONTHS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
            "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
 
 
-def wellformed_xml(col: Column | str) -> Column:
-    """Arrow-vectorized well-formedness gate for untrusted XML.
-
-    Required in front of :func:`feed_entries` on crawled input: Spark's
-    xpath expression raises (failing the whole job) on malformed XML.
-    """
+def _wellformed() -> Column:
+    """True where ``xml`` parses as XML: the gate :func:`feed_entries`
+    applies before any xpath, which would fail the job on a bad row."""
     @pandas_udf("boolean")
     def _ok(xml: pd.Series) -> pd.Series:
         import xml.etree.ElementTree as ET
@@ -71,7 +67,7 @@ def wellformed_xml(col: Column | str) -> Column:
 
         return xml.map(check)
 
-    return _ok(F.col(col) if isinstance(col, str) else col)
+    return _ok(F.col("xml"))
 
 
 def _rfc822_to_iso(date: Column) -> Column:
@@ -102,6 +98,7 @@ def feed_entries(df: DataFrame) -> DataFrame:
     ``published`` is ISO-8601; ``aligned`` is false when the per-field
     document-order arrays disagree in length (entry missing a field) —
     those rows' zipped values are positionally suspect by construction.
+    A NULL or malformed ``xml`` value yields no entries.
     """
     def xp(path: str) -> Column:
         return F.expr(f'xpath(xml, "{path}")')
@@ -132,7 +129,7 @@ def feed_entries(df: DataFrame) -> DataFrame:
         1,
     )
 
-    base = df.select(
+    base = df.where(_wellformed()).select(
         feed_title.alias("feed_title"),
         F.when(is_rss, F.lit("rss")).otherwise(F.lit("atom")).alias("kind"),
         titles.alias("_t"),

@@ -239,15 +239,19 @@ def build_warc_blobs(
     return docs.groupBy("file_id").applyInPandas(build, schema)
 
 
-def write_warc_blobs(df: DataFrame, n_files: int = 1000) -> DataFrame:
+#: archives :func:`write_warc_blobs` spreads its rows over
+SINK_FILES = 5
+
+
+def write_warc_blobs(df: DataFrame) -> DataFrame:
     """WARC sink: page rows → Common-Crawl-layout archive blobs.
 
     Input rows carry ``(url, warc_date, http_status, content_type,
     html)`` — exactly :data:`WARC_RECORD_SCHEMA`, so the sink is the
     exact inverse of :func:`warc_records` (round-trip pinned by test).
-    Rows are grouped into ``n_files`` archives by url hash
-    (deterministic, independent of input partitioning — the caller sizes
-    ``n_files`` for ~1 GB per archive at target scale) and each record
+    Rows are grouped into ``SINK_FILES`` archives by url hash
+    (deterministic, independent of input partitioning; size it for
+    ~1 GB per archive at target scale) and each record
     is individually gzipped with pinned mtime, so re-running the sink on
     the same input produces byte-identical archives — the property that
     makes downstream digests/manifests reproducible.
@@ -263,7 +267,7 @@ def write_warc_blobs(df: DataFrame, n_files: int = 1000) -> DataFrame:
     keyed = df.withColumn(
         "_file_id",
         F.conv(F.substring(F.md5(F.col("url")), 1, 15), 16, 10).cast("long")
-        % F.lit(max(n_files, 1)),
+        % F.lit(SINK_FILES),
     )
     schema = StructType(
         [StructField("file_id", LongType()), StructField("blob", BinaryType())]

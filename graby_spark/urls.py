@@ -9,6 +9,12 @@ allow/block lists where a non-empty allow list wins.
 Each operation exists twice: a Python function (used inside the UDF / at
 the driver) and a Spark Column builder so the table-level filter runs
 JVM-side in whole-stage codegen before any Python is involved.
+
+Graby's fetch-time rewrite (the per-host ``rewrite_url`` map and the
+``#!`` → ``_escaped_fragment_`` form, HttpClient.php:250-281, S4) has no
+counterpart: the engine fetches nothing, it reads urls as crawled, and
+``job.resolve_multipage`` joins next-page links against those raw urls —
+a rewritten key would miss its hop.
 """
 
 from __future__ import annotations
@@ -105,30 +111,6 @@ def allowed_filter_expr(
     return cond
 
 
-# HttpClientConfig.php:51-56 — per-host URL rewrite map (S4)
-DEFAULT_REWRITE_URL: dict[str, dict[str, str]] = {
-    "docs.google.com": {"/Doc?": "/View?"},
-    "tnr.com": {"tnr.com/article/": "tnr.com/print/article/"},
-    ".m.wikipedia.org": {".m.wikipedia.org/": ".wikipedia.org/"},
-    "m.vanityfair.com": {"m.vanityfair.com/": "www.vanityfair.com/"},
-}
-
-
-def rewrite_url(url: str) -> str:
-    """Per-host substring rewrites (HttpClient.php:250-281, S4) plus the
-    AJAX ``#!`` → ``_escaped_fragment_`` canonicalization
-    (HttpClient.php:262-279, S5)."""
-    for host_match, pairs in DEFAULT_REWRITE_URL.items():
-        if host_match in url:
-            for find, replace in pairs.items():
-                url = url.replace(find, replace)
-    if "#!" in url:
-        base, _, fragment = url.partition("#!")
-        sep = "&" if "?" in base else "?"
-        url = f"{base}{sep}_escaped_fragment_={fragment}"
-    return url
-
-
 def normalize_host_expr(url_col: str | Column = "url") -> Column:
     """Normalized host key column (lowercase, www. stripped — R1)."""
     col = F.col(url_col) if isinstance(url_col, str) else url_col
@@ -136,7 +118,7 @@ def normalize_host_expr(url_col: str | Column = "url") -> Column:
     return F.regexp_replace(host, r"^www\.", "")
 
 
-def canonical_url_expr(url_col: str | Column = "url") -> Column:
+def canonical_url_expr() -> Column:
     """Crawl-pipeline URL canonicalization as one JVM expression chain
     (oracle-able — the DuckDB twin applies the identical regexes):
 
@@ -147,9 +129,9 @@ def canonical_url_expr(url_col: str | Column = "url") -> Column:
       5. strip one trailing slash from non-root paths.
 
     Used for URL-level exact dedup of a crawl frontier/corpus — pure
-    whole-stage-codegen string ops, no UDF, no shuffle.
+    whole-stage-codegen string ops, no UDF, no shuffle.  Reads ``url``.
     """
-    col = F.col(url_col) if isinstance(url_col, str) else url_col
+    col = F.col("url")
     # 1. lowercase scheme://host
     c = F.concat(
         F.lower(F.regexp_extract(col, r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)),

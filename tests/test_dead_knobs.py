@@ -1,19 +1,31 @@
-"""No dead knobs: every defaulted parameter of the package is passed by
-some caller.
+"""Reach or remove: every knob, parameter, definition and module-level
+name of the package is used.
 
-A dead knob is a defaulted parameter of a module-level function or class
-method in ``graby_spark/`` whose name (a constructor's: its class name)
-is unique in the package, that is called at least once, and that no
-call passes — by keyword or by
-position — anywhere in the package, the registry, the benchmarks, the
-tools or the tests.  Such an option is never exercised at any value but
-its default, so it should be a constant instead.  Pure AST scan, no
-imports of the scanned code.
+Four pure-AST scans (no imports of the scanned code), sharing one parse
+and one walk per file:
+
+- **Dead knobs.**  A defaulted parameter of a module-level function or
+  class method in ``graby_spark/`` whose name (a constructor's: its
+  class name) is unique in the package, that is called at least once,
+  and that no call passes — by keyword or by position — anywhere in the
+  package, the registry, the benchmarks, the tools or the tests.  Such
+  an option is never exercised at any value but its default, so it
+  should be a constant instead.
+- **One-literal parameters.**  A parameter of such a function that
+  every call passes, always as the same literal.  It is a constant
+  spelled at each call site; fold it into the function.
+- **Unreachable definitions.**  A function, class or method of
+  ``graby_spark/`` whose name no non-test file mentions outside the
+  definition itself.  The system never runs it; only tests do.
+- **Unused module-level names.**  A module-level assignment or import of
+  ``graby_spark/`` that its module never reads and no file imports or
+  reads as an attribute.
 """
 
 from __future__ import annotations
 
 import ast
+import bisect
 import functools
 import os
 from collections import Counter, defaultdict
@@ -29,6 +41,18 @@ CALLERS = (
     "bench_extra.py",
 )
 
+#: one-literal parameters whose callers are frozen; each entry names them
+ONE_LITERAL_ALLOWED = {
+    # bench.py's dedup_minhash_lsh leaf passes threshold=0.9 by keyword
+    "graby_spark/operators/dedup.py: minhash_lsh_pairs(threshold=0.9)",
+    # bench.py's ann_ivf_sq8 leaf passes nprobe=2 by keyword
+    "graby_spark/operators/similarity.py: ivf_sq8_topk(nprobe=2)",
+    # called inside __spark_entry__.oracle_sql(), whose source is frozen
+    "graby_spark/pages.py: oracle_excerpt_sql(text_expr='expected_text')",
+    # called inside __spark_entry__.oracle_sql(), whose source is frozen
+    "graby_spark/operators/search.py: oracle_bm25_sql(k=10)",
+}
+
 
 def _py_files(rel: str):
     path = os.path.join(REPO, rel)
@@ -42,10 +66,81 @@ def _py_files(rel: str):
                 yield os.path.join(folder, name)
 
 
+def _is_test(path: str) -> bool:
+    rel = os.path.relpath(path, REPO)
+    return rel.split(os.sep)[0] == "tests" or os.path.basename(path).startswith("test_")
+
+
+def _dotted(path: str) -> str:
+    mod = os.path.relpath(path, REPO)[: -len(".py")].replace(os.sep, ".")
+    return mod[: -len(".__init__")] if mod.endswith(".__init__") else mod
+
+
 @functools.lru_cache(maxsize=None)
 def _parse(path: str) -> ast.Module:
     with open(path, encoding="utf-8") as fh:
         return ast.parse(fh.read(), path)
+
+
+class _Index:
+    """What one walk of a file sees: calls by callee name, every mention
+    of a name (with its line), loaded names, attribute names, string
+    constants and from-imports."""
+
+    def __init__(self, path: str):
+        self.calls: dict[str, list[ast.Call]] = defaultdict(list)
+        self.mentions: dict[str, list[int]] = defaultdict(list)
+        self.loaded: set[str] = set()
+        self.attrs: set[str] = set()
+        self.strings: set[str] = set()
+        self.imports: set[tuple[str, str]] = set()
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.Name):
+                self.mentions[node.id].append(node.lineno)
+                if not isinstance(node.ctx, ast.Store):
+                    self.loaded.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                self.mentions[node.attr].append(node.lineno)
+                self.attrs.add(node.attr)
+            elif isinstance(node, ast.Call):
+                func = node.func
+                if isinstance(func, ast.Name):
+                    self.calls[func.id].append(node)
+                elif isinstance(func, ast.Attribute):
+                    self.calls[func.attr].append(node)
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                self.strings.add(node.value)
+                if node.value.isidentifier():
+                    self.mentions[node.value].append(node.lineno)
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                source = _import_source(path, node) if isinstance(node, ast.ImportFrom) else None
+                for alias in node.names:
+                    self.mentions[alias.name.rsplit(".", 1)[-1]].append(node.lineno)
+                    if source is not None:
+                        self.imports.add((source, alias.name))
+        for lines in self.mentions.values():
+            lines.sort()
+
+
+def _import_source(path: str, node: ast.ImportFrom) -> str:
+    """Dotted module a from-import reads, relative imports resolved."""
+    if not node.level:
+        return node.module or ""
+    base = _dotted(path).split(".")
+    if not path.endswith("__init__.py"):
+        base = base[:-1]
+    base = base[: len(base) - (node.level - 1)]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
+@functools.lru_cache(maxsize=None)
+def _index(path: str) -> _Index:
+    return _Index(path)
+
+
+def _caller_files():
+    for rel in CALLERS:
+        yield from _py_files(rel)
 
 
 def _definitions():
@@ -74,18 +169,34 @@ def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
     return out
 
 
+def _parameters(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """(position or None for keyword-only, name) of every named parameter."""
+    args = fn.args
+    out = [(i, p.arg) for i, p in enumerate(args.posonlyargs + args.args)]
+    return out + [(None, k.arg) for k in args.kwonlyargs]
+
+
 def _calls_by_name() -> dict[str, list[ast.Call]]:
     calls: dict[str, list[ast.Call]] = defaultdict(list)
-    for rel in CALLERS:
-        for path in _py_files(rel):
-            for node in ast.walk(_parse(path)):
-                if isinstance(node, ast.Call):
-                    func = node.func
-                    if isinstance(func, ast.Name):
-                        calls[func.id].append(node)
-                    elif isinstance(func, ast.Attribute):
-                        calls[func.attr].append(node)
+    for path in _caller_files():
+        for name, found in _index(path).calls.items():
+            calls[name].extend(found)
     return calls
+
+
+def _given(call: ast.Call, position: int | None, name: str) -> ast.expr | None:
+    """The expression a call passes for a parameter; None when it passes
+    none or may pass one through ``*args``/``**kwargs``."""
+    for k in call.keywords:
+        if k.arg == name:
+            return k.value
+        if k.arg is None:
+            return None
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        return None
+    if position is not None and len(call.args) > position:
+        return call.args[position]
+    return None
 
 
 def _passes(call: ast.Call, position: int | None, name: str) -> bool:
@@ -96,22 +207,112 @@ def _passes(call: ast.Call, position: int | None, name: str) -> bool:
     return position is not None and len(call.args) > position
 
 
-def dead_knobs() -> list[str]:
+def _called_definitions():
+    """Definitions with a package-unique call name and at least one call,
+    with their calls and the shift a bound call applies to positions."""
     defs = list(_definitions())
     names = Counter(callee for *_rest, callee in defs)
     calls = _calls_by_name()
-    dead = []
     for module, qual, node, is_method, callee in defs:
         if names[callee] != 1 or not calls.get(callee):
             continue
         static = any(isinstance(d, ast.Name) and d.id == "staticmethod" for d in node.decorator_list)
         # a bound call's first argument fills the parameter after self
         shift = 1 if is_method and not static else 0
+        yield module, qual, node, shift, calls[callee]
+
+
+def dead_knobs() -> list[str]:
+    dead = []
+    for module, qual, node, shift, calls in _called_definitions():
         for position, param in _defaulted(node):
             slot = None if position is None else position - shift
-            if not any(_passes(c, slot, param) for c in calls[callee]):
+            if not any(_passes(c, slot, param) for c in calls):
                 dead.append(f"{module}: {qual}({param}=...)")
     return dead
+
+
+def one_literal_parameters() -> list[str]:
+    found = []
+    for module, qual, node, shift, calls in _called_definitions():
+        for position, param in _parameters(node)[shift:]:
+            slot = None if position is None else position - shift
+            given = [_given(c, slot, param) for c in calls]
+            if all(isinstance(g, ast.Constant) for g in given):
+                values = {repr(g.value) for g in given}
+                if len(values) == 1:
+                    found.append(f"{module}: {qual}({param}={values.pop()})")
+    return found
+
+
+def unreachable_definitions() -> list[str]:
+    mentions: Counter = Counter()
+    for path in _caller_files():
+        if not _is_test(path):
+            mentions.update({k: len(v) for k, v in _index(path).mentions.items()})
+    found = []
+    for path in _py_files("graby_spark"):
+        module = os.path.relpath(path, REPO)
+        own_file = _index(path).mentions
+        for node in _parse(path).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            defs = [(node.name, node)]
+            if isinstance(node, ast.ClassDef):
+                defs += [
+                    (f"{node.name}.{sub.name}", sub)
+                    for sub in node.body
+                    if isinstance(sub, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and not (sub.name.startswith("__") and sub.name.endswith("__"))
+                ]
+            for qual, d in defs:
+                # mentions inside the definition itself (recursion) do not reach it
+                lines = own_file.get(d.name, [])
+                own = bisect.bisect_right(lines, d.end_lineno) - bisect.bisect_left(lines, d.lineno)
+                if mentions[d.name] <= own:
+                    found.append(f"{module}: {qual}")
+    return found
+
+
+def _module_bindings(stmt: ast.stmt):
+    """(name, is import) per name a module-level statement binds."""
+    if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+        return
+    if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+        for alias in stmt.names:
+            yield (alias.asname or alias.name).split(".")[0], True
+    elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        for target in targets:
+            for n in ast.walk(target):
+                if isinstance(n, ast.Name):
+                    yield n.id, False
+
+
+def unused_module_names() -> list[str]:
+    attrs: set[str] = set()
+    strings: set[str] = set()
+    imported: set[tuple[str, str]] = set()
+    for path in _caller_files():
+        idx = _index(path)
+        attrs |= idx.attrs
+        strings |= idx.strings
+        imported |= idx.imports
+    found = []
+    for path in _py_files("graby_spark"):
+        idx, module = _index(path), _dotted(path)
+        for stmt in _parse(path).body:
+            for name, is_import in _module_bindings(stmt):
+                if name.startswith("__") and name.endswith("__"):
+                    continue
+                if name in idx.loaded or name in attrs or (module, name) in imported:
+                    continue
+                # a string names it: its own ``__all__``, or (for an
+                # assignment) a getattr anywhere
+                if name in (idx.strings if is_import else strings):
+                    continue
+                found.append(f"{os.path.relpath(path, REPO)}: {name}")
+    return found
 
 
 def test_no_dead_knobs():
@@ -119,6 +320,33 @@ def test_no_dead_knobs():
     assert not dead, (
         f"{len(dead)} defaulted parameter(s) that no caller passes — "
         "replace each with the value its default gives:\n  " + "\n  ".join(dead)
+    )
+
+
+def test_no_one_literal_parameters():
+    found = one_literal_parameters()
+    extra = [p for p in found if p not in ONE_LITERAL_ALLOWED]
+    assert not extra, (
+        f"{len(extra)} parameter(s) that every call passes as the same literal — "
+        "fold each into its function:\n  " + "\n  ".join(extra)
+    )
+    stale = ONE_LITERAL_ALLOWED - set(found)
+    assert not stale, f"allow-list entries the scan no longer finds: {sorted(stale)}"
+
+
+def test_no_unreachable_definitions():
+    found = unreachable_definitions()
+    assert not found, (
+        f"{len(found)} definition(s) that no non-test file reaches — "
+        "call each from the system or delete it with its tests:\n  " + "\n  ".join(found)
+    )
+
+
+def test_no_unused_module_names():
+    found = unused_module_names()
+    assert not found, (
+        f"{len(found)} module-level name(s) or import(s) that nothing reads:\n  "
+        + "\n  ".join(found)
     )
 
 
@@ -145,3 +373,50 @@ def test_scan_sees_a_planted_dead_knob(tmp_path, monkeypatch):
     (callers / "use.py").unlink()  # parses are cached by path
     (callers / "use2.py").write_text("op(1, 'id')\nop(1, k=4)\nC(1).m(2)\n")
     assert dead_knobs() == []
+
+
+def test_scans_see_planted_reach_faults(tmp_path, monkeypatch):
+    """One planted package: the one-literal, reach and unused-name scans
+    each flag their case, and each clears once a caller varies the
+    literal, reaches the helper or reads the name."""
+    monkeypatch.setitem(globals(), "REPO", str(tmp_path))
+    pkg = tmp_path / "graby_spark"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "import os\n"
+        "from re import compile as _compile\n\n"
+        "_LIMIT = 3\n"
+        "_USED = 4\n\n\n"
+        "def op(df, col, k=2):\n    return helper(df) + _USED\n\n\n"
+        "def helper(df):\n    return df\n\n\n"
+        "def only_tested(n):\n    return only_tested(n - 1) if n else 0\n\n\n"
+        "class C:\n"
+        "    def run(self, x):\n        return x\n\n"
+        "    def spare(self):\n        return self.run(1)\n"
+    )
+    tools = tmp_path / "tools"
+    tools.mkdir()
+    (tools / "use.py").write_text("op(1, 'url', k=5)\nop(2, 'url', 5)\nC().run(0)\n")
+    tests = tmp_path / "tests"
+    tests.mkdir()
+    (tests / "test_mod.py").write_text("only_tested(2)\nC().spare()\n")
+    assert one_literal_parameters() == [
+        "graby_spark/mod.py: op(col='url')",
+        "graby_spark/mod.py: op(k=5)",
+    ]
+    assert unreachable_definitions() == [
+        "graby_spark/mod.py: only_tested",
+        "graby_spark/mod.py: C.spare",
+    ]
+    assert unused_module_names() == [
+        "graby_spark/mod.py: os",
+        "graby_spark/mod.py: _compile",
+        "graby_spark/mod.py: _LIMIT",
+    ]
+    (tools / "more.py").write_text(
+        "from graby_spark.mod import _LIMIT\n"
+        "op(3, 'html', k=6)\nonly_tested(1)\nC().spare()\nmod.os.sep\nmod._compile\n"
+    )
+    assert one_literal_parameters() == []
+    assert unreachable_definitions() == []
+    assert unused_module_names() == []

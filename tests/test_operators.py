@@ -893,7 +893,7 @@ def test_pack_sequences_budget(spark):
 
     rows = [(i, "tok " * (50 + i % 200)) for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    packed = packing.pack_sequences(df, budget=512, n_buckets=8).collect()
+    packed = packing.pack_sequences(df, n_buckets=8).collect()
     # bins respect the budget except when a single doc exceeds it
     from collections import defaultdict
     bins = defaultdict(list)
@@ -902,10 +902,10 @@ def test_pack_sequences_budget(spark):
     for (_, _), toks in bins.items():
         assert sum(toks) <= 512 + max(toks) - 1  # cum-sum boundary property
     # deterministic across runs
-    again = packing.pack_sequences(df, budget=512, n_buckets=8).collect()
+    again = packing.pack_sequences(df, n_buckets=8).collect()
     assert sorted(map(tuple, packed)) == sorted(map(tuple, again))
     # window is bucket-partitioned, never a global sort
-    plan = packing.pack_sequences(df, budget=512, n_buckets=8)._jdf.queryExecution().executedPlan().toString()
+    plan = packing.pack_sequences(df, n_buckets=8)._jdf.queryExecution().executedPlan().toString()
     assert "partitionBy" not in plan or True
     assert "Window" in plan and "bucket" in plan
 
@@ -2094,33 +2094,30 @@ def test_host_graph_collapses_and_drops_internal(spark):
     assert ("a.com", "a.com") in {(r["src_host"], r["dst_host"]) for r in internal}
 
 
-def test_bucketed_join_and_agg_are_shuffle_free(spark):
-    from graby_spark.storage import plan_has_exchange, write_bucketed
+def test_host_graph_over_outlinks_compiles_whole_stage(spark):
+    """host_graph's filters on the resolved dst must not copy outlinks'
+    resolution chain into one generated method: with the interpreted
+    fallback off, an over-64 KB method fails the query instead of
+    logging and falling back."""
+    from graby_spark.operators.graph import host_graph, outlinks
 
-    docs = spark.range(0, 200).selectExpr("id as doc_id", "id % 13 as score")
-    more = spark.range(0, 200).selectExpr("id as doc_id", "id % 7 as grade")
+    pages = spark.createDataFrame(
+        [
+            ("http://a.com/d/p1", '<a href="http://b.com/x">x</a> <a href="../q">q</a>'),
+            ("http://a.com/d/p2", "<a href='//c.org/./y'>y</a> <a href=/n>n</a>"),
+            ("http://b.com/p3", '<a href="http://a.com/d/p1#top">t</a>'),
+        ],
+        ["url", "html"],
+    )
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
     try:
-        write_bucketed(docs, "t_bucket_docs", "doc_id", 4)
-        write_bucketed(more, "t_bucket_more", "doc_id", 4)
-        a = spark.table("t_bucket_docs")
-        b = spark.table("t_bucket_more")
-        joined = a.join(b, "doc_id")
-        assert not plan_has_exchange(joined)  # co-located buckets: no shuffle
-        assert joined.count() == 200
-        assert not plan_has_exchange(a.groupBy("doc_id").count())
-        # control — the same join without bucketing must shuffle
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        try:
-            assert plan_has_exchange(
-                docs.join(more, "doc_id")
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        rows = host_graph(outlinks(pages)).collect()
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucket_docs")
-        spark.sql("DROP TABLE IF EXISTS t_bucket_more")
+        spark.conf.set(key, old)
+    got = {(r["src_host"], r["dst_host"]): (r["weight"], r["n_src_pages"]) for r in rows}
+    assert got == {("a.com", "b.com"): (1, 1), ("a.com", "c.org"): (1, 1), ("b.com", "a.com"): (1, 1)}
 
 
 def test_chunk_tokens_windows(spark):
@@ -2198,22 +2195,6 @@ def test_script_profile_dominance_and_edge(spark):
     assert rows[5]["dominant"] == "none" and rows[5]["n_chars"] == 0
     assert rows[6]["dominant"] == "latin"  # 'latin' > 'greek' on the tie
     assert abs(rows[2]["script_ratio"] - rows[2]["n_cyrillic"] / rows[2]["n_chars"]) < 1e-15
-
-
-def test_partitioned_write_prunes_scan(spark, tmp_path):
-    from graby_spark.storage import partition_filters, write_partitioned
-
-    path = str(tmp_path / "part_docs")
-    docs = spark.range(0, 120).selectExpr(
-        "id as doc_id", "CASE WHEN id % 3 = 0 THEN 'en' WHEN id % 3 = 1 THEN 'fr' ELSE 'de' END as lang"
-    )
-    write_partitioned(docs, path, "lang")
-    back = spark.read.parquet(path)
-    pruned = back.where("lang = 'en'")
-    filt = partition_filters(pruned)
-    assert "lang" in filt and "en" in filt  # predicate reached the listing
-    assert pruned.count() == 40
-    assert partition_filters(back) == ""    # honest negative case
 
 
 def test_avi_mjpeg_roundtrip_exact():
@@ -2378,14 +2359,14 @@ def test_video_phash_container_independent(spark):
         [(1, bytearray(gif)), (2, bytearray(mj)), (3, bytearray(other))],
         "media_id long, payload binary",
     )
-    hashes = multimodal.video_phash(df, every_ms=500, max_frames=2)
+    hashes = multimodal.video_phash(df)
     rows = {(r["media_id"], r["frame_no"]): r for r in hashes.collect()}
     # 500ms schedule over 250ms frames: frames 0 and 2 sampled per video
     assert sorted(rows) == [(1, 0), (1, 2), (2, 0), (2, 2), (3, 0), (3, 2)]
     for f in (0, 2):
         assert rows[(1, f)]["phash"] == rows[(2, f)]["phash"]
         assert rows[(1, f)]["ts_ms"] == rows[(2, f)]["ts_ms"]
-    got = multimodal.video_phash_pairs(hashes, max_hamming=0, min_frames=2).collect()
+    got = multimodal.video_phash_pairs(hashes).collect()
     assert [(r["video_a"], r["video_b"], r["matched_frames"]) for r in got] == [(1, 2, 2)]
 
 
@@ -2903,7 +2884,7 @@ def test_ima_adpcm_wav_decode():
     assert _ima_step(0, 0, 8)[1] == 0
 
     sine = (3000 * np.sin(np.arange(2000) * 0.05)).astype(np.int16)
-    blob, recon = encode_wav_adpcm(sine, 8000, block_samples=505)
+    blob, recon = encode_wav_adpcm(sine)
     rate, out = decode_wav(blob)
     assert rate == 8000 and out.shape[1] == 1
     assert np.array_equal(out[:, 0], recon)
@@ -3346,7 +3327,7 @@ def test_pq_encode_matches_numpy_replay(spark):
 
     emb = similarity.make_clustered_embeddings(spark, n=300, dim=32).cache()
     try:
-        cbs = similarity._pq_codebooks(emb, "vec_id", "embedding", m=4, ks=16)
+        cbs = similarity._pq_codebooks(emb, m=4, ks=16)
         assert cbs.shape == (4, 16, 8)
         # replay the codebook selection independently
         rows = {r["vec_id"]: np.asarray(r["embedding"], float) for r in emb.collect()}
@@ -3456,7 +3437,7 @@ def test_key_skew_stats(spark):
 
     rows = [(i, "hot" if i % 5 == 0 else f"k{i % 50}") for i in range(500)]
     df = spark.createDataFrame(rows, "i long, domain string")
-    (s,) = key_skew_stats(df, "domain", n_partitions=32).collect()
+    (s,) = key_skew_stats(df, n_partitions=32).collect()
     assert s["n_rows"] == 500 and s["n_keys"] == 41
     assert s["max_key_rows"] == 100 and s["top_key"] == "hot"
     assert abs(s["avg_key_rows"] - 500 / 41) < 1e-9
@@ -3466,7 +3447,7 @@ def test_key_skew_stats(spark):
     uniform = spark.createDataFrame(
         [(i, f"u{i % 10}") for i in range(100)], "i long, domain string"
     )
-    (u,) = key_skew_stats(uniform, "domain", n_partitions=4).collect()
+    (u,) = key_skew_stats(uniform, n_partitions=4).collect()
     assert u["skew_ratio"] == 1.0 and u["suggested_salt"] == 1
 
 
@@ -3643,13 +3624,13 @@ def test_ivf_kmeans_topk_recall_and_partitioning(spark):
     independent thanks to the integer-grid assignment."""
     df = similarity.make_clustered_embeddings(spark, n=300, dim=32, n_clusters=6, sigma=0.2)
     exact = similarity.brute_force_topk(df, df, k=1).toPandas()
-    approx = similarity.ivf_kmeans_topk(df, df, k=1, n_cells=6, nprobe=2, n_iter=2).toPandas()
+    approx = similarity.ivf_kmeans_topk(df, df, k=1, n_cells=6, nprobe=2).toPandas()
     truth = dict(zip(exact.query_id, exact.neighbor_id))
     got = dict(zip(approx.query_id, approx.neighbor_id))
     hits = sum(1 for q, n in truth.items() if got.get(q) == n)
     assert hits / len(truth) >= 0.9
     b = similarity.ivf_kmeans_topk(
-        df.repartition(11), df.repartition(7), k=1, n_cells=6, nprobe=2, n_iter=2
+        df.repartition(11), df.repartition(7), k=1, n_cells=6, nprobe=2
     ).toPandas()
     key = lambda d: sorted(
         map(tuple, d[["query_id", "neighbor_id", "cosine", "rank"]].values.tolist())
@@ -3668,7 +3649,7 @@ def test_ivf_kmeans_topk_planted_twin(spark):
         "vec_id long, embedding array<float>",
     )
     corpus = base.select("vec_id", "embedding").unionByName(twin)
-    out = similarity.ivf_kmeans_topk(corpus, twin, k=1, n_cells=5, nprobe=1, n_iter=2).toPandas()
+    out = similarity.ivf_kmeans_topk(corpus, twin, k=1, n_cells=5, nprobe=1).toPandas()
     assert len(out) == 1
     assert out.neighbor_id.iloc[0] == 7
     assert out.cosine.iloc[0] > 0.999

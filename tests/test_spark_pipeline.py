@@ -174,32 +174,6 @@ def test_manifest_write_and_resume(spark, extracted, tmp_path_factory):
     assert len(urls) == 500 and len(set(urls)) == 500  # no dup, no missing
 
 
-def test_bucketed_join_is_exchange_free(spark, extracted):
-    """storage.write_bucketed: two tables bucketed+sorted on url join
-    WITHOUT any exchange on either side (the co-located join shape for the
-    engine's recurring url-keyed joins at corpus scale)."""
-    from graby_spark.storage import write_bucketed
-
-    pages = build_pages_df(spark, SF_DIR).select("url", "warc_ts", "lang")
-    meta = extracted.select("url", "title", "is_success")
-    write_bucketed(pages, "t_pages_b", "url", 8)
-    write_bucketed(meta, "t_meta_b", "url", 8)
-    try:
-        old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = spark.table("t_pages_b").join(spark.table("t_meta_b"), "url")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan  # co-located: no shuffle either side
-            assert joined.count() == 500
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_pages_b")
-        spark.sql("DROP TABLE IF EXISTS t_meta_b")
-
-
 def test_manifest_snapshot_time_travel(spark, extracted, tmp_path_factory):
     """Iceberg read-at-snapshot model: a reader/resume pinned at snapshot N
     is reproducible while snapshot N+1 lands."""
@@ -281,7 +255,7 @@ def test_manifest_expire_snapshots(spark, extracted, tmp_path_factory):
         ).collect()
     )
 
-    res = expire_snapshots(spark, manifest_path, keep_last=2)
+    res = expire_snapshots(spark, manifest_path)
     assert res["snapshots_before"] == 3 and res["snapshots_expired"] == 1
     assert res["rows_after"] < res["rows_before"]
 
@@ -325,8 +299,8 @@ def test_manifest_expire_snapshots(spark, extracted, tmp_path_factory):
     # resume over the compacted manifest still sees every bucket complete
     pages = build_pages_df(spark, SF_DIR)
     assert filter_resumable(spark, pages, manifest_path).count() == 0
-    # idempotent: nothing left to expire at keep_last=2
-    res2 = expire_snapshots(spark, manifest_path, keep_last=2)
+    # idempotent: nothing left to expire
+    res2 = expire_snapshots(spark, manifest_path)
     assert res2["snapshots_expired"] == 0 and res2["rows_after"] == res["rows_after"]
 
 
@@ -498,7 +472,7 @@ def test_sessionize_batch_matches_oracle(spark):
     events = spark.read.parquet(f"{SF_DIR}/events.parquet")
     got = sorted(
         (r["user_id"], r["session_start"], r["session_end"], r["events"], round(r["total_value"], 6))
-        for r in sessionize_batch(events, gap_seconds=3600).collect()
+        for r in sessionize_batch(events).collect()
     )
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet'")
@@ -546,7 +520,7 @@ def test_sessionize_stream_stateful(spark, tmp_path_factory):
     df.write.parquet(in_dir)
 
     stream = spark.readStream.schema(df.schema).parquet(in_dir)
-    sessions = sessionize_stream(stream, gap_seconds=1800)
+    sessions = sessionize_stream(stream)
     q = (
         sessions.writeStream.format("parquet")
         .option("path", out_dir)

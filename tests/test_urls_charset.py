@@ -139,16 +139,6 @@ def test_excerpt_collapses_whitespace():
     assert excerpt("a\n\t b   c") == "a b c"
 
 
-def test_rewrite_url():
-    from graby_spark.urls import rewrite_url
-
-    assert rewrite_url("https://docs.google.com/Doc?id=x") == "https://docs.google.com/View?id=x"
-    assert rewrite_url("https://en.m.wikipedia.org/wiki/X") == "https://en.wikipedia.org/wiki/X"
-    assert rewrite_url("http://a.com/page#!section/2") == "http://a.com/page?_escaped_fragment_=section/2"
-    assert rewrite_url("http://a.com/p?x=1#!f") == "http://a.com/p?x=1&_escaped_fragment_=f"
-    assert rewrite_url("http://plain.com/x") == "http://plain.com/x"
-
-
 def test_canonical_url_expr():
     from graby_spark.session import get_spark
     from graby_spark.urls import canonical_url_expr
@@ -164,7 +154,7 @@ def test_canonical_url_expr():
         ("not a url", "not a url"),
     ]
     df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
-    got = [r["c"] for r in df.select(canonical_url_expr("url").alias("c")).collect()]
+    got = [r["c"] for r in df.select(canonical_url_expr().alias("c")).collect()]
     assert got == [want for _, want in cases]
 
 
