@@ -1257,14 +1257,14 @@ def q_pipeline_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graby_spark.operators import packing, search
 
     out = _extracted(spark, sf_dir).where("is_success")
-    chunks = packing.chunk_tokens(out, id_col="url", text_col="text", size=24, overlap=6)
+    chunks = packing.chunk_tokens(out, id_col="url", size=24, overlap=6)
     chunk_docs = chunks.selectExpr(
         "concat(doc, '#', cast(chunk_idx as string)) as cid", "chunk as text"
     )
     queries = spark.createDataFrame(
         _BM25_QUERIES, "query_id long, terms array<string>"
     )
-    return search.bm25_topk(chunk_docs, queries, k=10, id_col="cid", text_col="text")
+    return search.bm25_topk(chunk_docs, queries, k=10, id_col="cid")
 
 
 def q_source_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1754,7 +1754,7 @@ def q_pipeline_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graby_spark.operators import packing
 
     out = _extracted(spark, sf_dir).where("is_success")
-    return packing.chunk_tokens(out, id_col="url", text_col="text", size=24, overlap=6)
+    return packing.chunk_tokens(out, id_col="url", size=24, overlap=6)
 
 
 def q_dedup_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2168,7 +2168,7 @@ def q_media_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (mid * 11 + f * 17 + np.arange(nby * nbx)) % 256
                 ).astype(np.uint8).reshape(nby, nbx)
                 frames.append(np.kron(blocks, np.ones((8, 8), dtype=np.uint8)))
-            out.append(encode_avi_mjpeg(frames, rate=4, scale=1, quant_luma=ones))
+            out.append(encode_avi_mjpeg(frames, rate=4, quant_luma=ones))
         return pd.Series(out)
 
     media = docs.select(F.col("doc_id").alias("media_id")).withColumn(
@@ -2241,7 +2241,7 @@ def q_media_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays the ENTIRE composition: hash + band join in SQL
     feeding a recursive-CTE transitive closure."""
     pairs = q_media_phash_dedup(spark, sf_dir)
-    clusters = dedup.duplicate_clusters(pairs, a_col="doc_a", b_col="doc_b")
+    clusters = dedup.duplicate_clusters(pairs)
     return clusters.select(
         F.col("doc").cast("long").alias("doc"),
         F.col("canonical").cast("long").alias("canonical"),
@@ -2344,7 +2344,7 @@ def q_pipeline_media(spark: SparkSession, sf_dir: str) -> DataFrame:
             elif t == 5:
                 frame = np.zeros((8, 8 * (1 + mid % 3)), dtype=np.uint8)
                 out.append(
-                    encode_avi_mjpeg([frame] * (2 + mid % 5), rate=4, scale=1)
+                    encode_avi_mjpeg([frame] * (2 + mid % 5), rate=4)
                 )
             else:
                 out.append(
@@ -2390,11 +2390,7 @@ def q_media_g711_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             n = 60 + mid % 40
             codes = ((mid * 31 + np.arange(n) * 7) % 256).astype(np.uint8)
             out.append(
-                encode_wav_g711(
-                    codes,
-                    law="mulaw" if mid % 2 == 0 else "alaw",
-                    sample_rate=8000,
-                )
+                encode_wav_g711(codes, law="mulaw" if mid % 2 == 0 else "alaw")
             )
         return pd.Series(out)
 
@@ -3200,7 +3196,7 @@ def q_ann_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship(spark)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     topk = similarity.ivf_sq8_topk(
-        emb, emb, k=3, n_cells=8, nprobe=2, n_iter=2, refine=8
+        emb, emb, k=3, n_cells=8, nprobe=2, n_iter=2
     )
     return topk.select(
         "query_id", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank")

@@ -296,8 +296,8 @@ class Element(Node):
 
     def iter_list(self, tag: str | None = None) -> list["Element"]:
         """List-returning twin of ``iter`` — measurably faster for the
-        whole-tree scans the XPath fast paths do (no generator resume per
-        element)."""
+        whole-tree scans of compiled XPath descendant steps (no generator
+        resume per element)."""
         out: list[Element] = []
         append = out.append
         stack = self.children[::-1]

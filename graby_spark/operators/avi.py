@@ -53,13 +53,12 @@ def _list(fourcc: bytes, payload: bytes) -> bytes:
 def encode_avi_mjpeg(
     frames: list[np.ndarray],
     rate: int = 25,
-    scale: int = 1,
     quant_luma: np.ndarray | None = None,
 ) -> bytes:
     """MJPEG AVI from a list of (h, w[, 3]) uint8 frames.
 
-    ``rate``/``scale`` follow the AVI stream-header convention: the
-    stream plays at ``rate/scale`` frames per second.  All frames must
+    The stream plays at ``rate`` frames per second (AVI stream-header
+    dwRate/dwScale with dwScale 1).  All frames must
     share one geometry (the container declares a single
     BITMAPINFOHEADER).  ``quant_luma=np.ones((8, 8))`` gives the
     unit-quantizer streams the exactness oracles rely on (a constant
@@ -73,17 +72,17 @@ def encode_avi_mjpeg(
     for f in frames:
         if f.shape[:2] != (h, w):
             raise ValueError("all MJPEG frames must share one geometry")
-    if rate <= 0 or scale <= 0:
-        raise ValueError("rate and scale must be positive")
+    if rate <= 0:
+        raise ValueError("rate must be positive")
     payloads = [encode_jpeg(f, quant_luma=quant_luma) for f in frames]
     n = len(payloads)
-    us_per_frame = scale * 1_000_000 // rate
+    us_per_frame = 1_000_000 // rate
     max_bytes = max(len(p) for p in payloads)
 
     avih = struct.pack(
         "<14I",
         us_per_frame,  # dwMicroSecPerFrame
-        max_bytes * rate // max(scale, 1),  # dwMaxBytesPerSec (advisory)
+        max_bytes * rate,  # dwMaxBytesPerSec (advisory)
         0,  # dwPaddingGranularity
         _AVIF_HASINDEX,  # dwFlags
         n,  # dwTotalFrames
@@ -106,7 +105,7 @@ def encode_avi_mjpeg(
             0,
             0,  # wPriority, wLanguage
             0,  # dwInitialFrames
-            scale,
+            1,
             rate,  # dwScale, dwRate
             0,  # dwStart
             n,  # dwLength (frames)

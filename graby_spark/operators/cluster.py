@@ -74,10 +74,11 @@ def _u9_batch(vecs) -> np.ndarray:
         return np.floor(mat / np.sqrt(acc)[:, None] * _GRID + 0.5).astype(np.int64)
 
 
-def _src_df(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, vec) projection — raw float vectors cross the Arrow boundary
-    once; the grid snap happens in-kernel via :func:`_u9_batch`."""
-    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+def _src_df(df: DataFrame) -> DataFrame:
+    """(id, vec) projection of (vec_id, embedding) — raw float vectors
+    cross the Arrow boundary once; the grid snap happens in-kernel via
+    :func:`_u9_batch`."""
+    return df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
 
 
 def _train_partials_fn(cents_bc, dim: int):
@@ -123,13 +124,11 @@ def _train_partials_fn(cents_bc, dim: int):
 
 def kmeans_train(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     n_iter: int = 2,
 ) -> np.ndarray:
-    """Train spherical k-means; returns (k, dim) int64 grid-snapped unit
-    centroids.  Init = the md5-ordered corpus sample (the ivf_topk /
+    """Train spherical k-means over (vec_id, embedding); returns (k, dim)
+    int64 grid-snapped unit centroids.  Init = the md5-ordered corpus sample (the ivf_topk /
     semantic_dedup convention), then ``n_iter`` exact Lloyd steps:
     integer-dot argmax assignment, exact integer per-cell sums, one
     bounded driver renormalize per iteration.  Empty cells keep their
@@ -141,7 +140,7 @@ def kmeans_train(
         StructType,
     )
 
-    src = _src_df(df, id_col, vec_col)
+    src = _src_df(df)
     init_rows = (
         src.orderBy(
             F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 15), 16, 10)
@@ -208,7 +207,7 @@ def kmeans_embeddings(df: DataFrame, k: int = 8, n_iter: int = 2) -> DataFrame:
         StructType,
     )
 
-    cents = kmeans_train(df, "vec_id", "embedding", k=k, n_iter=n_iter)
+    cents = kmeans_train(df, k=k, n_iter=n_iter)
     cents_bc = df.sparkSession.sparkContext.broadcast(cents)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -234,4 +233,4 @@ def kmeans_embeddings(df: DataFrame, k: int = 8, n_iter: int = 2) -> DataFrame:
             StructField("cosine", DoubleType()),
         ]
     )
-    return _src_df(df, "vec_id", "embedding").mapInPandas(fn, schema)
+    return _src_df(df).mapInPandas(fn, schema)

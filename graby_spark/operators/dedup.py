@@ -63,13 +63,17 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def exact_duplicates(df: DataFrame, sample_cap: int = 10) -> DataFrame:
+#: ids kept per exact-duplicate group (``exact_duplicates``' sample_ids)
+SAMPLE_IDS = 10
+
+
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Groups of byte-identical (whitespace-normalized) texts.
 
     Returns (group_hash, dup_count, canonical_id, sample_ids) for groups
     with >1 member.  The groupBy key is the 64-bit hash — the text itself
     never shuffles — and group payloads are BOUNDED: canonical_id is
-    min(id), sample_ids is the first ``sample_cap`` ids (row_number inside
+    min(id), sample_ids is the first :data:`SAMPLE_IDS` ids (row_number inside
     the group), so a pathological mega-group (the empty page, a paywall
     stub duplicated millions of times at corpus scale) aggregates to one
     constant-size row instead of an OOM-sized collect_list.  The window
@@ -88,7 +92,7 @@ def exact_duplicates(df: DataFrame, sample_cap: int = 10) -> DataFrame:
         hashed.withColumn("_rn", F.row_number().over(w))
         .withColumn("dup_count", F.count("*").over(wu))
         .withColumn("canonical_id", F.min("_id").over(wu))
-        .where((F.col("dup_count") > 1) & (F.col("_rn") <= sample_cap))
+        .where((F.col("dup_count") > 1) & (F.col("_rn") <= SAMPLE_IDS))
         .groupBy("group_hash", "dup_count", "canonical_id")
         .agg(F.sort_array(F.collect_list("_id")).alias("sample_ids"))
         .select("group_hash", "dup_count", "canonical_id", "sample_ids")
@@ -169,14 +173,12 @@ def ngram_jaccard_pairs(
 
 def minhash_signatures(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_perm: int = NUM_PERM,
     shingle_k: int = SHINGLE_K,
 ) -> DataFrame:
     """(doc, signature:array<long>) minhash signatures (stable vectorized
     shingle hashes — deterministic across Python workers)."""
-    src = _ensure_parallelism(df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("text")))
+    src = _ensure_parallelism(df.select(F.col("doc_id").alias("doc"), "text"))
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     schema = StructType(
@@ -271,7 +273,7 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     bands = _bands_for_threshold(threshold, NUM_PERM)
     rows = NUM_PERM // bands
     df = _ensure_parallelism(df)
-    sigs = minhash_signatures(df, "doc_id", "text", NUM_PERM, SHINGLE_K)
+    sigs = minhash_signatures(df, NUM_PERM, SHINGLE_K)
     banded = _banded(sigs, bands, rows)
     cand = (
         banded.alias("x")
@@ -294,9 +296,7 @@ SIMHASH_BANDS = 4
 _SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS
 
 
-def simhash(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """60-bit SimHash per document plus the four 15-bit band keys used for
     near-dup candidate bucketing.
 
@@ -307,7 +307,7 @@ def simhash(
     60-slot accumulator, so each document is hashed in a single pass with
     no shuffle at all.
     """
-    src = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("text"))
+    src = df.select(F.col("doc_id").alias("doc"), "text")
     tokens = F.filter(
         F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+"),
         lambda t: t != "",
@@ -366,8 +366,8 @@ def embedding_near_dups(
     to force the exact join regardless of size."""
     if max_exact_rows is not None:
         if df.count() > max_exact_rows:
-            return embedding_near_dups_lsh(df, "vec_id", "embedding", threshold)
-    norm = _with_norm(df, "vec_id", "embedding")
+            return embedding_near_dups_lsh(df, threshold)
+    norm = _with_norm(df)
     a = norm.select(F.col("id").alias("id_a"), F.col("unit").alias("unit_a"))
     b = norm.select(F.col("id").alias("id_b"), F.col("unit").alias("unit_b"))
     return (
@@ -387,8 +387,6 @@ def embedding_near_dups(
 
 def embedding_near_dups_lsh(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
     dim: int | None = None,
 ) -> DataFrame:
@@ -399,7 +397,7 @@ def embedding_near_dups_lsh(
     recall at dedup-grade thresholds is effectively 1)."""
     from .similarity import lsh_signatures
 
-    sigs = lsh_signatures(df, id_col, vec_col, dim)
+    sigs = lsh_signatures(df, dim)
     cand = (
         sigs.alias("x")
         .join(sigs.alias("y"), ["table", "bucket"])
@@ -407,7 +405,7 @@ def embedding_near_dups_lsh(
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
         .distinct()
     )
-    norm = _with_norm(df, id_col, vec_col)
+    norm = _with_norm(df)
     a = norm.select(F.col("id").alias("id_a"), F.col("unit").alias("unit_a"))
     b = norm.select(F.col("id").alias("id_b"), F.col("unit").alias("unit_b"))
     return (
@@ -432,7 +430,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     must agree on one of 4 bands), verified by exact hamming distance.
     The band join shuffles only (band, bucket, doc, simhash) — never text —
     and candidate volume is O(n · bands) at corpus scale."""
-    hashes = simhash(df, "doc_id", "text").cache()
+    hashes = simhash(df).cache()
     bands = hashes.selectExpr(
         "doc", "simhash", "stack(4, 0, band0, 1, band1, 2, band2, 3, band3) as (band, bucket)"
     )
@@ -502,8 +500,6 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 def duplicate_clusters(
     pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
     star_after: int = 4,
     star_max_iter: int = 30,
     stats: dict | None = None,
@@ -531,7 +527,7 @@ def duplicate_clusters(
     ``stats`` (optional dict) receives {"minlabel_rounds", "star_rounds"}
     for observability/tests.
     """
-    edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     edges = (
         edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -650,13 +646,14 @@ def keep_best(clusters: DataFrame, scores: DataFrame) -> DataFrame:
     )
 
 
-def _with_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    vec_d = F.transform(F.col(vec_col), lambda v: v.cast("double"))
+def _with_norm(df: DataFrame) -> DataFrame:
+    """(id, unit): each (vec_id, embedding) row's unit vector."""
+    vec_d = F.transform(F.col("embedding"), lambda v: v.cast("double"))
     norm = F.sqrt(
         F.aggregate(vec_d, F.lit(0.0).cast("double"), lambda acc, v: acc + v * v)
     )
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         F.transform(vec_d, lambda v: v / norm).alias("unit"),
     )
 
@@ -1006,7 +1003,7 @@ def build_minhash_index(
     exact-verify shingle hashes alongside the signature so the verify
     step needs no corpus text either.
     """
-    sigs = minhash_signatures(df, "doc_id", "text", num_perm, shingle_k)
+    sigs = minhash_signatures(df, num_perm, shingle_k)
     # shingle_k rides along as a column: a probe with a different k would
     # silently share zero buckets with the index (same-length signatures
     # over different shingles), so the probe validates it
@@ -1055,7 +1052,7 @@ def incremental_minhash_pairs(
             f"probe requested shingle_k={shingle_k}"
         )
     new_df = _ensure_parallelism(new_df)
-    new_sigs = minhash_signatures(new_df, "doc_id", "text", num_perm, shingle_k)
+    new_sigs = minhash_signatures(new_df, num_perm, shingle_k)
     new_b = _banded(new_sigs, bands, rows).select(
         F.col("doc").alias("new_doc"), "band", "bucket"
     )
@@ -1197,7 +1194,7 @@ def semantic_dedup(
     if n_iter > 0:
         from graby_spark.operators.cluster import kmeans_train
 
-        cents = kmeans_train(df, "vec_id", "embedding", k=n_clusters, n_iter=n_iter)
+        cents = kmeans_train(df, k=n_clusters, n_iter=n_iter)
         grid = True
     else:
         cent_rows = (

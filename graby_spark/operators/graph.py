@@ -855,11 +855,7 @@ def translation_pairs(pages: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    sides = language_id(
-        pages.select("url", "text"),
-        id_col="url",
-        text_col="text",
-    ).select("url", "lang_guess")
+    sides = language_id(pages.select("url", "text"), id_col="url").select("url", "lang_guess")
     lens = pages.select("url", F.length(F.trim(F.col("text"))).alias("text_len"))
     agreed = (
         members.join(sides, "url")

@@ -1746,12 +1746,10 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
     return bytes(hdr) + payload
 
 
-def encode_wav_g711(
-    codes: np.ndarray, law: str = "mulaw", sample_rate: int = 8000
-) -> bytes:
-    """Canonical G.711 WAV (format tag 7 mu-law / 6 A-law, 8-bit) from a
-    1-D array of companded bytes — the fixture writer for the telephony
-    decode path, byte-deterministic."""
+def encode_wav_g711(codes: np.ndarray, law: str = "mulaw") -> bytes:
+    """Canonical G.711 WAV (format tag 7 mu-law / 6 A-law, 8-bit, 8 kHz:
+    the telephony rate) from a 1-D array of companded bytes — the fixture
+    writer for the telephony decode path, byte-deterministic."""
     a = np.asarray(codes, dtype=np.uint8).reshape(-1)
     tag = {"mulaw": 7, "alaw": 6}[law]
     payload = a.tobytes()
@@ -1759,7 +1757,7 @@ def encode_wav_g711(
     hdr += (36 + len(payload)).to_bytes(4, "little")
     hdr += b"WAVEfmt " + (16).to_bytes(4, "little")
     hdr += tag.to_bytes(2, "little") + (1).to_bytes(2, "little")
-    hdr += sample_rate.to_bytes(4, "little") + sample_rate.to_bytes(4, "little")
+    hdr += (8000).to_bytes(4, "little") * 2  # sample rate, byte rate
     hdr += (1).to_bytes(2, "little") + (8).to_bytes(2, "little")
     hdr += b"data" + len(payload).to_bytes(4, "little")
     return bytes(hdr) + payload

@@ -96,12 +96,11 @@ def sample_by_source(
 def chunk_tokens(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     size: int = 128,
     overlap: int = 32,
 ) -> DataFrame:
-    """Sliding-window token chunking: split each document's whitespace
-    tokens into windows of ``size`` tokens advancing by ``size - overlap``
+    """Sliding-window token chunking: split each document's ``text`` into
+    whitespace tokens, then into windows of ``size`` tokens advancing by ``size - overlap``
     (so consecutive chunks share ``overlap`` tokens of context) — the
     standard preparation for embedding/RAG indexes and for training
     examples longer than one document slice.
@@ -120,7 +119,7 @@ def chunk_tokens(
         raise ValueError("overlap must be smaller than size")
     stride = size - overlap
     tokens = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"), lambda t: t != ""
+        F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"), lambda t: t != ""
     )
     base = df.select(
         F.col(id_col).alias("doc"),

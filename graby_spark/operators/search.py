@@ -42,14 +42,14 @@ K1 = 1.2
 B = 0.75
 
 
-def postings(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def postings(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Term-frequency postings (doc, token, tf) over whitespace tokens of
-    the lowercased text."""
+    the lowercased ``text``."""
     toks = df.select(
         F.col(id_col).alias("doc"),
         F.explode(
             F.filter(
-                F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"),
+                F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+"),
                 lambda t: t != "",
             )
         ).alias("token"),
@@ -57,9 +57,7 @@ def postings(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> D
     return toks.groupBy("doc", "token").agg(F.count("*").alias("tf"))
 
 
-def build_search_index(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def build_search_index(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Persistent BM25 index for a corpus: one row per (doc, token)
     posting carrying everything scoring needs — ``tf``, the document
     length ``dl``, the token's document frequency ``df``, and the two
@@ -72,7 +70,7 @@ def build_search_index(
     constant columns cost ~16 bytes/row and in exchange the probe is
     collect-free: no driver-side action computes the scalars.
     """
-    post = postings(df, id_col, text_col)
+    post = postings(df, id_col)
     dl = post.groupBy("doc").agg(F.sum("tf").alias("dl"))
     df_tbl = post.groupBy("token").agg(F.countDistinct("doc").alias("df"))
     stats = df.agg(F.count("*").alias("n_docs")).crossJoin(
@@ -148,13 +146,12 @@ def bm25_topk(
     queries: DataFrame,
     k: int = 10,
     id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """One-shot BM25 top-k: :func:`build_search_index` composed with
+    """One-shot BM25 top-k over ``text``: :func:`build_search_index` composed with
     :func:`bm25_topk_indexed` (see those for semantics and scale shape).
     Use the two-step form when the same corpus serves many query
     batches."""
-    return bm25_topk_indexed(build_search_index(docs, id_col, text_col), queries, k=k)
+    return bm25_topk_indexed(build_search_index(docs, id_col), queries, k=k)
 
 
 def positional_postings(df: DataFrame) -> DataFrame:

@@ -232,17 +232,15 @@ def _hyperplanes(dim: int) -> np.ndarray:
     return rng.standard_normal((_N_TABLES, _N_PLANES, dim))
 
 
-def lsh_signatures(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", dim: int | None = None
-) -> DataFrame:
-    """(id, table, bucket) random-hyperplane signatures — ``_N_TABLES``
+def lsh_signatures(df: DataFrame, dim: int | None = None) -> DataFrame:
+    """(id, table, bucket) random-hyperplane signatures of (vec_id, embedding) — ``_N_TABLES``
     independent hash tables of ``_N_PLANES`` planes each (multi-table LSH
     trades bucket-join fanout for recall).  ``dim`` defaults to the actual
     vector width (planes are a fixed seeded function of dim, so inference
     is deterministic across executors and runs)."""
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    src = df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     schema = StructType(
         [
             StructField("id", src.schema[0].dataType),
@@ -281,8 +279,8 @@ def lsh_topk(
     """ANN top-k: bucket join on hyperplane signature, exact rerank of
     candidates.  Recall < 1 by construction; rank semantics match
     brute_force_topk on the candidate set."""
-    c_sig = lsh_signatures(corpus, "vec_id", "embedding", dim)
-    q_sig = lsh_signatures(queries, "vec_id", "embedding", dim)
+    c_sig = lsh_signatures(corpus, dim)
+    q_sig = lsh_signatures(queries, dim)
     cand = (
         q_sig.select(F.col("id").alias("query_id"), "table", "bucket")
         .join(c_sig.select(F.col("id").alias("neighbor_id"), "table", "bucket"), ["table", "bucket"])
@@ -463,7 +461,7 @@ def ivf_kmeans_topk(
 
     from graby_spark.operators.cluster import _src_df, _u9_batch, kmeans_train
 
-    cents = kmeans_train(corpus, "vec_id", "embedding", k=n_cells, n_iter=2)
+    cents = kmeans_train(corpus, k=n_cells, n_iter=2)
     cents_bc = corpus.sparkSession.sparkContext.broadcast(cents)
 
     def assign(n_best: int):
@@ -491,8 +489,8 @@ def ivf_kmeans_topk(
             StructField("cell", IntegerType()),
         ]
     )
-    c_cells = _src_df(corpus, "vec_id", "embedding").mapInPandas(assign(1), schema)
-    q_cells = _src_df(queries, "vec_id", "embedding").mapInPandas(assign(nprobe), schema)
+    c_cells = _src_df(corpus).mapInPandas(assign(1), schema)
+    q_cells = _src_df(queries).mapInPandas(assign(nprobe), schema)
     cand = (
         q_cells.select(F.col("id").alias("query_id"), "cell")
         .join(c_cells.select(F.col("id").alias("neighbor_id"), "cell"), "cell")
@@ -534,13 +532,8 @@ def _pq_codebooks(corpus: DataFrame, m: int, ks: int) -> np.ndarray:
     )  # (m, ks, d_sub)
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Corpus → (id, codes) under product quantization: each
+def pq_encode(corpus: DataFrame, codebooks: np.ndarray) -> DataFrame:
+    """Corpus (vec_id, embedding) → (id, codes) under product quantization: each
     unit-normalized vector is sliced into ``m`` subvectors and each
     subvector replaced by the index of its nearest codebook centroid
     (L2, which on a shared-norm slice ranks like dot product but stays
@@ -578,11 +571,11 @@ def pq_encode(
 
     schema = StructType(
         [
-            StructField("id", corpus.schema[id_col].dataType),
+            StructField("id", corpus.schema["vec_id"].dataType),
             StructField("codes", ArrayType(IntegerType())),
         ]
     )
-    src = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    src = corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     return src.mapInPandas(fn, schema)
 
 
@@ -622,7 +615,7 @@ def pq_topk(
     standard finer-grained variant and would bolt on here.
     """
     codebooks = _pq_codebooks(corpus, PQ_M, PQ_KS)
-    codes = pq_encode(corpus, codebooks, "vec_id", "embedding")
+    codes = pq_encode(corpus, codebooks)
 
     q_rows = _collect_probe_rows(queries)
     q_ids = [r["qid"] for r in q_rows]
@@ -729,6 +722,10 @@ def sq8_encode(df: DataFrame) -> DataFrame:
     )
 
 
+#: ivf_sq8_topk's candidate cut, as a multiple of k
+SQ8_REFINE = 8
+
+
 def ivf_sq8_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -736,7 +733,6 @@ def ivf_sq8_topk(
     n_cells: int = 8,
     nprobe: int = 2,
     n_iter: int = 2,
-    refine: int = 8,
 ) -> DataFrame:
     """IVF-SQ8 ANN — the FAISS ``IVF,SQ8`` index shape, completing the
     family next to IVF-flat (:func:`ivf_kmeans_topk`) and IVF-PQ
@@ -764,8 +760,8 @@ def ivf_sq8_topk(
     HOF expressions lets Catalyst collapse them through the joins and
     recompute codes per candidate PAIR, measured 25x slower); the scan
     joins codes on cell id (partition-pruning key at scale), one
-    window cuts refine·k candidates, and only candidates pay the exact
-    float rerank (:func:`_exact_rerank`)."""
+    window cuts :data:`SQ8_REFINE`·k candidates, and only candidates pay
+    the exact float rerank (:func:`_exact_rerank`)."""
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -776,7 +772,7 @@ def ivf_sq8_topk(
 
     from graby_spark.operators.cluster import _src_df, _u9_batch, kmeans_train
 
-    cents = kmeans_train(corpus, "vec_id", "embedding", k=n_cells, n_iter=n_iter)
+    cents = kmeans_train(corpus, k=n_cells, n_iter=n_iter)
     cents_bc = corpus.sparkSession.sparkContext.broadcast(cents)
 
     def assign(n_best: int):
@@ -812,7 +808,7 @@ def ivf_sq8_topk(
             StructField("codes", ArrayType(IntegerType())),
         ]
     )
-    c_codes = _src_df(corpus, "vec_id", "embedding").mapInPandas(assign(1), schema)
+    c_codes = _src_df(corpus).mapInPandas(assign(1), schema)
 
     # r06 scan shape (mirrors ivfpq_topk, guide §2.3 "shuffle keys and
     # metadata instead of payloads"): the probe set is bounded, so its
@@ -821,7 +817,7 @@ def ivf_sq8_topk(
     # same floor/scale arithmetic — values identical), broadcast, and the
     # cell join + per-pair interpreted JVM intdot fold is replaced by ONE
     # Arrow kernel over the corpus codes that emits each query's per-batch
-    # top refine*k under the EXACT window order (approx DESC, id ASC —
+    # top SQ8_REFINE*k under the EXACT window order (approx DESC, id ASC —
     # approx is computed bit-identically: int64 code dot, then the same
     # (q_scale * n_scale) * dot IEEE sequence), so the union of batch tops
     # provably contains the global candidate cut.
@@ -836,7 +832,7 @@ def ivf_sq8_topk(
     sq8_bc = corpus.sparkSession.sparkContext.broadcast(
         (q_ids, q_probe, q_scale, q_codes_i64)
     )
-    n_cand = refine * k
+    n_cand = SQ8_REFINE * k
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, probes, qscale, qcodes = sq8_bc.value

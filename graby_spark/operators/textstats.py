@@ -206,13 +206,13 @@ def linear_quality_score_weighted(df: DataFrame, weights: DataFrame) -> DataFram
     )
 
 
-def language_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Stopword-vote language heuristic over en/fr/es/de + CJK char check.
+def language_id(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Stopword-vote language heuristic on ``text`` over en/fr/es/de + CJK char check.
 
     Pure CASE/array expressions; deterministic tie-break by language-code
     order (en < fr < es < de checked in that order, zh wins when CJK chars
     dominate)."""
-    text = F.lower(F.trim(F.col(text_col)))
+    text = F.lower(F.trim(F.col("text")))
     tokens = F.filter(F.split(text, r"\s+"), lambda t: t != "")
 
     def hits(lang: str):

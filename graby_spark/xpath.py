@@ -9,15 +9,18 @@ substring-before, substring-after, string-length, translate), node tests
 (``text()``, ``node()``), unions ``|``, positional predicates, and top-level
 ``string(...)`` producing a string result like PHP ``DOMXPath::evaluate``.
 
-Compiled expressions are cached (the broadcast ruleset compiles each rule once
-per executor, mirroring the reference's per-request site-config cache,
-ConfigBuilder.php:67-95).
+There is one evaluator: :func:`compile_xpath` parses an expression and
+compiles the AST, once, into a tree of closures that ``evaluate`` and
+``query`` call.  Compiled expressions are cached (the broadcast ruleset
+compiles each rule once per executor, mirroring the reference's per-request
+site-config cache, ConfigBuilder.php:67-95).
 """
 
 from __future__ import annotations
 
+import operator
 import re
-from functools import lru_cache
+from functools import lru_cache, reduce
 
 from .dom import AttrNode, CommentNode, Element, Node, TextNode
 
@@ -79,76 +82,54 @@ def _tokenize(expr: str) -> list[tuple[str, str]]:
 # ---------------------------------------------------------------------------
 
 class _Ast:
+    """An AST node: its fields are its ``__slots__``, set in order."""
+
     __slots__ = ()
+
+    def __init__(self, *values):
+        for name, value in zip(self.__slots__, values, strict=True):
+            setattr(self, name, value)
 
 
 class _Or(_Ast):
     __slots__ = ("parts",)
 
-    def __init__(self, parts):
-        self.parts = parts
-
 
 class _And(_Ast):
     __slots__ = ("parts",)
-
-    def __init__(self, parts):
-        self.parts = parts
 
 
 class _Compare(_Ast):
     __slots__ = ("op", "left", "right")
 
-    def __init__(self, op, left, right):
-        self.op = op
-        self.left = left
-        self.right = right
-
 
 class _Union(_Ast):
     __slots__ = ("parts",)
 
-    def __init__(self, parts):
-        self.parts = parts
-
 
 class _Path(_Ast):
-    __slots__ = ("absolute", "steps")
-
-    def __init__(self, absolute: bool, steps):
-        self.absolute = absolute
-        self.steps = steps  # list of _Step
+    __slots__ = ("absolute", "steps")  # steps: list of _Step
 
 
 class _Step(_Ast):
+    # axis: child | descendant | descendant-or-self | attribute | self | parent
+    # test: element name, '*', 'text()', 'node()' or 'comment()'
     __slots__ = ("axis", "test", "predicates")
-
-    def __init__(self, axis: str, test: str, predicates):
-        self.axis = axis  # child | descendant-or-self | attribute | self | parent
-        self.test = test  # element name, '*', 'text()', 'node()'
-        self.predicates = predicates
 
 
 class _Func(_Ast):
     __slots__ = ("name", "args")
 
-    def __init__(self, name, args):
-        self.name = name
-        self.args = args
-
 
 class _Literal(_Ast):
     __slots__ = ("value",)
-
-    def __init__(self, value):
-        self.value = value
 
 
 class _Number(_Ast):
     __slots__ = ("value",)
 
-    def __init__(self, value):
-        self.value = value
+
+_AXES = ("child", "descendant", "descendant-or-self", "self", "parent", "attribute")
 
 
 class _Parser:
@@ -221,13 +202,10 @@ class _Parser:
             self.expect("rparen")
             return inner
         if kind == "name" and self.tokens[self.pos + 1][0] == "lparen":
-            # function call (may be a node-test function like text() inside
-            # a path — handled by parse_step; here it's a top-level call)
-            if value in ("text", "node", "comment"):
-                return self._parse_location_path()
-            func = self._parse_function()
-            # allow path continuation: string(...) has none in our corpus
-            return func
+            # a function call, unless it is a node test (text(), node(),
+            # comment()) starting a path; no path continues a call
+            if value not in ("text", "node", "comment"):
+                return self._parse_function()
         return self._parse_location_path()
 
     def _parse_function(self) -> _Func:
@@ -264,13 +242,10 @@ class _Parser:
                 steps.append(_Step("parent", "node()", []))
             elif kind == "at":
                 self.next()
-                nk, nv = self.next()
-                if nk == "star":
-                    steps.append(_Step("attribute", "*", self._parse_predicates()))
-                elif nk == "name":
-                    steps.append(_Step("attribute", nv, self._parse_predicates()))
-                else:
+                nk, nv = self.next()  # a star's value is "*"
+                if nk not in ("star", "name"):
                     raise XPathError(f"bad attribute test in {self.source!r}")
+                steps.append(_Step("attribute", nv, self._parse_predicates()))
             elif kind == "star":
                 self.next()
                 steps.append(_Step("child", "*", self._parse_predicates()))
@@ -280,14 +255,7 @@ class _Parser:
                 if self.peek()[0] == "dcolon":
                     self.next()
                     axis = name
-                    if axis not in (
-                        "child",
-                        "descendant",
-                        "descendant-or-self",
-                        "self",
-                        "parent",
-                        "attribute",
-                    ):
+                    if axis not in _AXES:
                         raise XPathError(f"unsupported axis {axis} in {self.source!r}")
                     kind2, value2 = self.next()
                     if kind2 == "star":
@@ -333,73 +301,490 @@ class _Parser:
         return preds
 
 
-@lru_cache(maxsize=4096)
-def compile_xpath(expr: str) -> _Ast:
-    return _Parser(_tokenize(expr), expr).parse()
-
-
 # ---------------------------------------------------------------------------
-# Evaluation
+# Compilation
+#
+# Every AST node compiles to a closure f(node, position, size, root) that
+# returns the node's value as the type its consumer reads: "N" node-set
+# (a list in document order, without duplicates), "s" string, "b" boolean or
+# "n" number.  Coercions are thus chosen once per expression, not once per
+# candidate node.
 # ---------------------------------------------------------------------------
 
-_WS_RE = re.compile(r"\s+")
+#: XPath whitespace (XPath 1.0 [3]; what libxml2's normalize-space strips)
+_WS_RE = re.compile(r"[ \t\r\n]+")
+_WS_TO_SPACE = str.maketrans("\t\r\n", "   ")
+_DOT = _Path(False, [_Step("self", "node()", [])])
+_OPS = {
+    "eq": operator.eq,
+    "neq": operator.ne,
+    "lt": operator.lt,
+    "gt": operator.gt,
+    "le": operator.le,
+    "ge": operator.ge,
+}
+#: the comparison with its operands swapped: a < b is b > a
+_SWAPPED = {"lt": "gt", "gt": "lt", "le": "ge", "ge": "le"}
 
 
-def _string_value(node: Node) -> str:
-    return node.text_content
+def _normalize_space(s: str) -> str:
+    return _WS_RE.sub(" ", s).strip(" ")
 
 
-def _to_string(value) -> str:
-    if isinstance(value, list):
-        return _string_value(value[0]) if value else ""
-    if isinstance(value, bool):
-        return "true" if value else "false"
-    if isinstance(value, float):
-        if value != value:  # NaN
-            return "NaN"
-        if value == int(value):
-            return str(int(value))
-        return repr(value)
-    return str(value)
+def _translate(s: str, frm: str, to: str) -> str:
+    table: dict[int, str | None] = {}
+    for i, ch in enumerate(frm):
+        table.setdefault(ord(ch), to[i] if i < len(to) else None)  # first wins
+    return s.translate(table)
 
 
-def _to_bool(value) -> bool:
-    if isinstance(value, list):
-        return len(value) > 0
-    if isinstance(value, str):
-        return value != ""
-    if isinstance(value, float):
-        return value != 0 and value == value
-    return bool(value)
+def _substring(s: str, start: float, length: float | None = None) -> str:
+    first = round(start) - 1
+    if length is None:
+        return s[max(first, 0) :]
+    return s[max(first, 0) : max(first + round(length), 0)]
 
 
-def _to_number(value) -> float:
-    if isinstance(value, bool):
-        return 1.0 if value else 0.0
-    if isinstance(value, list):
-        value = _to_string(value)
-    if isinstance(value, str):
-        try:
-            return float(value.strip())
-        except ValueError:
-            return float("nan")
-    return float(value)
+def _name(nodes: list[Node]) -> str:
+    node = nodes[0] if nodes else None
+    if isinstance(node, Element):
+        return node.tag
+    return node.name if isinstance(node, AttrNode) else ""
 
 
-class _Context:
-    __slots__ = ("node", "position", "size", "root")
+#: name -> (result type, argument types, implementation).  A trailing "*"
+#: repeats the last argument type; a trailing "?" makes the last argument
+#: optional.  position() and last() read the context instead.
+_FUNCTIONS = {
+    "contains": ("b", "ss", operator.contains),
+    "starts-with": ("b", "ss", str.startswith),
+    "concat": ("s", "s*", lambda *parts: "".join(parts)),
+    "normalize-space": ("s", "s", _normalize_space),
+    "string": ("s", "s", str),
+    "not": ("b", "b", operator.not_),
+    "true": ("b", "", lambda: True),
+    "false": ("b", "", lambda: False),
+    "substring-before": ("s", "ss", lambda s, sub: s[: s.find(sub)] if sub in s else ""),
+    "substring-after": ("s", "ss", lambda s, sub: s[s.find(sub) + len(sub) :] if sub in s else ""),
+    "substring": ("s", "snn?", _substring),
+    "string-length": ("n", "s", lambda s: float(len(s))),
+    "translate": ("s", "sss", _translate),
+    "count": ("n", "N", lambda nodes: float(len(nodes))),
+    "name": ("s", "N", _name),
+    "local-name": ("s", "N", _name),
+    "position": ("n", "", None),
+    "last": ("n", "", None),
+}
+#: functions whose one argument defaults to the context node
+_CONTEXT_ARG = {"normalize-space", "string", "string-length", "name", "local-name"}
 
-    def __init__(self, node: Node, position: int, size: int, root: Node) -> None:
-        self.node = node
-        self.position = position
-        self.size = size
-        self.root = root
+
+def _type(ast: _Ast) -> str:
+    if isinstance(ast, _Func):
+        if ast.name not in _FUNCTIONS:
+            raise XPathError(f"unsupported XPath function {ast.name}()")
+        return _FUNCTIONS[ast.name][0]
+    return {_Path: "N", _Union: "N", _Literal: "s", _Number: "n"}.get(type(ast), "b")
 
 
-def _node_key(node: Node):
-    if isinstance(node, AttrNode):
-        return (id(node.owner), node.name)
-    return id(node)
+def _uses_position(ast: _Ast) -> bool:
+    """Whether ``ast`` reads the context position or size itself (the
+    predicates of its steps have contexts of their own)."""
+    if isinstance(ast, _Func):
+        return ast.name in ("position", "last") or any(map(_uses_position, ast.args))
+    if isinstance(ast, _Compare):
+        return _uses_position(ast.left) or _uses_position(ast.right)
+    if isinstance(ast, (_Or, _And, _Union)):
+        return any(map(_uses_position, ast.parts))
+    return False
+
+
+def _positional(pred: _Ast) -> bool:
+    return _type(pred) == "n" or _uses_position(pred)
+
+
+def _steps(path: _Path) -> list[_Step]:
+    """The path's steps with ``self::node()`` dropped, and each
+    ``descendant-or-self::node()/child::T[p]`` whose predicates are not
+    positional rewritten to ``descendant::T[p]``: the same node-set, from one
+    walk and without a merge."""
+    out: list[_Step] = []
+    for step in path.steps:
+        if (step.axis, step.test, step.predicates) == ("self", "node()", []):
+            continue
+        prev = (out[-1].axis, out[-1].test, out[-1].predicates) if out else None
+        if prev == ("descendant-or-self", "node()", []) and step.axis == "child":
+            if any(map(_positional, step.predicates)):
+                out.append(step)
+            else:
+                out[-1] = _Step("descendant", step.test, step.predicates)
+        else:
+            out.append(step)
+    return out
+
+
+def _relative_attr(ast: _Ast) -> str | None:
+    """The name when ``ast`` is a relative ``@name`` path."""
+    if isinstance(ast, _Path) and not ast.absolute:
+        steps = _steps(ast)
+        if len(steps) == 1 and steps[0].axis == "attribute" and steps[0].test != "*":
+            return None if steps[0].predicates else steps[0].test
+    return None
+
+
+def _compile(ast: _Ast, want: str):
+    """Closure f(node, position, size, root) giving ``ast``'s value as type
+    ``want``."""
+    attr = _relative_attr(ast)
+    if attr is not None and want == "s":
+        return lambda n, p, s, r: (n.get(attr) or "") if isinstance(n, Element) else ""
+    if attr is not None and want == "b":
+        return lambda n, p, s, r: isinstance(n, Element) and n.get(attr) is not None
+    if isinstance(ast, _Path) and not ast.absolute and not _steps(ast) and want == "s":
+        return lambda n, p, s, r: n.text_content
+    have = _type(ast)
+    if isinstance(ast, (_Literal, _Number)):
+        value = _convert(lambda n, p, s, r: ast.value, have, want)(None, 0, 0, None)
+        return lambda n, p, s, r: value
+    if isinstance(ast, _Path):
+        f = _compile_path(ast)
+    elif isinstance(ast, _Union):
+        f = _union([_compile(part, "N") for part in ast.parts])
+    elif isinstance(ast, _Func):
+        f = _compile_call(ast)
+    elif isinstance(ast, _Compare):
+        f = _compile_compare(ast)
+    else:
+        parts = [_compile(part, "b") for part in ast.parts]
+        f = reduce(_or if isinstance(ast, _Or) else _and, parts)
+    return _convert(f, have, want)
+
+
+def _union(parts):
+    return lambda n, p, s, r: _merge([part(n, p, s, r) for part in parts], r)
+
+
+def _or(a, b):
+    return lambda n, p, s, r: a(n, p, s, r) or b(n, p, s, r)
+
+
+def _and(a, b):
+    return lambda n, p, s, r: a(n, p, s, r) and b(n, p, s, r)
+
+
+def _num_str(value: float) -> str:
+    if value != value:
+        return "NaN"
+    return str(int(value)) if value == int(value) else repr(value)
+
+
+def _str_num(value: str) -> float:
+    try:
+        return float(value.strip())
+    except ValueError:
+        return float("nan")
+
+
+def _first_string(nodes: list[Node]) -> str:
+    return nodes[0].text_content if nodes else ""
+
+
+#: (from type, to type) -> conversion of one value
+_CONVERSIONS = {
+    ("N", "s"): _first_string,
+    ("N", "b"): bool,
+    ("N", "n"): lambda nodes: _str_num(_first_string(nodes)),
+    ("s", "b"): bool,
+    ("s", "n"): _str_num,
+    ("b", "s"): lambda v: "true" if v else "false",
+    ("b", "n"): float,
+    ("n", "s"): _num_str,
+    ("n", "b"): lambda v: v != 0 and v == v,
+}
+
+
+def _convert(f, have: str, want: str):
+    if have == want:
+        return f
+    if want == "N":
+        raise XPathError("expression is not a node-set")
+    convert = _CONVERSIONS[have, want]
+    return lambda n, p, s, r: convert(f(n, p, s, r))
+
+
+def _class_token(func: _Func):
+    """(t, X) when ``func`` is ``contains(concat(' ', normalize-space(X),
+    ' '), ' t ')`` with one token t, which is true exactly when t is one of
+    X's tokens: the call then compiles to ``_has_token(X, t)``."""
+    if func.name != "contains" or len(func.args) != 2:
+        return None
+    hay, needle = func.args
+    if not (isinstance(hay, _Func) and hay.name == "concat" and len(hay.args) == 3):
+        return None
+    left, mid, right = hay.args
+    if not (
+        isinstance(left, _Literal) and left.value == " "
+        and isinstance(right, _Literal) and right.value == " "
+        and isinstance(mid, _Func) and mid.name == "normalize-space" and len(mid.args) == 1
+        and isinstance(needle, _Literal)
+    ):
+        return None
+    token = needle.value
+    if len(token) < 3 or token[0] != " " or token[-1] != " " or _WS_RE.search(token[1:-1]):
+        return None
+    return token[1:-1], mid.args[0]
+
+
+def _has_token(value: str, word: str) -> bool:
+    """Whether ``word`` is one of ``value``'s XPath-whitespace-separated tokens."""
+    return word in value and word in value.translate(_WS_TO_SPACE).split(" ")
+
+
+def _compile_call(func: _Func):
+    name, args = func.name, func.args
+    _result, kinds, impl = _FUNCTIONS[name]
+    token = _class_token(func)
+    if token is not None:
+        word, value = token
+        args = [value, _Literal(word)]
+        impl = _has_token
+    if name == "position":
+        return lambda n, p, s, r: float(p)
+    if name == "last":
+        return lambda n, p, s, r: float(s)
+    if not args and name in _CONTEXT_ARG:
+        args = [_DOT]
+    if kinds.endswith("*"):
+        kinds = kinds[:-1] * len(args)
+    elif kinds.endswith("?") and len(args) == len(kinds) - 2:
+        kinds = kinds[:-2]
+    kinds = kinds.rstrip("?")
+    if len(args) != len(kinds):
+        raise XPathError(f"{name}() takes {len(kinds)} argument(s), got {len(args)}")
+    fs = [_compile(arg, kind) for arg, kind in zip(args, kinds)]
+    if all(isinstance(arg, (_Literal, _Number)) for arg in args):  # constant
+        value = impl(*[f(None, 0, 0, None) for f in fs])
+        return lambda n, p, s, r: value
+    if len(fs) == 1:
+        (a,) = fs
+        return lambda n, p, s, r: impl(a(n, p, s, r))
+    if len(fs) == 2 and isinstance(args[1], (_Literal, _Number)):
+        a, b = fs[0], fs[1](None, 0, 0, None)
+        return lambda n, p, s, r: impl(a(n, p, s, r), b)
+    return lambda n, p, s, r: impl(*[f(n, p, s, r) for f in fs])
+
+
+def _compile_compare(ast: _Compare):
+    """XPath 1.0 §3.4: a node-set operand compares each of its nodes'
+    string-values, existentially; otherwise both operands convert to
+    boolean, else number, else string."""
+    op, left, right = _OPS[ast.op], ast.left, ast.right
+    lt, rt = _type(left), _type(right)
+    if "b" in (lt, rt):
+        kind = "b"
+    elif "n" in (lt, rt) or ast.op not in ("eq", "neq"):
+        kind = "n"
+    else:
+        kind = "s"
+    if lt != "N" and rt != "N":
+        a, b = _compile(left, kind), _compile(right, kind)
+        return lambda n, p, s, r: op(a(n, p, s, r), b(n, p, s, r))
+    from_string = _CONVERSIONS.get(("s", kind), str)
+    if lt == "N" and rt == "N":
+        a, b = _compile(left, "N"), _compile(right, "N")
+
+        def both(n, p, s, r):
+            rights = {from_string(node.text_content) for node in b(n, p, s, r)}
+            return any(op(from_string(x.text_content), y) for x in a(n, p, s, r) for y in rights)
+
+        return both
+    if rt == "N":  # keep the node-set on the left
+        op, left, right = _OPS[_SWAPPED.get(ast.op, ast.op)], right, left
+    b = _compile(right, kind)
+    attr = _relative_attr(left)
+    if attr is not None:  # at most one node: compare the attribute directly
+
+        def one(n, p, s, r):
+            v = n.get(attr) if isinstance(n, Element) else None
+            return v is not None and op(from_string(v), b(n, p, s, r))
+
+        return one
+    a = _compile(left, "N")
+
+    def some(n, p, s, r):
+        nodes = a(n, p, s, r)
+        if not nodes:
+            return False
+        value = b(n, p, s, r)
+        return any(op(from_string(x.text_content), value) for x in nodes)
+
+    return some
+
+
+def _compile_path(path: _Path):
+    steps = [_compile_step(step) for step in _steps(path)]
+    absolute = path.absolute
+    if len(steps) == 1:
+        (step,) = steps
+        if absolute:
+            return lambda n, p, s, r: step([r], r)
+        return lambda n, p, s, r: step([n], r)
+
+    def run(n, p, s, r):
+        nodes = [r if absolute else n]
+        for step in steps:
+            if not nodes:
+                break
+            nodes = step(nodes, r)
+        return nodes
+
+    return run
+
+
+def _compile_step(step: _Step):
+    """Closure (context node-set, root) -> the step's node-set."""
+    axis = _axis(step.axis, step.test)
+    filters = [_compile_predicate(pred) for pred in step.predicates]
+    if any(map(_positional, step.predicates)):
+        # positions count within each context node's candidates
+        # (//div/p[1] is the first <p> of every div)
+        def per_context(nodes, r):
+            groups = []
+            for node in nodes:
+                group = axis(node)
+                for keep in filters:
+                    group = keep(group, r)
+                groups.append(group)
+            return _merge(groups, r)
+
+        return per_context
+
+    gather = _gather(step.axis, axis)
+
+    def merged(nodes, r):
+        out = axis(nodes[0]) if len(nodes) == 1 else gather(nodes, r)
+        for keep in filters:
+            out = keep(out, r)
+        return out
+
+    return merged
+
+
+def _gather(name: str, axis):
+    """Closure (context node-set, root) -> the candidates of all the context
+    nodes, one node-set."""
+    if name == "attribute":  # owners in document order: so are their attributes
+        return lambda nodes, r: [a for node in nodes for a in axis(node)]
+    if name == "descendant":  # staircase: skip contexts inside an earlier one
+        return lambda nodes, r: [d for node in _outermost(nodes) for d in axis(node)]
+    return lambda nodes, r: _merge([axis(node) for node in nodes], r)
+
+
+def _compile_predicate(pred: _Ast):
+    """Closure (candidates, root) -> the candidates the predicate keeps."""
+    if _type(pred) == "n":
+        f = _compile(pred, "n")
+        return lambda group, r: [x for i, x in enumerate(group, 1) if f(x, i, len(group), r) == i]
+    if _uses_position(pred):
+        f = _compile(pred, "b")
+        return lambda group, r: [x for i, x in enumerate(group, 1) if f(x, i, len(group), r)]
+    f = _compile(pred, "b")
+    return lambda group, r: [x for x in group if f(x, 0, 0, r)]
+
+
+def _node_test(test: str):
+    if test == "node()":
+        return lambda node: True
+    if test == "text()":
+        return lambda node: isinstance(node, TextNode)
+    if test == "comment()":
+        return lambda node: isinstance(node, CommentNode)
+    if test == "*":
+        return lambda node: isinstance(node, Element) and node.tag != "#document"
+    return lambda node: isinstance(node, Element) and node.tag == test
+
+
+def _descendants(node: Node) -> list[Node]:
+    out: list[Node] = []
+    stack = node.children[::-1] if isinstance(node, Element) else []
+    while stack:
+        child = stack.pop()
+        out.append(child)
+        if isinstance(child, Element):
+            stack.extend(child.children[::-1])
+    return out
+
+
+def _axis(axis: str, test: str):
+    """Closure node -> the axis' candidates that pass the node test, in
+    document order."""
+    match = _node_test(test)
+    if axis == "attribute":
+        return lambda node: _attributes(node, test)
+    if axis == "child":
+        return lambda node: [c for c in node.children if match(c)] if isinstance(node, Element) else []
+    if axis == "self":
+        return lambda node: [node] if match(node) else []
+    if axis == "parent":
+        return lambda node: [node.parent] if node.parent is not None and match(node.parent) else []
+    below = _below(test, match)
+    if axis == "descendant":
+        return below
+    return lambda node: ([node] if match(node) else []) + below(node)
+
+
+def _below(test: str, match):
+    """Closure node -> its descendants that pass the node test."""
+    if not test.endswith("()"):  # an element test walks the elements only
+        tag = None if test == "*" else test
+        return lambda node: node.iter_list(tag) if isinstance(node, Element) else []
+    return lambda node: [d for d in _descendants(node) if match(d)]
+
+
+def _attributes(node: Node, name: str) -> list[Node]:
+    """The node's attributes called ``name`` (``*``: all of them).  Values
+    are strings, so ``get`` is None exactly when the attribute is absent."""
+    if not isinstance(node, Element):
+        return []
+    if name == "*":
+        return [AttrNode(node, k) for k, _v in node.attrs]
+    return [AttrNode(node, name)] if node.get(name) is not None else []
+
+
+def _outermost(nodes: list[Node]) -> list[Element]:
+    """The elements of a document-ordered node-set that no earlier one
+    contains: their descendants, concatenated, are in document order and
+    without duplicates."""
+    kept: list[Element] = []
+    for node in nodes:
+        if not isinstance(node, Element):
+            continue  # no descendants
+        if kept:
+            up = node.parent
+            while up is not None and up is not kept[-1]:
+                up = up.parent
+            if up is not None:
+                continue
+        kept.append(node)
+    return kept
+
+
+def _merge(groups: list[list[Node]], root: Node) -> list[Node]:
+    """One node-set from document-ordered ones (the candidates of several
+    context nodes, or union operands): without duplicates, in document
+    order."""
+    groups = [group for group in groups if group]
+    if len(groups) < 2:
+        return groups[0] if groups else []
+    seen = set()
+    out: list[Node] = []
+    for group in groups:
+        for node in group:
+            key = (id(node.owner), node.name) if isinstance(node, AttrNode) else id(node)
+            if key not in seen:
+                seen.add(key)
+                out.append(node)
+    return _in_document_order(out, root)
 
 
 def _in_document_order(nodes: list[Node], root: Node) -> list[Node]:
@@ -424,397 +809,12 @@ def _in_document_order(nodes: list[Node], root: Node) -> list[Node]:
     return sorted(nodes, key=key)
 
 
-def _eval(ast: _Ast, ctx: _Context):
-    if isinstance(ast, _Literal):
-        return ast.value
-    if isinstance(ast, _Number):
-        return ast.value
-    if isinstance(ast, _Or):
-        for part in ast.parts:
-            if _to_bool(_eval(part, ctx)):
-                return True
-        return False
-    if isinstance(ast, _And):
-        for part in ast.parts:
-            if not _to_bool(_eval(part, ctx)):
-                return False
-        return True
-    if isinstance(ast, _Compare):
-        return _compare(ast.op, _eval(ast.left, ctx), _eval(ast.right, ctx))
-    if isinstance(ast, _Union):
-        seen = set()
-        out: list[Node] = []
-        operands = 0
-        for part in ast.parts:
-            result = _eval(part, ctx)
-            if not isinstance(result, list):
-                raise XPathError("union operand is not a node-set")
-            operands += bool(result)
-            for node in result:
-                key = _node_key(node)
-                if key not in seen:
-                    seen.add(key)
-                    out.append(node)
-        return _in_document_order(out, ctx.root) if operands > 1 else out
-    if isinstance(ast, _Func):
-        return _call_function(ast, ctx)
-    if isinstance(ast, _Path):
-        return _eval_path(ast, ctx)
-    raise XPathError(f"cannot evaluate {ast!r}")
-
-
-def _compare(op: str, left, right) -> bool:
-    # node-set vs value: existential semantics (XPath 1.0 §3.4)
-    if isinstance(left, list) or isinstance(right, list):
-        if isinstance(left, list) and isinstance(right, list):
-            lvals = [_string_value(n) for n in left]
-            rvals = {_string_value(n) for n in right}
-            return any(_compare(op, lv, rv) for lv in lvals for rv in rvals)
-        if isinstance(right, list):
-            # normalize so the node-set is on the left, flipping the operator
-            flip = {"lt": "gt", "gt": "lt", "le": "ge", "ge": "le"}
-            op = flip.get(op, op)
-            left, right = right, left
-        return any(_compare(op, _string_value(n), right) for n in left)
-    if isinstance(left, bool) or isinstance(right, bool):
-        left_b, right_b = _to_bool(left), _to_bool(right)
-        return left_b == right_b if op == "eq" else _num_compare(op, _to_number(left_b), _to_number(right_b))
-    if isinstance(left, float) or isinstance(right, float) or op in ("lt", "gt", "le", "ge"):
-        return _num_compare(op, _to_number(left), _to_number(right))
-    if op == "eq":
-        return left == right
-    if op == "neq":
-        return left != right
-    raise XPathError(f"bad comparison op {op}")
-
-
-def _num_compare(op: str, a: float, b: float) -> bool:
-    if a != a or b != b:
-        return op == "neq"
-    return {
-        "eq": a == b,
-        "neq": a != b,
-        "lt": a < b,
-        "gt": a > b,
-        "le": a <= b,
-        "ge": a >= b,
-    }[op]
-
-
-def _call_function(func: _Func, ctx: _Context):
-    name = func.name
-    args = func.args
-    if name == "contains":
-        return _to_string(_eval(args[1], ctx)) in _to_string(_eval(args[0], ctx))
-    if name == "starts-with":
-        return _to_string(_eval(args[0], ctx)).startswith(_to_string(_eval(args[1], ctx)))
-    if name == "concat":
-        return "".join(_to_string(_eval(a, ctx)) for a in args)
-    if name == "normalize-space":
-        if args:
-            s = _to_string(_eval(args[0], ctx))
-        else:
-            s = _string_value(ctx.node)
-        return _WS_RE.sub(" ", s).strip()
-    if name == "string":
-        if not args:
-            return _string_value(ctx.node)
-        return _to_string(_eval(args[0], ctx))
-    if name == "not":
-        return not _to_bool(_eval(args[0], ctx))
-    if name == "true":
-        return True
-    if name == "false":
-        return False
-    if name == "substring-before":
-        s = _to_string(_eval(args[0], ctx))
-        sub = _to_string(_eval(args[1], ctx))
-        idx = s.find(sub)
-        return s[:idx] if idx >= 0 else ""
-    if name == "substring-after":
-        s = _to_string(_eval(args[0], ctx))
-        sub = _to_string(_eval(args[1], ctx))
-        idx = s.find(sub)
-        return s[idx + len(sub):] if idx >= 0 else ""
-    if name == "substring":
-        s = _to_string(_eval(args[0], ctx))
-        start = round(_to_number(_eval(args[1], ctx)))
-        if len(args) > 2:
-            length = round(_to_number(_eval(args[2], ctx)))
-            return s[max(start - 1, 0): max(start - 1 + length, 0)]
-        return s[max(start - 1, 0):]
-    if name == "string-length":
-        s = _to_string(_eval(args[0], ctx)) if args else _string_value(ctx.node)
-        return float(len(s))
-    if name == "translate":
-        s = _to_string(_eval(args[0], ctx))
-        frm = _to_string(_eval(args[1], ctx))
-        to = _to_string(_eval(args[2], ctx))
-        table = {}
-        for i, ch in enumerate(frm):
-            if ch not in table:
-                table[ord(ch)] = to[i] if i < len(to) else None
-        return s.translate(table)
-    if name == "count":
-        result = _eval(args[0], ctx)
-        if not isinstance(result, list):
-            raise XPathError("count() requires a node-set")
-        return float(len(result))
-    if name == "position":
-        return float(ctx.position)
-    if name == "last":
-        return float(ctx.size)
-    if name == "name" or name == "local-name":
-        node = ctx.node
-        if args:
-            nodes = _eval(args[0], ctx)
-            if not isinstance(nodes, list) or not nodes:
-                return ""
-            node = nodes[0]
-        if isinstance(node, Element):
-            return node.tag
-        if isinstance(node, AttrNode):
-            return node.name
-        return ""
-    raise XPathError(f"unsupported XPath function {name}()")
-
-
-def _eval_path(path: _Path, ctx: _Context) -> list[Node]:
-    if path.absolute:
-        nodes: list[Node] = [ctx.root]
-    else:
-        nodes = [ctx.node]
-    for step in path.steps:
-        nodes = _eval_step(step, nodes, ctx.root)
-    return nodes
-
-
-def _axis_candidates(axis: str, node: Node):
-    if axis == "self":
-        yield node
-    elif axis == "child":
-        if isinstance(node, Element):
-            yield from node.children
-    elif axis == "descendant" or axis == "descendant-or-self":
-        if axis == "descendant-or-self":
-            yield node
-        if isinstance(node, Element):
-            stack = list(reversed(node.children))
-            while stack:
-                child = stack.pop()
-                yield child
-                if isinstance(child, Element):
-                    stack.extend(reversed(child.children))
-    elif axis == "parent":
-        if node.parent is not None:
-            yield node.parent
-
-
-def _matches_test(test: str, node: Node) -> bool:
-    if test == "node()":
-        return True
-    if test == "text()":
-        return isinstance(node, TextNode)
-    if test == "comment()":
-        return isinstance(node, CommentNode)
-    if test == "*":
-        return isinstance(node, Element) and node.tag != "#document"
-    return isinstance(node, Element) and node.tag == test
-
-
-def _eval_step(step: _Step, nodes: list[Node], root: Node) -> list[Node]:
-    # XPath 1.0: predicates (position(), last(), ...) apply WITHIN the
-    # candidate list of EACH context node, not over the merged step result
-    # (//div/p[1] selects the first <p> of every div).  Candidates are
-    # therefore kept grouped per context node until all predicates ran;
-    # the merged result dedupes by node identity and, when more than one
-    # context node contributed, is sorted back into document order.
-    groups: list[list[Node]] = []
-    if step.axis == "attribute":
-        for node in nodes:
-            if not isinstance(node, Element):
-                continue
-            if step.test == "*":
-                groups.append([AttrNode(node, k) for k, _v in node.attrs])
-            elif node.has_attr(step.test):
-                groups.append([AttrNode(node, step.test)])
-            else:
-                groups.append([])
-    else:
-        for node in nodes:
-            groups.append(
-                [
-                    cand
-                    for cand in _axis_candidates(step.axis, node)
-                    if _matches_test(step.test, cand)
-                ]
-            )
-    for pred in step.predicates:
-        next_groups: list[list[Node]] = []
-        for group in groups:
-            size = len(group)
-            filtered: list[Node] = []
-            for i, node in enumerate(group, start=1):
-                value = _eval(pred, _Context(node, i, size, root))
-                if isinstance(value, float):
-                    if float(i) == value:
-                        filtered.append(node)
-                elif _to_bool(value):
-                    filtered.append(node)
-            next_groups.append(filtered)
-        groups = next_groups
-    out: list[Node] = []
-    seen = set()
-    for group in groups:
-        for node in group:
-            key = _node_key(node)
-            if key not in seen:
-                seen.add(key)
-                out.append(node)
-    if sum(1 for group in groups if group) > 1:
-        return _in_document_order(out, root)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Fast paths for the dominant site-config / graby pattern families.
-# Profiling shows generic evaluation of token-contains predicates
-# (``//*[contains(concat(' ',normalize-space(@class),' '),' x ')]``) is >80%
-# of the extraction hot path; these compile to direct attribute scans.
-# ---------------------------------------------------------------------------
-
-_TOKEN_CONTAINS_RE = re.compile(
-    r"^(?P<rel>\.?)//(?P<tag>\*|[a-zA-Z][\w-]*)\["
-    r"contains\(concat\(' ',\s*normalize-space\(@(?P<a1>[\w-]+)\),\s*' '\),\s*' (?P<t1>[^']+) '\)"
-    r"(?:\s+or\s+contains\(concat\(' ',\s*normalize-space\(@(?P<a2>[\w-]+)\),\s*' '\),\s*' (?P<t2>[^']+) '\))?"
-    r"\]$"
-)
-_ATTR_EQ_RE = re.compile(
-    r"^(?P<rel>\.?)//(?P<tag>\*|[a-zA-Z][\w-]*)\[@(?P<attr>[\w-]+)\s*=\s*(?P<q>['\"])(?P<val>[^'\"]*)(?P=q)\]"
-    r"(?:/@(?P<out>[\w-]+))?$"
-)
-_PLAIN_TAG_RE = re.compile(r"^(?P<rel>\.?)//(?P<tag>[a-zA-Z][\w-]*)$")
-_ATTR_PRESENT_RE = re.compile(
-    r"^(?P<rel>\.?)//(?P<tag>\*|[a-zA-Z][\w-]*)\[@(?P<a1>[\w-]+)(?:\s+or\s+@(?P<a2>[\w-]+))?\]"
-    r"(?:/@(?P<out>[\w-]+))?$"
-)
-
-
-def _norm_tokens(value: str) -> str:
-    return " " + " ".join(value.split()) + " "
-
-
-def _compile_fast(expr: str):
-    m = _TOKEN_CONTAINS_RE.match(expr)
-    if m:
-        tag = None if m.group("tag") == "*" else m.group("tag")
-        checks = [(m.group("a1"), f" {m.group('t1')} ")]
-        if m.group("a2"):
-            checks.append((m.group("a2"), f" {m.group('t2')} "))
-
-        def eval_token_contains(context: Node, root: Node) -> list[Node]:
-            base = context if m.group("rel") else root
-            if not isinstance(base, Element):
-                return []
-            out = []
-            for el in base.iter_list(tag):
-                for attr, needle in checks:
-                    value = el.get(attr)
-                    if value is not None and needle in _norm_tokens(value):
-                        out.append(el)
-                        break
-            return out
-
-        return eval_token_contains
-
-    m = _ATTR_EQ_RE.match(expr)
-    if m:
-        tag = None if m.group("tag") == "*" else m.group("tag")
-        attr, val, out_attr = m.group("attr"), m.group("val"), m.group("out")
-
-        def eval_attr_eq(context: Node, root: Node) -> list[Node]:
-            base = context if m.group("rel") else root
-            if not isinstance(base, Element):
-                return []
-            result: list[Node] = []
-            for el in base.iter_list(tag):
-                if el.get(attr) == val:
-                    if out_attr is None:
-                        result.append(el)
-                    elif el.has_attr(out_attr):
-                        result.append(AttrNode(el, out_attr))
-            return result
-
-        return eval_attr_eq
-
-    m = _PLAIN_TAG_RE.match(expr)
-    if m:
-        tag = m.group("tag")
-
-        def eval_plain(context: Node, root: Node) -> list[Node]:
-            base = context if m.group("rel") else root
-            if not isinstance(base, Element):
-                return []
-            return base.iter_list(tag)
-
-        return eval_plain
-
-    m = _ATTR_PRESENT_RE.match(expr)
-    if m:
-        tag = None if m.group("tag") == "*" else m.group("tag")
-        a1, a2, out_attr = m.group("a1"), m.group("a2"), m.group("out")
-
-        def eval_attr_present(context: Node, root: Node) -> list[Node]:
-            base = context if m.group("rel") else root
-            if not isinstance(base, Element):
-                return []
-            result: list[Node] = []
-            for el in base.iter_list(tag):
-                if el.has_attr(a1) or (a2 is not None and el.has_attr(a2)):
-                    if out_attr is None:
-                        result.append(el)
-                    elif el.has_attr(out_attr):
-                        result.append(AttrNode(el, out_attr))
-            return result
-
-        return eval_attr_present
-
-    if expr == "//*[contains(@style,'display:none') or contains(@style,'visibility:hidden')]":
-
-        def eval_hidden(context: Node, root: Node) -> list[Node]:
-            if not isinstance(root, Element):
-                return []
-            out = []
-            for el in root.iter_list():
-                style = el.get("style")
-                if style and ("display:none" in style or "visibility:hidden" in style):
-                    out.append(el)
-            return out
-
-        return eval_hidden
-
-    if expr == "//a[not(./*) and normalize-space(.)='']":
-
-        def eval_empty_a(context: Node, root: Node) -> list[Node]:
-            if not isinstance(root, Element):
-                return []
-            out = []
-            for a in root.iter_list("a"):
-                if not any(isinstance(c, Element) for c in a.children) and a.text_content.strip() == "":
-                    out.append(a)
-            return out
-
-        return eval_empty_a
-
-    return None
-
-
 @lru_cache(maxsize=4096)
-def _fast_or_ast(expr: str):
-    fast = _compile_fast(expr)
-    if fast is not None:
-        return ("fast", fast)
-    return ("ast", compile_xpath(expr))
+def compile_xpath(expr: str):
+    """``expr`` as one closure f(node, position, size, root) giving its
+    value; the broadcast ruleset compiles each rule once per executor."""
+    ast = _Parser(_tokenize(expr), expr).parse()
+    return _compile(ast, _type(ast))
 
 
 def evaluate(expr: str, context: Node, root: Node | None = None):
@@ -822,12 +822,7 @@ def evaluate(expr: str, context: Node, root: Node | None = None):
     or bool depending on the expression type.  Raises XPathError on
     unsupported syntax (callers treat that as 'bad pattern' and skip, matching
     the reference's ``false === $elems`` branches)."""
-    kind, impl = _fast_or_ast(expr)
-    if root is None:
-        root = context.root()
-    if kind == "fast":
-        return impl(context, root)
-    return _eval(impl, _Context(context, 1, 1, root))
+    return compile_xpath(expr)(context, 1, 1, context.root() if root is None else root)
 
 
 def query(expr: str, context: Node, root: Node | None = None) -> list[Node]:

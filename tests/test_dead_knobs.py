@@ -12,8 +12,9 @@ and one walk per file:
   an option is never exercised at any value but its default, so it
   should be a constant instead.
 - **One-literal parameters.**  A parameter of such a function that
-  every call passes, always as the same literal.  It is a constant
-  spelled at each call site; fold it into the function.
+  every call passes as the same literal, counting a call that omits it
+  as passing its default.  It is a constant spelled at each call site;
+  fold it into the function.
 - **Unreachable definitions.**  A function, class or method of
   ``graby_spark/`` whose name no non-test file mentions outside the
   definition itself.  The system never runs it; only tests do.
@@ -47,6 +48,8 @@ ONE_LITERAL_ALLOWED = {
     "graby_spark/operators/dedup.py: minhash_lsh_pairs(threshold=0.9)",
     # bench.py's ann_ivf_sq8 leaf passes nprobe=2 by keyword
     "graby_spark/operators/similarity.py: ivf_sq8_topk(nprobe=2)",
+    # bench.py's ann_ivf_sq8 leaf passes n_iter=2 by keyword
+    "graby_spark/operators/similarity.py: ivf_sq8_topk(n_iter=2)",
     # called inside __spark_entry__.oracle_sql(), whose source is frozen
     "graby_spark/pages.py: oracle_excerpt_sql(text_expr='expected_text')",
     # called inside __spark_entry__.oracle_sql(), whose source is frozen
@@ -169,6 +172,15 @@ def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
     return out
 
 
+def _defaults(fn: ast.FunctionDef) -> dict[str, ast.expr]:
+    """Default expression of each defaulted parameter, by name."""
+    args = fn.args
+    positional = args.posonlyargs + args.args
+    out = dict(zip([p.arg for p in positional[len(positional) - len(args.defaults):]], args.defaults))
+    out.update((k.arg, d) for k, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None)
+    return out
+
+
 def _parameters(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
     """(position or None for keyword-only, name) of every named parameter."""
     args = fn.args
@@ -235,9 +247,14 @@ def dead_knobs() -> list[str]:
 def one_literal_parameters() -> list[str]:
     found = []
     for module, qual, node, shift, calls in _called_definitions():
+        defaults = _defaults(node)
         for position, param in _parameters(node)[shift:]:
             slot = None if position is None else position - shift
-            given = [_given(c, slot, param) for c in calls]
+            # a call that omits the argument passes its default
+            given = [
+                _given(c, slot, param) if _passes(c, slot, param) else defaults.get(param)
+                for c in calls
+            ]
             if all(isinstance(g, ast.Constant) for g in given):
                 values = {repr(g.value) for g in given}
                 if len(values) == 1:
@@ -388,6 +405,7 @@ def test_scans_see_planted_reach_faults(tmp_path, monkeypatch):
         "_LIMIT = 3\n"
         "_USED = 4\n\n\n"
         "def op(df, col, k=2):\n    return helper(df) + _USED\n\n\n"
+        "def cap(df, n=10):\n    return df\n\n\n"
         "def helper(df):\n    return df\n\n\n"
         "def only_tested(n):\n    return only_tested(n - 1) if n else 0\n\n\n"
         "class C:\n"
@@ -396,13 +414,14 @@ def test_scans_see_planted_reach_faults(tmp_path, monkeypatch):
     )
     tools = tmp_path / "tools"
     tools.mkdir()
-    (tools / "use.py").write_text("op(1, 'url', k=5)\nop(2, 'url', 5)\nC().run(0)\n")
+    (tools / "use.py").write_text("op(1, 'url', k=5)\nop(2, 'url', 5)\nC().run(0)\ncap(1, n=10)\ncap(2)\n")
     tests = tmp_path / "tests"
     tests.mkdir()
     (tests / "test_mod.py").write_text("only_tested(2)\nC().spare()\n")
     assert one_literal_parameters() == [
         "graby_spark/mod.py: op(col='url')",
         "graby_spark/mod.py: op(k=5)",
+        "graby_spark/mod.py: cap(n=10)",  # the omitting call passes the default
     ]
     assert unreachable_definitions() == [
         "graby_spark/mod.py: only_tested",
@@ -415,7 +434,7 @@ def test_scans_see_planted_reach_faults(tmp_path, monkeypatch):
     ]
     (tools / "more.py").write_text(
         "from graby_spark.mod import _LIMIT\n"
-        "op(3, 'html', k=6)\nonly_tested(1)\nC().spare()\nmod.os.sep\nmod._compile\n"
+        "op(3, 'html', k=6)\nonly_tested(1)\nC().spare()\nmod.os.sep\nmod._compile\ncap(3, 20)\n"
     )
     assert one_literal_parameters() == []
     assert unreachable_definitions() == []

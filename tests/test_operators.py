@@ -42,11 +42,11 @@ def test_exact_duplicates_mega_group_bounded(spark):
     """A pathological mega-group (one text duplicated 50k times) must emit
     one constant-size row, not a 50k-element collect_list."""
     df = spark.range(50_000).selectExpr("id as doc_id", "'same page text' as text")
-    rows = dedup.exact_duplicates(df, sample_cap=10).collect()
+    rows = dedup.exact_duplicates(df).collect()
     assert len(rows) == 1
     assert rows[0]["dup_count"] == 50_000
     assert rows[0]["canonical_id"] == 0
-    assert rows[0]["sample_ids"] == list(range(10))
+    assert rows[0]["sample_ids"] == list(range(dedup.SAMPLE_IDS)) == list(range(10))
 
 
 def test_duplicate_clusters_transitive(spark):
@@ -2210,9 +2210,9 @@ def test_avi_mjpeg_roundtrip_exact():
     for f in range(5):
         blocks = ((7 * 11 + f * 17 + np.arange(2 * 3)) % 256).astype(np.uint8)
         frames.append(np.kron(blocks.reshape(2, 3), np.ones((8, 8), dtype=np.uint8)))
-    blob = avi.encode_avi_mjpeg(frames, rate=4, scale=1, quant_luma=ones)
+    blob = avi.encode_avi_mjpeg(frames, rate=4, quant_luma=ones)
     # byte-deterministic fixture property
-    assert blob == avi.encode_avi_mjpeg(frames, rate=4, scale=1, quant_luma=ones)
+    assert blob == avi.encode_avi_mjpeg(frames, rate=4, quant_luma=ones)
     meta = avi.parse_avi(blob)
     assert (meta["width"], meta["height"]) == (24, 16)
     assert (meta["rate"], meta["scale"], meta["n_frames"]) == (4, 1, 5)
@@ -2251,7 +2251,7 @@ def test_sample_frames_real_avi(spark):
 
     ones = np.ones((8, 8))
     frames = [np.full((8, 16), 40 * f, dtype=np.uint8) for f in range(4)]
-    data = avi.encode_avi_mjpeg(frames, rate=4, scale=1, quant_luma=ones)
+    data = avi.encode_avi_mjpeg(frames, rate=4, quant_luma=ones)
     df = spark.createDataFrame([(9, bytearray(data))], "media_id long, payload binary")
     got = sorted(
         multimodal.sample_frames(df, every_ms=500, max_frames=3).collect(),
@@ -2272,7 +2272,7 @@ def test_attach_media_metadata_avi(spark):
     from graby_spark.operators import avi
 
     frames = [np.zeros((16, 24), dtype=np.uint8) for _ in range(8)]
-    data = avi.encode_avi_mjpeg(frames, rate=4, scale=1, quant_luma=np.ones((8, 8)))
+    data = avi.encode_avi_mjpeg(frames, rate=4, quant_luma=np.ones((8, 8)))
     df = spark.createDataFrame([(1, bytearray(data))], "media_id long, payload binary")
     row = multimodal.attach_media_metadata(df).collect()[0]
     assert row["mime"] == "video/x-msvideo"
@@ -2316,7 +2316,7 @@ def test_g711_wav_round_trip():
 
     codes = ((np.arange(200) * 7 + 31) % 256).astype(np.uint8)
     for law, tab in (("mulaw", _G711_MULAW), ("alaw", _G711_ALAW)):
-        rate, samples = decode_wav(encode_wav_g711(codes, law=law, sample_rate=8000))
+        rate, samples = decode_wav(encode_wav_g711(codes, law=law))
         assert rate == 8000 and samples.shape == (200, 1)
         assert np.array_equal(samples[:, 0], tab[codes])
     # format tag 2 (ADPCM) still raises loudly
@@ -2348,11 +2348,10 @@ def test_video_phash_container_independent(spark):
         pal,
         delays_ms=[250] * 4,
     )
-    mj = avi.encode_avi_mjpeg(frames, rate=4, scale=1, quant_luma=np.ones((8, 8)))
+    mj = avi.encode_avi_mjpeg(frames, rate=4, quant_luma=np.ones((8, 8)))
     other = avi.encode_avi_mjpeg(
         [np.full((8, 16), 17 * f + 3, dtype=np.uint8) for f in range(4)],
         rate=4,
-        scale=1,
         quant_luma=np.ones((8, 8)),
     )
     df = spark.createDataFrame(
@@ -3664,14 +3663,14 @@ def test_ivf_sq8_topk_recall_and_partitioning(spark):
     df = similarity.make_clustered_embeddings(spark, n=300, dim=32, n_clusters=6, sigma=0.2)
     exact = similarity.brute_force_topk(df, df, k=1).toPandas()
     approx = similarity.ivf_sq8_topk(
-        df, df, k=1, n_cells=6, nprobe=2, n_iter=2, refine=8
+        df, df, k=1, n_cells=6, nprobe=2, n_iter=2
     ).toPandas()
     truth = dict(zip(exact.query_id, exact.neighbor_id))
     got = dict(zip(approx.query_id, approx.neighbor_id))
     hits = sum(1 for q, n in truth.items() if got.get(q) == n)
     assert hits / len(truth) >= 0.9
     b = similarity.ivf_sq8_topk(
-        df.repartition(11), df.repartition(7), k=1, n_cells=6, nprobe=2, n_iter=2, refine=8
+        df.repartition(11), df.repartition(7), k=1, n_cells=6, nprobe=2, n_iter=2
     ).toPandas()
     key = lambda d: sorted(
         map(tuple, d[["query_id", "neighbor_id", "cosine", "rank"]].values.tolist())

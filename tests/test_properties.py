@@ -71,20 +71,22 @@ def test_fast_parser_matches_stdlib(text):
     assert fast == std
 
 
-@given(
-    st.lists(
-        st.sampled_from(
-            [
-                "<div>", "</div>", "<p class='a'>", "</p>", "text & more",
-                "<img src=x>", "<br/>", "<script>var a = '<div>';</script>",
-                "<!-- comment -->", "<a href=\"x?a=1&b=2\">", "</a>",
-                "&amp; &lt; &#65; &unknown;", "<I>", "</I>", "<td>", "<ul><li>one<li>two",
-                "<span style='x'>", "</span>", "<input value='\"quoted\"'>",
-            ]
-        ),
-        max_size=30,
-    )
+#: HTML fragments whose random concatenations make structured soup
+_STRUCTURED_PARTS = st.lists(
+    st.sampled_from(
+        [
+            "<div>", "</div>", "<p class='a'>", "</p>", "text & more",
+            "<img src=x>", "<br/>", "<script>var a = '<div>';</script>",
+            "<!-- comment -->", "<a href=\"x?a=1&b=2\">", "</a>",
+            "&amp; &lt; &#65; &unknown;", "<I>", "</I>", "<td>", "<ul><li>one<li>two",
+            "<span style='x'>", "</span>", "<input value='\"quoted\"'>",
+        ]
+    ),
+    max_size=30,
 )
+
+
+@given(_STRUCTURED_PARTS)
 @settings(max_examples=300, deadline=None)
 def test_fast_parser_matches_stdlib_structured(parts):
     html = "".join(parts)
@@ -93,18 +95,22 @@ def test_fast_parser_matches_stdlib_structured(parts):
     )
 
 
-def test_fast_parser_matches_stdlib_on_all_recorded_pages():
-    """Engine equivalence over every recorded real-world page (not just
-    the three goldens): identical serialized trees."""
+def _recorded_pages():
+    """(name, html) of every recorded real-world page under fixtures/content."""
     import os
 
     content = os.path.join(os.path.dirname(__file__), "..", "fixtures", "content")
-    checked = 0
     for name in sorted(os.listdir(content)):
-        if not name.endswith((".html", ".txt")) or name == "README":
-            continue
-        with open(os.path.join(content, name), "rb") as fh:
-            html = fh.read().decode("utf-8", "replace")
+        if name.endswith((".html", ".txt")) and name != "README":
+            with open(os.path.join(content, name), "rb") as fh:
+                yield name, fh.read().decode("utf-8", "replace")
+
+
+def test_fast_parser_matches_stdlib_on_all_recorded_pages():
+    """Engine equivalence over every recorded real-world page (not just
+    the three goldens): identical serialized trees."""
+    checked = 0
+    for name, html in _recorded_pages():
         fast = serialize(parse_html(html, engine="fast"))
         std = serialize(parse_html(html, engine="stdlib"))
         assert fast == std, name
@@ -439,3 +445,86 @@ def test_doc_tables_structured_soup_total(bits):
     for rows in doc_tables("".join(bits)):
         for _, cells in rows:
             assert len(cells) <= 4000  # spans clamp at 1000 per cell
+
+
+#: predicate shapes of the site-config corpus and the extractor's own queries
+XPATH_PREDICATES = [
+    "@class='a'",
+    "@id='x' or @class='a'",
+    "contains(@class, 'a')",
+    "contains(concat(' ',normalize-space(@class),' '),' a ')",
+    "contains(concat(' ',normalize-space(@class), ' '),' a ')"
+    " or contains(concat(' ',normalize-space(@id),' '), ' a ')",
+    "contains(concat(' ',normalize-space(@class),' '),' a ') and (@href or not(@style))",
+    "@href",
+    "@style or @src",
+    "contains(@style,'x') or contains(@style,'y')",
+    "starts-with(@href, 'x')",
+    "not(./*) and normalize-space(.)=''",
+    "contains(text(),'text')",
+    "normalize-space(.) != ''",
+    "p",
+    ".//a",
+    "count(*) > 1",
+]
+XPATH_TAGS = ["*", "div", "p", "a", "li"]
+
+
+def _document_positions(doc):
+    order = [doc] + doc.iter_list()
+    return {id(node): i for i, node in enumerate(order)}, order
+
+
+def _kth_child(doc, tag, k, parent_tag="*"):
+    """Reference for //parent_tag/tag[k] (k = -1: [last()]): each matching
+    parent's k-th matching element child, in document order."""
+    pos, order = _document_positions(doc)
+    out = []
+    for parent in order:
+        if parent_tag != "*" and getattr(parent, "tag", None) != parent_tag:
+            continue
+        kids = [c for c in parent.children if getattr(c, "tag", None) == tag]
+        if kids and (k == -1 or len(kids) >= k):
+            out.append(kids[k if k == -1 else k - 1])
+    return sorted(out, key=lambda node: pos[id(node)])
+
+
+def _check_xpath_rewrites(doc, tags=XPATH_TAGS):
+    from graby_spark.xpath import query
+
+    pos, _order = _document_positions(doc)
+    results = {}
+    for tag in tags:
+        for pred in XPATH_PREDICATES:
+            rewritten = query(f"//{tag}[{pred}]", doc)
+            per_context = query(f"//{tag}[({pred}) and position() > 0]", doc)
+            assert [id(n) for n in rewritten] == [id(n) for n in per_context], (tag, pred)
+            results[tag, pred] = rewritten
+        for pred in XPATH_PREDICATES[:6]:  # a descendant step from nested contexts
+            nested = query(f"//div//{tag}[{pred}]", doc)
+            per_context = query(f"//div//{tag}[({pred}) and position() > 0]", doc)
+            assert [id(n) for n in nested] == [id(n) for n in per_context], (tag, pred)
+    assert query("//div/p[1]", doc) == _kth_child(doc, "p", 1, "div")
+    assert query("//p[last()]", doc) == _kth_child(doc, "p", -1)
+    assert query("//li[2]", doc) == _kth_child(doc, "li", 2)
+    for (t1, p1), (t2, p2) in [
+        (("div", XPATH_PREDICATES[0]), ("a", XPATH_PREDICATES[6])),
+        (("a", XPATH_PREDICATES[3]), ("div", XPATH_PREDICATES[13])),
+    ]:
+        union = query(f"//{t1}[{p1}] | //{t2}[{p2}]", doc)
+        expected = {id(n): n for n in results[t1, p1] + results[t2, p2]}
+        assert union == sorted(expected.values(), key=lambda node: pos[id(node)])
+
+
+@given(_STRUCTURED_PARTS)
+@settings(max_examples=200, deadline=None)
+def test_xpath_descendant_rewrite_matches_per_context_steps(parts):
+    """//T[p] runs as one descendant walk; it selects what the per-context
+    child step //T[(p) and position() > 0] selects, in the same order, and
+    positional steps and unions come back in document order."""
+    _check_xpath_rewrites(parse_html("".join(parts)))
+
+
+def test_xpath_descendant_rewrite_on_recorded_pages():
+    for _name, html in _recorded_pages():
+        _check_xpath_rewrites(parse_html(html), tags=("div", "a"))

@@ -101,6 +101,27 @@ def test_substring_functions(doc):
     assert evaluate("substring-after('a:b', ':')", doc) == "b"
     assert evaluate("substring('hello', 2, 3)", doc) == "ell"
     assert evaluate("translate('abc', 'ab', 'xy')", doc) == "xyc"
+    # a character repeated in the from-string maps by its first occurrence
+    assert evaluate("translate('aab', 'aa', 'xy')", doc) == "xxb"
+
+
+def test_normalize_space_strips_only_xpath_whitespace(doc):
+    # XPath whitespace is space, tab, CR and LF; U+00A0 is a character
+    assert evaluate("normalize-space(' a\t\r\n b ')", doc) == "a b"
+    assert evaluate("normalize-space('a\u00a0b')", doc) == "a\u00a0b"
+    assert evaluate("normalize-space('\u00a0')", doc) == "\u00a0"
+
+
+def test_nbsp_link_is_not_empty():
+    html = "<p><a id=n>&nbsp;</a><a id=w> \n </a><a id=t>x</a></p>"
+    empty = query("//a[not(./*) and normalize-space(.)='']", parse_html(html))
+    assert [a.get("id") for a in empty] == ["w"]
+
+
+def test_class_token_splits_on_xpath_whitespace():
+    html = "<p class='a\tb'></p><p class='a\u00a0b'></p><p class=' b\na '></p><p class=ab></p>"
+    expr = "//p[contains(concat(' ', normalize-space(@class), ' '), ' b ')]"
+    assert [p.get("class") for p in query(expr, parse_html(html))] == ["a\tb", " b\na "]
 
 
 def test_text_node_test(doc):
@@ -142,13 +163,12 @@ def test_interpreter_returns_document_order():
     assert _tags("//*[@class]/*") == ["p", "span", "p"]
 
 
-def test_fast_path_and_interpreter_agree_on_order():
-    from graby_spark.xpath import _fast_or_ast
-
-    fast, interp = "//*[@class='x']", "//*[@class='x' and true()]"
-    assert _fast_or_ast(fast)[0] == "fast"
-    assert _fast_or_ast(interp)[0] != "fast"
-    assert _tags(fast) == _tags(interp) == ["div", "p", "span", "p"]
+def test_rewritten_and_per_context_steps_agree_on_order():
+    # //T[p] runs as one descendant walk; a positional predicate keeps the
+    # per-context child step, whose merged result is sorted
+    rewritten, per_context = "//*[@class='x' and true()]", "//*[@class='x' and position() > 0]"
+    assert _tags(rewritten) == _tags(per_context) == ["div", "p", "span", "p"]
+    assert _tags("//*[@class='x']") == _tags("//*[@class='x'][last() > 0]") == ["div", "p", "span", "p"]
 
 
 def test_union_of_nested_matches_in_document_order():
