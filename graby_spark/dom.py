@@ -219,7 +219,10 @@ class Element(Node):
         return default
 
     def has_attr(self, name: str) -> bool:
-        return any(k == name for k, _ in self.attrs)
+        for k, _ in self.attrs:
+            if k == name:
+                return True
+        return False
 
     def set_attr(self, name: str, value: str) -> None:
         for i, (k, _) in enumerate(self.attrs):
@@ -417,12 +420,20 @@ class _TreeBuilder(HTMLParser):
         self.profile = profile
         self.document = Document()
         self.stack: list[Element] = []
+        #: per-tag count of the elements on ``stack``: a rule whose tag is
+        #: not open skips its scan (no nesting makes a parse quadratic)
+        self.open: dict[str, int] = {}
         self._saw_html = False
         self._saw_body = False
         self._src_pos: int | None = None  # open-tag offset (fast scanner)
         self._src_end: int | None = None  # close-tag end offset
 
     # stack helpers
+    def _truncate(self, i: int) -> None:
+        for el in self.stack[i:]:
+            self.open[el.tag] -= 1
+        del self.stack[i:]
+
     def _current(self) -> Element:
         if not self.stack:
             self._ensure_body()
@@ -449,16 +460,17 @@ class _TreeBuilder(HTMLParser):
             html.append(body)
         if not self.stack:
             self.stack = [body]
+            self.open = {"body": 1}
 
     def _implied_close(self, tag: str) -> None:
-        if tag in _P_CLOSERS:
+        if tag in _P_CLOSERS and self.open.get("p"):
             # close an open <p> in scope
             for i in range(len(self.stack) - 1, -1, -1):
                 open_tag = self.stack[i].tag
                 if open_tag in _SCOPE_BARRIERS:
                     break
                 if open_tag == "p":
-                    del self.stack[i:]
+                    self._truncate(i)
                     break
         closers = _IMPLIED_END.get(tag)
         if closers:
@@ -468,7 +480,7 @@ class _TreeBuilder(HTMLParser):
                 if open_tag in _SCOPE_BARRIERS or open_tag in barriers:
                     break
                 if open_tag in closers:
-                    del self.stack[i:]
+                    self._truncate(i)
                     break
 
     # HTMLParser hooks
@@ -494,6 +506,7 @@ class _TreeBuilder(HTMLParser):
                         html.set_attr(k, v)
             if not self.stack:
                 self.stack = [html]
+                self.open = {"html": 1}
             return
         if tag in ("head", "body"):
             html = self._ensure_html()
@@ -510,6 +523,7 @@ class _TreeBuilder(HTMLParser):
                     if not existing.has_attr(k):
                         existing.set_attr(k, v)
             self.stack = [existing]
+            self.open = {tag: 1}
             return
 
         at_html_level = not self.stack or self.stack[-1].tag == "html"
@@ -531,8 +545,10 @@ class _TreeBuilder(HTMLParser):
                 head.append(el)
                 if tag not in VOID_ELEMENTS:
                     self.stack = [head, el]
+                    self.open = {"head": 1, tag: 1}
                 return
             self.stack = []
+            self.open = {}
             self._ensure_body()
 
         self._implied_close(tag)
@@ -543,6 +559,7 @@ class _TreeBuilder(HTMLParser):
         self._current().append(el)
         if tag not in VOID_ELEMENTS:
             self.stack.append(el)
+            self.open[tag] = self.open.get(tag, 0) + 1
 
     def handle_startendtag(self, tag: str, attrs: list[tuple[str, str | None]]) -> None:
         tag = tag.lower()
@@ -556,24 +573,24 @@ class _TreeBuilder(HTMLParser):
 
     def handle_endtag(self, tag: str) -> None:
         tag = tag.lower()
-        if tag in VOID_ELEMENTS:
-            return
+        if tag in VOID_ELEMENTS or not self.open.get(tag):
+            return  # void, or unmatched: ignored (recovery)
         for i in range(len(self.stack) - 1, -1, -1):
             if self.stack[i].tag == tag:
                 if self._src_end is not None:
                     self.stack[i].src_end = self._src_end
-                del self.stack[i:]
+                self._truncate(i)
                 if not self.stack:
                     if tag not in ("html", "body", "head"):
                         self._ensure_body()
                 return
-        # unmatched end tag: ignored (recovery)
 
     def handle_data(self, data: str) -> None:
         if not self.stack or self.stack[-1].tag == "html":
             if data.strip() == "":
                 return
             self.stack = []
+            self.open = {}
             self._ensure_body()
         cur = self._current()
         if (

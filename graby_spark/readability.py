@@ -58,19 +58,88 @@ def _class_and_id(el: Element) -> str:
 
 
 def _inner_text(el: Element) -> str:
-    """Visible text: excludes script/style contents (php-readability's
-    innerText metric — pinned by the adspot-div removal in the lifehacker
-    golden vs the script-text survival in GrabyTest's cleanupHtml toy)."""
+    """Visible text in document order, stripped: excludes script/style
+    contents (php-readability's innerText metric — pinned by the adspot-div
+    removal in the lifehacker golden vs the script-text survival in
+    GrabyTest's cleanupHtml toy)."""
     parts: list[str] = []
-    stack = [el]
+    stack = el.children[::-1]
     while stack:
         node = stack.pop()
-        for child in reversed(node.children):
-            if isinstance(child, TextNode):
-                parts.append(child.data)
-            elif isinstance(child, Element) and child.tag not in ("script", "style"):
-                stack.append(child)
-    return "".join(reversed(parts)).strip()
+        if isinstance(node, TextNode):
+            parts.append(node.data)
+        elif isinstance(node, Element) and node.tag not in ("script", "style"):
+            stack.extend(node.children[::-1])
+    return "".join(parts).strip()
+
+
+# _clean_conditionally's counts below an element, 32 bits each in one int: a
+# child's add in one step, and the garbage collector untracks all-int tuples
+_P, _IMG, _LI, _INPUT, _EMBED, _HEADING, _VIDEO = range(0, 224, 32)
+_FIELD = dict(p=_P, img=_IMG, li=_LI, input=_INPUT, button=_INPUT, embed=_EMBED,
+              h1=_HEADING, h2=_HEADING, h3=_HEADING, video=_VIDEO)
+# generic 'video' keeps self-hosted embeds (the lemonde golden's iframe)
+_VIDEO_RE = re.compile(r"youtube|vimeo|dailymotion|video", re.I)
+
+
+def _count(counts: int, field: int) -> int:
+    return counts >> field & 0xFFFFFFFF
+
+
+def _density(measure: tuple) -> float:
+    """Link density: the share of the visible text inside anchors."""
+    _, first, last, _, link, _ = measure
+    return link / (last - first) if last > first else 0.0
+
+
+def _measured(*roots: Element):
+    """Yield ``(element, measure)`` for each element at or below a root (a
+    root inside an earlier one is measured with it), each after its
+    descendants and from its children as they are then, so an element the
+    caller detaches once yielded leaves its ancestors' measures.  A measure
+    is ``(size, first, last, commas, link, counts)``: the length of the text
+    ``_inner_text`` joins, the offsets of its first non-blank character and
+    after its last (``size`` and 0 if blank), its ``,``/``，`` count, the
+    ``_inner_text`` length of the ``<a>``s below, and the ``_FIELD`` counts."""
+    measures: dict[Element, tuple] = {}
+    for root in roots:
+        if root in measures:
+            continue
+        for el in reversed([root] + root.iter_list()):
+            size = first = last = commas = link = counts = 0
+            for child in el.children:
+                if child.__class__ is Element:
+                    c_size, c_first, c_last, c_commas, c_link, c_counts = measures[child]
+                    link += c_link
+                    counts += c_counts
+                    tag = child.tag
+                    if tag == "a":
+                        link += max(c_last - c_first, 0)
+                    elif tag in _FIELD:
+                        counts += 1 << _FIELD[tag]
+                    if tag in ("iframe", "embed", "object") and _VIDEO_RE.search(
+                        child.get("src") or ""
+                    ):
+                        counts += 1 << _VIDEO
+                    if tag in ("script", "style"):
+                        continue
+                elif isinstance(child, TextNode):
+                    data = child.data
+                    c_size = len(data)
+                    c_first = c_size - len(data.lstrip())
+                    c_last = len(data.rstrip())
+                    c_commas = data.count(",") + data.count("，")
+                else:
+                    continue
+                commas += c_commas
+                if first == size:  # blank so far
+                    first += c_first
+                if c_last:
+                    last = size + c_last
+                size += c_size
+            measure = (size, first, last, commas, link, counts)
+            measures[el] = measure
+            yield el, measure
 
 
 class Readability:
@@ -324,15 +393,7 @@ class Readability:
 
     # -- scoring ---------------------------------------------------------
 
-    def _score(self, el: Element) -> float:
-        return self._scores.get(id(el), 0.0)
-
-    def _add_score(self, el: Element, delta: float) -> None:
-        self._scores[id(el)] = self._scores.get(id(el), 0.0) + delta
-
     def _initialize_node(self, el: Element) -> None:
-        if id(el) in self._scores:
-            return
         tag = el.tag
         score = 0.0
         if tag == "div":
@@ -358,14 +419,6 @@ class Readability:
                 weight += 25
         return weight
 
-    @staticmethod
-    def _link_density(el: Element) -> float:
-        text_len = len(_inner_text(el))
-        if text_len == 0:
-            return 0.0
-        link_len = sum(len(_inner_text(a)) for a in el.iter("a"))
-        return link_len / text_len
-
     def _grab_article(self) -> Element | None:
         body = self.dom.body()
         if body is None:
@@ -373,8 +426,6 @@ class Readability:
 
         # 1. strip unlikely candidates + convert loose divs to paragraph-ish
         for el in body.iter_list():
-            if el.parent is None:
-                continue
             unlikely = _class_and_id(el)
             if (
                 _UNLIKELY_RE.search(unlikely)
@@ -383,37 +434,32 @@ class Readability:
             ):
                 el.detach()
 
-        # 2. score paragraphs
+        # 2. score paragraphs (one measure walk serves steps 2-4, which do
+        # not change the tree; the document root covers every grandparent)
+        measures = dict(_measured(self.dom))
         candidates: list[Element] = []
         for el in body.iter_list():
             if el.tag not in ("p", "td", "pre"):
                 continue
-            parent = el.parent
-            if parent is None:
+            _, first, last, commas, _, _ = measures[el]
+            length = last - first
+            if length < 25:
                 continue
-            grandparent = parent.parent
-            text = _inner_text(el)
-            if len(text) < 25:
-                continue
-            score = 1.0
-            score += text.count(",")
-            score += text.count("，")  # CJK comma, as in the JS original
-            score += min(len(text) // 100, 3)
-            if id(parent) not in self._scores:
-                self._initialize_node(parent)
-                candidates.append(parent)
-            self._add_score(parent, score)
-            if grandparent is not None:
-                if id(grandparent) not in self._scores:
-                    self._initialize_node(grandparent)
-                    candidates.append(grandparent)
-                self._add_score(grandparent, score / 2.0)
+            # commas count ',' and the CJK '，', as in the JS original
+            score = 1.0 + commas + min(length // 100, 3)
+            for node, share in ((el.parent, score), (el.parent.parent, score / 2.0)):
+                if node is None:
+                    break
+                if id(node) not in self._scores:
+                    self._initialize_node(node)
+                    candidates.append(node)
+                self._scores[id(node)] += share
 
         # 3. pick top candidate after link-density scaling
         top: Element | None = None
         top_score = 0.0
         for cand in candidates:
-            scaled = self._score(cand) * (1.0 - self._link_density(cand))
+            scaled = self._scores[id(cand)] * (1.0 - _density(measures[cand]))
             self._scores[id(cand)] = scaled
             if top is None or scaled > top_score:
                 top = cand
@@ -443,7 +489,7 @@ class Readability:
             elif self._scores.get(id(sibling), 0.0) >= threshold:
                 append = True
             elif sibling.tag == "p":
-                density = self._link_density(sibling)
+                density = _density(measures[sibling])
                 text = _inner_text(sibling)
                 if len(text) > 80 and density < 0.25:
                     append = True
@@ -457,27 +503,27 @@ class Readability:
 
     def prep_article(self, article: Element) -> None:
         """Cleanup pass over a chosen article element (prune: yes path)."""
-        # one histogram gates the per-tag passes (skips whole-tree walks
-        # for tags the article does not contain at all)
-        tc = self._subtree_tag_counts(article)
-        if tc.get("br"):
+        # the article's tags gate the per-tag passes (skips whole-tree
+        # walks for tags the article does not contain at all)
+        tags = [e.tag for e in article.iter_list()]
+        if "br" in tags:
             self._kill_breaks(article)
-        if tc.get("form"):
-            self._clean(article, "form")
-        if tc.get("object"):
-            self._clean(article, "object")
+        if "form" in tags:
+            self.clean(article, "form")
+        if "object" in tags:
+            self.clean(article, "object")
         # NOTE: iframes survive prune — the reference keeps non-video
         # embeds (GrabyTest::testCleanupHtmlRemovesDeniedXssAttributes
         # expects the example.com iframe in the output) and the lemonde
         # golden keeps its video iframe
-        if tc.get("h1", 0) == 1:
-            self._clean(article, "h1")
-        if tc.get("h2", 0) == 1:
-            self._clean(article, "h2")
-        if tc.get("h1") or tc.get("h2"):
+        if tags.count("h1") == 1:
+            self.clean(article, "h1")
+        if tags.count("h2") == 1:
+            self.clean(article, "h2")
+        if "h1" in tags or "h2" in tags:
             self._clean_headers(article)
         for tag in ("table", "ul", "div"):
-            if tc.get(tag):
+            if tag in tags:
                 self._clean_conditionally(article, tag)
         # NOTE: no empty-paragraph removal here — the reference keeps empty
         # <p/> nodes produced by the double-br conversion (blogger golden);
@@ -499,69 +545,34 @@ class Readability:
                 else:
                     prev_was_br = False
 
-    def _clean(self, el: Element, tag: str) -> None:
-        for target in el.iter_list(tag):
-            if target.parent is not None:
-                target.detach()
-
     def _clean_headers(self, el: Element) -> None:
         for tag in ("h1", "h2"):
-            for header in el.iter_list(tag):
-                if header.parent is None:
-                    continue
-                if self._class_weight(header) < 0 or self._link_density(header) > 0.33:
+            # in document order no header loses a descendant before its turn
+            headers = el.iter_list(tag)
+            measures = dict(_measured(*headers))
+            for header in headers:
+                if self._class_weight(header) < 0 or _density(measures[header]) > 0.33:
                     header.detach()
 
-    # generic 'video' keeps self-hosted embeds (/embed/video/...), pinned by
-    # the lemonde golden fixture keeping its lemonde.fr video iframe
-    _VIDEO_RE = re.compile(r"youtube|vimeo|dailymotion|video", re.I)
-
-    def _has_video_embed(self, el: Element) -> bool:
-        for tag in ("iframe", "embed", "object", "video"):
-            for e in el.iter(tag):
-                if tag == "video" or self._VIDEO_RE.search(e.get("src") or ""):
-                    return True
-        return False
-
-    _HEADING_123 = ("h1", "h2", "h3")
-
-    @staticmethod
-    def _subtree_tag_counts(el: Element) -> dict:
-        """Tag histogram of a subtree in ONE walk (a per-rule count walk
-        dominated prepArticle cost otherwise)."""
-        counts: dict[str, int] = {}
-        stack = [el]
-        while stack:
-            node = stack.pop()
-            for child in node.children:
-                if isinstance(child, Element):
-                    counts[child.tag] = counts.get(child.tag, 0) + 1
-                    stack.append(child)
-        return counts
-
     def _clean_conditionally(self, el: Element, tag: str) -> None:
-        # children-first (reverse document order), like PHP's reverse walk
-        # over the live NodeList: a container emptied by its children's
+        # children-first (a target after all below it), like PHP's reverse
+        # walk over the live NodeList: a container emptied by its children's
         # removal is then removed itself (the lifehacker golden's
         # get-permalink modal cascade)
-        for target in reversed(el.iter_list(tag)):
-            if target.parent is None:
+        for target, (_, first, last, commas, link, tc) in _measured(*el.iter_list(tag)):
+            if target.tag != tag:
                 continue
-            tc = self._subtree_tag_counts(target)
             # containers holding a recognized video embed survive (the
             # lemonde golden keeps its <div><iframe .../video/...></div>)
-            if any(t in tc for t in ("iframe", "embed", "object", "video")):
-                if self._has_video_embed(target):
-                    continue
+            if _count(tc, _VIDEO):
+                continue
             weight = self._class_weight(target) + self._scores.get(id(target), 0.0)
-            text = _inner_text(target)
             # golden-fitted (lifehacker): UI dialogs (role="dialog") are
             # junk unless their content is real headings - the reference's
             # run drops the login/permalink dialogs but keeps the
             # votes dialog whose content is pure <h3>s
-            if (target.get("role") or "").lower() == "dialog" and not any(
-                h in tc for h in self._HEADING_123
-            ):
+            dialog = (target.get("role") or "").lower() == "dialog"
+            if dialog and not _count(tc, _HEADING):
                 target.detach()
                 continue
             # negative class/id weight removes the container outright
@@ -570,28 +581,16 @@ class Readability:
             if weight < 0:
                 target.detach()
                 continue
-            if text.count(",") + text.count("\uff0c") < 10:
-                p_count = tc.get("p", 0)
-                img_count = tc.get("img", 0)
-                li_count = tc.get("li", 0) - 100
+            if commas < 10:
+                p_count = _count(tc, _P)
+                img_count = _count(tc, _IMG)
+                li_count = _count(tc, _LI) - 100
                 # interactive controls count together (button ~ input)
-                input_count = tc.get("input", 0) + tc.get("button", 0)
-                embed_count = (
-                    sum(
-                        1
-                        for e in target.iter("embed")
-                        if not self._VIDEO_RE.search(e.get("src") or "")
-                    )
-                    if tc.get("embed")
-                    else 0
-                )
-                length = len(text)
-                # _link_density, reusing the text walked above
-                density = (
-                    sum(len(_inner_text(a)) for a in target.iter("a")) / length
-                    if length and tc.get("a")
-                    else 0.0
-                )
+                input_count = _count(tc, _INPUT)
+                # no embed is a video one here (those returned above)
+                embed_count = _count(tc, _EMBED)
+                length = max(last - first, 0)
+                density = link / length if length else 0.0
                 remove = (
                     # image-heavy containers die only when REALLY image-heavy
                     # (php-readability light clean img>4; the lifehacker
@@ -616,9 +615,10 @@ class Readability:
     # -- misc helpers used by Graby post-processing -----------------------
 
     def clean(self, el: Element, tag: str) -> None:
-        """Public ``clean`` used by Graby::cleanupHtml for <select>
-        (Graby.php:219)."""
-        self._clean(el, tag)
+        """Remove every ``tag`` element below ``el`` (prepArticle's clean;
+        Graby::cleanupHtml also runs it for <select>, Graby.php:219)."""
+        for target in el.iter_list(tag):
+            target.detach()
 
     _SKIP_FOOTNOTE_RE = re.compile(
         r"^\s*(\[?[a-z0-9]{1,2}\]?|continue|more|read|skip)\s*$", re.I

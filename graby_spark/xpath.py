@@ -18,6 +18,7 @@ site-config cache, ConfigBuilder.php:67-95).
 
 from __future__ import annotations
 
+import math
 import operator
 import re
 from functools import lru_cache, reduce
@@ -338,11 +339,20 @@ def _translate(s: str, frm: str, to: str) -> str:
     return s.translate(table)
 
 
+def _round(x: float) -> float:
+    """XPath 1.0 round(): halves go up; NaN and infinities stay."""
+    return math.floor(x + 0.5) if math.isfinite(x) else x
+
+
 def _substring(s: str, start: float, length: float | None = None) -> str:
-    first = round(start) - 1
-    if length is None:
-        return s[max(first, 0) :]
-    return s[max(first, 0) : max(first + round(length), 0)]
+    """The characters at positions p (from 1) with round(start) <= p <
+    round(start) + round(length); none when either bound is NaN."""
+    first = _round(start)
+    end = math.inf if length is None else first + _round(length)
+    if math.isnan(first) or math.isnan(end):
+        return ""
+    lo, hi = max(first, 1), min(end, len(s) + 1)
+    return s[int(lo) - 1 : int(hi) - 1] if lo < hi else ""
 
 
 def _name(nodes: list[Node]) -> str:

@@ -623,3 +623,44 @@ def test_img_no_referrer():
     r2 = extract_one(html, "http://f.example/x", RuleSet({}),
                      options=ExtractOptions(xss_filter=False))
     assert "referrerpolicy" not in r2.html
+
+
+def test_readability_inner_text_in_document_order():
+    from graby_spark.dom import parse_html
+    from graby_spark.readability import _inner_text
+
+    div = parse_html("<div>one <b>two</b> three <i>four</i> five</div>").body().children[0]
+    assert _inner_text(div) == "one two three four five"
+
+
+#: nested markup that once made extraction or parsing quadratic in depth
+NESTED_SHAPES = {
+    "div": lambda d: "<div>" * d + "deep" + "</div>" * d,
+    "div_p": lambda d: "<div><p>some words, more words.</p>" * d + "</div>" * d,
+    "table": lambda d: "<table><tr><td>" * d + "deep" + "</td></tr></table>" * d,
+    "ul_li": lambda d: "<ul><li>" * d + "deep" + "</li></ul>" * d,
+    "a": lambda d: "<p>" + "<a href=x>words, more words. " * d + "</a>" * d + "</p>",
+    "unmatched_end_tags": lambda d: "<div>" * d + "</span>" * d,
+}
+
+
+@pytest.mark.parametrize("shape", sorted(NESTED_SHAPES))
+def test_extract_one_time_grows_linearly_with_nesting_depth(shape):
+    """Four times the depth costs at most 8x the time (linear work reads
+    about 4x; the per-element subtree re-walks read 12-24x)."""
+    import time
+
+    from graby_spark.extract import extract_one
+    from graby_spark.siteconfig import RuleSet
+
+    def best_of_3(depth):
+        html = NESTED_SHAPES[shape](depth).encode()
+        times = []
+        for _ in range(3):
+            start = time.perf_counter()
+            extract_one(html, "http://deep.example/x", RuleSet({}), render=False)
+            times.append(time.perf_counter() - start)
+        return min(times)
+
+    shallow, deep = best_of_3(750), best_of_3(3000)
+    assert deep <= 8 * shallow, (shape, shallow, deep)

@@ -72,18 +72,14 @@ def test_fast_parser_matches_stdlib(text):
 
 
 #: HTML fragments whose random concatenations make structured soup
-_STRUCTURED_PARTS = st.lists(
-    st.sampled_from(
-        [
-            "<div>", "</div>", "<p class='a'>", "</p>", "text & more",
-            "<img src=x>", "<br/>", "<script>var a = '<div>';</script>",
-            "<!-- comment -->", "<a href=\"x?a=1&b=2\">", "</a>",
-            "&amp; &lt; &#65; &unknown;", "<I>", "</I>", "<td>", "<ul><li>one<li>two",
-            "<span style='x'>", "</span>", "<input value='\"quoted\"'>",
-        ]
-    ),
-    max_size=30,
-)
+_SOUP = [
+    "<div>", "</div>", "<p class='a'>", "</p>", "text & more",
+    "<img src=x>", "<br/>", "<script>var a = '<div>';</script>",
+    "<!-- comment -->", "<a href=\"x?a=1&b=2\">", "</a>",
+    "&amp; &lt; &#65; &unknown;", "<I>", "</I>", "<td>", "<ul><li>one<li>two",
+    "<span style='x'>", "</span>", "<input value='\"quoted\"'>",
+]
+_STRUCTURED_PARTS = st.lists(st.sampled_from(_SOUP), max_size=30)
 
 
 @given(_STRUCTURED_PARTS)
@@ -528,3 +524,248 @@ def test_xpath_descendant_rewrite_matches_per_context_steps(parts):
 def test_xpath_descendant_rewrite_on_recorded_pages():
     for _name, html in _recorded_pages():
         _check_xpath_rewrites(parse_html(html), tags=("div", "a"))
+
+
+# ---------------------------------------------------------------------------
+# Readability: one bottom-up measurement walk against per-element re-walks
+# ---------------------------------------------------------------------------
+
+#: readability-relevant fragments added to the structured soup: class and
+#: id weights, dialogs, video and non-video embeds, controls, commas
+_READABILITY_SOUP = _SOUP + [
+    "<div class='comment'>", "<div id='main-content'>", "<div role='dialog'>",
+    "<div class='sidebar'>", "<table>", "</table>", "<tr>", "<ul>", "</ul>",
+    "<li>", "<h1>", "</h1>", "<h2>", "</h2>", "<h3>", "</h3>", "<pre>", "</pre>",
+    "<iframe src='https://www.youtube.com/embed/x'></iframe>",
+    "<iframe src='http://maps.example.com/m'></iframe>",
+    "<embed src='http://vimeo.com/v'>", "<embed src='http://x.example/f.swf'>",
+    "<video src='v.mp4'></video>", "<object data='x'></object>",
+    "<button>go</button>", "<form>", "</form>", "<br><br>", "  \n ",
+    "plenty of words, commas, more, and more, words here, ", "，",
+    "<style>p { x: 1 }</style>", "<a href='y'> spaced link </a>",
+]
+_READABILITY_PARTS = st.lists(st.sampled_from(_READABILITY_SOUP), max_size=40)
+
+
+def _ref_inner_text(el, strip=True):
+    """Per-element reference: the visible text of ``el`` in document order."""
+    from graby_spark.dom import Element, TextNode
+
+    parts = []
+    stack = el.children[::-1]
+    while stack:
+        node = stack.pop()
+        if isinstance(node, TextNode):
+            parts.append(node.data)
+        elif isinstance(node, Element) and node.tag not in ("script", "style"):
+            stack.extend(node.children[::-1])
+    text = "".join(parts)
+    return text.strip() if strip else text
+
+
+def _ref_tag_counts(el):
+    counts = {}
+    for e in el.iter():
+        counts[e.tag] = counts.get(e.tag, 0) + 1
+    return counts
+
+
+def _ref_has_video_embed(el):
+    from graby_spark.readability import _VIDEO_RE
+
+    for tag in ("iframe", "embed", "object", "video"):
+        for e in el.iter(tag):
+            if tag == "video" or _VIDEO_RE.search(e.get("src") or ""):
+                return True
+    return False
+
+
+def _ref_link_density(el):
+    text_len = len(_ref_inner_text(el))
+    if text_len == 0:
+        return 0.0
+    return sum(len(_ref_inner_text(a)) for a in el.iter("a")) / text_len
+
+
+def _ref_measure(el):
+    """What ``readability._measured`` must give ``el``, recomputed from its
+    own subtree."""
+    from graby_spark.readability import _FIELD, _VIDEO, _VIDEO_RE
+
+    raw = _ref_inner_text(el, strip=False)
+    counts = sum(n << _FIELD[t] for t, n in _ref_tag_counts(el).items() if t in _FIELD)
+    for e in el.iter():
+        if e.tag in ("iframe", "embed", "object") and _VIDEO_RE.search(e.get("src") or ""):
+            counts += 1 << _VIDEO
+    link = sum(len(_ref_inner_text(a)) for a in el.iter("a"))
+    first, last = len(raw) - len(raw.lstrip()), len(raw.rstrip())
+    return (len(raw), first, last, raw.count(",") + raw.count("，"), link, counts)
+
+
+def _ref_clean_conditionally(self, el, tag):
+    """The per-target cleanConditionally that ``_measured`` replaced: every
+    target re-walks its subtree for its text, anchors, tags and embeds."""
+    from graby_spark.readability import _VIDEO_RE
+
+    for target in reversed(el.iter_list(tag)):
+        if target.parent is None:
+            continue
+        tc = _ref_tag_counts(target)
+        if any(t in tc for t in ("iframe", "embed", "object", "video")):
+            if _ref_has_video_embed(target):
+                continue
+        weight = self._class_weight(target) + self._scores.get(id(target), 0.0)
+        text = _ref_inner_text(target)
+        if (target.get("role") or "").lower() == "dialog" and not any(
+            h in tc for h in ("h1", "h2", "h3")
+        ):
+            target.detach()
+            continue
+        if weight < 0:
+            target.detach()
+            continue
+        if text.count(",") + text.count("，") < 10:
+            p_count = tc.get("p", 0)
+            img_count = tc.get("img", 0)
+            li_count = tc.get("li", 0) - 100
+            input_count = tc.get("input", 0) + tc.get("button", 0)
+            embed_count = sum(
+                1 for e in target.iter("embed") if not _VIDEO_RE.search(e.get("src") or "")
+            )
+            length = len(text)
+            density = _ref_link_density(target) if length else 0.0
+            if (
+                (img_count > p_count and img_count > 4)
+                or (li_count > p_count and tag not in ("ul", "ol"))
+                or (input_count > p_count // 3)
+                or (length == 0 and p_count == 0 and (img_count == 0 or img_count > 2))
+                or (weight < 25 and density > 0.2)
+                or (weight >= 25 and density > 0.5)
+                or ((embed_count == 1 and length < 75) or embed_count > 1)
+            ):
+                target.detach()
+
+
+def _ref_clean_headers(self, el):
+    for tag in ("h1", "h2"):
+        for header in el.iter_list(tag):
+            if header.parent is None:
+                continue
+            if self._class_weight(header) < 0 or _ref_link_density(header) > 0.33:
+                header.detach()
+
+
+def _check_measures(root):
+    from graby_spark.readability import _measured
+
+    measured = list(_measured(root))
+    assert [el for el, _ in measured] == list(reversed([root] + root.iter_list()))
+    for el, measure in measured:
+        assert measure == _ref_measure(el), serialize(el)[:200]
+        _, first, last = measure[:3]
+        assert max(last - first, 0) == len(_ref_inner_text(el))
+
+
+def _prepared(html, scores, reference):
+    """``prep_article`` over the body's content moved into a fresh article
+    div, with ``scores`` planted by element position; ``reference`` runs
+    the per-target cleanConditionally and header cleaning instead of the
+    measured ones."""
+    import types
+
+    from graby_spark.dom import Element
+    from graby_spark.readability import Readability
+
+    rd = Readability(html, "http://prop.example/x")
+    article = Element("div")
+    for child in list(rd.dom.body().children):
+        article.append(child)
+    for i, el in enumerate(article.iter_list()):
+        if i in scores:
+            rd._scores[id(el)] = scores[i]
+    if reference:
+        rd._clean_conditionally = types.MethodType(_ref_clean_conditionally, rd)
+        rd._clean_headers = types.MethodType(_ref_clean_headers, rd)
+    rd.prep_article(article)
+    return serialize(article)
+
+
+def _check_prep_article(html, scores):
+    assert _prepared(html, scores, False) == _prepared(html, scores, True)
+
+
+@given(
+    _READABILITY_PARTS,
+    st.dictionaries(st.integers(0, 40), st.sampled_from([-30.0, -5.0, 0.0, 10.0, 30.0])),
+)
+@settings(max_examples=300, deadline=None)
+def test_measured_matches_per_element_rewalks(parts, scores):
+    """Every element's measure equals its own subtree's recomputation, and
+    prep_article leaves the tree the per-target cleanConditionally leaves."""
+    html = "".join(parts)
+    _check_measures(parse_html(html))
+    _check_prep_article(html, scores)
+
+
+def test_measured_matches_per_element_rewalks_on_recorded_pages():
+    from tests.golden import load_golden
+
+    pages = [html for _name, html in _recorded_pages()]
+    for name in ("lemonde", "blogger", "lifehacker"):
+        case = load_golden(name)
+        pages.append(convert_to_utf8(case.raw_content, case.header))
+    for html in pages:
+        _check_measures(parse_html(html))
+        _check_prep_article(html, {i: (-30.0, 10.0, 30.0)[i % 3] for i in range(0, 400, 7)})
+
+
+_BUILDER_PARTS = st.lists(
+    st.sampled_from(
+        _READABILITY_SOUP
+        + [
+            "<html>", "</html>", "<head>", "</head>", "<body>", "</body>", "<title>",
+            "</title>", "<meta x=1>", "<dl>", "<dt>", "<dd>", "</dl>", "<select>",
+            "<option>", "<optgroup>", "</select>", "</td>", "</tr>", "</li>", "<p/>",
+            "<div/>", "</b>", "<section>", "</section>", "<blockquote>",
+        ]
+    ),
+    max_size=50,
+)
+
+
+@given(_BUILDER_PARTS, st.sampled_from(["libxml", "html5"]), st.booleans())
+@settings(max_examples=300, deadline=None)
+def test_tree_builder_open_counts_match_stack(parts, profile, fast):
+    """After every builder event, the per-tag open counts equal the tag
+    histogram of the open-element stack."""
+    from collections import Counter
+
+    from graby_spark.dom import _scan, _TreeBuilder
+
+    class Checked(_TreeBuilder):
+        def _checked(self, hook, *args):
+            hook(self, *args)
+            assert {t: n for t, n in self.open.items() if n} == Counter(
+                el.tag for el in self.stack
+            )
+
+        def handle_starttag(self, *args):
+            self._checked(_TreeBuilder.handle_starttag, *args)
+
+        def handle_endtag(self, *args):
+            self._checked(_TreeBuilder.handle_endtag, *args)
+
+        def handle_data(self, *args):
+            self._checked(_TreeBuilder.handle_data, *args)
+
+        def handle_comment(self, *args):
+            self._checked(_TreeBuilder.handle_comment, *args)
+
+    builder = Checked(profile=profile)
+    html = "".join(parts)
+    if fast:
+        _scan(html, builder)
+    else:
+        builder.feed(html)
+        builder.close()
+    builder._checked(_TreeBuilder._ensure_body)

@@ -100,6 +100,10 @@ def test_substring_functions(doc):
     assert evaluate("substring-before('a:b', ':')", doc) == "a"
     assert evaluate("substring-after('a:b', ':')", doc) == "b"
     assert evaluate("substring('hello', 2, 3)", doc) == "ell"
+    # XPath round() takes halves up, and a NaN bound selects nothing
+    assert evaluate("substring('12345', 2.5)", doc) == "345"
+    assert evaluate("substring('12345', 1.5, 2.5)", doc) == "234"
+    assert evaluate("substring('abc', 'x')", doc) == ""
     assert evaluate("translate('abc', 'ab', 'xy')", doc) == "xyc"
     # a character repeated in the from-string maps by its first occurrence
     assert evaluate("translate('aab', 'aa', 'xy')", doc) == "xxb"
