@@ -473,7 +473,7 @@ class _TreeBuilder(HTMLParser):
                     self._truncate(i)
                     break
         closers = _IMPLIED_END.get(tag)
-        if closers:
+        if closers and any(self.open.get(c) for c in closers):
             barriers = _RULE_BARRIERS.get(tag, frozenset())
             for i in range(len(self.stack) - 1, -1, -1):
                 open_tag = self.stack[i].tag

@@ -3,7 +3,7 @@
 The north_rule requires the job to be "resumable from checkpoint with
 per-partition lineage + metrics".  Without an Iceberg runtime in this
 environment the manifest is a plain parquet table maintained with Iceberg's
-snapshot semantics (append-only manifests, resume = anti-join):
+snapshot semantics (append-only manifests, resume = a bucket filter):
 
   manifest(run_id, snapshot_id, bucket, url_count, ok_count, fail_count,
            bytes_in, wall_ms, completed_at)
@@ -15,7 +15,15 @@ snapshot semantics (append-only manifests, resume = anti-join):
 * A bucket appears in the manifest only after all of its rows were
   written — the write is bucket-partitioned so the commit unit and the
   resume unit coincide.
-* resume = pages LEFT ANTI JOIN completed buckets.
+* resume = pages whose bucket is not among the completed ones.  The
+  completed list (≤ ``BUCKETS`` ids) is collected once and applied as a
+  literal ``NOT IN`` filter, so a manifest that covers every bucket
+  folds the remainder to an empty plan: no sampling, shuffle or Python
+  task runs downstream.
+
+Commit and resume run on the JVM alone.  A commit appends its ≤ ``BUCKETS``
+rows as one literal relation, one parquet file, with no Python worker;
+every read gives the known ``_MANIFEST_SCHEMA``, so none infers it.
 
 SINGLE WRITER (protocol requirement, ADVICE r03): the snapshot_id bump in
 ``write_with_manifest`` and the compaction in ``expire_snapshots`` are
@@ -34,14 +42,21 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 __all__ = [
     "bucket_of",
-    "completed_buckets",
     "expire_snapshots",
     "filter_resumable",
     "manifest_snapshots",
@@ -52,10 +67,18 @@ __all__ = [
 BUCKETS = 64
 
 # nullability as well as types match the files earlier writes left
-_MANIFEST_SCHEMA = (
-    "run_id string NOT NULL, snapshot_id bigint NOT NULL, bucket int, "
-    "url_count bigint NOT NULL, ok_count bigint, fail_count bigint, "
-    "bytes_in bigint, wall_ms int NOT NULL, completed_at timestamp NOT NULL"
+_MANIFEST_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType(), False),
+        StructField("snapshot_id", LongType(), False),
+        StructField("bucket", IntegerType(), True),
+        StructField("url_count", LongType(), False),
+        StructField("ok_count", LongType(), True),
+        StructField("fail_count", LongType(), True),
+        StructField("bytes_in", LongType(), True),
+        StructField("wall_ms", IntegerType(), False),
+        StructField("completed_at", TimestampType(), False),
+    ]
 )
 
 
@@ -63,15 +86,46 @@ def bucket_of(url_col):
     return F.pmod(F.xxhash64(url_col), F.lit(BUCKETS)).cast("int")
 
 
+def _sql_literal(value, dtype) -> str:
+    if value is None:
+        return "NULL"
+    if isinstance(dtype, StringType):
+        return f"'{value}'"  # run ids are hex
+    if isinstance(dtype, LongType):
+        return f"{value}L"
+    if isinstance(dtype, TimestampType):
+        return f"timestamp_micros({value})"
+    return str(value)
+
+
+def _manifest_rows(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """``rows`` (``completed_at`` in epoch microseconds) as one JVM-side
+    relation in one partition: an array literal, written as one SQL
+    expression (a column call per value would cost a Py4J round trip
+    each), cast to the manifest's struct type, which carries each
+    column's nullability, and unnested over a one-row range."""
+    fields = _MANIFEST_SCHEMA.fields
+    structs = ", ".join(
+        "struct(" + ", ".join(_sql_literal(v, f.dataType) for v, f in zip(row, fields)) + ")"
+        for row in rows
+    )
+    array = F.expr(f"array({structs})").cast(ArrayType(_MANIFEST_SCHEMA, containsNull=False))
+    return spark.range(0, 1, 1, 1).select(F.inline(array))
+
+
+def _read(spark: SparkSession, manifest_path: str) -> DataFrame:
+    """Every manifest row, read with the known schema (no inference job);
+    an empty relation when nothing was committed yet."""
+    if not os.path.exists(manifest_path):
+        return _manifest_rows(spark, []).where(F.lit(False))
+    return spark.read.schema(_MANIFEST_SCHEMA).parquet(manifest_path)
+
+
 def manifest_snapshots(spark: SparkSession, manifest_path: str) -> DataFrame:
     """Snapshot log (Iceberg ``.snapshots`` analog): one row per committed
     snapshot with its run and bucket/url totals, ordered by snapshot_id."""
-    if not os.path.exists(manifest_path):
-        return spark.createDataFrame(
-            [], "snapshot_id long, run_id string, buckets long, url_count long"
-        )
     return (
-        spark.read.parquet(manifest_path)
+        _read(spark, manifest_path)
         .groupBy("snapshot_id", "run_id")
         .agg(F.count("*").alias("buckets"), F.sum("url_count").alias("url_count"))
         .orderBy("snapshot_id")
@@ -95,9 +149,7 @@ def read_manifest(
     ``history=True`` returns every manifest row ≤ the pin instead (like
     reading its ``.entries`` metadata table).
     """
-    if not os.path.exists(manifest_path):
-        return spark.createDataFrame([], "bucket int")
-    rows = spark.read.parquet(manifest_path)
+    rows = _read(spark, manifest_path)
     if as_of_snapshot is not None:
         rows = rows.where(F.col("snapshot_id") <= as_of_snapshot)
     if history:
@@ -110,31 +162,34 @@ def read_manifest(
     return rows.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
 
 
-def completed_buckets(
-    spark: SparkSession, manifest_path: str, as_of_snapshot: int | None = None
-) -> DataFrame:
-    """Buckets recorded complete by any run at/before the pinned snapshot
-    (default: all runs)."""
-    return (
-        read_manifest(spark, manifest_path, as_of_snapshot, history=True)
-        .select("bucket")
-        .distinct()
-    )
-
-
 def filter_resumable(
     spark: SparkSession,
     pages: DataFrame,
     manifest_path: str,
     as_of_snapshot: int | None = None,
 ) -> DataFrame:
-    """Drop rows whose bucket already completed (anti-join on the tiny
-    bucket list — broadcastable by construction); the result has exactly
-    ``pages``' columns.  ``as_of_snapshot`` pins the resume decision to a
-    manifest snapshot: the same remaining set is computed even while a
-    newer run is appending manifest rows."""
-    done = F.broadcast(completed_buckets(spark, manifest_path, as_of_snapshot))
-    return pages.join(done, bucket_of(pages["url"]) == done["bucket"], "left_anti")
+    """Drop rows whose bucket already completed; the result has exactly
+    ``pages``' columns.
+
+    The buckets recorded complete by any run at or before the pinned
+    snapshot (default: all runs) are collected here, once, as the bucket
+    column of the manifest history (a scan, no shuffle), and kept as a
+    literal filter ``NOT bucket_of(url) IN (...)``: the call runs one
+    small job and the plan it returns reads no manifest.  When every
+    bucket is complete the result is ``pages.limit(0)``, which Catalyst
+    replaces with an empty ``LocalRelation`` whatever ``pages``'
+    plan (a ``where(False)`` would be pushed below a repartition and stop
+    there): an extraction and write over it launch no task.
+    ``as_of_snapshot`` pins the decision to a manifest snapshot: the same
+    remaining set is computed even while a newer run is appending
+    manifest rows."""
+    history = read_manifest(spark, manifest_path, as_of_snapshot, history=True)
+    done = {r["bucket"] for r in history.select("bucket").collect() if r["bucket"] is not None}
+    if done.issuperset(range(BUCKETS)):
+        return pages.limit(0)
+    if not done:
+        return pages
+    return pages.where(~bucket_of(pages["url"]).isin(sorted(done)))
 
 
 #: snapshots :func:`expire_snapshots` retains
@@ -176,7 +231,7 @@ def expire_snapshots(spark: SparkSession, manifest_path: str) -> dict:
             "rows_before": 0,
             "rows_after": 0,
         }
-    rows = spark.read.parquet(manifest_path)
+    rows = _read(spark, manifest_path)
     snap_ids = sorted(
         r["snapshot_id"] for r in rows.select("snapshot_id").distinct().collect()
     )
@@ -252,27 +307,23 @@ def write_with_manifest(
     """Write the extraction output bucket-partitioned, then append one
     manifest row per bucket (lineage: counts, bytes, wall time, snapshot).
 
-    Returns summary metrics.  A crash between the data write and the
-    manifest append leaves the bucket un-recorded → it is re-extracted on
-    resume and overwritten idempotently (dynamic partition overwrite),
-    which preserves exactly-once output semantics.
+    Returns summary metrics: ``run_id``, ``snapshot_id``, ``urls``, ``ok``,
+    ``fail`` and ``wall_ms``.  ``snapshot_id`` is the id this call
+    committed, or None when ``extracted`` was empty (a fully resumed run
+    commits nothing: it writes no data and no manifest row, and reads no
+    manifest history).
+
+    A crash between the data write and the manifest append leaves the
+    bucket un-recorded → it is re-extracted on resume and overwritten
+    idempotently (dynamic partition overwrite), which preserves
+    exactly-once output semantics.  The append is one parquet file per
+    commit, built on the JVM without a Python worker.
 
     Over ``run_extraction``'s default repartition each task holds a
     contiguous run of the ``BUCKETS`` buckets, so the write makes at most
     partitions + ``BUCKETS`` − 1 files.
     """
     run_id = uuid.uuid4().hex[:12]
-    # strictly increasing commit sequence even for back-to-back runs in
-    # the same millisecond (time travel needs a total snapshot order)
-    snapshot_id = int(time.time() * 1000)
-    if os.path.exists(manifest_path):
-        prev = (
-            spark.read.parquet(manifest_path)
-            .agg(F.max("snapshot_id").alias("m"))
-            .collect()[0]["m"]
-        )
-        if prev is not None and snapshot_id <= prev:
-            snapshot_id = prev + 1
     started = time.time()
 
     with_bucket = extracted.withColumn("bucket", bucket_of(F.col("url"))).cache()
@@ -291,7 +342,7 @@ def write_with_manifest(
     )
     summary = {
         "run_id": run_id,
-        "snapshot_id": snapshot_id,
+        "snapshot_id": None,
         "urls": sum(r["url_count"] for r in stats),
         "ok": sum(r["ok_count"] for r in stats),
         "fail": sum(r["fail_count"] for r in stats),
@@ -314,9 +365,17 @@ def write_with_manifest(
     with_bucket.unpersist()
 
     # data first, then the manifest: a bucket is recorded only once its
-    # rows are on disk
-    completed_at = datetime.now(timezone.utc)
+    # rows are on disk.  A strictly increasing commit sequence even for
+    # back-to-back runs in the same millisecond (time travel needs a total
+    # snapshot order).
+    snapshot_id = int(time.time() * 1000)
+    if os.path.exists(manifest_path):
+        prev = _read(spark, manifest_path).agg(F.max("snapshot_id")).first()[0]
+        if prev is not None and snapshot_id <= prev:
+            snapshot_id = prev + 1
+    summary["snapshot_id"] = snapshot_id
+    completed_at = time.time_ns() // 1000
     # each stats row is (bucket, url_count, ok_count, fail_count, bytes_in)
     rows = [(run_id, snapshot_id, *r, summary["wall_ms"], completed_at) for r in stats]
-    spark.createDataFrame(rows, _MANIFEST_SCHEMA).write.mode("append").parquet(manifest_path)
+    _manifest_rows(spark, rows).write.mode("append").parquet(manifest_path)
     return summary

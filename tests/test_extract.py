@@ -664,3 +664,24 @@ def test_extract_one_time_grows_linearly_with_nesting_depth(shape):
 
     shallow, deep = best_of_3(750), best_of_3(3000)
     assert deep <= 8 * shallow, (shape, shallow, deep)
+
+
+def test_implied_end_tags_parse_linearly_under_deep_nesting():
+    """A list item under n open ``<div>``s has no open ``<li>`` to close:
+    four times n costs at most 8x the parse (the open-stack scan on every
+    ``<li>`` start read about 17x)."""
+    import time
+
+    from graby_spark.dom import parse_html
+
+    def best_of_3(n):
+        html = "<div>" * n + "<li>x</li>" * n
+        times = []
+        for _ in range(3):
+            start = time.perf_counter()
+            parse_html(html)
+            times.append(time.perf_counter() - start)
+        return min(times)
+
+    shallow, deep = best_of_3(2000), best_of_3(8000)
+    assert deep <= 8 * shallow, (shallow, deep)

@@ -149,6 +149,24 @@ def test_manifest_write_and_resume(spark, extracted, tmp_path_factory):
         ("wall_ms", "int"),
         ("completed_at", "timestamp"),
     ]
+    # one parquet file per commit, and its nullability as well (Spark's
+    # reader reports every column nullable, so read the file itself)
+    import pyarrow.parquet as pq
+
+    files = [f for f in os.listdir(manifest_path) if f.endswith(".parquet")]
+    assert len(files) == 1, files
+    file_schema = pq.read_schema(os.path.join(manifest_path, files[0]))
+    assert [(f.name, str(f.type), f.nullable) for f in file_schema] == [
+        ("run_id", "string", False),
+        ("snapshot_id", "int64", False),
+        ("bucket", "int32", True),
+        ("url_count", "int64", False),
+        ("ok_count", "int64", True),
+        ("fail_count", "int64", True),
+        ("bytes_in", "int64", True),
+        ("wall_ms", "int32", False),
+        ("completed_at", "timestamp[ns]", False),
+    ]
 
     # resume: everything completed → nothing left to do, and the remainder
     # is the pages table itself (no bucket column leaks to the caller)
@@ -429,6 +447,93 @@ def test_each_task_writes_whole_buckets(spark, tmp_path_factory):
     totals = manifest.agg(F.sum("ok_count"), F.sum("fail_count")).first()
     assert tuple(totals) == (outcomes[True], outcomes[False])
     assert filter_resumable(spark, pages, manifest_path).count() == 0
+
+
+def test_manifest_crash_between_write_and_append_resumes(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A run whose manifest append fails after its data write leaves those
+    buckets unrecorded: resume re-extracts exactly them, the rewrite
+    replaces their files, and the output and manifest agree again."""
+    from pyspark.sql import functions as F
+
+    from graby_spark import manifest
+
+    base = str(tmp_path_factory.mktemp("manifest_crash"))
+    out_path = os.path.join(base, "out")
+    manifest_path = os.path.join(base, "manifest")
+    pages = _mega_host_pages(spark)
+
+    def extract(df):
+        return run_extraction(spark, df, pages_ruleset(), options=OPTS, partitions=4)
+
+    # a first run commits the low buckets
+    write_with_manifest(spark, extract(pages.where(bucket_of("url") < 32)), out_path, manifest_path)
+
+    def crash(*_args):
+        raise OSError("crash after the data write")
+
+    # a second run writes every bucket's data, then dies before its append
+    with monkeypatch.context() as patch:
+        patch.setattr(manifest, "_manifest_rows", crash)
+        with pytest.raises(OSError):
+            write_with_manifest(spark, extract(pages), out_path, manifest_path)
+    assert spark.read.parquet(out_path).count() == 500
+
+    remaining = filter_resumable(spark, pages, manifest_path)
+    assert 0 < remaining.count() < 500
+    write_with_manifest(spark, extract(remaining), out_path, manifest_path)
+
+    output = spark.read.parquet(out_path)
+    urls = [r["url"] for r in output.select("url").collect()]
+    assert len(urls) == 500 and len(set(urls)) == 500
+    outcomes = {
+        r["is_success"]: r["count"] for r in output.groupBy("is_success").count().collect()
+    }
+    totals = spark.read.parquet(manifest_path).agg(F.sum("ok_count"), F.sum("fail_count")).first()
+    assert tuple(totals) == (outcomes[True], outcomes[False]) and outcomes[False] > 0
+    assert filter_resumable(spark, pages, manifest_path).count() == 0
+
+
+def test_noop_resume_prunes_to_an_empty_plan_and_launches_no_task(
+    spark, extracted, tmp_path_factory
+):
+    """Over a manifest that covers every bucket the remainder is an empty
+    LocalRelation, and extracting and writing it runs no Spark task."""
+    import uuid
+
+    from graby_spark.manifest import BUCKETS
+
+    base = str(tmp_path_factory.mktemp("manifest_noop"))
+    out_path = os.path.join(base, "out")
+    manifest_path = os.path.join(base, "manifest")
+    write_with_manifest(spark, extracted, out_path, manifest_path)
+    assert spark.read.parquet(manifest_path).select("bucket").distinct().count() == BUCKETS
+
+    pages = build_pages_df(spark, SF_DIR)
+    remainder = filter_resumable(spark, pages, manifest_path)
+    assert remainder.columns == pages.columns
+    plan = remainder._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation <empty>"), plan
+
+    sc = spark.sparkContext
+    group = f"noop-resume-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "no-op resume")
+    try:
+        summary = write_with_manifest(
+            spark, run_extraction(spark, remainder, pages_ruleset(), options=OPTS),
+            out_path, manifest_path,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert summary["urls"] == 0 and summary["snapshot_id"] is None
+    tracker = sc.statusTracker()
+    launched = 0
+    for job_id in tracker.getJobIdsForGroup(group):
+        for stage_id in tracker.getJobInfo(job_id).stageIds:
+            stage = tracker.getStageInfo(stage_id)
+            launched += stage.numActiveTasks + stage.numCompletedTasks + stage.numFailedTasks
+    assert launched == 0
 
 
 def test_oversized_row_short_circuits(spark):
