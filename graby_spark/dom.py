@@ -423,6 +423,10 @@ class _TreeBuilder(HTMLParser):
         #: per-tag count of the elements on ``stack``: a rule whose tag is
         #: not open skips its scan (no nesting makes a parse quadratic)
         self.open: dict[str, int] = {}
+        #: ``stack`` positions of the open <p>s and of the open scope
+        #: barriers: an implied </p> reads the innermost of each, no scan
+        self.paragraphs: list[int] = []
+        self.barriers: list[int] = []
         self._saw_html = False
         self._saw_body = False
         self._src_pos: int | None = None  # open-tag offset (fast scanner)
@@ -433,6 +437,20 @@ class _TreeBuilder(HTMLParser):
         for el in self.stack[i:]:
             self.open[el.tag] -= 1
         del self.stack[i:]
+        while self.paragraphs and self.paragraphs[-1] >= i:
+            self.paragraphs.pop()
+        while self.barriers and self.barriers[-1] >= i:
+            self.barriers.pop()
+
+    def _reset(self, *stack: Element) -> None:
+        """Make ``stack`` the open-element stack (a restart at html, head or
+        body level)."""
+        self.stack = list(stack)
+        self.open = {}
+        for el in stack:
+            self.open[el.tag] = self.open.get(el.tag, 0) + 1
+        self.paragraphs = [i for i, el in enumerate(stack) if el.tag == "p"]
+        self.barriers = [i for i, el in enumerate(stack) if el.tag in _SCOPE_BARRIERS]
 
     def _current(self) -> Element:
         if not self.stack:
@@ -459,19 +477,15 @@ class _TreeBuilder(HTMLParser):
             body = Element("body")
             html.append(body)
         if not self.stack:
-            self.stack = [body]
-            self.open = {"body": 1}
+            self._reset(body)
 
     def _implied_close(self, tag: str) -> None:
-        if tag in _P_CLOSERS and self.open.get("p"):
-            # close an open <p> in scope
-            for i in range(len(self.stack) - 1, -1, -1):
-                open_tag = self.stack[i].tag
-                if open_tag in _SCOPE_BARRIERS:
-                    break
-                if open_tag == "p":
-                    self._truncate(i)
-                    break
+        if tag in _P_CLOSERS and self.paragraphs:
+            # close the innermost open <p> unless a scope barrier opened
+            # inside it
+            p = self.paragraphs[-1]
+            if not self.barriers or self.barriers[-1] < p:
+                self._truncate(p)
         closers = _IMPLIED_END.get(tag)
         if closers and any(self.open.get(c) for c in closers):
             barriers = _RULE_BARRIERS.get(tag, frozenset())
@@ -505,8 +519,7 @@ class _TreeBuilder(HTMLParser):
                     if not html.has_attr(k):
                         html.set_attr(k, v)
             if not self.stack:
-                self.stack = [html]
-                self.open = {"html": 1}
+                self._reset(html)
             return
         if tag in ("head", "body"):
             html = self._ensure_html()
@@ -522,8 +535,7 @@ class _TreeBuilder(HTMLParser):
                 for k, v in clean_attrs:
                     if not existing.has_attr(k):
                         existing.set_attr(k, v)
-            self.stack = [existing]
-            self.open = {tag: 1}
+            self._reset(existing)
             return
 
         at_html_level = not self.stack or self.stack[-1].tag == "html"
@@ -544,11 +556,9 @@ class _TreeBuilder(HTMLParser):
                 el = Element(tag, clean_attrs)
                 head.append(el)
                 if tag not in VOID_ELEMENTS:
-                    self.stack = [head, el]
-                    self.open = {"head": 1, tag: 1}
+                    self._reset(head, el)
                 return
-            self.stack = []
-            self.open = {}
+            self._reset()
             self._ensure_body()
 
         self._implied_close(tag)
@@ -558,6 +568,10 @@ class _TreeBuilder(HTMLParser):
             el.src_end = self._src_end
         self._current().append(el)
         if tag not in VOID_ELEMENTS:
+            if tag == "p":
+                self.paragraphs.append(len(self.stack))
+            elif tag in _SCOPE_BARRIERS:
+                self.barriers.append(len(self.stack))
             self.stack.append(el)
             self.open[tag] = self.open.get(tag, 0) + 1
 
@@ -589,8 +603,7 @@ class _TreeBuilder(HTMLParser):
         if not self.stack or self.stack[-1].tag == "html":
             if data.strip() == "":
                 return
-            self.stack = []
-            self.open = {}
+            self._reset()
             self._ensure_body()
         cur = self._current()
         if (

@@ -10,7 +10,10 @@ Spark-first layout of the reference's per-document pipeline
     → mapInPandas(extract_batch)                -- C*/P*/R*/D*/O* inside one
       Arrow-batched Python stage; broadcast ruleset probed per row
     → multipage resolve (iterative self-join)   -- G1-G3
-    → write parquet + manifest                  -- S13 + checkpoint/lineage
+    → write parquet + manifest                  -- S13 + checkpoint/lineage:
+      a mapInArrow stage in the same Spark stage writes one file per
+      (task, bucket) and returns its counts; the driver moves the files
+      into bucket=<b>/ and appends the manifest (manifest.py)
 
 The ruleset is compiled once on the driver and broadcast — the R2 host →
 config lookup is thereby a broadcast hash join executed inside the UDF

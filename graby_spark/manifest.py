@@ -21,13 +21,30 @@ snapshot semantics (append-only manifests, resume = a bucket filter):
   folds the remainder to an empty plan: no sampling, shuffle or Python
   task runs downstream.
 
-Commit and resume run on the JVM alone.  A commit appends its ≤ ``BUCKETS``
-rows as one literal relation, one parquet file, with no Python worker;
-every read gives the known ``_MANIFEST_SCHEMA``, so none infers it.
+Commit protocol (``write_with_manifest``):
 
-SINGLE WRITER (protocol requirement, ADVICE r03): the snapshot_id bump in
-``write_with_manifest`` and the compaction in ``expire_snapshots`` are
-read-modify-write sequences with no lock — two concurrent writers could
+1. The data write is one ``mapInArrow`` stage in the extraction's stage:
+   each task writes its rows of each bucket to one parquet file under
+   ``<output>/.staging-<run_id>/bucket=<b>/`` with pyarrow and returns the
+   file's path and lineage counts.  No cache, no stats pass, no Hadoop
+   output committer.
+2. The driver collects those rows (the stats and the commit list at
+   once), replaces each written bucket's ``<output>/bucket=<b>`` with its
+   listed files, removes the staging directory and writes ``_SUCCESS``.
+3. Then the manifest append: ≤ ``BUCKETS`` rows as one JVM-side literal
+   relation, one parquet file, with no Python worker.  Every read gives
+   the known ``_MANIFEST_SCHEMA``, so none infers it; resume runs on the
+   JVM alone.
+
+A staging directory left by a crash inside step 2 is skipped by Spark's
+reader (its name starts with ``.``) and removed by the next write.  Paths
+are local POSIX paths: the driver lists, moves and removes them with
+``os``/``shutil``, and the tasks write them with pyarrow.
+
+SINGLE WRITER (protocol requirement, ADVICE r03): the snapshot_id bump and
+the staging clean-up in ``write_with_manifest`` and the compaction in
+``expire_snapshots`` are read-modify-write sequences with no lock — two
+concurrent writers could
 mint the same snapshot_id and break the strict total order that
 ``read_manifest`` time travel assumes.  Exactly like Hive-style tables
 without a metastore lock, one manifest = one writer at a time; CONCURRENT
@@ -40,6 +57,7 @@ put) around the commit section.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
 
@@ -54,6 +72,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from .session import settle_python_worker
 
 __all__ = [
     "bucket_of",
@@ -222,8 +242,6 @@ def expire_snapshots(spark: SparkSession, manifest_path: str) -> dict:
     Returns {"snapshots_before", "snapshots_expired", "rows_before",
     "rows_after"}.
     """
-    import shutil
-
     if not os.path.exists(manifest_path):
         return {
             "snapshots_before": 0,
@@ -298,6 +316,88 @@ def expire_snapshots(spark: SparkSession, manifest_path: str) -> dict:
     }
 
 
+#: the write stage's rows: one per bucket file, its path and lineage counts
+_FILE_SCHEMA = (
+    "bucket int, path string, url_count bigint, ok_count bigint, fail_count bigint, bytes_in bigint"
+)
+
+
+def _add_counts(total: list, counts) -> None:
+    """Add ``(url_count, ok_count, fail_count, bytes_in)`` into the last four
+    fields of ``total`` with SQL ``sum``'s null semantics: a sum stays NULL
+    while every part is."""
+    for i, part in enumerate(counts, len(total) - 4):
+        if part is not None:
+            total[i] = part if total[i] is None else total[i] + part
+
+
+def _bucket_file_writer(staging: str):
+    """The write stage's ``mapInArrow`` function.  Each task writes its rows
+    of bucket ``b`` to one parquet file,
+    ``<staging>/bucket=<b>/part-<partition>-<attempt>.parquet``, without
+    the ``bucket`` column (the directory carries it); one writer per bucket
+    stays open across the task's batches.  Once they are consumed the task
+    yields one ``_FILE_SCHEMA`` row per file it wrote, counted with the
+    replaced SQL aggregate's null semantics: ``url_count`` counts every
+    row, a NULL ``is_success`` is neither ok nor fail, and a sum over only
+    NULLs is NULL."""
+
+    def write_files(batches) -> list[tuple]:
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+        writers: dict = {}
+        files: dict[int, list] = {}
+        try:
+            for batch in batches:
+                buckets = batch.column("bucket")
+                rows = batch.drop_columns("bucket")
+                for b in pc.unique(buckets).to_pylist():
+                    part = rows.filter(pc.equal(buckets, b))
+                    if b not in writers:
+                        path = os.path.join(staging, f"bucket={b}", name)
+                        os.makedirs(os.path.dirname(path), exist_ok=True)
+                        writers[b] = pq.ParquetWriter(path, part.schema)
+                        files[b] = [b, path, 0, None, None, None]
+                    writers[b].write_batch(part)
+                    ok = part.column("is_success")
+                    _add_counts(
+                        files[b],
+                        (
+                            part.num_rows,
+                            pc.sum(ok).as_py(),
+                            pc.sum(pc.invert(ok)).as_py(),
+                            pc.sum(part.column("bytes_in")).as_py(),
+                        ),
+                    )
+        finally:
+            for writer in writers.values():
+                writer.close()
+        return [tuple(row) for row in files.values()]
+
+    def write(batches):
+        import pyarrow as pa
+
+        schema = pa.schema(
+            [("bucket", pa.int32()), ("path", pa.string())]
+            + [(name, pa.int64()) for name in ("url_count", "ok_count", "fail_count", "bytes_in")]
+        )
+        try:
+            # no batch of the task is referenced once write_files returns,
+            # so the settle below runs over the worker's own heap
+            files = write_files(batches)
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(schema.names, row)) for row in files], schema=schema
+            )
+        finally:
+            settle_python_worker()
+
+    return write
+
+
 def write_with_manifest(
     spark: SparkSession,
     extracted: DataFrame,
@@ -310,59 +410,74 @@ def write_with_manifest(
     Returns summary metrics: ``run_id``, ``snapshot_id``, ``urls``, ``ok``,
     ``fail`` and ``wall_ms``.  ``snapshot_id`` is the id this call
     committed, or None when ``extracted`` was empty (a fully resumed run
-    commits nothing: it writes no data and no manifest row, and reads no
-    manifest history).
+    commits nothing: it launches no task, writes no data and no manifest
+    row, and reads no manifest history).
 
-    A crash between the data write and the manifest append leaves the
-    bucket un-recorded → it is re-extracted on resume and overwritten
-    idempotently (dynamic partition overwrite), which preserves
-    exactly-once output semantics.  The append is one parquet file per
+    The data write is one ``mapInArrow`` stage fused with the extraction:
+    each task writes its rows of each bucket to one parquet file under
+    ``<output>/.staging-<run_id>/bucket=<b>/`` and returns that file's
+    path and lineage counts.  The collected rows (≤ partitions +
+    ``BUCKETS`` − 1 over ``run_extraction``'s default repartition) are
+    both the manifest's stats and the commit list: only a successful task
+    attempt returns rows, so a failed or retried attempt's files are never
+    committed.  The commit, on the driver, replaces each written bucket's
+    directory ``<output>/bucket=<b>`` with its listed files (a dynamic
+    partition overwrite), removes the staging directory and writes
+    ``_SUCCESS``.  Data first, then the manifest: a crash before the
+    append leaves the bucket un-recorded → it is re-extracted on resume
+    and overwritten idempotently, which preserves exactly-once output
+    semantics.  A crash inside the commit leaves the staging directory,
+    which Spark's reader skips (its name starts with ``.``) and the next
+    write to the output removes.  The append is one parquet file per
     commit, built on the JVM without a Python worker.
 
-    Over ``run_extraction``'s default repartition each task holds a
-    contiguous run of the ``BUCKETS`` buckets, so the write makes at most
-    partitions + ``BUCKETS`` − 1 files.
+    ``output_path`` and ``manifest_path`` are local POSIX paths, read and
+    moved with ``os``/``shutil`` by the driver and written by the tasks.
     """
     run_id = uuid.uuid4().hex[:12]
     started = time.time()
+    output_path = os.path.abspath(output_path)
+    if os.path.isdir(output_path):
+        # an earlier commit that crashed: under the single-writer protocol
+        # no live write owns its staging directory
+        for name in os.listdir(output_path):
+            if name.startswith(".staging-"):
+                shutil.rmtree(os.path.join(output_path, name))
+    staging = os.path.join(output_path, f".staging-{run_id}")
 
-    with_bucket = extracted.withColumn("bucket", bucket_of(F.col("url"))).cache()
-    # lineage stats for THIS run's buckets only (≤ BUCKETS rows; never
-    # re-read the whole output dir — prior runs' buckets are already
-    # recorded).  The one pass also fills the cache the write reads.
-    stats = (
-        with_bucket.groupBy("bucket")
-        .agg(
-            F.count("*").alias("url_count"),
-            F.sum(F.col("is_success").cast("int")).alias("ok_count"),
-            F.sum((~F.col("is_success")).cast("int")).alias("fail_count"),
-            F.sum("bytes_in").alias("bytes_in"),
-        )
+    files = (
+        extracted.withColumn("bucket", bucket_of(F.col("url")))
+        .mapInArrow(_bucket_file_writer(staging), _FILE_SCHEMA)
         .collect()
     )
+    # lineage stats for THIS run's buckets only: (bucket, url_count,
+    # ok_count, fail_count, bytes_in) summed over each bucket's files
+    stats: dict[int, list] = {}
+    for f in files:
+        _add_counts(stats.setdefault(f["bucket"], [f["bucket"], 0, None, None, None]), f[2:])
     summary = {
         "run_id": run_id,
         "snapshot_id": None,
-        "urls": sum(r["url_count"] for r in stats),
-        "ok": sum(r["ok_count"] for r in stats),
-        "fail": sum(r["fail_count"] for r in stats),
+        "urls": sum(r[1] for r in stats.values()),
+        "ok": sum(r[2] or 0 for r in stats.values()),
+        "fail": sum(r[3] or 0 for r in stats.values()),
         "wall_ms": 0,
     }
-    if not stats:
+    if not files:
         # fully resumed: nothing to write, nothing to record
-        with_bucket.unpersist()
         return summary
 
-    # dynamic overwrite per write, not per session: later writes in the
-    # session keep their own overwrite mode
-    (
-        with_bucket.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(output_path)
-    )
+    for bucket in stats:
+        target = os.path.join(output_path, f"bucket={bucket}")
+        if os.path.exists(target):
+            shutil.rmtree(target)
+        os.makedirs(target)
+    for f in files:
+        name = os.path.basename(f["path"])
+        os.rename(f["path"], os.path.join(output_path, f"bucket={f['bucket']}", name))
+    shutil.rmtree(staging)
+    open(os.path.join(output_path, "_SUCCESS"), "w").close()
     summary["wall_ms"] = int((time.time() - started) * 1000)
-    with_bucket.unpersist()
 
     # data first, then the manifest: a bucket is recorded only once its
     # rows are on disk.  A strictly increasing commit sequence even for
@@ -375,7 +490,8 @@ def write_with_manifest(
             snapshot_id = prev + 1
     summary["snapshot_id"] = snapshot_id
     completed_at = time.time_ns() // 1000
-    # each stats row is (bucket, url_count, ok_count, fail_count, bytes_in)
-    rows = [(run_id, snapshot_id, *r, summary["wall_ms"], completed_at) for r in stats]
+    rows = [
+        (run_id, snapshot_id, *stats[b], summary["wall_ms"], completed_at) for b in sorted(stats)
+    ]
     _manifest_rows(spark, rows).write.mode("append").parquet(manifest_path)
     return summary

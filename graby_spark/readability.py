@@ -245,15 +245,22 @@ class Readability:
         for el in nodes:
             if el.parent is None and el is not root:
                 continue  # detached by the empty-p drop
-            for child in list(el.children):
+            # the comments go in one rebuild of the children list (a
+            # remove_child each would make many siblings quadratic)
+            kept = []
+            for child in el.children:
                 if isinstance(child, CommentNode):
-                    el.remove_child(child)
-                elif (
+                    child.parent = None
+                    continue
+                if (
                     isinstance(child, TextNode)
                     and child.data.strip() == ""
                     and child.data != "\n"
                 ):
                     child.data = "\n"
+                kept.append(child)
+            if len(kept) != len(el.children):
+                el.children[:] = kept
             # tidy flow-joins whitespace around inline starts/ends: a
             # separator node leading before an inline child or trailing
             # after one is dropped (lifehacker trending thumbnails
@@ -302,11 +309,21 @@ class Readability:
                     tail = last.data[len(last.data.rstrip()):]
                     if "\n" in tail and (" " in tail or "\t" in tail):
                         last.data = last.data.rstrip()
-        self._move_inline_edge_space(nodes)
+        for parent in nodes:
+            self._move_inline_edge_space(parent)
 
-    def _move_inline_edge_space(self, nodes: list[Element]) -> None:
-        for el in nodes:
-            if el.tag not in self._INLINE_TAGS or el.parent is None:
+    def _move_inline_edge_space(self, parent: Element) -> None:
+        """Move the edge whitespace of ``parent``'s inline children out to
+        their siblings.  One index walks the children, so no child is
+        looked up by position.  Run over every element in document order,
+        each inline element moves its space before its own children do,
+        the order a document-order walk over the inline elements gives."""
+        kids = parent.children
+        pos = 0
+        while pos < len(kids):
+            el = kids[pos]
+            if not isinstance(el, Element) or el.tag not in self._INLINE_TAGS:
+                pos += 1
                 continue
             last = el.children[-1] if el.children else None
             if isinstance(last, TextNode) and last.data != last.data.rstrip():
@@ -314,10 +331,9 @@ class Readability:
                 if stripped:
                     last.data = stripped
                 else:
-                    el.remove_child(last)
-                parent = el.parent
-                pos = parent.children.index(el)
-                nxt = parent.children[pos + 1] if pos + 1 < len(parent.children) else None
+                    el.children.pop()
+                    last.parent = None
+                nxt = kids[pos + 1] if pos + 1 < len(kids) else None
                 if isinstance(nxt, TextNode):
                     nxt.data = " " + nxt.data
                 else:
@@ -328,14 +344,15 @@ class Readability:
                 if stripped:
                     first.data = stripped
                 else:
-                    el.remove_child(first)
-                parent = el.parent
-                pos = parent.children.index(el)
-                prev = parent.children[pos - 1] if pos > 0 else None
+                    del el.children[0]
+                    first.parent = None
+                prev = kids[pos - 1] if pos > 0 else None
                 if isinstance(prev, TextNode):
                     prev.data = prev.data + " "
                 else:
                     parent.insert(pos, TextNode(" "))
+                    pos += 1
+            pos += 1
 
     # -- public API mirroring the reference wrapper ----------------------
 

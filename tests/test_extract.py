@@ -685,3 +685,54 @@ def test_implied_end_tags_parse_linearly_under_deep_nesting():
 
     shallow, deep = best_of_3(2000), best_of_3(8000)
     assert deep <= 8 * shallow, (shallow, deep)
+
+
+def test_p_behind_a_scope_barrier_parses_linearly():
+    """An open ``<p>`` behind an ``<object>`` is out of scope for every
+    ``<div>`` after it: four times n costs at most 8x the parse (the
+    open-stack scan down to the barrier on every ``<div>`` read about
+    15x)."""
+    import time
+
+    from graby_spark.dom import parse_html
+
+    def best_of_3(n):
+        html = "<p><object>" + "<div>" * n
+        times = []
+        for _ in range(3):
+            start = time.perf_counter()
+            parse_html(html)
+            times.append(time.perf_counter() - start)
+        return min(times)
+
+    shallow, deep = best_of_3(2000), best_of_3(8000)
+    assert deep <= 8 * shallow, (shallow, deep)
+
+
+FLAT_SHAPES = {
+    "comments": lambda n: "<div>" + "x<!-- c -->" * n + "</div>",
+    "inline_edge_space": lambda n: "<div>" + "<b>x </b>" * n + "</div>",
+}
+
+
+@pytest.mark.parametrize("shape", sorted(FLAT_SHAPES))
+def test_tidy_pass_time_grows_linearly_with_sibling_count(shape):
+    """Four times the siblings costs at most 8x the time (a
+    ``remove_child`` per comment read about 14x, a ``children.index`` per
+    inline element about 10x)."""
+    import time
+
+    from graby_spark.extract import extract_one
+    from graby_spark.siteconfig import RuleSet
+
+    def best_of_3(n):
+        html = FLAT_SHAPES[shape](n).encode()
+        times = []
+        for _ in range(3):
+            start = time.perf_counter()
+            extract_one(html, "http://flat.example/x", RuleSet({}), render=False)
+            times.append(time.perf_counter() - start)
+        return min(times)
+
+    shallow, deep = best_of_3(2000), best_of_3(8000)
+    assert deep <= 8 * shallow, (shape, shallow, deep)

@@ -130,7 +130,7 @@ def test_manifest_write_and_resume(spark, extracted, tmp_path_factory):
     overwrite_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     summary = write_with_manifest(spark, extracted, out_path, manifest_path)
     assert summary["urls"] == 500 and summary["fail"] == 0
-    # dynamic overwrite is a per-write option; the session conf is untouched
+    # the write sets no session conf
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == overwrite_mode
 
     manifest = spark.read.parquet(manifest_path)
@@ -190,6 +190,50 @@ def test_manifest_write_and_resume(spark, extracted, tmp_path_factory):
     final = spark.read.parquet(out_path)
     urls = [r["url"] for r in final.select("url").collect()]
     assert len(urls) == 500 and len(set(urls)) == 500  # no dup, no missing
+
+    # the output reads with the extraction schema plus the bucket column
+    # (warc_ts a session-zone timestamp, not timestamp_ntz)
+    from graby_spark.job import EXTRACT_SCHEMA
+
+    assert [(f.name, f.dataType.simpleString()) for f in final.schema] == [
+        (f.name, f.dataType.simpleString()) for f in EXTRACT_SCHEMA.fields
+    ] + [("bucket", "int")]
+    types = {f.name: f.dataType.simpleString() for f in final.schema}
+    assert types["warc_ts"] == "timestamp"
+    assert types["authors"] == "array<string>"
+    assert types["spans"] == "array<struct<start:bigint,end:bigint>>"
+
+    # lineage counts keep SQL sum semantics: a NULL is_success is neither
+    # ok nor fail, and a bucket of only NULLs records NULL, exactly as the
+    # aggregate the manifest replaced
+    from pyspark.sql import functions as F
+
+    bucket = bucket_of(F.col("url"))
+    one_url = extracted.where(bucket != 0).first()["url"]
+    nulled = extracted.withColumn(
+        "is_success",
+        F.when((bucket == 0) | (F.col("url") == one_url), F.lit(None)).otherwise(
+            F.col("is_success")
+        ),
+    )
+    expected = {
+        tuple(r)
+        for r in nulled.groupBy(bucket.alias("bucket"))
+        .agg(
+            F.count("*"),
+            F.sum(F.col("is_success").cast("int")),
+            F.sum((~F.col("is_success")).cast("int")),
+            F.sum("bytes_in"),
+        )
+        .collect()
+    }
+    assert any(r[2] is None for r in expected)
+    null_manifest = os.path.join(base, "manifest_nulls")
+    write_with_manifest(spark, nulled, os.path.join(base, "out_nulls"), null_manifest)
+    recorded = spark.read.parquet(null_manifest).select(
+        "bucket", "url_count", "ok_count", "fail_count", "bytes_in"
+    )
+    assert {tuple(r) for r in recorded.collect()} == expected
 
 
 def test_manifest_snapshot_time_travel(spark, extracted, tmp_path_factory):
@@ -493,6 +537,31 @@ def test_manifest_crash_between_write_and_append_resumes(
     totals = spark.read.parquet(manifest_path).agg(F.sum("ok_count"), F.sum("fail_count")).first()
     assert tuple(totals) == (outcomes[True], outcomes[False]) and outcomes[False] > 0
     assert filter_resumable(spark, pages, manifest_path).count() == 0
+
+
+def test_write_removes_a_stale_staging_directory(spark, extracted, tmp_path_factory):
+    """A crash inside a commit leaves ``<output>/.staging-<run_id>``; the
+    next write to the output removes it, and the output holds every url
+    exactly once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = str(tmp_path_factory.mktemp("manifest_stale"))
+    out_path = os.path.join(base, "out")
+    manifest_path = os.path.join(base, "manifest")
+    stale = os.path.join(out_path, ".staging-0123456789ab", "bucket=0")
+    os.makedirs(stale)
+    url = extracted.first()["url"]
+    pq.write_table(pa.table({"url": [url]}), os.path.join(stale, "part-00000-7.parquet"))
+
+    write_with_manifest(spark, extracted, out_path, manifest_path)
+    assert not [name for name in os.listdir(out_path) if name.startswith(".staging-")]
+    output = spark.read.parquet(out_path)
+    urls = [r["url"] for r in output.select("url").collect()]
+    assert len(urls) == 500 and len(set(urls)) == 500
+    # the bucket files hold the extracted rows value for value
+    rows = output.drop("bucket")
+    assert rows.exceptAll(extracted).count() == 0 == extracted.exceptAll(rows).count()
 
 
 def test_noop_resume_prunes_to_an_empty_plan_and_launches_no_task(
