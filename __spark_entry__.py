@@ -92,17 +92,17 @@ def q_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed corpus deliverable: full extraction pipeline → markdown
     serialization of the extracted content HTML (the shape an LLM-data
-    consumer actually stores).  Uses the FUSED path —
-    ExtractOptions(markdown=True) renders inside the same mapInPandas
-    batch, and columns= projects the Arrow output down to
-    (url, markdown, is_success): one Python hop, minimal transfer.  On
+    consumer actually stores).  Uses the FUSED path — a ``markdown``
+    column in columns= renders inside the same mapInPandas batch, and
+    projects the Arrow output down to (url, markdown, is_success): one
+    Python hop, minimal transfer.  On
     the planted single-paragraph variants the expected markdown equals
     the whitespace-collapsed expected text, so the oracle stays
     closed-form while the query still runs the whole C/P/R/D/O pipeline
     plus the DOM→markdown walker."""
     _ship(spark)
     pages = build_pages_df(spark, sf_dir)
-    opts = ExtractOptions(xss_filter=False, markdown=True)
+    opts = ExtractOptions(xss_filter=False)
     out = run_extraction(
         spark,
         pages,
@@ -340,14 +340,14 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id + 1000000 as doc_id", "concat(text, ' copy edit') as text"
         )
     )
-    pairs = dedup.simhash_pairs(corpus, max_hamming=3)
+    pairs = dedup.simhash_pairs(corpus)
     clusters = dedup.duplicate_clusters(pairs)
     scores = corpus.select("doc_id", F.length("text").cast("long").alias("score"))
     return dedup.keep_best(clusters, scores)
 
 
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup.simhash_pairs(_dup_corpus(spark, sf_dir), max_hamming=3)
+    pairs = dedup.simhash_pairs(_dup_corpus(spark, sf_dir))
     return pairs.select("doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming"))
 
 
@@ -398,7 +398,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pairs = dedup.embedding_near_dups(emb, threshold=0.4)
+    pairs = dedup.embedding_near_dups(emb)
     return pairs.select("id_a", "id_b")
 
 
@@ -508,7 +508,7 @@ def q_text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus)."""
     _ship(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    merges, vocab = bpe.train_bpe(docs, n_merges=8)
+    merges, vocab = bpe.train_bpe(docs)
     vocab.unpersist()
     return bpe.merges_df(spark, merges)
 
@@ -519,7 +519,7 @@ def q_text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (broadcast) against (word, subword_count)."""
     _ship(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    _, vocab = bpe.train_bpe(docs, n_merges=8)
+    _, vocab = bpe.train_bpe(docs)
     out = bpe.bpe_token_counts(docs, vocab)
     vocab.unpersist()
     return out.select(F.col("id").alias("doc_id"), "n_words", "bpe_tokens")
@@ -546,7 +546,7 @@ def q_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = spark.createDataFrame(
         _BM25_QUERIES, "query_id long, terms array<string>"
     )
-    return search.bm25_topk(docs, queries, k=10)
+    return search.bm25_topk(docs, queries)
 
 
 #: plants a 5-token promo tail in every 7th doc and a 3-token news prefix
@@ -597,7 +597,7 @@ def q_dedup_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     planted = docs.selectExpr("doc_id", "source", f"{_BOILER_SYNTH} as text")
-    out = dedup.domain_boilerplate_lines(planted, domain_col="source")
+    out = dedup.domain_boilerplate_lines(planted)
     return out.select(
         "doc", "n_lines", "n_kept", F.md5("text_clean").alias("clean_md5")
     )
@@ -951,7 +951,7 @@ def q_pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where("_rn = 1")
         .drop("_rn")
     )
-    packed = packing.pack_sequences(survivors, n_buckets=16)
+    packed = packing.pack_sequences(survivors)
     # split is a pure hash of doc_id — project it onto the packed rows
     # instead of a join (a join re-evaluates the whole pipeline a second
     # time AND adds an exchange; same lesson as q_domain_prior's keep=)
@@ -991,7 +991,7 @@ def q_extract_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 tf-idf keywords per document over the corpus itself."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return textstats.tfidf_topk(docs, k=3)
+    return textstats.tfidf_topk(docs)
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,7 +1007,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     index = dedup.build_minhash_index(corpus)
-    out = dedup.incremental_minhash_pairs(new_batch, index, threshold=0.9)
+    out = dedup.incremental_minhash_pairs(new_batch, index)
     return out.select(
         "new_doc", "corpus_doc", F.round("jaccard", 6).alias("jaccard")
     )
@@ -1264,7 +1264,7 @@ def q_pipeline_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = spark.createDataFrame(
         _BM25_QUERIES, "query_id long, terms array<string>"
     )
-    return search.bm25_topk(chunk_docs, queries, k=10, id_col="cid")
+    return search.bm25_topk(chunk_docs, queries, id_col="cid")
 
 
 def q_source_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1558,7 +1558,7 @@ def q_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = (
         kept.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
     )
-    return packing.pack_sequences(survivors, n_buckets=16).select(
+    return packing.pack_sequences(survivors).select(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),
         F.col("bucket").cast("long").alias("bucket"),
@@ -1572,7 +1572,7 @@ def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     13-gram windows appear in it (the GPT-3-style overlap rule)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     evalset = docs.where("doc_id % 50 = 0")
-    return dedup.contamination_spans(docs, evalset, k=13).select(
+    return dedup.contamination_spans(docs, evalset).select(
         "doc",
         F.col("start_tok").cast("long").alias("start_tok"),
         F.col("end_tok").cast("long").alias("end_tok"),
@@ -1618,7 +1618,7 @@ def q_dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     maximal duplicated token spans, first corpus occurrence excluded."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     planted = docs.selectExpr("doc_id", f"{_SUBSTR_SYNTH} as text")
-    return dedup.substring_dup_spans(planted, k=12).select(
+    return dedup.substring_dup_spans(planted).select(
         "doc",
         F.col("start_tok").cast("long").alias("start_tok"),
         F.col("end_tok").cast("long").alias("end_tok"),
@@ -1814,18 +1814,16 @@ _MP3_HDR = "49443303000000000000FFFB9000"
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-budget sequence packing (training-context assembly)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return packing.pack_sequences(docs, n_buckets=16).select(
+    return packing.pack_sequences(docs).select(
         "doc_id", "n_tokens", F.col("bucket").cast("long").alias("bucket"), "bin_id"
     )
 
 
 def q_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 1-in-4 subsample composed with source mixing."""
+    """Deterministic 1-in-2 subsample composed with source mixing."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    mixed = packing.sample_by_source(
-        docs, {"src0": 0.9, "src1": 0.5, "src2": 0.25}, default_weight=0.1
-    )
-    return packing.sample_hash(mixed, 2).select("doc_id", "source")
+    mixed = packing.sample_by_source(docs, {"src0": 0.9, "src1": 0.5, "src2": 0.25})
+    return packing.sample_hash(mixed).select("doc_id", "source")
 
 
 def q_media_mime_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2055,7 +2053,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id % 7 = 0")
     media = _formula_png_media(docs)
-    out = multimodal.resize_images(media, out_width=4, out_height=3, method="nearest")
+    out = multimodal.resize_images(media)
     return out.select(
         "media_id",
         F.col("width").cast("long").alias("width"),
@@ -2089,7 +2087,7 @@ def q_media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = docs.select(F.col("doc_id").alias("media_id")).withColumn(
         "payload", gen_wav("media_id")
     )
-    out = multimodal.audio_features(media, window=16)
+    out = multimodal.audio_features(media)
     return out.select(
         "media_id",
         F.col("window").cast("long").alias("window"),
@@ -2226,7 +2224,7 @@ def q_media_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id % 7 = 0")
     media = _ahash_png_media(docs)
-    hashes = multimodal.perceptual_hash(media, method="ahash")
+    hashes = multimodal.perceptual_hash(media)
     pairs = multimodal.phash_pairs(hashes, max_hamming=4)
     return pairs.select(
         "doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming")
@@ -2813,7 +2811,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline in SQL — md5-lexicographic codebook sample, unit-normalize,
     per-subspace L2 argmin encode, ADC rounded to 6 decimals (the
     rounding pq_topk itself applies, making the candidate total order
-    float-summation-order independent), global top-``refine*k``
+    float-summation-order independent), global top-``PQ_REFINE*k``
     candidate cut excluding self, exact cosine rerank rounded to 8.
     Belt-and-braces value pins live in tests/test_operators.py
     (test_pq_encode_matches_numpy_replay,
@@ -2822,7 +2820,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graby_spark.operators.similarity import pq_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return pq_topk(emb, emb.where("vec_id < 20"), k=10, refine=8)
+    return pq_topk(emb, emb.where("vec_id < 20"))
 
 
 #: exact SQL replay of q_ann_pq (k=10, m=4, ks=16, refine=8 → 80
@@ -2918,9 +2916,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graby_spark.operators.similarity import ivfpq_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ivfpq_topk(
-        emb, emb.where("vec_id < 20"), k=10, n_cells=8, nprobe=3, refine=8
-    )
+    return ivfpq_topk(emb, emb.where("vec_id < 20"), k=10, n_cells=8, nprobe=3)
 
 
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3124,7 +3120,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the brute-force answer)."""
     _ship(spark)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    topk = similarity.ivf_kmeans_topk(emb, emb, k=3, n_cells=8, nprobe=2)
+    topk = similarity.ivf_kmeans_topk(emb, emb)
     return topk.select(
         "query_id", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank")
     )
@@ -3588,9 +3584,9 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
 def q_key_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-key skew diagnosis (storage.py key_skew_stats): a planted
     hot key (every fifth doc) over an otherwise uniform domain column —
-    max/ratio/salt all closed-form.  ``n_partitions`` is pinned to 32 so
-    the result is environment-independent; float columns are rounded in
-    BOTH engines.
+    max/ratio/salt all closed-form.  The salt's 32 reducers are pinned
+    (``storage.SALT_PARTITIONS``) so the result is environment-independent;
+    float columns are rounded in BOTH engines.
 
     PROMOTED at the r05 rotation (formerly staged; pytest-gated in
     tests/test_operators.py::test_key_skew_stats plus the oracle test
@@ -3603,7 +3599,7 @@ def q_key_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.concat(F.lit("k"), F.col("doc_id") % 50))
         .alias("domain")
     )
-    return key_skew_stats(docs, n_partitions=32).select(
+    return key_skew_stats(docs).select(
         "n_rows",
         "n_keys",
         "max_key_rows",

@@ -4,9 +4,10 @@ A from-scratch, stdlib-only DOM used inside the Arrow/pandas UDFs.  It plays
 the role libxml2's recovering HTML parser plays for the reference
 (ContentExtractor.php:1134-1149 builds a ``\\DOMDocument`` via php-readability,
 all rule application then happens on that mutable tree).  lxml / bs4 are not
-available in this environment, so the parser is built on
-``html.parser.HTMLParser`` with a small HTML5-ish recovery model (implied end
-tags, void elements, implicit <html>/<body> wrappers).
+available in this environment, so the parser is a one-pass scanner (``_scan``)
+that tokenizes as ``html.parser`` does and feeds a tree builder with a small
+HTML5-ish recovery model (implied end tags, void elements, implicit
+<html>/<body> wrappers).
 
 The serializer targets byte parity with PHP ``DOMDocument::saveXML`` output as
 observed in the reference golden fixtures
@@ -19,7 +20,6 @@ observed in the reference golden fixtures
 from __future__ import annotations
 
 import re
-from html.parser import HTMLParser
 from html import unescape
 
 __all__ = [
@@ -81,6 +81,15 @@ _RULE_BARRIERS = {
     "option": frozenset(["select"]),
     "optgroup": frozenset(["select"]),
 }
+# Open elements whose stack positions the tree builder keeps, by list: one
+# list per <p>, implied-end closer and rule barrier tag, and one shared by
+# all scope barriers.  An implied close compares the innermost closer with
+# the innermost barrier instead of scanning the open stack.
+_POSITION_KEY = {
+    tag: tag
+    for tag in {"p"}.union(*_IMPLIED_END.values(), *_RULE_BARRIERS.values())
+}
+_POSITION_KEY.update((tag, "#barrier") for tag in _SCOPE_BARRIERS)
 
 # HTML 4.01 element vocabulary (libxml2's htmlElemDesc table).  libxml's
 # recovering parser drops whitespace-only text that directly follows an
@@ -205,9 +214,8 @@ class Element(Node):
         # ordered (name, value) pairs; duplicate names keep first (libxml rule)
         self.attrs: list[tuple[str, str]] = list(attrs or [])
         self.children: list[Node] = []
-        # source character offsets (set by the fast scanner; None when the
-        # element was synthesized or parsed via the stdlib engine) — the
-        # basis of the output `spans` column
+        # source character offsets (set by the scanner; None when the
+        # element was synthesized) — the basis of the output `spans` column
         self.src_start: int | None = None
         self.src_end: int | None = None
 
@@ -403,30 +411,29 @@ class Document(Element):
         return None
 
 
-class _TreeBuilder(HTMLParser):
-    """Recovering HTML parser producing our Document tree.
+class _TreeBuilder:
+    """Recovering tree builder producing our Document tree from the
+    scanner's tag, text and comment events.
 
     ``profile='libxml'`` (default) reproduces libxml2 recovery quirks —
     areBlanks whitespace dropping per the allowPCData table (the behavior
     graby's default ``parser: libxml`` sees through PHP's DOMDocument).
     ``profile='html5'`` keeps every whitespace-only text node like an
     html5 tree builder does (graby's ``parser: html5`` / html5-php path);
-    the implied-close/list-scope rules are shared (both engines agree on
+    the implied-close/list-scope rules are shared (both parsers agree on
     them for the constructs graby meets).
     """
 
     def __init__(self, profile: str = "libxml") -> None:
-        super().__init__(convert_charrefs=True)
         self.profile = profile
         self.document = Document()
         self.stack: list[Element] = []
-        #: per-tag count of the elements on ``stack``: a rule whose tag is
-        #: not open skips its scan (no nesting makes a parse quadratic)
+        #: per-tag count of the elements on ``stack``
         self.open: dict[str, int] = {}
-        #: ``stack`` positions of the open <p>s and of the open scope
-        #: barriers: an implied </p> reads the innermost of each, no scan
-        self.paragraphs: list[int] = []
-        self.barriers: list[int] = []
+        #: ``stack`` positions of the open elements ``_POSITION_KEY``
+        #: names, ascending per list: an implied close reads the innermost
+        #: of each, no scan (no nesting makes a parse quadratic)
+        self.positions: dict[str, list[int]] = {key: [] for key in _POSITION_KEY.values()}
         self._saw_html = False
         self._saw_body = False
         self._src_pos: int | None = None  # open-tag offset (fast scanner)
@@ -436,21 +443,22 @@ class _TreeBuilder(HTMLParser):
     def _truncate(self, i: int) -> None:
         for el in self.stack[i:]:
             self.open[el.tag] -= 1
+            key = _POSITION_KEY.get(el.tag)
+            if key is not None:
+                self.positions[key].pop()
         del self.stack[i:]
-        while self.paragraphs and self.paragraphs[-1] >= i:
-            self.paragraphs.pop()
-        while self.barriers and self.barriers[-1] >= i:
-            self.barriers.pop()
 
     def _reset(self, *stack: Element) -> None:
         """Make ``stack`` the open-element stack (a restart at html, head or
         body level)."""
         self.stack = list(stack)
         self.open = {}
-        for el in stack:
+        self.positions = {key: [] for key in _POSITION_KEY.values()}
+        for i, el in enumerate(stack):
             self.open[el.tag] = self.open.get(el.tag, 0) + 1
-        self.paragraphs = [i for i, el in enumerate(stack) if el.tag == "p"]
-        self.barriers = [i for i, el in enumerate(stack) if el.tag in _SCOPE_BARRIERS]
+            key = _POSITION_KEY.get(el.tag)
+            if key is not None:
+                self.positions[key].append(i)
 
     def _current(self) -> Element:
         if not self.stack:
@@ -480,24 +488,30 @@ class _TreeBuilder(HTMLParser):
             self._reset(body)
 
     def _implied_close(self, tag: str) -> None:
-        if tag in _P_CLOSERS and self.paragraphs:
+        positions = self.positions
+        if tag in _P_CLOSERS and positions["p"]:
             # close the innermost open <p> unless a scope barrier opened
             # inside it
-            p = self.paragraphs[-1]
-            if not self.barriers or self.barriers[-1] < p:
+            p = positions["p"][-1]
+            scope = positions["#barrier"]
+            if not scope or scope[-1] < p:
                 self._truncate(p)
         closers = _IMPLIED_END.get(tag)
-        if closers and any(self.open.get(c) for c in closers):
-            barriers = _RULE_BARRIERS.get(tag, frozenset())
-            for i in range(len(self.stack) - 1, -1, -1):
-                open_tag = self.stack[i].tag
-                if open_tag in _SCOPE_BARRIERS or open_tag in barriers:
-                    break
-                if open_tag in closers:
-                    self._truncate(i)
-                    break
+        if closers:
+            # close the innermost open closer unless a scope or rule
+            # barrier opened inside it
+            closer = max((positions[c][-1] for c in closers if positions[c]), default=-1)
+            if closer < 0:
+                return
+            scope = positions["#barrier"]
+            barrier = scope[-1] if scope else -1
+            for b in _RULE_BARRIERS.get(tag, ()):
+                if positions[b] and positions[b][-1] > barrier:
+                    barrier = positions[b][-1]
+            if closer > barrier:
+                self._truncate(closer)
 
-    # HTMLParser hooks
+    # tokenizer events (html.parser's hook names)
     def handle_starttag(self, tag: str, attrs: list[tuple[str, str | None]]) -> None:
         tag = tag.lower()
         if len(attrs) < 2:  # no duplicates possible — skip the seen-set pass
@@ -568,10 +582,9 @@ class _TreeBuilder(HTMLParser):
             el.src_end = self._src_end
         self._current().append(el)
         if tag not in VOID_ELEMENTS:
-            if tag == "p":
-                self.paragraphs.append(len(self.stack))
-            elif tag in _SCOPE_BARRIERS:
-                self.barriers.append(len(self.stack))
+            key = _POSITION_KEY.get(tag)
+            if key is not None:
+                self.positions[key].append(len(self.stack))
             self.stack.append(el)
             self.open[tag] = self.open.get(tag, 0) + 1
 
@@ -656,23 +669,24 @@ class _TreeBuilder(HTMLParser):
 
 
 # ---------------------------------------------------------------------------
-# Fast tokenizer
+# Tokenizer
 # ---------------------------------------------------------------------------
 # html.parser.HTMLParser spends most of its time in bookkeeping
-# (updatepos/goahead); this scanner drives the same _TreeBuilder hooks with
-# one pass and a couple of compiled regexes.  Semantics are kept identical
+# (updatepos/goahead); this scanner drives the _TreeBuilder hooks with one
+# pass and a couple of compiled regexes.  Its semantics are html.parser's
 # (lowercased names, first-duplicate-attr wins, charrefs resolved in text and
 # attribute values, script/style as raw text) and a differential fuzz test
-# pins it against HTMLParser (tests/test_properties.py).
+# pins it against an HTMLParser that feeds the same builder
+# (tests/test_properties.py).
 
 _TAGNAME_RE = re.compile(r"[a-zA-Z][^\t\n\r\f />\x00]*")
-# html.parser's own tolerant attribute regex — keeps the two engines
-# byte-identical on malformed attribute syntax (e.g. quoted bare names)
+# html.parser's own tolerant attribute regex — keeps the scanner
+# byte-identical to html.parser on malformed attribute syntax (e.g. quoted bare names)
 from html import parser as _html_parser_mod
 
 _ATTR_RE = _html_parser_mod.attrfind_tolerant
 # raw-text elements: match html.parser's CDATA_CONTENT_ELEMENTS exactly
-# (script/style only) so both engines build identical trees
+# (script/style only) so both tokenizers build identical trees
 _RAWTEXT_CLOSE = {
     tag: re.compile(rf"</{tag}(?=[\s/>])|</{tag}$", re.I) for tag in ("script", "style")
 }
@@ -705,7 +719,7 @@ def _scan(html: str, builder: "_TreeBuilder") -> None:
             if html.startswith("<!--", lt):
                 end = find("-->", lt + 4)
                 if end < 0:
-                    # unterminated comment at EOF flushes as text (stdlib)
+                    # unterminated comment at EOF flushes as text (html.parser)
                     _emit_tail(html, lt, builder)
                     break
                 builder.handle_comment(html[lt + 4 : end])
@@ -807,21 +821,15 @@ def _scan(html: str, builder: "_TreeBuilder") -> None:
         pos = i
 
 
-def parse_html(html: str, engine: str = "fast", profile: str = "libxml") -> Document:
+def parse_html(html: str, profile: str = "libxml") -> Document:
     """Parse an HTML string into a Document, never raising on bad markup.
 
-    ``engine='fast'`` uses the one-pass scanner above; ``'stdlib'`` drives
-    the same tree builder through html.parser.HTMLParser (kept for
-    differential testing and as a fallback).  ``profile`` picks the
-    recovery semantics: 'libxml' (graby default) or 'html5' (site configs
-    with ``parser: html5``)."""
+    The one-pass scanner above tokenizes ``html`` into the tree builder.
+    ``profile`` picks the recovery semantics: 'libxml' (graby default) or
+    'html5' (site configs with ``parser: html5``)."""
     builder = _TreeBuilder(profile=profile)
     try:
-        if engine == "fast":
-            _scan(html, builder)
-        else:
-            builder.feed(html)
-            builder.close()
+        _scan(html, builder)
     except Exception:
         # total recovery: return whatever tree was built so far
         pass

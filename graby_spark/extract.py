@@ -100,11 +100,6 @@ class ExtractOptions:
     # strip counts) — the observability you need to debug one bad url out
     # of a billion without re-running locally.  Zero overhead when off.
     trace: bool = False
-    # Emit a ``markdown`` output column (CommonMark rendering of the
-    # extracted content, graby_spark.markdown) computed INSIDE the same
-    # mapInPandas batch — LLM-corpus consumers get markdown without a
-    # second Python hop over the content html.  Zero overhead when off.
-    markdown: bool = False
 
 
 @dataclass
@@ -1082,20 +1077,47 @@ def _normalize_presentation(content: Element) -> None:
     '<span class="st">x</span>' → 'x')."""
     if content.has_attr("class"):
         content.remove_attr("class")
+    # each affected children list is rebuilt once (a detach per
+    # script/style, or an index, remove and insert per span, would make
+    # many siblings quadratic)
+    hosts: dict[int, Element] = {}
     for el in content.iter_list():
         if el.tag in ("script", "style"):
-            el.detach()
+            hosts[id(el.parent)] = el.parent
             continue
         if el.has_attr("class"):
             el.remove_attr("class")
-    for span in content.iter_list("span"):
-        if not span.attrs and span.parent is not None:
-            parent = span.parent
-            pos = parent.children.index(span)
-            children = list(span.children)
-            parent.remove_child(span)
-            for offset, child in enumerate(children):
-                parent.insert(pos + offset, child)
+    for parent in hosts.values():
+        kept = []
+        for child in parent.children:
+            if isinstance(child, Element) and child.tag in ("script", "style"):
+                child.parent = None
+            else:
+                kept.append(child)
+        parent.children[:] = kept
+    # every attribute-less span gives way to its children, nested ones
+    # too: the nearest ancestor that stays inlines them all in one walk
+    spans = [span for span in content.iter_list("span") if not span.attrs]
+    unwrap = {id(span) for span in spans}
+    hosts = {}
+    for span in spans:
+        host = span.parent
+        while id(host) in unwrap:
+            host = host.parent
+        hosts[id(host)] = host
+    for host in hosts.values():
+        kept = []
+        stack = host.children[::-1]
+        while stack:
+            node = stack.pop()
+            if id(node) in unwrap:
+                stack.extend(node.children[::-1])
+                node.children.clear()
+                node.parent = None
+            else:
+                node.parent = host
+                kept.append(node)
+        host.children[:] = kept
 
 
 _TAG_ATTR_MAP = {"a": "href", "img": "src", "iframe": "src"}

@@ -207,7 +207,11 @@ def run_extraction(
     still pays the Arrow transfer of every extracted ``html``/``text`` body
     — the dominant bytes of the output and, profiled, the residual N→4N
     scaling loss.  Pass e.g. ``columns=["url", "is_success"]`` for
-    metadata-only consumers.  The projection also reaches into the UDF
+    metadata-only consumers.  ``columns`` may also name ``markdown``, a
+    CommonMark rendering of ``html`` (graby_spark.markdown) made in the
+    same Python batch as the extraction, so markdown consumers pay one
+    Arrow hop, not two; it is never part of the default output.  The
+    projection also reaches into the UDF
     body: when it names none of ``RENDERED_COLUMNS`` (``html``,
     ``summary``, ``text``, ``spans``, ``markdown``), each document skips
     the render work (content cleanup, serialization, excerpt, plain
@@ -222,26 +226,17 @@ def run_extraction(
         base_schema = StructType(
             base_schema.fields + [StructField("trace", ArrayType(StringType()))]
         )
-    if options.markdown:
-        # fused serialization: rendered in the same Python batch as the
-        # extraction, so markdown consumers pay one Arrow hop, not two
-        base_schema = StructType(
-            base_schema.fields + [StructField("markdown", StringType())]
-        )
     if columns is None:
         out_schema = base_schema
-        out_names = (
-            [f.name for f in base_schema.fields]
-            if (options.trace or options.markdown)
-            else None
-        )
+        out_names = [f.name for f in base_schema.fields] if options.trace else None
     else:
-        known = {f.name for f in base_schema.fields}
+        fields = base_schema.fields + [StructField("markdown", StringType())]
+        known = {f.name for f in fields}
         unknown = [c for c in columns if c not in known]
         if unknown:
             raise ValueError(f"unknown extraction columns: {unknown}")
         wanted = set(columns)
-        out_schema = StructType([f for f in base_schema.fields if f.name in wanted])
+        out_schema = StructType([f for f in fields if f.name in wanted])
         out_names = [f.name for f in out_schema.fields]
 
     # a pages table without fetch metadata reads as a plain 200 HTML

@@ -182,11 +182,11 @@ def to_markdown(html: str) -> str:
     return "\n\n".join(_blocks(doc))
 
 
-def markdown_column(df: DataFrame, html_col: str = "content_html") -> DataFrame:
-    """Append a markdown rendering of ``html_col`` (Arrow-vectorized)."""
+def markdown_column(df: DataFrame) -> DataFrame:
+    """Append a markdown rendering of ``content_html`` (Arrow-vectorized)."""
 
     @pandas_udf("string")
     def _md(html: pd.Series) -> pd.Series:
         return html.map(lambda v: to_markdown(v) if v is not None else None)
 
-    return df.withColumn("markdown", _md(F.col(html_col)))
+    return df.withColumn("markdown", _md(F.col("content_html")))

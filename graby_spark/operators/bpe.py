@@ -14,7 +14,7 @@ Scale shape
 Training never touches the corpus after one word-count: BPE statistics
 are a function of the *distinct-word* vocabulary with frequencies (the
 classic formulation), which is the corpus' unigram table — millions of
-rows at 100 TB, not billions.  Each of the ``n_merges`` iterations is
+rows at 100 TB, not billions.  Each of the ``N_MERGES`` iterations is
 
   1. a pair-count aggregate over the vocab (adjacent symbol pairs
      weighted by word frequency; map-side partial sums, shuffle carries
@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 WORD_RE = "^[a-z0-9]+$"  # shared alphabet guard, Spark + DuckDB
+N_MERGES = 8  # merges train_bpe learns
 
 
 def corpus_words(df: DataFrame) -> DataFrame:
@@ -118,10 +119,8 @@ def pair_counts(vocab: DataFrame) -> DataFrame:
     )
 
 
-def train_bpe(
-    df: DataFrame, n_merges: int = 8
-) -> tuple[list[tuple[int, str, str]], DataFrame]:
-    """Learn ``n_merges`` BPE merges from the corpus.
+def train_bpe(df: DataFrame) -> tuple[list[tuple[int, str, str]], DataFrame]:
+    """Learn ``N_MERGES`` BPE merges from the corpus.
 
     Returns ``(merges, vocab)`` where merges is a list of
     ``(rank, a, b)`` (rank starting at 1) and vocab is the final
@@ -130,7 +129,7 @@ def train_bpe(
     """
     vocab = word_vocab(df).localCheckpoint()
     merges: list[tuple[int, str, str]] = []
-    for rank in range(1, n_merges + 1):
+    for rank in range(1, N_MERGES + 1):
         best = (
             pair_counts(vocab)
             .orderBy(F.desc("c"), F.asc("a"), F.asc("b"))

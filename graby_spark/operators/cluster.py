@@ -32,8 +32,7 @@ single cell overflows once rows_in_cell * max|component| exceeds
 vector; typical magnitude is 1e9/sqrt(dim) (~1.25e8 at dim 64),
 giving ~7e10 rows per cell headroom — two orders above any sane
 cell at trillion-row scale with SemDeDup-sized k (50k+), and the
-remedy for a pathological mono-cell corpus is more clusters, the
-same lever semantic_dedup's max_cell guard already points at.  The driver round-trip per iteration is
+remedy for a pathological mono-cell corpus is more clusters.  The driver round-trip per iteration is
 k rows (same bounded pattern as bpe.py's merge loop); k for SemDeDup
 grows with the corpus (the paper uses 50k for LAION) but stays a
 broadcast-sized table.  Reference (j0k3r/graby) has no embedding

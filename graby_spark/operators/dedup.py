@@ -171,20 +171,17 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_perm: int = NUM_PERM,
-    shingle_k: int = SHINGLE_K,
-) -> DataFrame:
-    """(doc, signature:array<long>) minhash signatures (stable vectorized
-    shingle hashes — deterministic across Python workers)."""
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """(doc, signature:array<long>) ``NUM_PERM``-permutation minhash
+    signatures of ``SHINGLE_K``-byte shingles (stable vectorized shingle
+    hashes — deterministic across Python workers)."""
     src = _ensure_parallelism(df.select(F.col("doc_id").alias("doc"), "text"))
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     schema = StructType(
         [StructField("doc", src.schema[0].dataType), StructField("signature", ArrayType(LongType()))]
     )
-    return src.mapInPandas(_minhash_batch_stable(num_perm, shingle_k), schema)
+    return src.mapInPandas(_minhash_batch_stable(NUM_PERM, SHINGLE_K), schema)
 
 
 # splitmix64 finalizer constants (public-domain mixing function)
@@ -273,7 +270,7 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     bands = _bands_for_threshold(threshold, NUM_PERM)
     rows = NUM_PERM // bands
     df = _ensure_parallelism(df)
-    sigs = minhash_signatures(df, NUM_PERM, SHINGLE_K)
+    sigs = minhash_signatures(df)
     banded = _banded(sigs, bands, rows)
     cand = (
         banded.alias("x")
@@ -285,7 +282,7 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     # shingle sets as 60-bit md5 hashes: the intersect joins compare longs,
     # not 5-char strings (~5x cheaper per pair), and the values match any
     # SQL engine's md5 bit-for-bit; computed once per DOC, not per pair
-    shingles = _shingle_sets(df, SHINGLE_K)
+    shingles = _shingle_sets(df)
     return _jaccard_verify(cand, shingles, shingles, "doc_a", "doc_b", threshold)
 
 
@@ -350,12 +347,12 @@ def simhash(df: DataFrame) -> DataFrame:
     return out
 
 
-def embedding_near_dups(
-    df: DataFrame,
-    threshold: float = 0.95,
-    max_exact_rows: int = 50_000,
-) -> DataFrame:
-    """Cosine-over-threshold pairs.  JVM-side dot products via
+#: cosine at or above which embedding_near_dups reports a pair
+NEAR_DUP_COSINE = 0.4
+
+
+def embedding_near_dups(df: DataFrame, max_exact_rows: int = 50_000) -> DataFrame:
+    """Pairs at cosine ``>= NEAR_DUP_COSINE``.  JVM-side dot products via
     ``aggregate(zip_with(...))``.
 
     Pair generation is an all-pairs theta join — exact, but O(n²): the
@@ -366,7 +363,7 @@ def embedding_near_dups(
     to force the exact join regardless of size."""
     if max_exact_rows is not None:
         if df.count() > max_exact_rows:
-            return embedding_near_dups_lsh(df, threshold)
+            return embedding_near_dups_lsh(df, NEAR_DUP_COSINE)
     norm = _with_norm(df)
     a = norm.select(F.col("id").alias("id_a"), F.col("unit").alias("unit_a"))
     b = norm.select(F.col("id").alias("id_b"), F.col("unit").alias("unit_b"))
@@ -381,15 +378,11 @@ def embedding_near_dups(
                 lambda acc, v: acc + v,
             ).alias("cosine"),
         )
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= NEAR_DUP_COSINE)
     )
 
 
-def embedding_near_dups_lsh(
-    df: DataFrame,
-    threshold: float = 0.9,
-    dim: int | None = None,
-) -> DataFrame:
+def embedding_near_dups_lsh(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Scale path for cosine near-dups: hyperplane-LSH bucket join for
     candidates (O(n·tables) shuffle keyed by bucket), exact cosine rerank of
     candidates only.  Same output contract as embedding_near_dups; recall
@@ -397,7 +390,7 @@ def embedding_near_dups_lsh(
     recall at dedup-grade thresholds is effectively 1)."""
     from .similarity import lsh_signatures
 
-    sigs = lsh_signatures(df, dim)
+    sigs = lsh_signatures(df)
     cand = (
         sigs.alias("x")
         .join(sigs.alias("y"), ["table", "bucket"])
@@ -424,7 +417,7 @@ def embedding_near_dups_lsh(
     )
 
 
-def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+def simhash_pairs(df: DataFrame) -> DataFrame:
     """SimHash near-duplicate pairs: candidates share at least one 15-bit
     band (pigeonhole: any pair within hamming distance 3 of a 60-bit hash
     must agree on one of 4 bands), verified by exact hamming distance.
@@ -448,7 +441,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
     pairs = (
         cand.withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= 3)
         .select("doc_a", "doc_b", "hamming")
     )
     # materialize the (small) verified-pair set, then release the signature
@@ -723,7 +716,7 @@ def paragraph_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def domain_boilerplate_lines(df: DataFrame, domain_col: str = "domain") -> DataFrame:
+def domain_boilerplate_lines(df: DataFrame) -> DataFrame:
     """RefinedWeb-style line-wise correction (Penedo et al. 2023 §3.1.3):
     drop lines that repeat across a domain's documents — navigation,
     copyright footers, cookie banners — keeping lines that are frequent
@@ -735,7 +728,8 @@ def domain_boilerplate_lines(df: DataFrame, domain_col: str = "domain") -> DataF
     occurrence is dropped (no canonical survivor — the line is template
     chrome, not content).
 
-    Returns (doc, n_lines, n_kept, text_clean).
+    The domain is the ``source`` column.  Returns (doc, n_lines, n_kept,
+    text_clean).
 
     Scale shape: the frequency aggregate shuffles only
     ``(domain, line_hash, doc)`` triples (64-bit hash — never text) with
@@ -750,7 +744,7 @@ def domain_boilerplate_lines(df: DataFrame, domain_col: str = "domain") -> DataF
     """
     arrays = df.select(
         F.col("doc_id").alias("doc"),
-        F.col(domain_col).alias("domain"),
+        F.col("source").alias("domain"),
         F.filter(
             F.transform(
                 F.split(F.coalesce(F.col("text"), F.lit("")), "\n"),
@@ -770,7 +764,7 @@ def domain_boilerplate_lines(df: DataFrame, domain_col: str = "domain") -> DataF
         ).cast("long"),
     )
 
-    domain_sizes = df.groupBy(F.col(domain_col).alias("domain")).agg(
+    domain_sizes = df.groupBy(F.col("source").alias("domain")).agg(
         F.count("*").alias("domain_docs")
     )
     freq = (
@@ -809,11 +803,11 @@ def domain_boilerplate_lines(df: DataFrame, domain_col: str = "domain") -> DataF
     )
 
 
-def substring_dup_spans(df: DataFrame, k: int = 50) -> DataFrame:
+def substring_dup_spans(df: DataFrame) -> DataFrame:
     """Exact-substring duplicate spans (Lee et al. 2021, "Deduplicating
     Training Data Makes Language Models Better"): find every maximal run
     of tokens that repeats anywhere else in the corpus as a full
-    ``k``-token window, keeping the corpus-order first occurrence as
+    ``k`` = 12-token window, keeping the corpus-order first occurrence as
     canonical.
 
     Method: hash every k-token gram (md5 top-60-bits — cross-engine, so
@@ -833,6 +827,7 @@ def substring_dup_spans(df: DataFrame, k: int = 50) -> DataFrame:
     """
     from pyspark.sql import Window
 
+    k = 12
     toks = df.select(
         F.col("doc_id").alias("doc"),
         F.filter(F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+"), lambda t: t != "").alias(
@@ -875,9 +870,9 @@ def substring_dup_spans(df: DataFrame, k: int = 50) -> DataFrame:
     )
 
 
-def contamination_spans(df: DataFrame, eval_df: DataFrame, k: int = 13) -> DataFrame:
+def contamination_spans(df: DataFrame, eval_df: DataFrame) -> DataFrame:
     """Benchmark-decontamination spans: maximal runs of corpus tokens whose
-    every ``k``-token window also appears in the evaluation set (the
+    every ``k`` = 13-token window also appears in the evaluation set (the
     GPT-3/PaLM-style 13-gram decontamination check).
 
     Same gram machinery as ``substring_dup_spans``; the eval side reduces
@@ -887,6 +882,8 @@ def contamination_spans(df: DataFrame, eval_df: DataFrame, k: int = 13) -> DataF
     (doc, start_tok, end_tok, n_grams) of contaminated regions.
     """
     from pyspark.sql import Window
+
+    k = 13
 
     def grams(src: DataFrame, idc: str, txtc: str) -> DataFrame:
         toks = src.select(
@@ -926,9 +923,9 @@ def contamination_spans(df: DataFrame, eval_df: DataFrame, k: int = 13) -> DataF
         .drop("island")
     )
 
-def _shingle_sets(df: DataFrame, shingle_k: int) -> DataFrame:
-    """(doc, sh:array<long>) per ``doc_id`` — distinct 60-bit md5 shingle
-    hashes of ``text``, the
+def _shingle_sets(df: DataFrame) -> DataFrame:
+    """(doc, sh:array<long>) per ``doc_id`` — distinct 60-bit md5
+    ``SHINGLE_K``-character shingle hashes of ``text``, the
     exact-verify representation (cross-engine: DuckDB computes the same).
 
     ``lower(text)`` is hoisted into its own projection (r06): inlined in
@@ -943,8 +940,8 @@ def _shingle_sets(df: DataFrame, shingle_k: int) -> DataFrame:
         "doc",
         F.array_distinct(
             F.expr(
-                f"transform(sequence(1, greatest(length(_lt) - {shingle_k} + 1, 1)), "
-                f"i -> cast(conv(substring(md5(substring(_lt, i, {shingle_k})), 1, 15), 16, 10) as bigint))"
+                f"transform(sequence(1, greatest(length(_lt) - {SHINGLE_K} + 1, 1)), "
+                f"i -> cast(conv(substring(md5(substring(_lt, i, {SHINGLE_K})), 1, 15), 16, 10) as bigint))"
             )
         ).alias("sh"),
     )
@@ -991,9 +988,7 @@ def _jaccard_verify(
     )
 
 
-def build_minhash_index(
-    df: DataFrame, num_perm: int = NUM_PERM, shingle_k: int = SHINGLE_K
-) -> DataFrame:
+def build_minhash_index(df: DataFrame) -> DataFrame:
     """Persistent dedup index for a corpus: (doc, signature, sh).
 
     Write this once per corpus snapshot (parquet/Iceberg, bucketed by
@@ -1003,34 +998,29 @@ def build_minhash_index(
     exact-verify shingle hashes alongside the signature so the verify
     step needs no corpus text either.
     """
-    sigs = minhash_signatures(df, num_perm, shingle_k)
-    # shingle_k rides along as a column: a probe with a different k would
-    # silently share zero buckets with the index (same-length signatures
-    # over different shingles), so the probe validates it
-    return sigs.join(_shingle_sets(df, shingle_k), "doc").withColumn(
-        "shingle_k", F.lit(shingle_k)
+    sigs = minhash_signatures(df)
+    # shingle_k rides along as a column: a stored index built with a
+    # different k would silently share zero buckets with the probe (same-
+    # length signatures over different shingles), so the probe validates it
+    return sigs.join(_shingle_sets(df), "doc").withColumn(
+        "shingle_k", F.lit(SHINGLE_K)
     )
 
 
-def incremental_minhash_pairs(
-    new_df: DataFrame,
-    index: DataFrame,
-    num_perm: int = NUM_PERM,
-    shingle_k: int = SHINGLE_K,
-    threshold: float = 0.5,
-) -> DataFrame:
+def incremental_minhash_pairs(new_df: DataFrame, index: DataFrame) -> DataFrame:
     """New-batch-vs-corpus near-duplicate pairs against a stored
     ``build_minhash_index`` table (same banding/verify semantics as
     ``minhash_lsh_pairs``, but only the NEW batch is ever shingled).
 
-    Returns (new_doc, corpus_doc, jaccard >= threshold).  Scale shape:
+    Returns (new_doc, corpus_doc, jaccard >= 0.9).  Scale shape:
     the new batch's bucket keys equi-join the index's bucket keys (both
     sides shuffle only (band, bucket, doc) triples — the index side can
     be pre-bucketed by (band, bucket) to make even that one-sided), and
     the verify joins ship shingle arrays for candidates only.
     """
-    bands = _bands_for_threshold(threshold, num_perm)
-    rows = num_perm // bands
+    threshold = 0.9
+    bands = _bands_for_threshold(threshold, NUM_PERM)
+    rows = NUM_PERM // bands
     # fail fast on parameter mismatches with the stored index: a shorter
     # stored signature would silently empty half the bands, and a
     # different shingle_k shares zero buckets even for identical text —
@@ -1040,19 +1030,18 @@ def incremental_minhash_pairs(
     if has_k:
         probe_cols.append(F.col("shingle_k"))
     first = index.select(*probe_cols).head(1)
-    if first and first[0]["n"] != num_perm:
+    if first and first[0]["n"] != NUM_PERM:
         raise ValueError(
             f"index signatures have {first[0]['n']} permutations, "
-            f"probe requested num_perm={num_perm} — rebuild the index or "
-            "pass the index's num_perm"
+            f"the probe uses {NUM_PERM} — rebuild the index"
         )
-    if first and has_k and first[0]["shingle_k"] != shingle_k:
+    if first and has_k and first[0]["shingle_k"] != SHINGLE_K:
         raise ValueError(
             f"index was built with shingle_k={first[0]['shingle_k']}, "
-            f"probe requested shingle_k={shingle_k}"
+            f"the probe uses shingle_k={SHINGLE_K} — rebuild the index"
         )
     new_df = _ensure_parallelism(new_df)
-    new_sigs = minhash_signatures(new_df, num_perm, shingle_k)
+    new_sigs = minhash_signatures(new_df)
     new_b = _banded(new_sigs, bands, rows).select(
         F.col("doc").alias("new_doc"), "band", "bucket"
     )
@@ -1064,7 +1053,7 @@ def incremental_minhash_pairs(
         .select("new_doc", "corpus_doc")
         .distinct()
     )
-    new_sh = _shingle_sets(new_df, shingle_k)
+    new_sh = _shingle_sets(new_df)
     return _jaccard_verify(
         cand, new_sh, index.select("doc", "sh"), "new_doc", "corpus_doc", threshold
     )
@@ -1139,7 +1128,6 @@ def semantic_dedup(
     n_clusters: int = 8,
     threshold: float = 0.9,
     n_iter: int = 0,
-    max_cell: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication over an embedding column
     (Abbas et al. 2023, "SemDeDup: Data-efficient learning at web-scale
@@ -1257,25 +1245,6 @@ def semantic_dedup(
     assigned = df.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
     ).mapInPandas(assign_unit, assign_schema)
-    if max_cell is not None:
-        # quadratic-blowup guard (the semantic twin of ngram_jaccard's
-        # max_df cap): the within-cell prune below is O(cell^2), so one
-        # hot cell on a skewed corpus is the operator's scale killer.
-        # Counts-only aggregation (map-side combined, <= n_clusters rows
-        # collected); the assignment pass is checkpointed so the guard
-        # doesn't recompute it for the pair stage.
-        assigned = assigned.localCheckpoint()
-        hot = assigned.groupBy("cell").count().where(F.col("count") > max_cell).collect()
-        if hot:
-            detail = ", ".join(f"cell {r['cell']}={r['count']}" for r in hot)
-            raise ValueError(
-                f"semantic_dedup: {len(hot)} cell(s) exceed max_cell={max_cell} "
-                f"({detail}); the within-cell prune is quadratic per cell. "
-                "Raise n_clusters (SemDeDup scales cluster count with the "
-                "corpus — 50k for LAION), add Lloyd iterations (n_iter) to "
-                "balance cells, or raise max_cell if the blowup is acceptable."
-            )
-
     # conservative in-kernel cut: F.round(x, 8) can raise a value by at
     # most 5e-9 (+ one ulp), so every pair the JVM filter could keep has
     # raw dot >= threshold - 1e-6; NaN dots (zero vectors) are kept

@@ -277,7 +277,7 @@ def _decode_subframe(br: _MsbReader, blocksize: int, bps: int) -> list[int]:
     return samples
 
 
-def decode_flac(data: bytes, max_samples: int | None = None) -> tuple[int, np.ndarray]:
+def decode_flac(data: bytes) -> tuple[int, np.ndarray]:
     """FLAC bytes → (sample_rate, (n, channels) int32), CRC-verified."""
     info = flac_streaminfo(data)
     bps = info["bits_per_sample"]
@@ -287,8 +287,6 @@ def decode_flac(data: bytes, max_samples: int | None = None) -> tuple[int, np.nd
     total = info["total_samples"] or None
     while pos + 4 <= len(data):
         if total is not None and len(out) >= total:
-            break
-        if max_samples is not None and len(out) >= max_samples:
             break
         br = _MsbReader(data, pos * 8)
         sync = br.read(14)
@@ -371,8 +369,6 @@ def decode_flac(data: bytes, max_samples: int | None = None) -> tuple[int, np.nd
     arr = np.asarray(out, dtype=np.int32).reshape(-1, channels)
     if total is not None:
         arr = arr[:total]
-    if max_samples is not None:
-        arr = arr[:max_samples]
     return info["sample_rate"], arr
 
 

@@ -628,7 +628,7 @@ def crawl_churn_by_domain(diff: DataFrame) -> DataFrame:
     )
 
 
-def host_graph(edges: DataFrame, include_internal: bool = False) -> DataFrame:
+def host_graph(edges: DataFrame) -> DataFrame:
     """Collapse a page-level (src, dst) edge list to the weighted host
     graph: (src_host, dst_host, weight, n_src_pages).
 
@@ -639,8 +639,7 @@ def host_graph(edges: DataFrame, include_internal: bool = False) -> DataFrame:
     counts distinct linking pages, so a single index page with 10k links
     can't masquerade as broad host endorsement.
 
-    Intra-host edges are dropped by default (navigation chrome dominates
-    them); pass ``include_internal=True`` to keep them.
+    Intra-host edges are dropped (navigation chrome dominates them).
 
     Scale shape: host extraction is a narrow JVM regexp; the aggregate is
     one partial-aggregated shuffle keyed on (src_host, dst_host) whose
@@ -655,9 +654,11 @@ def host_graph(edges: DataFrame, include_internal: bool = False) -> DataFrame:
         F.col("src").alias("_src"),
         F.lower(F.regexp_extract(F.col("src"), host_re, 1)).alias("src_host"),
         F.lower(F.regexp_extract(F.col("dst"), host_re, 1)).alias("dst_host"),
-    ).where((F.col("src_host") != "") & (F.col("dst_host") != ""))
-    if not include_internal:
-        out = out.where(F.col("src_host") != F.col("dst_host"))
+    ).where(
+        (F.col("src_host") != "")
+        & (F.col("dst_host") != "")
+        & (F.col("src_host") != F.col("dst_host"))
+    )
     return out.groupBy("src_host", "dst_host").agg(
         F.count("*").alias("weight"),
         F.countDistinct("_src").alias("n_src_pages"),

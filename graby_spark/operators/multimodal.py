@@ -796,41 +796,20 @@ def _resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     return img[np.ix_(ys, xs)]
 
 
-def _resize_bilinear(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Pixel-center bilinear (align_corners=False convention): source
-    coordinate (y + 0.5)·h/out_h − 0.5, edge-clamped."""
-    h, w = img.shape[:2]
-    fy = np.clip((np.arange(out_h) + 0.5) * h / out_h - 0.5, 0, h - 1)
-    fx = np.clip((np.arange(out_w) + 0.5) * w / out_w - 0.5, 0, w - 1)
-    y0 = np.floor(fy).astype(int)
-    x0 = np.floor(fx).astype(int)
-    y1 = np.minimum(y0 + 1, h - 1)
-    x1 = np.minimum(x0 + 1, w - 1)
-    wy = (fy - y0)[:, None, None]
-    wx = (fx - x0)[None, :, None]
-    p = img.astype(np.float64)
-    top = p[np.ix_(y0, x0)] * (1 - wx) + p[np.ix_(y0, x1)] * wx
-    bot = p[np.ix_(y1, x0)] * (1 - wx) + p[np.ix_(y1, x1)] * wx
-    return top * (1 - wy) + bot * wy
-
-
-def resize_images(
-    df: DataFrame, out_width: int, out_height: int, method: str = "bilinear"
-) -> DataFrame:
+def resize_images(df: DataFrame) -> DataFrame:
     """Decode (PNG/GIF/JPEG, real) → resize → re-encode as PNG: the
     standard vision-pipeline normalization stage (every encoder wants a
     fixed input resolution).
 
-    ``method``: "nearest" (integer floor mapping — SQL-oracle-replayable
-    sample selection) or "bilinear" (pixel-center align_corners=False).
+    Every image becomes 4 wide and 3 high by nearest-neighbour floor
+    mapping (integer arithmetic — SQL-oracle-replayable sample selection).
     Returns (media_id, width, height, channels, resized_png, mean_pixel)
     with the mean over the RESIZED image, unrounded.  One Arrow-batched
     ``mapInPandas`` stage; payloads cross to Python once; the resized
     payload returns PNG-encoded (lossless, so downstream stages —
     features, dedup on visual bytes — see exactly what this stage
     computed)."""
-    if method not in ("nearest", "bilinear"):
-        raise ValueError(f"unknown resize method {method!r}")
+    out_width, out_height = 4, 3
     src = df.select("media_id", "payload")
     schema = StructType(
         [
@@ -848,12 +827,7 @@ def resize_images(
             out = []
             for mid, payload in zip(batch["media_id"], batch["payload"]):
                 img = decode_image(bytes(payload or b""), strict=True).astype(np.uint8)
-                if method == "nearest":
-                    res = _resize_nearest(img, out_height, out_width)
-                else:
-                    res = np.clip(
-                        np.round(_resize_bilinear(img, out_height, out_width)), 0, 255
-                    ).astype(np.uint8)
+                res = _resize_nearest(img, out_height, out_width)
                 out.append(
                     {
                         "media_id": mid,
@@ -939,23 +913,18 @@ def wav_sample_stats(df: DataFrame) -> DataFrame:
     return src.mapInPandas(fn, schema)
 
 
-def perceptual_hash(df: DataFrame, method: str = "ahash") -> DataFrame:
-    """64-bit perceptual hash over REALLY-decoded images → (media_id,
-    phash) — the visual-dedup signature a multimodal training pipeline
-    runs after decode.
+def perceptual_hash(df: DataFrame) -> DataFrame:
+    """64-bit average hash (aHash) over REALLY-decoded images →
+    (media_id, phash) — the visual-dedup signature a multimodal training
+    pipeline runs after decode: grayscale (channel mean) → 8x8 nearest
+    floor-map resize → bit j set iff sample j > the 64-sample mean
+    (strict >, ties→0).
 
-    * ``ahash``: grayscale (channel mean) → 8x8 nearest floor-map resize
-      → bit j set iff sample j > the 64-sample mean (strict >, ties→0).
-    * ``dhash``: 9x8 resize → bit set iff left sample > right neighbor
-      (row-major gradient sign).
-
-    Both use the integer-exact nearest resize, so a SQL oracle can replay
-    the hash bit-for-bit from planted images.  Bit j weights 2^j in
+    The resize is the integer-exact nearest one, so a SQL oracle can
+    replay the hash bit-for-bit from planted images.  Bit j weights 2^j in
     row-major sample order; the packed value is returned as a signed
     int64 (two's complement — identical in DuckDB).  One Arrow-batched
     ``mapInPandas``; payload crosses once, 8 bytes come back."""
-    if method not in ("ahash", "dhash"):
-        raise ValueError(f"unknown perceptual hash {method!r}")
     src = df.select("media_id", "payload")
     schema = StructType(
         [StructField("media_id", LongType()), StructField("phash", LongType())]
@@ -967,12 +936,8 @@ def perceptual_hash(df: DataFrame, method: str = "ahash") -> DataFrame:
             for mid, payload in zip(batch["media_id"], batch["payload"]):
                 img = decode_image(bytes(payload or b""), strict=True).astype(np.float64)
                 gray = img.mean(axis=2)
-                if method == "ahash":
-                    g = _resize_nearest(gray[:, :, None], 8, 8)[:, :, 0]
-                    bits = (g > g.mean()).flatten()
-                else:
-                    g = _resize_nearest(gray[:, :, None], 8, 9)[:, :, 0]
-                    bits = (g[:, :-1] > g[:, 1:]).flatten()
+                g = _resize_nearest(gray[:, :, None], 8, 8)[:, :, 0]
+                bits = (g > g.mean()).flatten()
                 h = 0
                 for j, b in enumerate(bits):
                     if b:
@@ -1126,10 +1091,10 @@ def encode_mp4_skeleton(width: int, height: int, duration_ms: int) -> bytes:
     return ftyp + moov + box(b"mdat", b"")
 
 
-def audio_features(df: DataFrame, window: int = 400) -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """Real decoded-audio features per fixed-size window — the audio twin
-    of video frame sampling: one output row per window of ``window``
-    frames of CHANNEL 0, with (media_id, window, n, rms, zcr).
+    of video frame sampling: one output row per window of 16 frames of
+    CHANNEL 0, with (media_id, window, n, rms, zcr).
 
     ``rms`` is the root-mean-square sample amplitude; ``zcr`` counts sign
     flips ((s[t] >= 0) != (s[t-1] >= 0)) between CONSECUTIVE frames inside
@@ -1139,6 +1104,7 @@ def audio_features(df: DataFrame, window: int = 400) -> DataFrame:
     float64 and IEEE sqrt is engine-identical.  Row explosion happens
     Python-side inside one Arrow-batched ``mapInPandas`` — payload crosses
     once, only fixed-width feature rows return."""
+    window = 16
     src = df.select("media_id", "payload")
     schema = StructType(
         [

@@ -32,14 +32,14 @@ def _md5_long(col: F.Column) -> F.Column:
 PACK_BUDGET = 512
 
 
-def pack_sequences(df: DataFrame, n_buckets: int = 64) -> DataFrame:
+def pack_sequences(df: DataFrame) -> DataFrame:
     """Assign documents to fixed-token-budget training bins.
 
-    Greedy-by-order packing within ``n_buckets`` hash buckets: documents
+    Greedy-by-order packing within 16 hash buckets: documents
     are ordered by id inside their bucket, and a document opens a new bin
     whenever the running token total would exceed ``PACK_BUDGET``.  Returns
     (doc_id, n_tokens, bucket, bin_id).  The window partitions on the
-    bucket — parallelism = n_buckets regardless of corpus size — and the
+    bucket — parallelism = 16 buckets regardless of corpus size — and the
     assignment is a pure function of (id, token count), so re-runs and
     the DuckDB oracle reproduce it exactly.
 
@@ -52,7 +52,7 @@ def pack_sequences(df: DataFrame, n_buckets: int = 64) -> DataFrame:
     tokens = F.size(
         F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != "")
     ).cast("long")
-    bucket = F.pmod(_md5_long(F.col("doc_id").cast("string")), F.lit(n_buckets)).cast(
+    bucket = F.pmod(_md5_long(F.col("doc_id").cast("string")), F.lit(16)).cast(
         "int"
     )
     w = Window.partitionBy("bucket").orderBy("doc_id")
@@ -68,26 +68,24 @@ def pack_sequences(df: DataFrame, n_buckets: int = 64) -> DataFrame:
     )
 
 
-def sample_hash(df: DataFrame, k: int, salt: str = "") -> DataFrame:
-    """Deterministic 1-in-k subsample: keep rows whose md5(id||salt)
-    bucket is 0.  Stateless per-row predicate — no shuffle, survives
-    predicate pushdown, and different ``salt`` values give independent
-    samples (held-out splits)."""
-    h = _md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(salt)))
-    return df.where(F.pmod(h, F.lit(k)) == 0)
+def sample_hash(df: DataFrame) -> DataFrame:
+    """Deterministic 1-in-2 subsample: keep rows whose md5(id) is even.
+    Stateless per-row predicate — no shuffle, survives predicate
+    pushdown."""
+    h = _md5_long(F.col("doc_id").cast("string"))
+    return df.where(F.pmod(h, F.lit(2)) == 0)
 
 
-def sample_by_source(
-    df: DataFrame, weights: dict[str, float], default_weight: float = 0.0
-) -> DataFrame:
+def sample_by_source(df: DataFrame, weights: dict[str, float]) -> DataFrame:
     """Source mixing at target rates: keep a deterministic ``weights[s]``
-    fraction of each source's rows (pretraining data mixing).  The keep
+    fraction of each source's rows, and 0.1 of the rows of a source
+    ``weights`` does not name (pretraining data mixing).  The keep
     decision is md5(id||source) scaled to [0,1) compared to the source's
     weight — per-row, shuffle-free, reproducible."""
     frac = (_md5_long(
         F.concat(F.col("doc_id").cast("string"), F.lit("|"), F.col("source"))
     ) % 1_000_000) / 1_000_000.0
-    rate = F.lit(default_weight)
+    rate = F.lit(0.1)
     for src, w in sorted(weights.items()):
         rate = F.when(F.col("source") == src, F.lit(float(w))).otherwise(rate)
     return df.where(frac < rate)

@@ -83,12 +83,8 @@ def build_search_index(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def bm25_topk_indexed(
-    index: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """Top-k documents per query under BM25, probing a stored
+def bm25_topk_indexed(index: DataFrame, queries: DataFrame) -> DataFrame:
+    """Top-10 documents per query under BM25, probing a stored
     :func:`build_search_index` table.
 
     ``queries`` carries (query_id, terms array<string>); terms are
@@ -130,7 +126,7 @@ def bm25_topk_indexed(
     w = Window.partitionBy("query_id").orderBy(F.desc("total_nano"), F.asc("doc"))
     return (
         agg.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 10)
         .select(
             "query_id",
             "doc",
@@ -141,17 +137,12 @@ def bm25_topk_indexed(
     )
 
 
-def bm25_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """One-shot BM25 top-k over ``text``: :func:`build_search_index` composed with
+def bm25_topk(docs: DataFrame, queries: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """One-shot BM25 top-10 over ``text``: :func:`build_search_index` composed with
     :func:`bm25_topk_indexed` (see those for semantics and scale shape).
     Use the two-step form when the same corpus serves many query
     batches."""
-    return bm25_topk_indexed(build_search_index(docs, id_col), queries, k=k)
+    return bm25_topk_indexed(build_search_index(docs, id_col), queries)
 
 
 def positional_postings(df: DataFrame) -> DataFrame:

@@ -232,12 +232,12 @@ def _hyperplanes(dim: int) -> np.ndarray:
     return rng.standard_normal((_N_TABLES, _N_PLANES, dim))
 
 
-def lsh_signatures(df: DataFrame, dim: int | None = None) -> DataFrame:
+def lsh_signatures(df: DataFrame) -> DataFrame:
     """(id, table, bucket) random-hyperplane signatures of (vec_id, embedding) — ``_N_TABLES``
     independent hash tables of ``_N_PLANES`` planes each (multi-table LSH
-    trades bucket-join fanout for recall).  ``dim`` defaults to the actual
-    vector width (planes are a fixed seeded function of dim, so inference
-    is deterministic across executors and runs)."""
+    trades bucket-join fanout for recall).  The planes are a fixed seeded
+    function of the vector width read off the first batch, so they are
+    deterministic across executors and runs."""
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     src = df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
@@ -251,7 +251,7 @@ def lsh_signatures(df: DataFrame, dim: int | None = None) -> DataFrame:
     weights = 1 << np.arange(_N_PLANES, dtype=np.int64)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = None if dim is None else _hyperplanes(dim)
+        planes = None
         for batch in batches:
             if len(batch) == 0:
                 yield pd.DataFrame({"id": [], "table": [], "bucket": []})
@@ -273,14 +273,12 @@ def lsh_signatures(df: DataFrame, dim: int | None = None) -> DataFrame:
     return src.mapInPandas(fn, schema)
 
 
-def lsh_topk(
-    corpus: DataFrame, queries: DataFrame, k: int = 10, dim: int | None = None
-) -> DataFrame:
+def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """ANN top-k: bucket join on hyperplane signature, exact rerank of
     candidates.  Recall < 1 by construction; rank semantics match
     brute_force_topk on the candidate set."""
-    c_sig = lsh_signatures(corpus, dim)
-    q_sig = lsh_signatures(queries, dim)
+    c_sig = lsh_signatures(corpus)
+    q_sig = lsh_signatures(queries)
     cand = (
         q_sig.select(F.col("id").alias("query_id"), "table", "bucket")
         .join(c_sig.select(F.col("id").alias("neighbor_id"), "table", "bucket"), ["table", "bucket"])
@@ -435,14 +433,9 @@ def _exact_rerank(
     )
 
 
-def ivf_kmeans_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 8,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF-flat ANN with TRAINED cells: the inverted-file partition comes
+def ivf_kmeans_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF-flat ANN top-3 over 8 TRAINED cells, probing the nearest 2 per
+    query: the inverted-file partition comes
     from ``cluster.kmeans_train``'s exact integer-grid Lloyd iterations
     instead of :func:`ivf_topk`'s md5-sampled init — the refinement that
     function's docstring promises would "bolt on here".
@@ -461,6 +454,7 @@ def ivf_kmeans_topk(
 
     from graby_spark.operators.cluster import _src_df, _u9_batch, kmeans_train
 
+    k, n_cells, nprobe = 3, 8, 2
     cents = kmeans_train(corpus, k=n_cells, n_iter=2)
     cents_bc = corpus.sparkSession.sparkContext.broadcast(cents)
 
@@ -505,6 +499,8 @@ def ivf_kmeans_topk(
 #: subspaces of ``PQ_KS`` code words each (one byte per subspace code)
 PQ_M = 4
 PQ_KS = 16
+#: their candidate cut, as a multiple of k
+PQ_REFINE = 8
 
 
 def _pq_codebooks(corpus: DataFrame, m: int, ks: int) -> np.ndarray:
@@ -579,10 +575,8 @@ def pq_encode(corpus: DataFrame, codebooks: np.ndarray) -> DataFrame:
     return src.mapInPandas(fn, schema)
 
 
-def pq_topk(
-    corpus: DataFrame, queries: DataFrame, k: int = 10, refine: int = 4
-) -> DataFrame:
-    """Product-quantization ANN with asymmetric distance computation and
+def pq_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Product-quantization ANN top-10 with asymmetric distance computation and
     exact rerank — the compressed-domain third scale architecture next to
     hyperplane LSH and IVF cells.
 
@@ -593,7 +587,7 @@ def pq_topk(
     rounded to 6 decimals so the candidate total order (score desc, id
     asc) is independent of float summation order — this is what lets
     the DuckDB oracle replay the candidate cut exactly.  Each Arrow
-    batch emits only its per-query ADC top ``refine*k`` with the query
+    batch emits only its per-query ADC top ``PQ_REFINE*k`` with the query
     itself excluded BEFORE selection (self may not occupy a candidate
     slot); the union of per-batch tops therefore always contains the
     global ADC top, so the window that follows selects a
@@ -609,11 +603,12 @@ def pq_topk(
     Resolution caveat (inherent to plain PQ, not this implementation):
     ADC cannot rank points that share a code word, so on data whose
     natural clusters are tighter than the quantization cells the
-    within-cell candidates are ADC-ties — size ``refine*k`` to cover
-    the expected cell population (the pinned test runs refine=16 against
-    ~125-point clusters).  IVF-PQ with residual quantization is the
+    within-cell candidates are ADC-ties — recall holds while the
+    ``PQ_REFINE*k`` = 80 candidates cover the expected cell population
+    (the pinned test runs ~62-point clusters).  IVF-PQ with residual quantization is the
     standard finer-grained variant and would bolt on here.
     """
+    k = 10
     codebooks = _pq_codebooks(corpus, PQ_M, PQ_KS)
     codes = pq_encode(corpus, codebooks)
 
@@ -629,7 +624,7 @@ def pq_topk(
     )
     sc = corpus.sparkSession.sparkContext
     lut_bc = sc.broadcast((q_ids, luts))
-    n_cand = refine * k
+    n_cand = PQ_REFINE * k
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, tables = lut_bc.value
@@ -971,7 +966,6 @@ def ivfpq_topk(
     k: int = 10,
     n_cells: int = 8,
     nprobe: int = 3,
-    refine: int = 8,
 ) -> DataFrame:
     """IVF-PQ with residual quantization — the finer-grained fourth ANN
     scale architecture (VERDICT r04 noted it "would bolt on" to pq_topk;
@@ -1014,7 +1008,7 @@ def ivfpq_topk(
     )[:, :nprobe]
     sc = corpus.sparkSession.sparkContext
     bc = sc.broadcast((q_ids, luts, cell_scores, probe_order))
-    n_cand = refine * k
+    n_cand = PQ_REFINE * k
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, tables, cscores, probes = bc.value

@@ -871,16 +871,14 @@ def gopher_quality_filter(df: DataFrame) -> DataFrame:
     )
 
 
-def importance_weights(
-    source_df: DataFrame, target_df: DataFrame, n_buckets: int = 10000
-) -> DataFrame:
+def importance_weights(source_df: DataFrame, target_df: DataFrame) -> DataFrame:
     """DSIR-style data-selection scores (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): per-document log
     importance weight log P_target(x)/P_source(x) under hashed-bigram
     bag-of-ngrams language models of each corpus.
 
-    Features are word bigrams hashed into ``n_buckets`` (md5 top bits mod
-    n_buckets — cross-engine, DuckDB recomputes identical buckets); both
+    Features are word bigrams hashed into ``n_buckets`` = 10000 buckets
+    (md5 top bits mod n_buckets — cross-engine, DuckDB recomputes identical buckets); both
     bucket distributions use add-one smoothing.  Scale shape: two
     corpus-wide bucket aggregations whose output is bounded by n_buckets
     (map-side partial counts), a driver-size ratio table broadcast to the
@@ -888,6 +886,8 @@ def importance_weights(
 
     Returns (doc, n_feats, logweight) — higher = more target-like.
     """
+    n_buckets = 10000
+
     def buckets(df: DataFrame) -> DataFrame:
         toks = df.select(
             F.col("doc_id").alias("doc"),
@@ -1175,8 +1175,8 @@ def extract_lite(pages: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_topk(df: DataFrame, k: int = 5) -> DataFrame:
-    """Top-k keywords per document by tf·idf over the corpus itself.
+def tfidf_topk(df: DataFrame) -> DataFrame:
+    """Top-3 keywords per document by tf·idf over the corpus itself.
 
     idf = log10(N / df) with document frequency from a corpus-wide
     aggregate whose output is vocabulary-sized (Zipf-bounded, far smaller
@@ -1223,7 +1223,7 @@ def tfidf_topk(df: DataFrame, k: int = 5) -> DataFrame:
     w = Window.partitionBy("doc").orderBy(F.col("tfidf").desc(), F.col("token"))
     return (
         scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
+        .where(F.col("_rn") <= 3)
         .select("doc", F.col("_rn").cast("long").alias("rank"), "token",
                 F.col("tf").cast("long").alias("tf"),
                 F.col("doc_freq").cast("long").alias("doc_freq"), "tfidf")

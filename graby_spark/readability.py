@@ -230,17 +230,27 @@ class Readability:
         # tidy drop-empty-paras: an attribute-less empty <p> immediately
         # followed by another <p> is a double-br artifact tidy removes
         # (lifehacker golden); before non-p content the reference keeps it
-        # (blogger golden, untidied reference run)
+        # (blogger golden, untidied reference run).  Each parent of an
+        # empty <p> decides its drops in one backward walk and rebuilds
+        # its children list once (an index and a detach per <p> would
+        # make many siblings quadratic)
+        parents: dict[int, Element] = {}
         for p in nodes:
-            if p.tag != "p" or p.parent is None or p.children or p.attrs:
-                continue
-            sibs = p.parent.children
-            i = sibs.index(p)
-            nxt = next(
-                (s for s in sibs[i + 1:] if isinstance(s, Element)), None
-            )
-            if nxt is not None and nxt.tag == "p":
-                p.detach()
+            if p.tag == "p" and p.parent is not None and not p.children and not p.attrs:
+                parents[id(p.parent)] = p.parent
+        for parent in parents.values():
+            kept = []
+            next_is_p = False
+            for child in reversed(parent.children):
+                if isinstance(child, Element):
+                    if next_is_p and child.tag == "p" and not child.children and not child.attrs:
+                        child.parent = None
+                        continue
+                    next_is_p = child.tag == "p"
+                kept.append(child)
+            if len(kept) != len(parent.children):
+                kept.reverse()
+                parent.children[:] = kept
 
         for el in nodes:
             if el.parent is None and el is not root:

@@ -101,7 +101,6 @@ def cdx_records(df: DataFrame) -> DataFrame:
 def cdx_select_latest(
     records: DataFrame,
     mimes: tuple[str, ...] | None = None,
-    as_of: str | None = None,
 ) -> DataFrame:
     """Latest eligible (HTTP 200) capture per urlkey → the WARC fetch plan.
 
@@ -109,16 +108,8 @@ def cdx_select_latest(
     single shuffle on ``urlkey`` with a window rank ordered by capture
     timestamp descending; ``(filename, offset)`` breaks exact-timestamp
     ties deterministically.
-
-    ``as_of`` (a 14-digit ``yyyyMMddHHmmss`` string) time-travels the
-    plan: only captures at or before that instant compete, reproducing
-    "the web as crawled by <date>" — string comparison is chronological
-    for the fixed-width timestamp format, so the predicate stays a
-    pushdown-friendly JVM filter.
     """
     out = records.where(F.col("status") == 200)
-    if as_of is not None:
-        out = out.where(F.col("ts") <= F.lit(as_of))
     if mimes is not None:
         out = out.where(F.col("mime").isin(*mimes))
     w = (

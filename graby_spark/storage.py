@@ -12,7 +12,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def key_skew_stats(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
+#: reducers the suggested salt levels to, pinned so the diagnosis does
+#: not depend on the session's parallelism
+SALT_PARTITIONS = 32
+
+
+def key_skew_stats(df: DataFrame) -> DataFrame:
     """One-row skew diagnosis for ``domain`` as a prospective shuffle key:
     ``(n_rows, n_keys, max_key_rows, p99_key_rows, avg_key_rows,
     top_key, skew_ratio, suggested_salt)``.
@@ -23,7 +28,7 @@ def key_skew_stats(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
     max_key_rows / avg_key_rows (≈1 uniform, ≫1 hot-key);
     ``suggested_salt`` is the salt-fan-out that would bring the hottest
     key down to the average partition payload —
-    ``ceil(max_key_rows / (n_rows / n_partitions))``, clamped to ≥1 —
+    ``ceil(max_key_rows / (n_rows / SALT_PARTITIONS))``, clamped to ≥1 —
     i.e. the ``N`` you'd pass to a ``key || '#' || pmod(hash(...), N)``
     salting scheme.
 
@@ -34,9 +39,6 @@ def key_skew_stats(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
     count) resolve arbitrarily — it's a diagnostic label; every numeric
     column is tie-free by construction.
     """
-    spark = df.sparkSession
-    if n_partitions is None:
-        n_partitions = spark.sparkContext.defaultParallelism
     per_key = df.groupBy(F.col("domain").alias("_k")).agg(
         F.count("*").alias("_c")
     )
@@ -56,7 +58,7 @@ def key_skew_stats(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
             F.lit(1),
             F.ceil(
                 F.col("max_key_rows")
-                / (F.col("n_rows") / F.lit(float(n_partitions)))
+                / (F.col("n_rows") / F.lit(float(SALT_PARTITIONS)))
             ),
         )
         .cast("int")

@@ -75,14 +75,14 @@ def _py_apply(toks, a, b):
 @pytest.fixture(scope="module")
 def trained(spark):
     df = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    merges, vocab = bpe.train_bpe(df, n_merges=8)
+    merges, vocab = bpe.train_bpe(df)
     yield df, merges, vocab
     vocab.unpersist()
 
 
 def test_train_matches_python_reference(trained):
     _, merges, vocab = trained
-    py_merges, py_sizes, _ = _py_bpe([t for _, t in CORPUS], 8)
+    py_merges, py_sizes, _ = _py_bpe([t for _, t in CORPUS], bpe.N_MERGES)
     assert merges == py_merges
     got = {r["word"]: len(r["toks"]) for r in vocab.collect()}
     assert got == py_sizes
@@ -90,7 +90,7 @@ def test_train_matches_python_reference(trained):
 
 def test_token_counts_match_reference_and_keep_empty_docs(trained):
     df, _, vocab = trained
-    _, py_sizes, _ = _py_bpe([t for _, t in CORPUS], 8)
+    _, py_sizes, _ = _py_bpe([t for _, t in CORPUS], bpe.N_MERGES)
     counts = {r["id"]: (r["n_words"], r["bpe_tokens"]) for r in bpe.bpe_token_counts(df, vocab).collect()}
     for doc_id, text in CORPUS:
         ws = [
@@ -139,7 +139,7 @@ def test_early_break_when_corpus_exhausts(spark):
     """Single-char words have no pairs: training stops short and the
     vocab survives (mirrored by the oracle's LEFT JOIN guard)."""
     df = spark.createDataFrame([(0, "a b a c")], "doc_id long, text string")
-    merges, vocab = bpe.train_bpe(df, n_merges=5)
+    merges, vocab = bpe.train_bpe(df)
     assert merges == []
     assert {r["word"] for r in vocab.collect()} == {"a", "b", "c"}
     vocab.unpersist()
@@ -155,11 +155,11 @@ def test_duckdb_oracle_replays_training(trained):
     pdf = pd.DataFrame(CORPUS, columns=["doc_id", "text"])
     con = duckdb.connect()
     con.register("documents", pdf)
-    got = con.execute(bpe.oracle_merges_sql(8) + " ORDER BY rank").fetchall()
+    got = con.execute(bpe.oracle_merges_sql(bpe.N_MERGES) + " ORDER BY rank").fetchall()
     assert [(r, a, b) for r, a, b, _ in got] == merges
     assert [m for *_, m in got] == [a + b for _, a, b in merges]
     spark_counts = sorted(
         (r["id"], r["n_words"], r["bpe_tokens"]) for r in bpe.bpe_token_counts(df, vocab).collect()
     )
-    duck_counts = sorted(con.execute(bpe.oracle_token_counts_sql(8)).fetchall())
+    duck_counts = sorted(con.execute(bpe.oracle_token_counts_sql(bpe.N_MERGES)).fetchall())
     assert spark_counts == duck_counts

@@ -1,7 +1,7 @@
 """Reach or remove: every knob, parameter, definition and module-level
 name of the package is used.
 
-Four pure-AST scans (no imports of the scanned code), sharing one parse
+Five pure-AST scans (no imports of the scanned code), sharing one parse
 and one walk per file:
 
 - **Dead knobs.**  A defaulted parameter of a module-level function or
@@ -18,6 +18,10 @@ and one walk per file:
 - **Unreachable definitions.**  A function, class or method of
   ``graby_spark/`` whose name no non-test file mentions outside the
   definition itself.  The system never runs it; only tests do.
+- **Test-only seams.**  The first two scans again, over the non-test
+  callers only: a parameter that only a test sets or varies.  The
+  system runs it at one value, so it is folded to that value, unless
+  ``TEST_SEAMS`` names it with its reason.
 - **Unused module-level names.**  A module-level assignment or import of
   ``graby_spark/`` that its module never reads and no file imports or
   reads as an attribute.
@@ -30,6 +34,8 @@ import bisect
 import functools
 import os
 from collections import Counter, defaultdict
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CALLERS = (
@@ -54,6 +60,50 @@ ONE_LITERAL_ALLOWED = {
     "graby_spark/pages.py: oracle_excerpt_sql(text_expr='expected_text')",
     # called inside __spark_entry__.oracle_sql(), whose source is frozen
     "graby_spark/operators/search.py: oracle_bm25_sql(k=10)",
+}
+
+#: parameters that only tests set or vary, each kept for one of four
+#: reasons: a frozen caller passes it; it builds a decoder's or reader's
+#: coverage from a synthetic input; it lowers a bound so that a branch
+#: the system takes at scale runs at test size (or reports which branch
+#: ran); it pins the manifest snapshot a read sees
+TEST_SEAMS = {
+    "graby_spark/operators/dedup.py: ngram_jaccard_pairs(threshold)": "bench.py passes threshold=0.8 by keyword",
+    "graby_spark/operators/dedup.py: semantic_dedup(threshold)": "bench.py passes threshold=0.4 by keyword",
+    "graby_spark/operators/cluster.py: kmeans_embeddings(n_iter)": "bench.py passes n_iter=2 by keyword",
+    "graby_spark/operators/similarity.py: ivfpq_topk(k)": "bench.py passes k=10 by keyword",
+    "graby_spark/operators/similarity.py: ivfpq_topk(nprobe)": "bench.py passes nprobe=3 by keyword",
+    "graby_spark/operators/graph.py: pagerank(n_iter)": "bench.py passes n_iter=10 by keyword",
+    "graby_spark/operators/bpe.py: oracle_merges_sql(n_merges)": "passed inside oracle_sql(), whose source is frozen",
+    "graby_spark/operators/bpe.py: oracle_token_counts_sql(n_merges)": "passed inside oracle_sql(), whose source is frozen",
+    "graby_spark/operators/jpeg.py: encode_jpeg(quality)": "builds decoder coverage: quantisation tables",
+    "graby_spark/operators/jpeg.py: encode_jpeg(quant_chroma)": "builds decoder coverage: a separate chroma table",
+    "graby_spark/operators/jpeg.py: encode_jpeg(restart_interval)": "builds decoder coverage: restart markers",
+    "graby_spark/operators/jpeg.py: encode_jpeg(subsample)": "builds decoder coverage: 4:2:0 chroma",
+    "graby_spark/operators/webp.py: encode_webp_vp8l(color_elements)": "builds decoder coverage: the colour transform",
+    "graby_spark/operators/webp.py: encode_webp_vp8l(meta_split)": "builds decoder coverage: meta prefix codes",
+    "graby_spark/operators/webp.py: encode_webp_vp8l(palette)": "builds decoder coverage: the palette transform",
+    "graby_spark/operators/webp.py: encode_webp_vp8l(predictor_mode)": "builds decoder coverage: predictor modes",
+    "graby_spark/operators/webp.py: encode_webp_vp8l(subtract_green)": "builds decoder coverage: subtract-green",
+    "graby_spark/operators/multimodal.py: encode_png(filters)": "builds decoder coverage: row filters",
+    "graby_spark/operators/multimodal.py: encode_png(interlace)": "builds decoder coverage: Adam7 interlacing",
+    "graby_spark/operators/avi.py: encode_avi_mjpeg(rate)": "builds reader coverage: frame timestamps",
+    "graby_spark/sources/warc.py: build_warc_blobs(records_per_file)": "builds reader coverage: multi-file splits",
+    "graby_spark/sources/warc.py: build_warc_blobs(gzip_records)": "builds reader coverage: plain and gzip members",
+    "graby_spark/sources/warc.py: build_wet_blobs(records_per_file)": "builds reader coverage: multi-file splits",
+    "graby_spark/sources/warc.py: build_wat_blobs(records_per_file)": "builds reader coverage: multi-file splits",
+    "graby_spark/operators/similarity.py: make_clustered_embeddings(n)": "builds index coverage: corpus size",
+    "graby_spark/operators/similarity.py: make_clustered_embeddings(dim)": "builds index coverage: vector width",
+    "graby_spark/operators/similarity.py: make_clustered_embeddings(n_clusters)": "builds index coverage: cluster count",
+    "graby_spark/operators/similarity.py: make_clustered_embeddings(seed)": "builds index coverage: independent draws",
+    "graby_spark/operators/similarity.py: make_clustered_embeddings(sigma)": "builds index coverage: cluster spread",
+    "graby_spark/job.py: run_extraction(partitions)": "lowered bound: partition invariance at test size",
+    "graby_spark/operators/dedup.py: duplicate_clusters(star_after)": "lowered bound: the star-contraction branch at test size",
+    "graby_spark/operators/dedup.py: duplicate_clusters(star_max_iter)": "lowered bound: the iteration cap at test size",
+    "graby_spark/operators/dedup.py: duplicate_clusters(stats)": "out-parameter: reports which branch ran",
+    "graby_spark/operators/dedup.py: embedding_near_dups(max_exact_rows)": "lowered bound: the LSH branch at test size",
+    "graby_spark/manifest.py: read_manifest(history)": "snapshot pin: read every snapshot, not the current one",
+    "graby_spark/manifest.py: filter_resumable(as_of_snapshot)": "snapshot pin: resume as of an older snapshot",
 }
 
 
@@ -188,9 +238,13 @@ def _parameters(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
     return out + [(None, k.arg) for k in args.kwonlyargs]
 
 
-def _calls_by_name() -> dict[str, list[ast.Call]]:
+def _non_test_caller_files():
+    return (path for path in _caller_files() if not _is_test(path))
+
+
+def _calls_by_name(files) -> dict[str, list[ast.Call]]:
     calls: dict[str, list[ast.Call]] = defaultdict(list)
-    for path in _caller_files():
+    for path in files:
         for name, found in _index(path).calls.items():
             calls[name].extend(found)
     return calls
@@ -219,12 +273,13 @@ def _passes(call: ast.Call, position: int | None, name: str) -> bool:
     return position is not None and len(call.args) > position
 
 
-def _called_definitions():
-    """Definitions with a package-unique call name and at least one call,
-    with their calls and the shift a bound call applies to positions."""
+def _called_definitions(files):
+    """Definitions with a package-unique call name and at least one call
+    in ``files``, with those calls and the shift a bound call applies to
+    positions."""
     defs = list(_definitions())
     names = Counter(callee for *_rest, callee in defs)
-    calls = _calls_by_name()
+    calls = _calls_by_name(files)
     for module, qual, node, is_method, callee in defs:
         if names[callee] != 1 or not calls.get(callee):
             continue
@@ -234,9 +289,10 @@ def _called_definitions():
         yield module, qual, node, shift, calls[callee]
 
 
-def dead_knobs() -> list[str]:
+def dead_knobs(files) -> list[str]:
+    """Defaulted parameters that no call in the caller ``files`` passes."""
     dead = []
-    for module, qual, node, shift, calls in _called_definitions():
+    for module, qual, node, shift, calls in _called_definitions(files):
         for position, param in _defaulted(node):
             slot = None if position is None else position - shift
             if not any(_passes(c, slot, param) for c in calls):
@@ -244,9 +300,11 @@ def dead_knobs() -> list[str]:
     return dead
 
 
-def one_literal_parameters() -> list[str]:
+def one_literal_parameters(files) -> list[str]:
+    """Parameters that every call in the caller ``files`` passes as the
+    same literal."""
     found = []
-    for module, qual, node, shift, calls in _called_definitions():
+    for module, qual, node, shift, calls in _called_definitions(files):
         defaults = _defaults(node)
         for position, param in _parameters(node)[shift:]:
             slot = None if position is None else position - shift
@@ -333,7 +391,7 @@ def unused_module_names() -> list[str]:
 
 
 def test_no_dead_knobs():
-    dead = dead_knobs()
+    dead = dead_knobs(_caller_files())
     assert not dead, (
         f"{len(dead)} defaulted parameter(s) that no caller passes — "
         "replace each with the value its default gives:\n  " + "\n  ".join(dead)
@@ -341,7 +399,7 @@ def test_no_dead_knobs():
 
 
 def test_no_one_literal_parameters():
-    found = one_literal_parameters()
+    found = one_literal_parameters(_caller_files())
     extra = [p for p in found if p not in ONE_LITERAL_ALLOWED]
     assert not extra, (
         f"{len(extra)} parameter(s) that every call passes as the same literal — "
@@ -349,6 +407,26 @@ def test_no_one_literal_parameters():
     )
     stale = ONE_LITERAL_ALLOWED - set(found)
     assert not stale, f"allow-list entries the scan no longer finds: {sorted(stale)}"
+
+
+def seams_only_tests_vary() -> list[str]:
+    """``module: qual(param)`` per parameter that the dead-knob or the
+    one-literal scan flags once the tests no longer count as callers."""
+    found = dead_knobs(_non_test_caller_files()) + [
+        p for p in one_literal_parameters(_non_test_caller_files()) if p not in ONE_LITERAL_ALLOWED
+    ]
+    return sorted({p.split("=", 1)[0] + ")" for p in found})
+
+
+def test_no_test_only_seams():
+    found = seams_only_tests_vary()
+    extra = [p for p in found if p not in TEST_SEAMS]
+    assert not extra, (
+        f"{len(extra)} parameter(s) that only tests set or vary — fold each "
+        "to the value the system passes:\n  " + "\n  ".join(extra)
+    )
+    stale = sorted(set(TEST_SEAMS) - set(found))
+    assert not stale, f"TEST_SEAMS entries the scan no longer finds: {stale}"
 
 
 def test_no_unreachable_definitions():
@@ -381,7 +459,7 @@ def test_scan_sees_a_planted_dead_knob(tmp_path, monkeypatch):
     callers = tmp_path / "tools"
     callers.mkdir()
     (callers / "use.py").write_text("op(1)\nC().m()\n")
-    assert dead_knobs() == [
+    assert dead_knobs(_caller_files()) == [
         "graby_spark/mod.py: op(id_col=...)",
         "graby_spark/mod.py: op(k=...)",
         "graby_spark/mod.py: C.__init__(y=...)",
@@ -389,7 +467,7 @@ def test_scan_sees_a_planted_dead_knob(tmp_path, monkeypatch):
     ]
     (callers / "use.py").unlink()  # parses are cached by path
     (callers / "use2.py").write_text("op(1, 'id')\nop(1, k=4)\nC(1).m(2)\n")
-    assert dead_knobs() == []
+    assert dead_knobs(_caller_files()) == []
 
 
 def test_scans_see_planted_reach_faults(tmp_path, monkeypatch):
@@ -418,7 +496,7 @@ def test_scans_see_planted_reach_faults(tmp_path, monkeypatch):
     tests = tmp_path / "tests"
     tests.mkdir()
     (tests / "test_mod.py").write_text("only_tested(2)\nC().spare()\n")
-    assert one_literal_parameters() == [
+    assert one_literal_parameters(_caller_files()) == [
         "graby_spark/mod.py: op(col='url')",
         "graby_spark/mod.py: op(k=5)",
         "graby_spark/mod.py: cap(n=10)",  # the omitting call passes the default
@@ -436,6 +514,37 @@ def test_scans_see_planted_reach_faults(tmp_path, monkeypatch):
         "from graby_spark.mod import _LIMIT\n"
         "op(3, 'html', k=6)\nonly_tested(1)\nC().spare()\nmod.os.sep\nmod._compile\ncap(3, 20)\n"
     )
-    assert one_literal_parameters() == []
+    assert one_literal_parameters(_caller_files()) == []
     assert unreachable_definitions() == []
     assert unused_module_names() == []
+
+
+def test_seam_scan_sees_a_test_only_parameter(tmp_path, monkeypatch):
+    """A parameter that only a ``tests/test_*.py`` file passes clears the
+    all-callers scans but is flagged by the non-test scan; the seam test
+    fails on it until ``TEST_SEAMS`` names it, and on a stale entry."""
+    monkeypatch.setitem(globals(), "REPO", str(tmp_path))
+    pkg = tmp_path / "graby_spark"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text("def op(df, k=2):\n    return df\n")
+    tools = tmp_path / "tools"
+    tools.mkdir()
+    (tools / "use.py").write_text("op(df)\n")
+    tests = tmp_path / "tests"
+    tests.mkdir()
+    (tests / "test_mod.py").write_text("op(df, k=5)\n")
+    assert dead_knobs(_caller_files()) == []
+    assert one_literal_parameters(_caller_files()) == []
+    assert seams_only_tests_vary() == ["graby_spark/mod.py: op(k)"]
+    monkeypatch.setitem(globals(), "TEST_SEAMS", {})
+    with pytest.raises(AssertionError, match="only tests set or vary"):
+        test_no_test_only_seams()
+    monkeypatch.setitem(globals(), "TEST_SEAMS", {"graby_spark/mod.py: op(k)": "a reason"})
+    test_no_test_only_seams()
+    monkeypatch.setitem(
+        globals(),
+        "TEST_SEAMS",
+        {"graby_spark/mod.py: op(k)": "a reason", "graby_spark/mod.py: gone(x)": "a reason"},
+    )
+    with pytest.raises(AssertionError, match="no longer finds"):
+        test_no_test_only_seams()

@@ -666,16 +666,29 @@ def test_extract_one_time_grows_linearly_with_nesting_depth(shape):
     assert deep <= 8 * shallow, (shape, shallow, deep)
 
 
-def test_implied_end_tags_parse_linearly_under_deep_nesting():
-    """A list item under n open ``<div>``s has no open ``<li>`` to close:
-    four times n costs at most 8x the parse (the open-stack scan on every
-    ``<li>`` start read about 17x)."""
+#: markup that once made the tree builder scan the open stack per tag
+PARSE_SHAPES = {
+    # a list item under n open <div>s has no open <li> to close
+    "li_under_divs": lambda n: "<div>" * n + "<li>x</li>" * n,
+    # an open <p> behind an <object> is out of scope for every <div>
+    "p_behind_object": lambda n: "<p><object>" + "<div>" * n,
+    # each <tfoot> closes the last one inside the innermost table
+    "tfoot_in_nested_table": lambda n: "<table><tr><td><table>" + "<tfoot>" * n,
+    # an open <tbody> behind an <object> is out of scope for every <thead>
+    "thead_behind_object": lambda n: "<tbody><object>" + "<div>" * n + "<thead>" * n,
+}
+
+
+@pytest.mark.parametrize("shape", sorted(PARSE_SHAPES))
+def test_parse_time_grows_linearly(shape):
+    """Four times n costs at most 8x the parse (an open-stack scan per
+    start tag read 14-17x)."""
     import time
 
     from graby_spark.dom import parse_html
 
     def best_of_3(n):
-        html = "<div>" * n + "<li>x</li>" * n
+        html = PARSE_SHAPES[shape](n)
         times = []
         for _ in range(3):
             start = time.perf_counter()
@@ -684,34 +697,22 @@ def test_implied_end_tags_parse_linearly_under_deep_nesting():
         return min(times)
 
     shallow, deep = best_of_3(2000), best_of_3(8000)
-    assert deep <= 8 * shallow, (shallow, deep)
+    assert deep <= 8 * shallow, (shape, shallow, deep)
 
 
-def test_p_behind_a_scope_barrier_parses_linearly():
-    """An open ``<p>`` behind an ``<object>`` is out of scope for every
-    ``<div>`` after it: four times n costs at most 8x the parse (the
-    open-stack scan down to the barrier on every ``<div>`` read about
-    15x)."""
-    import time
-
-    from graby_spark.dom import parse_html
-
-    def best_of_3(n):
-        html = "<p><object>" + "<div>" * n
-        times = []
-        for _ in range(3):
-            start = time.perf_counter()
-            parse_html(html)
-            times.append(time.perf_counter() - start)
-        return min(times)
-
-    shallow, deep = best_of_3(2000), best_of_3(8000)
-    assert deep <= 8 * shallow, (shallow, deep)
-
-
+#: (markup, render) of wide sibling lists that once made extraction
+#: quadratic in the sibling count
 FLAT_SHAPES = {
-    "comments": lambda n: "<div>" + "x<!-- c -->" * n + "</div>",
-    "inline_edge_space": lambda n: "<div>" + "<b>x </b>" * n + "</div>",
+    "comments": (lambda n: "<div>" + "x<!-- c -->" * n + "</div>", False),
+    "inline_edge_space": (lambda n: "<div>" + "<b>x </b>" * n + "</div>", False),
+    "empty_p": (
+        lambda n: "<html><body>" + "<p><p>w, word</p> text text, more</p>" * n,
+        False,
+    ),
+    "span_unwrap": (
+        lambda n: "<html><body><div>" + "<span>w, word</span>" * n + "</div>",
+        True,
+    ),
 }
 
 
@@ -719,18 +720,21 @@ FLAT_SHAPES = {
 def test_tidy_pass_time_grows_linearly_with_sibling_count(shape):
     """Four times the siblings costs at most 8x the time (a
     ``remove_child`` per comment read about 14x, a ``children.index`` per
-    inline element about 10x)."""
+    inline element about 10x, an index and a detach per empty ``<p>``
+    about 11x, an index, remove and insert per ``<span>`` about 11x)."""
     import time
 
     from graby_spark.extract import extract_one
     from graby_spark.siteconfig import RuleSet
 
+    markup, render = FLAT_SHAPES[shape]
+
     def best_of_3(n):
-        html = FLAT_SHAPES[shape](n).encode()
+        html = markup(n).encode()
         times = []
         for _ in range(3):
             start = time.perf_counter()
-            extract_one(html, "http://flat.example/x", RuleSet({}), render=False)
+            extract_one(html, "http://flat.example/x", RuleSet({}), render=render)
             times.append(time.perf_counter() - start)
         return min(times)
 

@@ -332,25 +332,6 @@ def test_warc_sink_round_trip_and_determinism(spark):
     assert a == b and len(a) == 5
 
 
-def test_cdx_select_latest_as_of_time_travel(spark):
-    from graby_spark.sources.cdx import cdx_records, cdx_select_latest
-
-    def line(ts, off):
-        return (
-            f'com,x)/ {ts} {{"url":"http://x/","mime":"text/html","status":"200",'
-            f'"digest":"d","length":"1","offset":"{off}","filename":"f"}}'
-        )
-
-    df = spark.createDataFrame(
-        [(line("20240101000000", 0),), (line("20240601000000", 1),), (line("20241201000000", 2),)],
-        ["line"],
-    )
-    recs = cdx_records(df)
-    assert cdx_select_latest(recs).collect()[0]["offset"] == 2
-    assert cdx_select_latest(recs, as_of="20240701000000").collect()[0]["offset"] == 1
-    assert cdx_select_latest(recs, as_of="20231231235959").count() == 0
-
-
 def test_wet_records_parse_and_lineage():
     """Conversion records: text payload byte-exact, WARC-Refers-To kept,
     non-conversion records skipped."""

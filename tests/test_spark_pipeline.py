@@ -1081,7 +1081,7 @@ def test_registry_ordering_covers_driver_sweep_cap():
 
 
 def test_fused_markdown_column(spark):
-    """ExtractOptions(markdown=True) renders markdown inside the
+    """A ``markdown`` projection renders markdown inside the
     extraction batch itself — same values as the separate
     markdown_column hop, and combinable with trace + output
     projection."""
@@ -1092,15 +1092,14 @@ def test_fused_markdown_column(spark):
         spark,
         pages,
         pages_ruleset(),
-        options=ExtractOptions(xss_filter=False, markdown=True, trace=True),
+        options=ExtractOptions(xss_filter=False, trace=True),
         columns=["url", "markdown"],
     )
     assert fused.columns == ["url", "markdown"]
     two_hop = markdown_column(
         run_extraction(
             spark, pages, pages_ruleset(), options=ExtractOptions(xss_filter=False)
-        ),
-        html_col="html",
+        ).withColumnRenamed("html", "content_html")
     ).select("url", "markdown")
     assert sorted(map(tuple, fused.collect())) == sorted(map(tuple, two_hop.collect()))
 
